@@ -49,7 +49,7 @@ def _events(spark: SparkSession, sf: str) -> DataFrame:
 def _graph(spark: SparkSession, sf: str) -> DataFrame:
     """Deduplicated derived triple table (the 'graph').
 
-    `_spread` lifts single-row-group parquet scans to default
+    `spread` lifts single-row-group parquet scans to default
     parallelism so the derive+partial-aggregate stage is not one task;
     no-op when the scan already has enough splits (100-TB path).
 
@@ -66,7 +66,7 @@ def _graph(spark: SparkSession, sf: str) -> DataFrame:
     after the aggregate.  Schema and values are identical for every
     consumer.
 
-    No `_spread`: the narrow pre-image aggregates are too cheap to
+    No `spread`: the narrow pre-image aggregates are too cheap to
     justify three per-branch round-robin exchanges of the scan (A/B at
     sf1-scale: no-spread 0.44 s vs spread 0.57 s vs the r6 min_by form
     0.53 s); downstream parallelism comes from the distinct's own
@@ -488,11 +488,11 @@ def q_kg_validation_filter(spark, sf):
 def q_kg_validation_issues(spark, sf):
     from rdf_knowledge_extractor_spark.operators.validate import validation_issues
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: per-triple validation regexes over the 6× Generate of a
+    # spread: per-triple validation regexes over the 6× Generate of a
     # one-row-group scan
-    return validation_issues(derive_triples(_spread(_docs(spark, sf))))
+    return validation_issues(derive_triples(spread(_docs(spark, sf))))
 
 
 def q_kg_ntriples_strict(spark, sf):
@@ -724,7 +724,7 @@ def q_text_langid(spark, sf):
 
 
 def q_text_quality(spark, sf):
-    # measured: _spread here LOSES (~0.25s no-spread vs ~0.4s spread at
+    # measured: spread here LOSES (~0.25s no-spread vs ~0.4s spread at
     # sf1) — the metrics are cheap codegen expressions, so the
     # round-robin exchange costs more than the extra scan parallelism
     # buys; spreading only pays when heavy per-row work follows
@@ -768,11 +768,11 @@ def q_text_quality_percentiles(spark, sf):
         quality_percentiles,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: metric computation + exact per-group percentiles
+    # spread: metric computation + exact per-group percentiles
     # otherwise hang off a one-row-group scan's single task
-    return quality_percentiles(_spread(_docs(spark, sf)), exact=True)
+    return quality_percentiles(spread(_docs(spark, sf)), exact=True)
 
 
 def q_docs_rollup(spark, sf):
@@ -806,12 +806,12 @@ def q_corpus_quota(spark, sf):
 def q_corpus_curate(spark, sf):
     from rdf_knowledge_extractor_spark.operators.curation import curate_corpus
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: the quality-metric projection + filters otherwise run
+    # spread: the quality-metric projection + filters otherwise run
     # in the single task of a one-row-group scan (4.9 -> 1.3 s at
     # sf1-scale); no-op at scale
-    return curate_corpus(_spread(_docs(spark, sf)), lang="en", min_words=10)
+    return curate_corpus(spread(_docs(spark, sf)), lang="en", min_words=10)
 
 
 def q_corpus_repetition(spark, sf):
@@ -841,12 +841,12 @@ def q_corpus_decontam(spark, sf):
         contamination_report,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: the n-gram Generate + broadcast probe otherwise runs in
+    # spread: the n-gram Generate + broadcast probe otherwise runs in
     # the single task of a one-row-group scan (measured 5.4 s -> 0.5 s
     # for the gram stage at sf0.1); no-op at scale
-    docs = _spread(_docs(spark, sf))
+    docs = spread(_docs(spark, sf))
     bench = docs.filter(F.col("doc_id") % 37 == 0)
     return contamination_report(docs, bench, n=3)
 
@@ -859,11 +859,11 @@ def q_text_entropy(spark, sf):
         char_bigram_entropy,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: the bounded bigram explode is Generate-heavy (measured
+    # spread: the bounded bigram explode is Generate-heavy (measured
     # 2.9 s -> 0.6 s at sf0.1 from a one-row-group scan); no-op at scale
-    return char_bigram_entropy(_spread(_docs(spark, sf)), max_chars=256)
+    return char_bigram_entropy(spread(_docs(spark, sf)), max_chars=256)
 
 
 def q_corpus_split(spark, sf):
@@ -881,12 +881,12 @@ def q_corpus_tfidf(spark, sf):
     (operators/tfidf.py)."""
     from rdf_knowledge_extractor_spark.operators.tfidf import tfidf_top_terms
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: the tokenization feeding both hash aggregates otherwise
+    # spread: the tokenization feeding both hash aggregates otherwise
     # runs single-task off a one-row-group scan (5.2 -> 4.6 s at
     # sf1-scale); no-op at scale
-    return tfidf_top_terms(_spread(_docs(spark, sf)), k=5)
+    return tfidf_top_terms(spread(_docs(spark, sf)), k=5)
 
 
 BM25_QUERIES = {
@@ -1004,11 +1004,11 @@ def q_corpus_links(spark, sf):
         with_extracted_links,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: one WHATWG parse per page in a pandas UDF — a
+    # spread: one WHATWG parse per page in a pandas UDF — a
     # one-row-group scan serializes the whole corpus in one task
-    d = _spread(_docs(spark, sf))
+    d = spread(_docs(spark, sf))
     sid = F.concat(d.source, (d.doc_id % 9).cast("string"))
     html = F.concat(
         F.lit("<html><body><p>doc</p><a href=\"https://"),
@@ -1208,12 +1208,12 @@ def q_corpus_chunks(spark, sf):
         chunk_documents,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: the sliding-window Generate otherwise fans out in the
+    # spread: the sliding-window Generate otherwise fans out in the
     # single task of a one-row-group scan (4.9 -> 0.6 s at sf1-scale);
     # no-op at scale
-    out = chunk_documents(_spread(_docs(spark, sf)), chunk_tokens=32, stride=16)
+    out = chunk_documents(spread(_docs(spark, sf)), chunk_tokens=32, stride=16)
     return out.select(
         "doc_id", "chunk_idx", "n_tokens",
         F.md5("chunk_text").alias("chunk_md5"),
@@ -1285,10 +1285,10 @@ def q_multimodal_audio(spark, sf):
         extract_media_features,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: python WAV decode from a one-row-group scan is one task
-    media = documents_as_audio(_spread(_docs(spark, sf)))
+    # spread: python WAV decode from a one-row-group scan is one task
+    media = documents_as_audio(spread(_docs(spark, sf)))
     feats = extract_media_features(media, deterministic_fake=False, feature_dim=8)
     return feats.select(
         "media_id",
@@ -1310,12 +1310,12 @@ def q_multimodal_jpeg(spark, sf):
         extract_media_features,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: the pure-python T.81 decode is ~1 ms/image — a
+    # spread: the pure-python T.81 decode is ~1 ms/image — a
     # one-row-group scan serializes 5,000 decodes in one task
     # (measured 4.6 s -> 1.2 s at sf0.1); no-op at scale
-    media = documents_as_jpeg(_spread(_docs(spark, sf)))
+    media = documents_as_jpeg(spread(_docs(spark, sf)))
     feats = extract_media_features(media, deterministic_fake=False, feature_dim=8)
     return feats.select(
         "media_id",
@@ -1447,13 +1447,13 @@ def q_events_profile(spark, sf):
         table_profile,
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: the Expand (×k columns) multiplies the scan output
+    # spread: the Expand (×k columns) multiplies the scan output
     # BEFORE the partial aggregate — from a one-row-group scan that
     # is k× the table in a single task
     return table_profile(
-        _spread(_events(spark, sf)),
+        spread(_events(spark, sf)),
         ["event_id", "user_id", "event_type", "value", "props"],
     )
 

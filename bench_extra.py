@@ -66,16 +66,16 @@ def main() -> None:
 
     # ---- dedup_minhash_lsh stages -------------------------------------
     from rdf_knowledge_extractor_spark.operators.linking import _minhash_band_udf
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
     from rdf_knowledge_extractor_spark.operators.textdedup import (
         _bucket_candidate_pairs,
-        _spread,
         _with_hashed_shingles,
         minhash_lsh_pairs,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     timed("minhash/scan", lambda: noop(docs))
-    sh = _with_hashed_shingles(_spread(docs), "doc_id", "text", 9)
+    sh = _with_hashed_shingles(spread(docs), "doc_id", "text", 9)
     timed("minhash/shingle+hash+distinct", lambda: noop(sh))
     sh = sh.persist()
     sh.count()
@@ -108,7 +108,7 @@ def main() -> None:
         F.col("embedding").alias("q_vec"),
         _norm(F.col("embedding")).alias("q_norm"),
     )
-    c = _spread(emb).select(
+    c = spread(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_vec"),
         _norm(F.col("embedding")).alias("c_norm"),

@@ -1,18 +1,14 @@
 """Connected components on a DataFrame edge list.
 
-Three algorithms behind one dispatcher:
+Two algorithms behind one dispatcher:
 
-- **driver union-find** (`_components_driver`) — the ≤100k-edge arm:
-  one collect + path-compressed union-find, min-label semantics; at
-  this size the distributed loops' per-round driver jobs ARE the
-  cost.  NULL endpoints are out of the component contract (an entity
-  id is never NULL; the two distributed arms historically disagreed
-  on them — labelprop emitted a NULL node, star arm dropped the
-  edge — the driver arm keeps non-NULL endpoints as isolated nodes).
-- **label propagation** (`connected_components_labelprop`) — min-label
-  flooding; O(component diameter) rounds; kept as a directly-callable
-  algorithm (and differential-test twin) but no longer dispatched —
-  the driver arm covers its former small-input band.
+- **driver union-find** (`_components_driver`) — the small-input arm
+  (at most `dispatch.DRIVER_MAX_EDGES` edges): one collect +
+  path-compressed union-find, min-label semantics; at this size the
+  distributed loop's per-round driver jobs ARE the cost.  NULL
+  endpoints are out of the component contract (an entity id is never
+  NULL): the star arm drops NULL-endpoint edges, the driver arm keeps
+  non-NULL endpoints as isolated nodes.
 - **alternating large-star / small-star**
   (`connected_components_star`) — Kiveris et al., "Connected
   Components in MapReduce and Beyond" (cited in PAPERS.md; SURVEY
@@ -38,17 +34,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# below this many edges the whole component computation fits the
-# driver comfortably (≤ a few MB of node strings — the same
-# scalar-bounded-collect class as the IVF training sample) and a
-# single collect + union-find replaces the iterative loop's ~2 jobs
-# per round.  At 100-TB scale the count() dispatch sends the work to
-# the distributed star rounds unchanged.
-_DRIVER_MAX_EDGES = 100_000
+from rdf_knowledge_extractor_spark.operators import dispatch
 
 
-def _components_driver(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _components_driver(
+    edges: DataFrame, src: str, dst: str, rows: list | None = None
+) -> DataFrame:
     """Union-find on a collected edge list — small-input fast path.
+    `rows`, the already collected (src, dst) pairs, spares the collect.
 
     Semantics identical to the distributed arms: component = min
     reachable node under the same ordering Spark uses (UTF-8 byte
@@ -58,7 +51,8 @@ def _components_driver(edges: DataFrame, src: str, dst: str) -> DataFrame:
     equals anything, so distributed rounds never propagate through
     it; we drop NULL-endpoint edges likewise)."""
     spark = edges.sparkSession
-    rows = edges.select(src, dst).collect()
+    if rows is None:
+        rows = edges.select(src, dst).collect()
     parent: dict = {}
 
     def find(x):
@@ -108,15 +102,16 @@ def connected_components(
     Dispatches: driver-side union-find for small edge sets,
     alternating large-star/small-star at scale (see module
     docstring)."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    n_edges = e.count()
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    rows = dispatch.bounded_collect(e, dispatch.DRIVER_MAX_EDGES)
+    if rows == []:
+        return edges.sparkSession.createDataFrame(
+            [], "node string, component string"
+        )
+    if rows is not None:
+        return _components_driver(e, "a", "b", rows)
+    e = e.persist()
     try:
-        if n_edges == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "node string, component string"
-            )
-        if n_edges <= _DRIVER_MAX_EDGES:
-            return _components_driver(e, "a", "b")
         return connected_components_star(e, "a", "b", max_iter)[0]
     finally:
         e.unpersist()
@@ -207,63 +202,3 @@ def connected_components_star(
     )
     universe.unpersist()
     return labels, rounds
-
-
-def connected_components_labelprop(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Min-label propagation (O(diameter) rounds) — small-input fast path."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    # AQE (with canChangeCachedPlanOutputPartitioning, see session.py)
-    # right-sizes the cached post-distinct layout, so every round's map
-    # over `sym` is data-proportional with no manual resize
-    if sym.count() == 0:
-        sym.unpersist()
-        return edges.sparkSession.createDataFrame([], "node string, component string")
-
-    # round 0 seeds each node with min(itself, direct neighbors) — one
-    # aggregation instead of a pure-identity start saves a full round
-    labels = (
-        sym.groupBy(F.col("a").alias("node"))
-        .agg(F.min("b").alias("_min_nbr"))
-        .select("node", F.least(F.col("node"), F.col("_min_nbr")).alias("component"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .groupBy(sym["a"].alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        updated = labels.join(neighbor_min, on="node", how="left").select(
-            "node",
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_min"), F.col("component")),
-            ).alias("new_component"),
-            F.col("component").alias("old_component"),
-        )
-        # localCheckpoint EVERY round: the run cost of the extra job is
-        # milliseconds, while letting the logical plan nest join-upon-join
-        # makes the driver's single-threaded Catalyst re-analysis the
-        # bottleneck within a handful of rounds (measured: job time ~30 ms,
-        # plan analysis seconds once the tree is a few rounds deep)
-        updated = updated.localCheckpoint(eager=True)
-        changed = not updated.filter(
-            F.col("new_component") != F.col("old_component")
-        ).isEmpty()
-        labels = updated.select("node", F.col("new_component").alias("component"))
-        if not changed:
-            break
-
-    sym.unpersist()
-    return labels

@@ -444,8 +444,8 @@ def link_entities(
     # MinHash-vs-prefix measurement that motivated the switch).  The
     # rarity ranking that keeps big inputs near-linear costs three
     # extra tiny shuffles, so it is switched off below 1,000 entities
-    # (count on the checkpointed table is a cached-scan job) — same
-    # size-dispatch precedent as connected_components' labelprop arm.
+    # (count on the checkpointed table is a cached-scan job) — the
+    # same kind of size dispatch as connected_components' driver arm.
     pairs, _oversized = prefix_candidate_pairs(
         reps,
         threshold=threshold,

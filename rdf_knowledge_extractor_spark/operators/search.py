@@ -105,15 +105,15 @@ def bm25_topk(
         ["query_id", "term"],
     )
 
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    # _spread: size-dependent verdict, measured at both scales — at
+    # spread: size-dependent verdict, measured at both scales — at
     # sf0.1 it LOSES slightly (1.68 vs 1.51 s: the postings feed two
     # branches, so the exchange runs twice), but at sf1-scale the
     # single-task tokenize dominates and spread wins 5.8 -> 4.1 s.
     # Spread is kept: it is a no-op at real scale and the driver's
     # timed scale is the larger one.
-    postings = doc_postings(_spread(docs), text_col=text_col, id_col=id_col)
+    postings = doc_postings(spread(docs), text_col=text_col, id_col=id_col)
     # corpus constants: 1 row, broadcast by crossJoin
     stats = postings.groupBy("doc_id").agg(
         F.first("doc_len").alias("_dl")

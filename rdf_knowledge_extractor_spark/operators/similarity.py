@@ -113,7 +113,7 @@ def cosine_topk_bruteforce(
     Pass `dim` when the embedding width is known: scoring then runs
     under whole-stage codegen with per-vector norms computed once
     (identical results, interpreted HOF fold eliminated)."""
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
@@ -121,8 +121,8 @@ def cosine_topk_bruteforce(
     )
     # a small embeddings table often arrives as ONE parquet row group —
     # the whole scoring stage (corpus × queries scan-side nested-loop)
-    # would then run in a single task; _spread is a no-op at scale
-    c = _spread(corpus).select(
+    # would then run in a single task; spread is a no-op at scale
+    c = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
         *([] if dim is None else [_norm(F.col(vec_col)).alias("c_norm")]),
     )
@@ -234,11 +234,11 @@ def cosine_pairs_bucketed(
     auto_planes, auto_tables = lsh_params_for_threshold(
         threshold, target_miss, n_planes
     )
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
     n_planes = n_planes or auto_planes
     n_tables = n_tables or auto_tables
-    corpus = _spread(corpus)  # single-row-group scans → 1-task UDF stage
+    corpus = spread(corpus)  # single-row-group scans → 1-task UDF stage
     buckets_of = _hyperplane_buckets_udf(dim, n_planes, n_tables, seed=seed)
     bucketed = corpus.select(
         F.col(id_col).alias("id"),
@@ -349,12 +349,12 @@ def ivf_cosine_topk(
     64× reduction with recall tunable via nprobe (recall-vs-bruteforce
     pinned in tests).  The cell column doubles as the natural partition
     key for a materialized index table."""
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
     cents = train_ivf_centroids(
         corpus, dim, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
     )
-    corpus = _spread(corpus)  # single-row-group scans → 1-task UDF stage
+    corpus = spread(corpus)  # single-row-group scans → 1-task UDF stage
     assign1 = _ivf_cells_udf(cents, 1)
     probe = _ivf_cells_udf(cents, nprobe)
     c_cells = corpus.select(
@@ -401,10 +401,10 @@ def lsh_cosine_topk(
     """Approximate top-k: `n_tables` independent sign-LSH bucketings;
     candidates = bucket collisions in any table; exact re-rank.
     Recall tunable via n_planes (bucket size) × n_tables."""
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
     buckets_of = _hyperplane_buckets_udf(dim, n_planes, n_tables, seed=101)
-    c_buck = _spread(corpus).select(
+    c_buck = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         _norm(F.col(vec_col)).alias("c_norm"),

@@ -41,45 +41,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rdf_knowledge_extractor_spark.functions.text_analysis import char_shingles
+from rdf_knowledge_extractor_spark.operators.dispatch import spread
 from rdf_knowledge_extractor_spark.operators.linking import (
     _minhash_band_udf,
     shingle_hash_col,
 )
-
-
-def _spread(docs: DataFrame) -> DataFrame:
-    """Repartition tiny SCAN-SHAPED inputs up to default parallelism.
-
-    A small corpus often arrives as a single parquet split (one task),
-    which would serialize every downstream sketch UDF.  At scale the
-    input already has ≥ defaultParallelism splits and this is a no-op —
-    no extra shuffle on the 100-TB path.
-
-    Guard: partition count is only consulted when the physical plan
-    contains no Exchange.  Under AQE, `.rdd` on an exchange-bearing
-    plan eagerly materializes every upstream query stage
-    (getFinalPhysicalPlan) — and a plan that already shuffles produces
-    shuffle.partitions-sized output anyway, so spreading would be
-    redundant there.  The Exchange probe captures the PUBLIC
-    `explain()` output (no `_jdf` internals — survives renames and
-    Spark-connect, where explain is served remotely)."""
-    import contextlib
-    import io
-
-    sc = docs.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        docs.explain(mode="simple")
-    if "Exchange" in buf.getvalue():
-        return docs
-    try:
-        n_splits = docs.rdd.getNumPartitions()
-    except Exception:  # Connect-style sessions: no .rdd — file count
-        n_splits = len(docs.inputFiles()) or 1
-    if n_splits < p:
-        return docs.repartition(p)
-    return docs
 
 
 def _pair_combos(ids_col):
@@ -235,7 +201,7 @@ def ngram_jaccard_pairs(
     the full shingle arrays of surviving candidates.
     """
     sh = (
-        _with_shingles(_spread(docs), id_col, text_col, k)
+        _with_shingles(spread(docs), id_col, text_col, k)
         .withColumn("shingles", F.array_sort("shingles"))
         .persist()
     )
@@ -355,7 +321,7 @@ def minhash_lsh_pairs(
     # materializes the blocks anyway, so an eager checkpoint only adds
     # a separate driver job — interleaved A/B: lazy 3.8-4.0 s vs eager
     # 4.1 s end-to-end warm.
-    sh = _with_hashed_shingles(_spread(docs), id_col, text_col, k).localCheckpoint(
+    sh = _with_hashed_shingles(spread(docs), id_col, text_col, k).localCheckpoint(
         eager=False
     )
     bands_of = _minhash_band_udf(num_perm, bands)
@@ -540,7 +506,7 @@ def simhash_pairs(
     """
     n_chunks = max_hamming + 1
     chunk_bits = 64 // n_chunks
-    sigs = _spread(docs).select(
+    sigs = spread(docs).select(
         F.col(id_col).alias("id"),
         _simhash_from_hashes(
             shingle_hash_col(char_shingles(F.col(text_col), k))

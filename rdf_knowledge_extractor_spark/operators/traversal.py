@@ -8,10 +8,11 @@ reference output are artifacts of the stack; the *set* of reachable
 entities (excluding the seed) is the meaningful result, which is what
 this operator returns.
 
-Spark shape: pre-compute the bidirectional edge list once, then loop
-`max_depth` times joining the (tiny, broadcast) frontier against it and
-anti-joining the visited set.  Same DataFrame pattern as the
-connected-components stage (operators/components.py).
+Spark shape: build the bidirectional edge list once, then walk it
+with `reachable`, the one hop-by-hop search in the package (the
+SPARQL engine's seeded `p+` paths call it too): a driver-side BFS for
+small edge lists, a broadcast-frontier loop above the shared size
+bound (operators/dispatch.py).
 
 Faithfulness notes (both reproduced):
 - reverse edges additionally require the *current* node to look
@@ -26,79 +27,84 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdf_knowledge_extractor_spark.operators import dispatch
+
+
+def reachable(
+    edges: DataFrame, seed: str, max_hops: int | None = None
+) -> tuple[DataFrame, int]:
+    """(DataFrame(node: string), rounds) — distinct nodes reached from
+    `seed` over 1..`max_hops` hops of the (src, dst) edge list
+    (unbounded when `max_hops` is None).  The seed is included iff a
+    cycle leads back to it.  `rounds` counts frontier expansions,
+    including the one that came back empty.  Edges with a NULL
+    endpoint are dropped on both arms, so NULL is never reached.
+
+    Size dispatch (operators/dispatch.py): an edge list of at most
+    DRIVER_MAX_EDGES rows comes back in one bounded collect and is
+    walked on the driver; a bigger one runs the distributed loop —
+    tiny broadcast frontier joined against the edges, anti-join on the
+    reached set, localCheckpoint per round.  Same frontier/reached
+    semantics and round count on both arms."""
+    spark = edges.sparkSession
+    edges = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    rows = dispatch.bounded_collect(edges, dispatch.DRIVER_MAX_EDGES)
+    rounds = 0
+    if rows is not None:
+        adj: dict[str, list[str]] = {}
+        for src, dst in rows:
+            adj.setdefault(src, []).append(dst)
+        frontier_set = {seed}
+        reached_set: set[str] = set()
+        while max_hops is None or rounds < max_hops:
+            rounds += 1
+            new = {d for s in frontier_set for d in adj.get(s, ())} - reached_set
+            if not new:
+                break
+            reached_set |= new
+            frontier_set = new
+        return (
+            spark.createDataFrame([(n,) for n in sorted(reached_set)], "node string"),
+            rounds,
+        )
+
+    frontier = spark.createDataFrame([(seed,)], "src string")
+    reached = spark.createDataFrame([], "node string")
+    while max_hops is None or rounds < max_hops:
+        rounds += 1
+        new = (
+            edges.join(F.broadcast(frontier), on="src")
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(reached, on="node", how="left_anti")
+            .localCheckpoint(eager=True)
+        )
+        if new.isEmpty():
+            break
+        reached = reached.unionByName(new).localCheckpoint(eager=True)
+        frontier = new.select(F.col("node").alias("src"))
+    return reached, rounds
+
 
 def find_related_entities(
     graph: DataFrame, entity_uri: str, max_depth: int
 ) -> DataFrame:
     """DataFrame(entity: string) — distinct entities reachable from the
-    seed within max_depth hops (seed excluded unless reachable)."""
-    spark = graph.sparkSession
+    seed within max_depth hops, seed excluded."""
     if max_depth <= 0:
-        return spark.createDataFrame([], "entity string")
+        return graph.sparkSession.createDataFrame([], "entity string")
 
     fwd = graph.select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     ).where(F.col("object").startswith("http"))
-    # reverse edges: current node (the object) must itself be URI-ish;
-    # NULL subjects are dropped (they are not entities — previously a
-    # NULL-subject triple could surface a spurious NULL neighbor row,
-    # and the driver/distributed arms would diverge on it)
+    # reverse edges: current node (the object) must itself be URI-ish
     rev = graph.select(
         F.col("object").alias("src"), F.col("subject").alias("dst")
-    ).where(F.col("object").startswith("http") & F.col("subject").isNotNull())
-    edges = fwd.unionByName(rev)
-
-    # small-input arm: ONE limit-collect dispatches and fetches in the
-    # same job — if at most _DRIVER_MAX_EDGES rows come back we hold
-    # the complete edge list and BFS on the driver (output bounded by
-    # the node set; identical frontier/visited semantics to the loop
-    # below, which costs ~3 jobs per hop plus a full graph-lineage
-    # recompute per hop).  One extra row means the graph is bigger
-    # than the bound and the distributed loop runs unchanged.
-    from rdf_knowledge_extractor_spark.operators.components import (
-        _DRIVER_MAX_EDGES,
+    ).where(F.col("object").startswith("http"))
+    # the reference's visited set starts with the seed; reaching it
+    # again over a cycle adds nothing else (its neighbours were all
+    # reached in round 1), so dropping it afterwards gives the same set
+    reached, _ = reachable(fwd.unionByName(rev), entity_uri, max_hops=max_depth)
+    return reached.where(F.col("node") != entity_uri).select(
+        F.col("node").alias("entity")
     )
-
-    sample = edges.limit(_DRIVER_MAX_EDGES + 1).collect()
-    if len(sample) <= _DRIVER_MAX_EDGES:
-        adj: dict[str, list[str]] = {}
-        for r in sample:
-            if r["src"] is not None and r["dst"] is not None:
-                adj.setdefault(r["src"], []).append(r["dst"])
-        frontier_set = {entity_uri}
-        visited = {entity_uri}
-        related_set: set[str] = set()
-        for _ in range(max_depth):
-            new = {
-                d for s in frontier_set for d in adj.get(s, ())
-            } - visited
-            if not new:
-                break
-            related_set |= new
-            visited |= new
-            frontier_set = new
-        return spark.createDataFrame(
-            [(n,) for n in sorted(related_set)], "entity string"
-        )
-
-    frontier = spark.createDataFrame([(entity_uri,)], "src string")
-    visited = frontier.select(F.col("src").alias("entity"))
-    related = spark.createDataFrame([], "entity string")
-
-    for _ in range(max_depth):
-        # frontier is small → broadcast side of the join
-        neighbors = (
-            edges.join(F.broadcast(frontier), on="src")
-            .select(F.col("dst").alias("entity"))
-            .distinct()
-        )
-        new = neighbors.join(visited, on="entity", how="left_anti")
-        # localCheckpoint truncates the growing lineage each iteration
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        related = related.unionByName(new)
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select(F.col("entity").alias("src"))
-
-    return related.distinct()

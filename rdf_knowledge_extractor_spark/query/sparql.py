@@ -47,6 +47,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdf_knowledge_extractor_spark.operators import dispatch
+from rdf_knowledge_extractor_spark.operators.traversal import reachable
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
@@ -131,21 +134,14 @@ def _tokenize(text: str) -> list[str]:
     return toks
 
 
-# below this many (distinct, checkpointed) edges the property-path
-# closures dispatch to latency-optimal small arms: the seeded BFS
-# collects and walks on the driver (output bounded by the node set —
-# the components._DRIVER_MAX_EDGES scalar-bounded-collect class), and
-# the full closure uses path doubling (O(log diameter) rounds).  Both
-# fall back to the r4/r5 distributed loops above the bound.
-_DRIVER_PATH_MAX_EDGES = 100_000
-
-# the doubling arm's per-round cost scales with the CLOSURE, which the
-# edge count does not bound (a 100k-edge chain has a ~5e9-pair
-# closure); past this many closure pairs the loop abandons doubling
-# and restarts the work-optimal semi-naive iteration from the base
-# edges (restart, not resume: a mixed schedule would skip pairs whose
-# length-L prefix was found in an older round's closure, violating
-# the semi-naive frontier invariant)
+# the full closure's small-input arm (at most dispatch.DRIVER_MAX_EDGES
+# base edges) is path doubling, whose per-round cost scales with the
+# CLOSURE, which the edge count does not bound (a 100k-edge chain has
+# a ~5e9-pair closure); past this many closure pairs the loop abandons
+# doubling and restarts the work-optimal semi-naive iteration from the
+# base edges (restart, not resume: a mixed schedule would skip pairs
+# whose length-L prefix was found in an older round's closure,
+# violating the semi-naive frontier invariant)
 _DOUBLING_MAX_CLOSURE = 2_000_000
 
 
@@ -153,8 +149,9 @@ class SparqlEngine:
     def __init__(self, graph: DataFrame):
         self.graph = graph
         #: diagnostics of the most recent transitive-path evaluation:
-        #: {"mode": "seeded"|"full", "rounds": int} — lets tests assert
-        #: a bound-endpoint path never computed the full closure
+        #: {"mode": "seeded", "rounds": int} or {"mode": "full",
+        #: "doubling_rounds": int, "seminaive_rounds": int} — lets tests
+        #: assert a bound-endpoint path never computed the full closure
         self.last_path_stats: dict | None = None
 
     # -- parsing -----------------------------------------------------
@@ -754,8 +751,8 @@ class SparqlEngine:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        rounds = 0
-        if base.count() <= _DRIVER_PATH_MAX_EDGES:
+        doubling_rounds = 0
+        if base.count() <= dispatch.DRIVER_MAX_EDGES:
             # small-input arm: PATH DOUBLING — closure ∘ closure per
             # round reaches fixed point in O(log diameter) rounds
             # instead of semi-naive's O(diameter), and each round is
@@ -781,9 +778,13 @@ class SparqlEngine:
                 )
                 new = nxt.join(closure, on=["_src", "_dst"], how="left_anti")
                 new = new.localCheckpoint(eager=True)
-                rounds += 1
+                doubling_rounds += 1
                 if new.isEmpty():
-                    self.last_path_stats = {"mode": "full", "rounds": rounds}
+                    self.last_path_stats = {
+                        "mode": "full",
+                        "doubling_rounds": doubling_rounds,
+                        "seminaive_rounds": 0,
+                    }
                     return closure
                 closure = closure.unionByName(new).localCheckpoint(eager=True)
                 if closure.count() > _DOUBLING_MAX_CLOSURE:
@@ -793,6 +794,7 @@ class SparqlEngine:
         hop = base.select(
             F.col("_src").alias("_mid"), F.col("_dst").alias("_nd")
         )
+        rounds = 0
         while True:
             nxt = (
                 frontier.join(hop, frontier["_dst"] == hop["_mid"])
@@ -803,87 +805,33 @@ class SparqlEngine:
             new = new.localCheckpoint(eager=True)
             rounds += 1
             if new.isEmpty():
-                self.last_path_stats = {"mode": "full", "rounds": rounds}
+                self.last_path_stats = {
+                    "mode": "full",
+                    "doubling_rounds": doubling_rounds,
+                    "seminaive_rounds": rounds,
+                }
                 return closure
             closure = closure.unionByName(new).localCheckpoint(eager=True)
             frontier = new
 
     def _seeded_closure(self, edges: DataFrame, seed: str, forward: bool) -> DataFrame:
         """(_src, _dst) pairs of the ≥1-hop closure restricted to one
-        CONSTANT endpoint — BFS from the seed over only the reachable
-        region (operators/traversal.py shape: tiny broadcast frontier
-        joined against the edge table, visited anti-join,
-        localCheckpoint per round).  `forward=True` evaluates
-        `<seed> p+ ?y` (rows (seed, y)); `forward=False` evaluates
-        `?x p+ <seed>` by walking the transposed edges (rows (x, seed)).
-        Never materializes pairs outside the seed's reachable set —
-        the round-4 brief #3 scale fix."""
-        spark = edges.sparkSession
+        CONSTANT endpoint — `reachable` (operators/traversal.py) from
+        the seed over only the reachable region.  `forward=True`
+        evaluates `<seed> p+ ?y` (rows (seed, y)); `forward=False`
+        evaluates `?x p+ <seed>` by walking the transposed edges (rows
+        (x, seed)).  Never materializes pairs outside the seed's
+        reachable set — the round-4 brief #3 scale fix."""
         e = (
-            edges.select("_src", "_dst")
+            edges.select(F.col("_src").alias("src"), F.col("_dst").alias("dst"))
             if forward
-            else edges.select(
-                F.col("_dst").alias("_src"), F.col("_src").alias("_dst")
-            )
-        ).filter(
-            F.col("_src").isNotNull() & F.col("_dst").isNotNull()
+            else edges.select(F.col("_dst").alias("src"), F.col("_src").alias("dst"))
         ).distinct().localCheckpoint(eager=True)
-        # NULL endpoints dropped above: a NULL destination could
-        # previously re-enter `new` every round (NULL never matches
-        # the reached anti-join) and surface as a spurious NULL
-        # binding — and the driver/distributed arms would diverge
-        if e.count() <= _DRIVER_PATH_MAX_EDGES:
-            # small-input arm: collect the (already checkpointed)
-            # edge list and BFS on the driver — one collect replaces
-            # ~2 jobs per hop.  Round accounting identical to the
-            # distributed loop (the terminating empty frontier counts);
-            # output bounded by the node set, so the collect bound is
-            # the same scalar-bounded class as components'.
-            adj: dict[str, list[str]] = {}
-            for r in e.collect():
-                if r["_src"] is not None and r["_dst"] is not None:
-                    adj.setdefault(r["_src"], []).append(r["_dst"])
-            frontier_set = {seed}
-            reached_set: set[str] = set()
-            rounds = 0
-            while True:
-                nxt = {d for s in frontier_set for d in adj.get(s, ())}
-                new = nxt - reached_set
-                rounds += 1
-                if not new:
-                    break
-                reached_set |= new
-                frontier_set = new
-            self.last_path_stats = {"mode": "seeded", "rounds": rounds}
-            out = sorted(reached_set)
-            if forward:
-                return spark.createDataFrame(
-                    [(seed, n) for n in out], "_src string, _dst string"
-                )
-            return spark.createDataFrame(
-                [(n, seed) for n in out], "_src string, _dst string"
-            )
-        frontier = spark.createDataFrame([(seed,)], "_src string")
-        reached = spark.createDataFrame([], "_n string")
-        rounds = 0
-        while True:
-            nxt = (
-                e.join(F.broadcast(frontier), on="_src")
-                .select(F.col("_dst").alias("_n"))
-                .distinct()
-            )
-            new = nxt.join(reached, on="_n", how="left_anti").localCheckpoint(
-                eager=True
-            )
-            rounds += 1
-            if new.isEmpty():
-                break
-            reached = reached.unionByName(new).localCheckpoint(eager=True)
-            frontier = new.select(F.col("_n").alias("_src"))
+        reached, rounds = reachable(e, seed)
         self.last_path_stats = {"mode": "seeded", "rounds": rounds}
         if forward:
-            return reached.select(F.lit(seed).alias("_src"), F.col("_n").alias("_dst"))
-        return reached.select(F.col("_n").alias("_src"), F.lit(seed).alias("_dst"))
+            return reached.select(F.lit(seed).alias("_src"), F.col("node").alias("_dst"))
+        return reached.select(F.col("node").alias("_src"), F.lit(seed).alias("_dst"))
 
     @staticmethod
     def _term_value(term: str) -> str | None:

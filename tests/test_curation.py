@@ -72,16 +72,16 @@ def test_sample_rate_boundaries(docs):
 
 def test_spread_skips_exchange_bearing_plans(docs, spark):
     # operators accept derived inputs: an aggregated DF's plan contains
-    # an Exchange — _spread must not touch .rdd there (under AQE that
+    # an Exchange — spread must not touch .rdd there (under AQE that
     # would eagerly run every upstream stage)
-    from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
     derived = docs.groupBy("source").agg(
         F.first("text").alias("text"), F.min("doc_id").alias("doc_id")
     )
-    assert _spread(derived) is derived
+    assert spread(derived) is derived
     scan = spark.createDataFrame([(1, "x")], "doc_id long, text string").coalesce(1)
-    assert _spread(scan).rdd.getNumPartitions() >= scan.rdd.getNumPartitions()
+    assert spread(scan).rdd.getNumPartitions() >= scan.rdd.getNumPartitions()
 
 
 def test_quota_caps_every_group(docs):

@@ -1,0 +1,157 @@
+"""Both arms behind operators/dispatch.py agree on hostile inputs.
+
+`reachable` and its two callers — `find_related_entities` and the
+SPARQL engine's seeded `p+` paths — run once with the default
+`DRIVER_MAX_EDGES` (driver BFS) and once per forced bound at and
+around the edge count, down to 0 (distributed frontier loop).  The
+graph has a cycle back to the seed, a self-loop, NULL endpoints, a
+literal object and an edge under another predicate.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from rdf_knowledge_extractor_spark.operators import dispatch
+
+X = "http://x/"
+P, Q = X + "p", X + "q"
+LIT = "a literal"
+
+ROWS = [
+    (X + "a", P, X + "b"),
+    (X + "b", P, X + "c"),
+    (X + "c", P, X + "a"),   # cycle back to the seed a
+    (X + "c", P, X + "d"),
+    (X + "d", P, X + "d"),   # self-loop
+    (X + "d", P, LIT),       # literal object
+    (None, P, X + "b"),      # NULL subject
+    (X + "b", P, None),      # NULL object
+    (X + "e", P, X + "a"),   # reaches a only backwards
+    (X + "a", Q, X + "z"),   # other predicate
+]
+N_P_EDGES = sum(1 for s, p, o in ROWS if p == P and s and o)  # 7
+
+
+@pytest.fixture(scope="module")
+def graph(spark):
+    return spark.createDataFrame(
+        ROWS, "subject string, predicate string, object string"
+    )
+
+
+def _arms(monkeypatch, run):
+    """run() under the default bound, then under bounds forced at and
+    just below the edge count and at 0; returns {bound: (result, took
+    the driver arm)}."""
+    out = {}
+    real = dispatch.bounded_collect
+    for bound in (dispatch.DRIVER_MAX_EDGES, N_P_EDGES, N_P_EDGES - 1, 0):
+        arms = []
+
+        def spy(df, n):
+            rows = real(df, n)
+            arms.append(rows is not None)
+            return rows
+
+        with monkeypatch.context() as m:
+            m.setattr(dispatch, "DRIVER_MAX_EDGES", bound)
+            m.setattr(dispatch, "bounded_collect", spy)
+            result = run()
+        assert len(set(arms)) == 1, arms
+        out[bound] = (result, arms[0])
+    return out
+
+
+@pytest.mark.parametrize("max_hops", [1, 2, None])
+@pytest.mark.parametrize("forward", [True, False])
+def test_reachable_arms_agree(spark, graph, monkeypatch, forward, max_hops):
+    from pyspark.sql import functions as F
+
+    from rdf_knowledge_extractor_spark.operators.traversal import reachable
+
+    s, o = F.col("subject"), F.col("object")
+    p_edges = graph.where(F.col("predicate") == P)
+    edges = p_edges.select(
+        (s if forward else o).alias("src"), (o if forward else s).alias("dst")
+    )
+
+    def run():
+        reached, rounds = reachable(edges, X + "a", max_hops=max_hops)
+        return frozenset(r.node for r in reached.collect()), rounds
+
+    got = _arms(monkeypatch, run)
+    assert got[dispatch.DRIVER_MAX_EDGES][1] and got[N_P_EDGES][1]
+    assert not got[N_P_EDGES - 1][1] and not got[0][1]
+    results = {res for res, _ in got.values()}
+    assert len(results) == 1, got
+    want = {
+        (True, 1): ({"b"}, 1),
+        (True, 2): ({"b", "c"}, 2),
+        # cycle back to a in round 3; the literal in round 4
+        (True, None): ({"b", "c", "a", "d", LIT}, 5),
+        (False, 1): ({"c", "e"}, 1),
+        (False, 2): ({"c", "e", "b"}, 2),
+        (False, None): ({"c", "e", "b", "a"}, 4),
+    }[(forward, max_hops)]
+    nodes, rounds = results.pop()
+    assert nodes == {n if n == LIT else X + n for n in want[0]}
+    assert rounds == want[1]
+
+
+@pytest.mark.parametrize("max_depth", [1, 2, 10])
+@pytest.mark.parametrize("seed", ["a", "d"])
+def test_find_related_entities_arms_agree(spark, graph, monkeypatch, seed, max_depth):
+    from rdf_knowledge_extractor_spark.operators.traversal import (
+        find_related_entities,
+    )
+
+    p_graph = graph.where(graph.predicate == P)
+
+    def run():
+        out = find_related_entities(p_graph, X + seed, max_depth=max_depth)
+        return frozenset(r.entity for r in out.collect())
+
+    got = _arms(monkeypatch, run)
+    results = {res for res, _ in got.values()}
+    assert len(results) == 1, got
+    related = results.pop()
+    # the seed is excluded even though a cycle leads back to it; the
+    # literal and NULLs are never entities
+    assert X + seed not in related and LIT not in related
+    assert None not in related
+    if max_depth == 10:
+        assert related == {X + n for n in "abcde"} - {X + seed}
+
+
+@pytest.mark.parametrize(
+    "pattern, var, want",
+    [
+        # p+ includes the seed when a cycle leads back to it
+        (f"<{X}a> <{P}>+ ?v", "v", {X + "a", X + "b", X + "c", X + "d", LIT}),
+        (f"?v <{P}>+ <{X}a>", "v", {X + "a", X + "b", X + "c", X + "e"}),
+    ],
+)
+def test_seeded_path_arms_agree(spark, graph, monkeypatch, pattern, var, want):
+    from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
+
+    def run():
+        eng = SparqlEngine(graph)
+        rows = eng.execute(f"SELECT ?{var} WHERE {{ {pattern} }}").collect()
+        return frozenset(r[var] for r in rows), eng.last_path_stats["rounds"]
+
+    got = _arms(monkeypatch, run)
+    assert got[dispatch.DRIVER_MAX_EDGES][1] and got[N_P_EDGES][1]
+    assert not got[N_P_EDGES - 1][1] and not got[0][1]
+    results = {res for res, _ in got.values()}
+    assert len(results) == 1, got
+    assert results.pop()[0] == want
+
+
+def test_bounded_collect_at_and_around_bound(spark):
+    df = spark.range(5).repartition(3)
+    assert sorted(r.id for r in dispatch.bounded_collect(df, 5)) == list(range(5))
+    assert len(dispatch.bounded_collect(df, 6)) == 5
+    assert dispatch.bounded_collect(df, 4) is None
+    assert dispatch.bounded_collect(df, 0) is None
+    assert dispatch.bounded_collect(df.limit(0), 0) == []

@@ -136,14 +136,14 @@ def test_linking_on_generated_corpus(spark, example_config):
     assert not bad_precision, bad_precision
 
 
-def test_star_cc_matches_labelprop_and_log_rounds(spark):
-    """Large-star/small-star (VERDICT #7): identical labels to label
-    propagation, converging in O(log n) rounds on a CHAIN (label prop
-    would need n rounds)."""
+def test_star_cc_matches_union_find_and_log_rounds(spark):
+    """Large-star/small-star (VERDICT #7): identical labels to the
+    driver union-find, converging in O(log n) rounds on a CHAIN (a
+    per-hop flood would need n rounds)."""
     import math
 
     from rdf_knowledge_extractor_spark.operators.components import (
-        connected_components_labelprop,
+        _components_driver,
         connected_components_star,
     )
 
@@ -158,19 +158,14 @@ def test_star_cc_matches_labelprop_and_log_rounds(spark):
     assert all(got[f"n{i:03d}"] == "n000" for i in range(n))
     assert got["s_hub"] == "s_hub" and got["s_leaf3"] == "s_hub"
     assert got["iso"] == "iso"
-    # O(log n) + small constant — label prop would take ~63 rounds
+    # O(log n) + small constant — a min-label flood would take ~63
     assert rounds <= int(math.log2(n)) + 4, f"took {rounds} rounds"
 
-    # label prop needs O(diameter)=63 rounds for the same answer —
-    # the very reason star is the scale path (default max_iter=20
-    # would stop short on this chain)
-    lp = {
+    uf = {
         r["node"]: r["component"]
-        for r in connected_components_labelprop(
-            edges, "src", "dst", max_iter=70
-        ).collect()
+        for r in _components_driver(edges, "src", "dst").collect()
     }
-    assert lp == got
+    assert uf == got
 
 
 def test_cc_dispatcher_small_and_shapes(spark):

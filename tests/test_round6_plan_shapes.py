@@ -306,7 +306,7 @@ def test_traversal_driver_arm_matches_distributed_loop(spark, monkeypatch):
         for r in T.find_related_entities(g, "http://x/a", max_depth=2).collect()
     }
     monkeypatch.setattr(
-        "rdf_knowledge_extractor_spark.operators.components._DRIVER_MAX_EDGES", 0
+        "rdf_knowledge_extractor_spark.operators.dispatch.DRIVER_MAX_EDGES", 0
     )
     dist = {
         r.entity

@@ -16,7 +16,7 @@ from rdf_knowledge_extractor_spark.operators.similarity import (
     _norm_fixed,
     _sim_expr,
 )
-from rdf_knowledge_extractor_spark.operators.textdedup import _spread
+from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/sfscaled/sf1.0")
 cpus = 32
@@ -53,7 +53,7 @@ def scored_noop():
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
         _norm_fixed(F.col("embedding"), 64).alias("q_norm"))
-    c = _spread(emb).select(
+    c = spread(emb).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
         _norm_fixed(F.col("embedding"), 64).alias("c_norm"))
     s = (c.crossJoin(F.broadcast(q))

@@ -37,18 +37,18 @@ def main():
                       extra_conf={"spark.local.dir": "/dev/shm/spark-local"})
     spark.sparkContext.setLogLevel("ERROR")
 
+    from rdf_knowledge_extractor_spark.operators.dispatch import spread
     from rdf_knowledge_extractor_spark.operators.textdedup import (
         _bucket_candidate_pairs,
-        _spread,
         _with_hashed_shingles,
     )
     from rdf_knowledge_extractor_spark.operators.linking import _minhash_band_udf
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     timed(spark, "scan only", lambda: noop(docs))
-    spread = timed(spark, "spread (plan)", lambda: _spread(docs))
-    timed(spark, "spread exec", lambda: noop(spread))
-    sh = _with_hashed_shingles(spread, "doc_id", "text", 9)
+    spread_docs = timed(spark, "spread (plan)", lambda: spread(docs))
+    timed(spark, "spread exec", lambda: noop(spread_docs))
+    sh = _with_hashed_shingles(spread_docs, "doc_id", "text", 9)
     timed(spark, "shingle+hash+distinct+sort", lambda: noop(sh))
     sh = sh.persist()
     timed(spark, "persist sh", lambda: sh.count())
