@@ -65,10 +65,10 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
 
     # ---- dedup_minhash_lsh stages -------------------------------------
-    from rdf_knowledge_extractor_spark.operators.linking import _minhash_band_udf
     from rdf_knowledge_extractor_spark.operators.dispatch import spread
     from rdf_knowledge_extractor_spark.operators.textdedup import (
         _bucket_candidate_pairs,
+        _minhash_band_udf,
         _with_hashed_shingles,
         minhash_lsh_pairs,
     )

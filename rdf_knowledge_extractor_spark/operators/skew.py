@@ -10,8 +10,9 @@ Layers of defense in this engine, in order of preference:
 1. **AQE skew-join** (`spark.sql.adaptive.skewJoin.enabled`, on in
    session.py) splits oversized sort-merge partitions at runtime —
    free, but only for join patterns AQE recognizes.
-2. **LSH bucket caps** (operators/linking.py) bound the candidate
-   blow-up from hot blocking keys, with dropped buckets reported.
+2. **Blocking bucket caps** (textdedup._bucket_candidate_pairs) bound
+   the in-row candidate blow-up from hot blocking keys: oversized
+   buckets go through a distributed self-join and are reported.
 3. **Explicit salting** (this module) for aggregations/joins where a
    known-hot key must still be processed completely: the hot side's
    key is split into `factor` sub-keys; the small side is replicated

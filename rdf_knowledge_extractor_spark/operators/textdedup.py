@@ -1,17 +1,18 @@
-"""Document-level deduplication family for training-data pipelines.
+"""Document-level deduplication family for training-data pipelines,
+and the one home of prefix-filter blocking and Jaccard verification
+(entity linking, operators/linking.py, and the streaming near-dup
+filter, streaming/neardup.py, call the same functions).
 
 Four strategies over a corpus DataFrame(id, text):
 
 - exact            : 64-bit content hash groupBy (operators/dedup.py)
-- n-gram Jaccard   : inverted-index pair generation (explode distinct
-                     shingles → self-equi-join on shingle → pair
-                     co-count → Jaccard by inclusion-exclusion).  This
-                     is the scale-correct alternative to the O(n²)
-                     cross join: cost ∝ Σ bucket², bounded by dropping
-                     stop-shingles (df > max_doc_freq).
-- MinHash + LSH    : reuses the banded-MinHash UDF from entity linking
-                     (operators/linking.py) over char-k-gram shingles;
-                     candidates verified with exact Jaccard.
+- n-gram Jaccard   : PPJoin prefix filtering (`rarest_first_prefix`:
+                     each document's ⌊(1−t)·n⌋+1 rarest shingles enter
+                     the inverted index) — exact recall, near-linear
+                     candidate generation.
+- MinHash + LSH    : banded-MinHash UDF (`_minhash_band_udf`) over
+                     char-k-gram shingles; candidates verified with
+                     exact Jaccard.
 - SimHash          : 64-bit sign-sum sketch (vectorized numpy UDF);
                      candidate pairs via the pigeonhole block trick
                      (4 × 16-bit chunks ⇒ guaranteed recall for
@@ -20,9 +21,10 @@ Four strategies over a corpus DataFrame(id, text):
 All three blocking families generate candidates through
 `_bucket_candidate_pairs`: benign buckets expand i<j combinations
 in-array after ONE groupBy shuffle; buckets over `max_bucket_size`
-route through a distributed self-join (exact) or are dropped+reported
-(linking's policy) — a giant near-dup cluster can never materialize
-O(c²) pair structs in a single row (round-4 verdict, wrong #1).
+route through a distributed self-join (exact, and reported) — a giant
+near-dup cluster can never materialize O(c²) pair structs in a single
+row (round-4 verdict, wrong #1).  Every Jaccard ≥ t decision is made by
+`_verified_pairs`.
 
 Cache contract: these operators persist() their shingle/sketch
 intermediates because the returned (lazy) DataFrame reads them on
@@ -42,10 +44,103 @@ from pyspark.sql import types as T
 
 from rdf_knowledge_extractor_spark.functions.text_analysis import char_shingles
 from rdf_knowledge_extractor_spark.operators.dispatch import spread
-from rdf_knowledge_extractor_spark.operators.linking import (
-    _minhash_band_udf,
-    shingle_hash_col,
-)
+
+_MERSENNE = (1 << 61) - 1
+# added to 1−t before the prefix-length floor; see _prefix_len
+_PREFIX_SLACK = 1e-12
+
+
+def shingle_hash_col(shingles_col):
+    """Catalyst-side 64-bit shingle hashing: `xxhash64` inside a
+    `transform` lambda runs JVM-side under whole-stage codegen — the
+    Python UDF then receives int64 arrays and never touches strings.
+    (Round-1 verdict: the per-shingle hashlib loop inside the UDF was
+    the slowest bench stage.)"""
+    return F.transform(shingles_col, lambda s: F.xxhash64(s))
+
+
+def _minhash_band_udf(num_perm: int, bands: int, seed: int = 17):
+    """Banded-MinHash over PRE-HASHED shingles (array<long> input).
+
+    Fully batch-vectorized: one (Σ shingles × num_perm) universal-hash
+    matrix per Arrow batch, per-document signatures via
+    `np.minimum.reduceat`, band folding via wrapping-multiply mixing —
+    zero per-row Python beyond list assembly."""
+    rows_per_band = num_perm // bands
+    rng = np.random.RandomState(seed)
+    a = rng.randint(1, _MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
+    b = rng.randint(0, _MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
+    _MIX = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant
+    _BIDX = (np.arange(bands, dtype=np.uint64) + np.uint64(1)) * np.uint64(
+        0xBF58476D1CE4E5B9
+    )
+
+    # shingle budget per vectorized chunk: sized so the (ΣS × P) hash
+    # matrix (chunk × 64 perms × 8 B ≈ 512 KB) plus its one temp stays
+    # inside a core's PRIVATE L2.  The hash computation makes ~9 full
+    # passes over the matrix (multiply, add, three mod-fold steps,
+    # reduceat), so a cache-resident chunk turns those passes into
+    # cache hits instead of DRAM round-trips under 32 concurrent
+    # python workers.  Re-swept on the round-6 measurement box
+    # (32-way ProcessPool, same math, 560k shingles/worker):
+    # chunk 50k → 2.19 s, 16k → 1.44, 4k → 0.76-0.82, and a flat
+    # plateau 0.56-0.59 s across 500-2000; 1000 sits mid-plateau with
+    # the fewest python-loop iterations.  Same bound protects worker
+    # RSS under many concurrent workers.
+    _CHUNK_SHINGLES = 1_000
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def bands_of(hashed: pd.Series) -> pd.Series:
+        vals = hashed.tolist()
+        lengths = np.fromiter((len(x) if x is not None else 0 for x in vals), dtype=np.int64)
+        n_rows = len(lengths)
+        if n_rows == 0:
+            return pd.Series([], dtype=object)
+        out = np.zeros((n_rows, bands), dtype=np.int64)
+        start = 0
+        with np.errstate(over="ignore"):
+            while start < n_rows:
+                end, budget = start, 0
+                while end < n_rows and (budget == 0 or budget + lengths[end] <= _CHUNK_SHINGLES):
+                    budget += lengths[end]
+                    end += 1
+                chunk_lens = lengths[start:end]
+                nonempty = chunk_lens > 0
+                if nonempty.any():
+                    flat = np.concatenate(
+                        [np.asarray(vals[i], dtype=np.int64) for i in range(start, end) if lengths[i]]
+                    ).astype(np.uint64)
+                    H = flat[:, None] * a[None, :]  # (ΣS, P)
+                    H += b[None, :]
+                    # exact `% _MERSENNE` via two shift-add folds
+                    # (2^61 ≡ 1 mod M, so x = q·2^61 + r ≡ q + r): no
+                    # vectorized integer division, ~3× cheaper on the
+                    # (ΣS × P) matrix, bit-identical result
+                    _M64 = np.uint64(_MERSENNE)
+                    _S61 = np.uint64(61)
+                    lo = H & _M64
+                    H >>= _S61
+                    H += lo
+                    np.bitwise_and(H, _M64, out=lo)
+                    H >>= _S61
+                    H += lo
+                    np.subtract(H, _M64, out=H, where=H >= _M64)
+                    offsets = np.zeros(int(nonempty.sum()), dtype=np.int64)
+                    np.cumsum(chunk_lens[nonempty][:-1], out=offsets[1:])
+                    sig = np.minimum.reduceat(H, offsets, axis=0)  # (rows⁺, P)
+                    sigr = sig.reshape(sig.shape[0], bands, rows_per_band)
+                    bv = sigr[:, :, 0].copy()
+                    for j in range(1, rows_per_band):
+                        bv *= _MIX
+                        bv += sigr[:, :, j]
+                    bv ^= _BIDX[None, :]
+                    bv *= _MIX
+                    idx = np.flatnonzero(nonempty) + start
+                    out[idx] = bv.astype(np.int64)
+                start = end
+        return pd.Series(list(out))
+
+    return bands_of
 
 
 def _pair_combos(ids_col):
@@ -82,7 +177,6 @@ def _bucket_candidate_pairs(
     key_cols: list[str],
     member_col: str,
     max_bucket_size: int = 200,
-    oversized: str = "selfjoin",
     with_buckets: bool = False,
 ):
     """Skew-safe candidate pairs from a (bucket-key, member) table.
@@ -92,23 +186,18 @@ def _bucket_candidate_pairs(
     (map-side, zero extra shuffle — the round-4 fast shape).  Larger
     buckets — a giant near-dup cluster of boilerplate/parked pages,
     guaranteed at 100-TB web scale — must NOT materialize O(c²) structs
-    in a single row of a single task (round-4 verdict, wrong #1), so:
+    in a single row of a single task (round-4 verdict, wrong #1), so
+    their members are exploded back to rows and self-equi-joined on the
+    bucket key, producing the SAME exact pair set but distributed across
+    tasks; the join reuses the groupBy's hash partitioning (no extra
+    Exchange) and AQE's skew-join splitter spreads a single hot key over
+    many tasks.
 
-    - oversized="selfjoin" (default): their members are exploded back
-      to rows and self-equi-joined on the bucket key, producing the
-      SAME exact pair set but distributed across tasks; the join reuses
-      the groupBy's hash partitioning (no extra Exchange) and AQE's
-      skew-join splitter spreads a single hot key over many tasks.
-    - oversized="drop": excluded from pair generation entirely
-      (the entity-linking cap model, operators/linking.py).
-
-    Either way the oversized buckets are REPORTED, never silent:
-    returns (pairs(id_a, id_b) distinct, report(*key_cols, n)).
-    The per-bucket member ARRAY is O(c) (~1 MB at c=100k) — well under
-    row limits; only the combos expansion needed the guard.
+    The oversized buckets are REPORTED, never silent: returns
+    (pairs(id_a, id_b) distinct, report(*key_cols, n)).  The per-bucket
+    member ARRAY is O(c) (~1 MB at c=100k) — well under row limits; only
+    the combos expansion needed the guard.
     """
-    if oversized not in ("selfjoin", "drop"):
-        raise ValueError(f"oversized must be 'selfjoin' or 'drop', got {oversized!r}")
     # persisted: the aggregate feeds up to three plan branches (report,
     # small, and the selfjoin arm twice) — the module's cache contract
     # for intermediates read on multiple join branches
@@ -123,20 +212,17 @@ def _bucket_candidate_pairs(
         .select(F.explode(_pair_combos(F.col("_ids"))).alias("_p"))
         .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
     )
-    if oversized == "selfjoin":
-        big = buckets.filter(F.size("_ids") > max_bucket_size).select(
-            *key_cols, F.explode("_ids").alias("_m")
-        )
-        a = big.select(*key_cols, F.col("_m").alias("id_a"))
-        b = big.select(*key_cols, F.col("_m").alias("id_b"))
-        big_pairs = (
-            a.join(b, on=key_cols)
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        pairs = small.unionByName(big_pairs)
-    else:
-        pairs = small
+    big = buckets.filter(F.size("_ids") > max_bucket_size).select(
+        *key_cols, F.explode("_ids").alias("_m")
+    )
+    a = big.select(*key_cols, F.col("_m").alias("id_a"))
+    b = big.select(*key_cols, F.col("_m").alias("id_b"))
+    big_pairs = (
+        a.join(b, on=key_cols)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+    pairs = small.unionByName(big_pairs)
     if with_buckets:
         # expose the PERSISTED bucket aggregate so a caller can take
         # cheap scalar statistics (e.g. the worst-case pair count for
@@ -177,35 +263,35 @@ def _with_hashed_shingles(docs: DataFrame, id_col: str, text_col: str, k: int) -
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 9,
-    threshold: float = 0.8,
-    max_bucket_size: int = 200,
-    oversized: str = "selfjoin",
-    with_report: bool = False,
-):
-    """DataFrame(id_a, id_b, jaccard) for pairs with Jaccard ≥ threshold.
+def _prefix_len(threshold: float, n):
+    """PPJoin prefix length ⌊(1−t)·n⌋+1 for a set of size `n` (a
+    Column).
 
-    EXACT result via prefix filtering (PPJoin family): under any fixed
-    total order of shingles, two sets with Jaccard ≥ t MUST share an
-    element within the first ⌊(1-t)·n⌋+1 shingles of each — so only the
-    prefix is exploded into the inverted index, with zero recall loss.
-    The order is ASCENDING GLOBAL DOCUMENT FREQUENCY (rarest first), so
-    prefixes consist of the rarest shingles and the candidate join
-    stays near-linear; a lexicographic order would fill every prefix
-    with the same common shingles and regenerate the quadratic blow-up
-    the filter exists to avoid.  Verification computes true Jaccard on
-    the full shingle arrays of surviving candidates.
-    """
-    sh = (
-        _with_shingles(spread(docs), id_col, text_col, k)
-        .withColumn("shingles", F.array_sort("shingles"))
-        .persist()
-    )
-    inv = sh.select("id", F.explode("shingles").alias("g"))
+    Never shorter than the exact value for any n < 2⁵³: t's binary
+    rounding, the subtraction and the product each err by at most
+    2⁻⁵³·n, far below the `_PREFIX_SLACK`·n added before the floor (an
+    absolute slack is outgrown by that error at n ≈ 2·10⁷).  The slack
+    only ever LENGTHENS a prefix — by one element, only when (1−t)·n
+    lies within slack·n below an integer — and the extra candidates are
+    removed by the exact verifier.  It also covers the verifier's own
+    double rounding: a pair whose computed ratio reaches t has a true
+    Jaccard within 2⁻⁵³ of t, far above t − slack."""
+    return (F.floor((1.0 - threshold + _PREFIX_SLACK) * n) + F.lit(1)).cast("int")
+
+
+def rarest_first_prefix(sets: DataFrame, threshold: float) -> DataFrame:
+    """(id, shingles) → (id, g) rows of each set's PPJoin prefix: its
+    `_prefix_len` rarest elements.
+
+    EXACT recall by theorem: under any fixed total order, two sets with
+    Jaccard ≥ t share an element within the first ⌊(1−t)·n⌋+1 of each,
+    so an equi-join on `g` over these rows finds every qualifying pair.
+    The order is ASCENDING GLOBAL DOCUMENT FREQUENCY (ties by value), so
+    prefixes hold the rarest elements and the postings lists stay short;
+    a lexicographic order would fill every prefix with the same common
+    elements and regenerate the quadratic blow-up the filter exists to
+    avoid.  `shingles` must hold distinct elements."""
+    inv = sets.select("id", F.explode("shingles").alias("g"))
     df_tbl = inv.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     ranked = (
         inv.join(df_tbl, on="g")
@@ -217,68 +303,54 @@ def ngram_jaccard_pairs(
             ).alias("by_rarity")
         )
     )
-    # epsilon before the floor: (1−t)·n computes BELOW the exact
-    # value in IEEE754 (e.g. (1−0.8)·290 = 57.999…), so the bare
-    # floor truncated the prefix one short and broke the exact-recall
-    # theorem for pairs at the threshold boundary; the epsilon errs
-    # only toward longer prefixes (candidate superset — the exact
-    # verifier removes them).  Pinned in tests/test_round6_plan_shapes.
-    prefix = ranked.select(
+    return ranked.select(
         "id",
         F.explode(
-            F.slice(
-                "by_rarity",
-                1,
-                (
-                    F.floor((1 - threshold) * F.size("by_rarity") + F.lit(1e-9))
-                    + F.lit(1)
-                ).cast("int"),
-            )
+            F.slice("by_rarity", 1, _prefix_len(threshold, F.size("by_rarity")))
         ).alias("g"),
+    )
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 9,
+    threshold: float = 0.8,
+    max_bucket_size: int = 200,
+    with_report: bool = False,
+):
+    """DataFrame(id_a, id_b, jaccard) for pairs with Jaccard ≥ threshold.
+
+    EXACT result via prefix filtering (PPJoin family): only each
+    document's rarest-first prefix enters the inverted index
+    (`rarest_first_prefix`), with zero recall loss, and
+    `_verified_pairs` computes true Jaccard on the full shingle sets of
+    the surviving candidates.
+    """
+    sh = (
+        _with_shingles(spread(docs), id_col, text_col, k)
+        .withColumn("shingles", F.array_sort("shingles"))
+        .persist()
     )
     # skew-safe one-shuffle candidate generation over the inverted
     # prefix index (see _bucket_candidate_pairs): rarest-first prefixes
     # keep postings lists short; an oversized posting (hot gram) is
     # routed/reported instead of exploding in one row
     cands, report = _bucket_candidate_pairs(
-        prefix, ["g"], "id", max_bucket_size=max_bucket_size, oversized=oversized
+        rarest_first_prefix(sh, threshold), ["g"], "id", max_bucket_size=max_bucket_size
     )
     # verification runs on xxhash64-HASHED shingles: long set-ops are
     # several times cheaper than hashing 9-char strings into the
-    # intersect/union hash sets, and |∩|/|∪| is unchanged up to a
-    # 2⁻⁶⁴ in-pair collision (the same accepted equivalence as
-    # minhash_lsh_pairs, whose verified output shares this operator's
-    # exact-answer contract).  No size-ratio shortcut: the shingle
-    # arrays are not deduplicated here, and array length is not set
-    # size, so a length precondition could wrongly drop a qualifying
-    # pair.
-    # array_distinct on the hashes makes them SETS even under a hash
-    # collision, so (a) the result is unchanged (array_intersect/union
-    # already deduplicate) and (b) |A∪B| = |A|+|B|−|A∩B| holds exactly
-    # — the per-pair union hash set is never built (one set-op per
-    # candidate pair instead of two, same integers divided)
+    # intersect hash set, and |∩|/|∪| is unchanged up to a 2⁻⁶⁴ in-pair
+    # collision (the same accepted equivalence as minhash_lsh_pairs,
+    # whose verified output shares this operator's exact-answer
+    # contract).  No broadcast hints: the exact prefix-filter family's
+    # candidate volume can rival the corpus (see _verified_pairs).
     hashed = sh.select(
-        "id", F.array_distinct(shingle_hash_col(F.col("shingles"))).alias("hs")
+        "id", F.array_distinct(shingle_hash_col(F.col("shingles"))).alias("h")
     )
-    sa = hashed.select(F.col("id").alias("id_a"), F.col("hs").alias("sh_a"))
-    sb = hashed.select(F.col("id").alias("id_b"), F.col("hs").alias("sh_b"))
-    # no broadcast hints: the exact prefix-filter family's candidate
-    # volume can rival the corpus (see _verified_pairs) — the planner
-    # keeps the r5-proven robust join selection here
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    out = (
-        cands.join(sa, on="id_a")
-        .join(sb, on="id_b")
-        .withColumn("_i", inter)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("_i") / (F.size("sh_a") + F.size("sh_b") - F.col("_i")), 4
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    out = _verified_pairs(cands, hashed, hashed, threshold)
     return (out, report) if with_report else out
 
 
@@ -291,7 +363,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     max_bucket_size: int = 200,
-    oversized: str = "selfjoin",
     with_report: bool = False,
 ):
     """MinHash-LSH candidates verified with exact Jaccard ≥ threshold.
@@ -344,11 +415,8 @@ def minhash_lsh_pairs(
         ["band_idx", "band_val"],
         "id",
         max_bucket_size=max_bucket_size,
-        oversized=oversized,
         with_buckets=True,
     )
-    a = sh.select(F.col("id").alias("id_a"), F.col("h").alias("h_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("h").alias("h_b"))
     # verify-join strategy: MEASURED, not guessed (guide §1.1).  A
     # scalar job over the already-persisted bucket aggregate bounds
     # the candidate-pair count (Σ C(bucket, 2) — a pre-distinct upper
@@ -381,18 +449,25 @@ def minhash_lsh_pairs(
     # pairs × mean-width bytes to fit.  Above the budget the verify
     # falls back to planner-chosen joins (the r5-proven robust shape).
     out = _verified_pairs(
-        cands, a, b, "h_a", "h_b", threshold,
+        cands, sh, sh, threshold,
         broadcast_candidates=pair_bound * 24.0 < 256 * 1024 * 1024,
         broadcast_halves=est_broadcast_bytes < 256 * 1024 * 1024,
     )
     return (out, report) if with_report else out
 
 
-def _verified_pairs(cands, a, b, ha: str, hb: str, threshold: float,
+def _verified_pairs(cands, a, b, threshold: float,
                     broadcast_candidates: bool = False,
                     broadcast_halves: bool = False):
-    """Attach each side's shingle arrays to the candidate pairs and
-    keep those with exact Jaccard ≥ threshold.
+    """The one Jaccard ≥ t check: candidates(id_a, id_b) whose sets,
+    looked up by `id` in `a` (for id_a) and `b` (for id_b), reach the
+    threshold → DataFrame(id_a, id_b, jaccard).
+
+    `a` and `b` are (id, h) tables whose `h` arrays hold DISTINCT
+    elements (xxhash64 shingle hashes).  The threshold applies to the
+    unrounded ratio, as in every oracle and reference linker; only the
+    reported `jaccard` is rounded to 4 places (rounding first admitted
+    J = 16000/20001 ≈ 0.79996 at t = 0.8).
 
     With `broadcast_candidates` (guide §3.1/§2.3), ONLY the slim
     (id_a, id_b) candidate list is broadcast — without the hint Spark
@@ -419,6 +494,8 @@ def _verified_pairs(cands, a, b, ha: str, hb: str, threshold: float,
     (minhash_lsh_pairs takes a scalar-statistics job over the cached
     bucket aggregate to decide); unmeasured use of this flag is the
     maxResultSize incident above."""
+    a = a.select(F.col("id").alias("id_a"), F.col("h").alias("h_a"))
+    b = b.select(F.col("id").alias("id_b"), F.col("h").alias("h_b"))
     if broadcast_candidates and broadcast_halves:
         joined = F.broadcast(F.broadcast(cands).join(a, on="id_a")).join(b, on="id_b")
     elif broadcast_candidates:
@@ -432,15 +509,13 @@ def _verified_pairs(cands, a, b, ha: str, hb: str, threshold: float,
     # SETS by construction), so the per-pair array_union hash set is
     # never built: one set-op per pair instead of two, identical
     # integers divided → bit-identical jaccard
-    inter = F.size(F.array_intersect(ha, hb))
+    inter = F.size(F.array_intersect("h_a", "h_b"))
+    ratio = F.col("_i") / (F.size("h_a") + F.size("h_b") - F.col("_i"))
     return (
         joined
         .withColumn("_i", inter)
-        .withColumn(
-            "jaccard", F.round(F.col("_i") / (F.size(ha) + F.size(hb) - F.col("_i")), 4)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .filter(ratio >= threshold)
+        .select("id_a", "id_b", F.round(ratio, 4).alias("jaccard"))
     )
 
 
@@ -460,7 +535,7 @@ def _simhash_from_hashes(hashed: pd.Series) -> pd.Series:
     out = np.zeros(n_rows, dtype=np.uint64)
     bitcols = np.arange(64, dtype=np.uint64)[None, :]
     # chunk by shingle budget — bounds the (ΣS × 64) bit matrix per
-    # python worker (many run concurrently; see linking.bands_of).
+    # python worker (many run concurrently; see _minhash_band_udf).
     # 100k chunks put ~51 MB of int32 bit/±1 matrices through each pass —
     # far past per-core cache; 8k (~4 MB) follows the cache-resident
     # sweep done for the minhash chunk on the round-6 box.
@@ -495,7 +570,6 @@ def simhash_pairs(
     k: int = 9,
     max_hamming: int = 3,
     max_bucket_size: int = 200,
-    oversized: str = "selfjoin",
     with_report: bool = False,
 ):
     """DataFrame(id_a, id_b, hamming) with hamming(simhash) ≤ max_hamming.
@@ -542,7 +616,6 @@ def simhash_pairs(
         ["chunk_idx", "chunk_val"],
         "m",
         max_bucket_size=max_bucket_size,
-        oversized=oversized,
     )
     hamming = F.bit_count(F.col("id_a.sig").bitwiseXOR(F.col("id_b.sig")))
     out = cands.select(

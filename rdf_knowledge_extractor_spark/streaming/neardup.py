@@ -18,7 +18,8 @@ in streaming/ingest.py):
    table against the persisted admitted-band store — at scale this is
    a shuffle join on the band key, never a scan of full texts;
 3. verify candidates with exact Jaccard on the stored int64 shingle
-   arrays (only colliding pairs are verified);
+   arrays (only colliding pairs are verified; the same
+   textdedup._verified_pairs check as the in-batch pairs);
 4. in-batch near-dups resolve by GREEDY min-id-first admission over
    the verified pair graph (deterministic within the micro-batch): a
    doc is rejected only when a smaller-id near-dup was itself
@@ -48,8 +49,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdf_knowledge_extractor_spark.operators.components import connected_components
-from rdf_knowledge_extractor_spark.operators.linking import _minhash_band_udf
 from rdf_knowledge_extractor_spark.operators.textdedup import (
+    _minhash_band_udf,
+    _verified_pairs,
     _with_hashed_shingles,
     minhash_lsh_pairs,
 )
@@ -268,22 +270,12 @@ def start_neardup_filter_sink(
                     ),
                     on=["band_idx", "band_val"],
                 )
-                .select("id", "hist_id")
+                .select(F.col("id").alias("id_a"), F.col("hist_id").alias("id_b"))
                 .distinct()
             )
-            jac = F.size(F.array_intersect("h", "hist_h")) / F.size(
-                F.array_union("h", "hist_h")
-            )
             rejected = (
-                cand.join(sh, on="id")
-                .join(
-                    hist_sh.select(
-                        F.col("id").alias("hist_id"), F.col("h").alias("hist_h")
-                    ),
-                    on="hist_id",
-                )
-                .filter(jac >= threshold)
-                .select("id")
+                _verified_pairs(cand, sh, hist_sh, threshold)
+                .select(F.col("id_a").alias("id"))
                 .distinct()
             )
 

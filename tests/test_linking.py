@@ -9,7 +9,6 @@ from rdf_knowledge_extractor_spark.operators.components import connected_compone
 from rdf_knowledge_extractor_spark.operators.linking import (
     entity_universe,
     link_entities,
-    lsh_candidate_pairs,
     with_canonical_key,
 )
 
@@ -58,20 +57,6 @@ def test_canonical_key_strips_suffix(spark):
     assert keyed[BASE + "Techcorp"] == "techcorp"
     assert keyed[BASE + "TechcorpGroup"] == "techcorp"
     assert keyed[BASE + "DatasystemsCorp"] == "datasystems"
-
-
-def test_lsh_blocks_same_key_entities(spark):
-    ents = with_canonical_key(
-        spark.createDataFrame(
-            [(BASE + "TechcorpInc",), (BASE + "Techcorp",), (BASE + "ZzzOther",)],
-            "uri string",
-        )
-    )
-    pairs, dropped = lsh_candidate_pairs(ents, max_bucket_size=50)
-    got = {(r.uri_a, r.uri_b) for r in pairs.collect()}
-    key = (min(BASE + "TechcorpInc", BASE + "Techcorp"), max(BASE + "TechcorpInc", BASE + "Techcorp"))
-    assert key in got
-    assert dropped.count() == 0
 
 
 def test_link_and_canonicalize_end_to_end(spark):
@@ -178,3 +163,78 @@ def test_cc_dispatcher_small_and_shapes(spark):
     )
     got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def test_link_arms_match_bruteforce_on_hostile_universe(spark, monkeypatch):
+    """Both candidate arms of link_entities (direct self-join at or below
+    RANKED_PREFIX_MIN_ENTITIES, rarest-first prefix above it) give the
+    mapping of a brute-force pairwise Jaccard ≥ 0.85 + union-find over
+    every entity, on a universe sitting on each edge of that rule."""
+    import itertools
+
+    from rdf_knowledge_extractor_spark.operators import linking as L
+
+    fwd = "abcdefghijklmnopqrstuvwxyz0123456789"
+    rev = fwd[::-1]  # no 3-gram in common with fwd
+    names = [
+        # keys shorter than 3 characters: one-element shingle sets,
+        # including the empty key of a bare trailing slash
+        "AB", "Ab", "a-b", "X", "x", "A1", "--", "__", "",
+        # a suffix stripped to a stem under 3 chars keeps the full key
+        "aInc", "ainc",
+        # corporate-suffix variants, a non-boundary "Labs", a fragment
+        "TechcorpInc", "Techcorp", "TechcorpGroup", "Techcorp-Labs", "ns#Techcorp",
+        # typo pair: J = 8/9
+        "Datasystems", "Datasystem",
+        # J(person1, person17) = 5/6 < 0.85
+        "person1", "person17",
+        # J = 17/20, exactly the threshold
+        rev[0:21], rev[2:22],
+        # chain: J(c0, c1) = J(c1, c2) = 26/30, J(c0, c2) = 24/32
+        fwd[0:30], fwd[2:32], fwd[4:34],
+    ]
+    rows = [
+        (BASE + n, NS + "hasName", "x", 1.0, f"d{i}", {}, i, 0)
+        for i, n in enumerate(names)
+    ]
+    rows.append((BASE + "person1", NS + "worksFor", BASE + "Datasystem", 1.0, "d", {}, 99, 0))
+    triples = _triples(spark, rows)
+
+    ents = with_canonical_key(entity_universe(triples)).collect()
+    sh = {r.uri: set(r.shingles) for r in ents}
+
+    def jac(a, b):
+        i = len(sh[a] & sh[b])
+        return i / (len(sh[a]) + len(sh[b]) - i)
+
+    assert jac(BASE + rev[0:21], BASE + rev[2:22]) == 0.85
+    assert jac(BASE + fwd[0:30], BASE + fwd[4:34]) < 0.85
+    parent = {u: u for u in sh}
+
+    def find(u):
+        while parent[u] != u:
+            u = parent[u]
+        return u
+
+    for a, b in itertools.combinations(sorted(sh), 2):
+        if jac(a, b) >= 0.85:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    expected = {u: find(u) for u in sh}
+    assert expected[BASE + fwd[4:34]] == BASE + fwd[0:30]
+    assert expected[BASE + "person17"] == BASE + "person17"
+
+    ranked_flags = []
+    real = L.prefix_candidate_pairs
+
+    def spy(*args, **kwargs):
+        ranked_flags.append(kwargs["rank_prefixes"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(L, "prefix_candidate_pairs", spy)
+    got = {}
+    for bound in (10**9, 0):
+        monkeypatch.setattr(L, "RANKED_PREFIX_MIN_ENTITIES", bound)
+        got[bound] = {r.uri: r.canonical for r in L.link_entities(triples).collect()}
+    assert ranked_flags == [False, True]
+    assert got[10**9] == got[0] == expected

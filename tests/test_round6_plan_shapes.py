@@ -46,24 +46,6 @@ def test_minhash_sketch_udf_evaluated_once(spark):
     assert not stacked, "bands UDF duplicated into stacked ArrowEvalPython nodes"
 
 
-def test_linking_sketch_udf_evaluated_once(spark):
-    from rdf_knowledge_extractor_spark.operators.linking import (
-        lsh_candidate_pairs,
-        with_canonical_key,
-    )
-
-    ents = with_canonical_key(
-        spark.createDataFrame([(f"http://x/e{i}",) for i in range(6)], ["uri"])
-    )
-    pairs, _ = lsh_candidate_pairs(ents)
-    lines = _plan(pairs).splitlines()
-    stacked = any(
-        "ArrowEvalPython" in ln and "ArrowEvalPython" in lines[i + 1]
-        for i, ln in enumerate(lines[:-1])
-    )
-    assert not stacked
-
-
 def test_derive_triples_single_scan_matches_union_twin(spark):
     """The inline(array(struct…)) form must produce the exact row
     multiset of the former 6-branch union."""
@@ -161,16 +143,16 @@ def test_bands_udf_invariant_to_chunk_budget(spark):
     import numpy as np
     import pandas as pd
 
-    from rdf_knowledge_extractor_spark.operators import linking as L
+    from rdf_knowledge_extractor_spark.operators import textdedup as TD
 
     rng = np.random.RandomState(11)
     vals = pd.Series(
         [rng.randint(-(2**61), 2**61, size=n).astype("int64") for n in (5, 0, 37, 200, 1)]
     )
-    udf_small = L._minhash_band_udf(64, 16)
+    udf_small = TD._minhash_band_udf(64, 16)
     # the wrapped python function is accessible via .func on pandas_udf
     out_now = list(udf_small.func(vals))
-    big = L._minhash_band_udf(64, 16)
+    big = TD._minhash_band_udf(64, 16)
     # simulate the old large budget by monkeypatching is not possible
     # (closure constant) — instead assert determinism across calls and
     # row-permutation invariance, which together pin the per-row result

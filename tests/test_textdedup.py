@@ -5,8 +5,9 @@ bucket's ids into ONE array and expanded all i<j combinations in a
 single row — a giant near-dup cluster (boilerplate/parked pages,
 guaranteed at 100-TB web scale) would materialize O(c²) structs in one
 task.  `_bucket_candidate_pairs` now routes oversized buckets through a
-distributed self-equi-join (exact, same pairs) or drops+reports them
-(the entity-linking cap model).
+distributed self-equi-join (exact, same pairs) and reports them.  Also
+pins the module's shared prefix length and Jaccard verifier, which
+entity linking and the streaming near-dup filter call too.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ from pyspark.sql import functions as F
 from rdf_knowledge_extractor_spark.operators.textdedup import (
     _bucket_candidate_pairs,
     _pair_combos,
+    _prefix_len,
+    _verified_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
@@ -60,44 +63,20 @@ def test_oversized_bucket_selfjoin_exact_5k(spark):
     # pair set is EXACT (self-join arm, no recall loss)
     c = 5000
     bucketed = _bucketed_cluster(spark, c)
-    pairs, report = _bucket_candidate_pairs(
-        bucketed, ["g"], "id", max_bucket_size=50, oversized="selfjoin"
-    )
+    pairs, report = _bucket_candidate_pairs(bucketed, ["g"], "id", max_bucket_size=50)
     assert pairs.count() == c * (c - 1) // 2 + 2
     rep = {(r.g, r.n) for r in report.collect()}
     assert rep == {("hot", c)}
-
-
-def test_oversized_bucket_drop_reports(spark):
-    bucketed = _bucketed_cluster(spark, 100)
-    pairs, report = _bucket_candidate_pairs(
-        bucketed, ["g"], "id", max_bucket_size=50, oversized="drop"
-    )
-    got = _pairs_set(pairs)
-    assert got == {(10_000, 10_001), (10_002, 10_003)}
-    assert [(r.g, r.n) for r in report.collect()] == [("hot", 100)]
 
 
 def test_selfjoin_arm_matches_inarray_arm(spark):
     # same bucketed input, cap far above vs far below the cluster size:
     # identical pair sets (the two arms are equivalent formulations)
     bucketed = _bucketed_cluster(spark, 60, extra_buckets=3)
-    routed, _ = _bucket_candidate_pairs(
-        bucketed, ["g"], "id", max_bucket_size=10, oversized="selfjoin"
-    )
-    inarray, rep = _bucket_candidate_pairs(
-        bucketed, ["g"], "id", max_bucket_size=10_000, oversized="selfjoin"
-    )
+    routed, _ = _bucket_candidate_pairs(bucketed, ["g"], "id", max_bucket_size=10)
+    inarray, rep = _bucket_candidate_pairs(bucketed, ["g"], "id", max_bucket_size=10_000)
     assert _pairs_set(routed) == _pairs_set(inarray)
     assert rep.count() == 0
-
-
-def test_bucket_pairs_rejects_bad_mode(spark):
-    import pytest
-
-    bucketed = _bucketed_cluster(spark, 3)
-    with pytest.raises(ValueError, match="oversized"):
-        _bucket_candidate_pairs(bucketed, ["g"], "id", oversized="salt")
 
 
 def _dup_cluster_docs(spark, n_dups: int):
@@ -141,3 +120,74 @@ def test_simhash_capped_cluster_end_to_end(spark):
     }
     assert report.count() > 0
     spark.catalog.clearCache()
+
+
+def test_verified_pairs_threshold_applies_to_unrounded_jaccard(spark):
+    """J = 16000/20001 ≈ 0.79996 rounds to 0.8 but lies below t = 0.8,
+    so it is rejected, as by DuckDB's dedup_ngram_jaccard oracle; a pair
+    at exactly J = 4/5 is kept, and the reported jaccard stays rounded
+    to 4 places."""
+
+    def hashed(lo, hi):
+        return F.transform(F.sequence(F.lit(lo), F.lit(hi)), lambda x: F.xxhash64(x))
+
+    sets = spark.range(1).select(
+        F.explode(
+            F.array(
+                F.struct(F.lit(1).alias("id"), hashed(0, 18000).alias("h")),
+                F.struct(F.lit(2).alias("id"), hashed(2001, 20000).alias("h")),
+                F.struct(F.lit(3).alias("id"), hashed(0, 3).alias("h")),
+                F.struct(F.lit(4).alias("id"), hashed(0, 4).alias("h")),
+            )
+        ).alias("s")
+    ).select("s.*")
+    cands = spark.createDataFrame([(1, 2), (3, 4)], "id_a int, id_b int")
+
+    def verified(t):
+        return {
+            (r.id_a, r.id_b): r.jaccard
+            for r in _verified_pairs(cands, sets, sets, t).collect()
+        }
+
+    assert verified(0.8) == {(3, 4): 0.8}
+    assert verified(0.7999) == {(1, 2): 0.8, (3, 4): 0.8}
+
+
+def test_dedup_families_threshold_applies_to_unrounded_jaccard(spark):
+    """The same J = 16000/20001 pair as documents: 20,009 distinct
+    characters make every 9-gram unique to its position, so doc 1 has
+    18,001 grams, doc 2 has 18,000, and they share 16,000."""
+    s = "".join(chr(0x4E00 + i) for i in range(20_009))
+    docs = spark.createDataFrame(
+        [(1, s[:18_009]), (2, s[2_001:])], "doc_id int, text string"
+    )
+    for family in (ngram_jaccard_pairs, minhash_lsh_pairs):
+        assert family(docs, threshold=0.8).count() == 0
+        got = family(docs, threshold=0.7999).collect()
+        assert [(r.id_a, r.id_b, r.jaccard) for r in got] == [(1, 2, 0.8)]
+
+
+def test_prefix_len_exact_at_large_n(spark):
+    """⌊(1−t)·n⌋+1 against exact rational arithmetic on t's decimal
+    form, for every 2- and 3-decimal threshold at n ≥ 5e6 where (1−t)·n
+    is an integer — the points where IEEE754 rounding can truncate the
+    floor.  An absolute 1e-9 slack came out one short there (e.g.
+    t = 0.933, n = 20,480,000), dropping a qualifying pair's only shared
+    prefix element."""
+    import math
+    from decimal import Decimal
+    from fractions import Fraction
+
+    ts = sorted({i / 100 for i in range(1, 100)} | {i / 1000 for i in range(500, 1000)})
+    rows = []
+    for t in ts:
+        gap = 1 - Fraction(Decimal(repr(t)))
+        for mult in (1, 3, 5, 7):
+            k = mult * max(1, 5_000_000 // gap.denominator)
+            while k * gap.denominator < 2**31:
+                n = k * gap.denominator
+                rows.append((t, n, math.floor(gap * n) + 1))
+                k *= 2
+    df = spark.createDataFrame(rows, "t double, n int, exact long")
+    bad = df.filter(_prefix_len(F.col("t"), F.col("n")) != F.col("exact")).collect()
+    assert len(rows) > 10_000 and not bad, bad[:5]

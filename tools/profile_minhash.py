@@ -40,9 +40,9 @@ def main():
     from rdf_knowledge_extractor_spark.operators.dispatch import spread
     from rdf_knowledge_extractor_spark.operators.textdedup import (
         _bucket_candidate_pairs,
+        _minhash_band_udf,
         _with_hashed_shingles,
     )
-    from rdf_knowledge_extractor_spark.operators.linking import _minhash_band_udf
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     timed(spark, "scan only", lambda: noop(docs))
