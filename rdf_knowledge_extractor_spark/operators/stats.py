@@ -39,7 +39,7 @@ def get_entities_by_type(graph: DataFrame, entity_type: str, namespace: str) -> 
 def get_entity_properties(graph: DataFrame, entity_uri: str) -> DataFrame:
     """DataFrame(predicate, objects array<string>) for one subject.
 
-    The predicate filter prunes partitions/row-groups when the graph
+    The subject filter prunes partitions/row-groups when the graph
     table is laid out by subject bucket (see plans/pipeline.py).
     """
     return (

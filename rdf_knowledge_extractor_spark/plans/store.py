@@ -27,6 +27,14 @@ against the committed graph (AQE picks broadcast vs SMJ) — only the
 COMMIT becomes transactional.  Scale: the manifest holds file paths +
 counts (O(batches)), not rows; data stays partitioned parquet exactly
 as an Iceberg table's data layer would.
+
+Reads reuse one relation per manifest version: `read()` re-reads the
+manifest on every call (so another writer's commit is visible on the
+next read) but builds a new `spark.read.parquet` relation — a listing
+of the file sets plus a schema-inference job — only when the version
+or the live paths changed.  That is safe because committed file sets
+are immutable, every commit and compaction bumps the version, and
+`vacuum` deletes only directories that are not live.
 """
 
 from __future__ import annotations
@@ -67,6 +75,8 @@ class TripleStore:
         self.spark = spark
         self.root = Path(root)
         (self.root / "data").mkdir(parents=True, exist_ok=True)
+        # ((version, live paths), relation) of the last read(); see read()
+        self._relation: tuple = (None, None)
 
     # -- manifest ------------------------------------------------------
     def _manifest_path(self) -> Path:
@@ -115,16 +125,22 @@ class TripleStore:
 
     # -- reads ---------------------------------------------------------
     def committed_paths(self) -> list[str]:
-        m = self._read_manifest()
-        return [b["path"] for b in m["batches"].values() if b["rows"] > 0]
+        return _live_paths(self._read_manifest())
 
     def read(self) -> DataFrame | None:
         """Union of all committed file sets (None when empty).  Orphan
-        directories from crashed commits are invisible by design."""
-        paths = self.committed_paths()
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        directories from crashed commits are invisible by design.
+
+        Returns the same DataFrame for as long as the manifest's version
+        and live paths are unchanged (see the module docstring); the
+        paths are part of the key because a wiped and re-committed root
+        reaches the same version again with new file sets."""
+        m = self._read_manifest()
+        paths = _live_paths(m)
+        key = (m["version"], tuple(paths))
+        if self._relation[0] != key:
+            self._relation = (key, self.spark.read.parquet(*paths) if paths else None)
+        return self._relation[1]
 
     def total_rows(self) -> int:
         return self._read_manifest()["total_rows"]
@@ -234,17 +250,7 @@ class TripleStore:
         than this may belong to an IN-FLIGHT commit whose manifest swap
         hasn't happened yet, so it is skipped.  Returns the deleted
         paths."""
-        # live = only paths read() can reference (rows > 0, matching
-        # committed_paths).  Compacted-away history entries keep their
-        # old path with rows=0 for idempotency; including those here
-        # retained their data dirs forever (round-4 advice,
-        # store.py:237).  Zero-added batches' dirs are likewise
-        # unreachable from read() and safe to reclaim.
-        live = {
-            os.path.realpath(b["path"])
-            for b in self._read_manifest()["batches"].values()
-            if b["rows"] > 0
-        }
+        live = {os.path.realpath(p) for p in _live_paths(self._read_manifest())}
         now = time.time()
         deleted: list[str] = []
         for d in sorted((self.root / "data").iterdir()):
@@ -257,6 +263,15 @@ class TripleStore:
             shutil.rmtree(d)
             deleted.append(str(d))
         return deleted
+
+
+def _live_paths(manifest: dict) -> list[str]:
+    """The file sets `read()` unions, and so the ones `vacuum` keeps:
+    batches with rows > 0.  Compacted-away history entries keep their
+    old path with rows=0 for idempotency, and zero-added batches wrote
+    empty sets; neither is reachable from a read, so `vacuum` reclaims
+    their directories."""
+    return [b["path"] for b in manifest["batches"].values() if b["rows"] > 0]
 
 
 def _parquet_row_count(out_dir: Path) -> int:

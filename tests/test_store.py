@@ -191,3 +191,70 @@ def test_vacuum_reclaims_compacted_away_batch_dirs(store, spark):
     # store still reads fully, idempotency history intact
     assert store.read().count() == 2
     assert store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1") == 1
+
+
+# -- reads reuse one relation per manifest version -----------------------
+
+def _spo(df):
+    return sorted((r.subject, r.predicate, r.object) for r in df.collect())
+
+
+def test_read_reuses_relation_until_manifest_changes(store, spark):
+    import shutil
+
+    assert store.read() is None
+    store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1")
+    g1 = store.read()
+    assert store.read() is g1  # no commit in between: the same object
+    assert _spo(g1) == [("s1", "p", "o1")]
+
+    # this instance's commit
+    store.insert_if_absent(_triples(spark, [("s2", "p", "o2")]), "b2")
+    g2 = store.read()
+    assert g2 is not g1 and store.read() is g2
+    assert _spo(g2) == [("s1", "p", "o1"), ("s2", "p", "o2")]
+
+    # another writer's commit on the same root, which no per-instance
+    # dirty flag would see
+    other = TripleStore(spark, str(store.root))
+    other.insert_if_absent(_triples(spark, [("s3", "p", "o3")]), "b3")
+    g3 = store.read()
+    want = [("s1", "p", "o1"), ("s2", "p", "o2"), ("s3", "p", "o3")]
+    assert g3 is not g2 and _spo(g3) == want
+
+    # compaction swaps the live file sets
+    assert store.compact() == 3
+    g4 = store.read()
+    assert g4 is not g3 and _spo(g4) == want
+
+    # a crashed commit and a vacuum leave the live set alone
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        store.insert_if_absent(_triples(spark, [("s4", "p", "o4")]), "b4",
+                               _crash_before_commit=True)
+    assert store.read() is g4
+    assert len(store.vacuum(min_age_sec=0)) == 4  # b1, b2, b3 and the crashed b4
+    assert store.read() is g4 and _spo(g4) == want
+
+    # a root wiped and re-committed to the same version (by another
+    # writer, so this instance reads nothing in between) has new file sets
+    version = store._read_manifest()["version"]
+    shutil.rmtree(store.root)
+    for i in range(version):
+        other.insert_if_absent(_triples(spark, [(f"t{i}", "p", "o")]), f"c{i}")
+    assert store._read_manifest()["version"] == version
+    g5 = store.read()
+    assert g5 is not g4
+    assert _spo(g5) == [(f"t{i}", "p", "o") for i in range(version)]
+
+
+def test_repeat_read_runs_no_spark_job(store, spark):
+    store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1")
+    store.read()
+    sc = spark.sparkContext
+    sc.setJobGroup("store-repeat-read", "repeat read")
+    try:
+        assert store.read().columns
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("store-repeat-read")) == []
