@@ -49,10 +49,6 @@ def _events(spark: SparkSession, sf: str) -> DataFrame:
 def _graph(spark: SparkSession, sf: str) -> DataFrame:
     """Deduplicated derived triple table (the 'graph').
 
-    `spread` lifts single-row-group parquet scans to default
-    parallelism so the derive+partial-aggregate stage is not one task;
-    no-op when the scan already has enough splits (100-TB path).
-
     The dedup runs on the NARROW PRE-IMAGE (derive_triples_dedup):
     the statement families are provably collision-disjoint by their
     constant predicates, so first-occurrence dedup reduces to a
@@ -66,8 +62,8 @@ def _graph(spark: SparkSession, sf: str) -> DataFrame:
     after the aggregate.  Schema and values are identical for every
     consumer.
 
-    No `spread`: the narrow pre-image aggregates are too cheap to
-    justify three per-branch round-robin exchanges of the scan (A/B at
+    The scan is not `spread`: the narrow pre-image aggregates are too
+    cheap to justify three per-branch round-robin exchanges of it (A/B at
     sf1-scale: no-spread 0.44 s vs spread 0.57 s vs the r6 min_by form
     0.53 s); downstream parallelism comes from the distinct's own
     shuffle."""

@@ -27,7 +27,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("kg-pipeline").getOrCreate()
     pages = spark.read.parquet(pages_path)
     pipe = KgPipeline(spark, Configuration.example(), ckpt_dir, client_kind="stub")
-    graph = pipe.run(pages, resume=True, fused=True)
+    graph = pipe.run(pages)
     n = graph.count()
     print(f"graph triples: {n}")
     for r in pipe.results:

@@ -36,6 +36,8 @@ from rdf_knowledge_extractor_spark.functions.prompts import (
     build_extraction_prompt,
 )
 
+EXTRACT_BATCH_SIZE = 64  # documents per LLM/stub call
+
 EXTRACTED_SCHEMA = T.StructType(
     [
         T.StructField("subject", T.StringType(), True),
@@ -137,26 +139,22 @@ def extract_triples_stage(
     pages_df: DataFrame,
     config: Configuration,
     client_kind: str = "stub",
-    text_col: str = "text",
-    url_col: str = "url",
-    doc_seq_col: str = "doc_seq",
-    batch_size: int = 64,
-    post_process: bool = True,
     html_col: str | None = None,
 ) -> DataFrame:
-    """pages → extracted triple rows (+ per-doc error sentinels).
+    """pages(url, doc_seq, text | html) → extracted triple rows (+ per-doc
+    error sentinels).
 
-    Scale notes: only (url, doc_seq, text) are shipped through Arrow —
-    column pruning keeps the html binary out of this stage's input.
-    The LLM/stub call is amortized per micro-batch of `batch_size` docs
-    (north_star: micro-batches rather than per-row).
+    Two inputs, one UDF: documents that already carry a `text` column
+    (the CLI's files), or pages whose raw html sits in `html_col` (the
+    pipeline, the streaming sink and the benchmarks).  With `html_col`
+    set, html→text extraction runs inside this `mapInPandas`, so the
+    raw html crosses into Python once and only triple rows cross back.
 
-    With `html_col` set, html→text extraction is FUSED into this UDF:
-    the raw html crosses into Python once and only triple rows cross
-    back — versus the two-stage shape (pandas-UDF text, then
-    mapInPandas extract) where ~the full corpus crosses the Arrow
-    boundary twice more.  Use when the text column need not be
-    materialized on its own (the scaling-bench / production hot path).
+    Only (url, doc_seq, text|html) are shipped through Arrow.  The
+    LLM/stub call is amortized per micro-batch of `EXTRACT_BATCH_SIZE`
+    docs (north_star: micro-batches rather than per-row).  Per-document
+    post-processing follows the config's own switches
+    (`post_processing.deduplicate`, `validation_rules`).
     """
     cfg = config  # closure capture; small dataclass, serialized with the task
     html_source = html_col is not None
@@ -174,8 +172,8 @@ def extract_triples_stage(
             )
         for pdf in batches:
             rows: list[dict] = []
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
+            for start in range(0, len(pdf), EXTRACT_BATCH_SIZE):
+                chunk = pdf.iloc[start : start + EXTRACT_BATCH_SIZE]
                 if html_source:
                     # fused html→text→extract: ONE JVM↔Python crossing
                     # for the whole hot path (text never round-trips
@@ -184,13 +182,13 @@ def extract_triples_stage(
                         extract_text(_decode(b)) for b in chunk[html_col].tolist()
                     ]
                 else:
-                    texts = chunk[text_col].fillna("").tolist()
+                    texts = chunk["text"].fillna("").tolist()
                 prompts = [
                     build_extraction_prompt(t, questions, schema) for t in texts
                 ]
                 responses = client.generate_structured_batch(prompts, SYSTEM_PROMPT)
-                urls = chunk[url_col].tolist()
-                doc_seqs = chunk[doc_seq_col].tolist()
+                urls = chunk["url"].tolist()
+                doc_seqs = chunk["doc_seq"].tolist()
                 for url, doc_seq_raw, raw in zip(urls, doc_seqs, responses):
                     doc_seq = int(doc_seq_raw)
                     triples, error = parse_llm_response(raw, cfg)
@@ -208,8 +206,7 @@ def extract_triples_stage(
                     # order is the LLM emission order (Vec push order in ref)
                     for i, t in enumerate(triples):
                         t["triple_seq"] = i
-                    if post_process:
-                        triples = post_process_doc_triples(triples, cfg)
+                    triples = post_process_doc_triples(triples, cfg)
                     for t in triples:
                         rows.append(
                             {
@@ -229,9 +226,7 @@ def extract_triples_stage(
                 columns=[f.name for f in EXTRACTED_SCHEMA.fields],
             )
 
-    pruned = pages_df.select(
-        url_col, doc_seq_col, html_col if html_source else text_col
-    )
+    pruned = pages_df.select("url", "doc_seq", html_col if html_source else "text")
     return pruned.mapInPandas(run, schema=EXTRACTED_SCHEMA)
 
 

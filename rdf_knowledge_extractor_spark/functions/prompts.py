@@ -83,7 +83,3 @@ def build_extraction_prompt(
     parts.append("\n## Instructions\n")
     parts.append(_INSTRUCTIONS)
     return "".join(parts)
-
-
-def get_system_prompt() -> str:
-    return SYSTEM_PROMPT

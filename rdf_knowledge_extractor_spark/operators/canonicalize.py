@@ -9,7 +9,8 @@ Scale: two equi-joins on the mapping.  The mapping is usually much
 smaller than the triple table (distinct entities ≪ triples) — let AQE
 pick broadcast when it fits; both joins reuse the same shuffle key
 domain.  After the remap, coreferent duplicates are collapsed with
-first-occurrence dedup (same semantics as the merge path).
+first-occurrence dedup (same semantics as the merge path).  The output
+keeps the input's column order.
 """
 
 from __future__ import annotations
@@ -20,9 +21,7 @@ from pyspark.sql import functions as F
 from rdf_knowledge_extractor_spark.operators.dedup import first_occurrence_dedup
 
 
-def canonicalize_triples(
-    triples: DataFrame, mapping: DataFrame, dedup: bool = True
-) -> DataFrame:
+def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """mapping: DataFrame(uri, canonical)."""
     m_subj = mapping.select(
         F.col("uri").alias("subject"), F.col("canonical").alias("_subj_canon")
@@ -42,8 +41,7 @@ def canonicalize_triples(
                 F.coalesce(F.col("_obj_canon"), F.col("object")),
             ).otherwise(F.col("object")),
         )
-        .drop("_subj_canon", "_obj_canon")
+        # the joins moved `object` and `subject` to the front
+        .select(*triples.columns)
     )
-    if dedup:
-        out = first_occurrence_dedup(out)
-    return out
+    return first_occurrence_dedup(out)

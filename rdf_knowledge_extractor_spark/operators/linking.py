@@ -51,6 +51,12 @@ _SUFFIXES = "Inc|Corp|Corporation|Solutions|Industries|Group|Labs|Ltd|Llc|Gmbh"
 # shingle is indexed directly.  Read at call time.
 RANKED_PREFIX_MIN_ENTITIES = 1_000
 
+# shingle-Jaccard threshold of a fuzzy link (see verified_edges) and the
+# posting-list size above which a prefix bucket is paired through the
+# distributed self-join arm instead of in-array combinations
+LINK_THRESHOLD = 0.85
+MAX_BUCKET_SIZE = 200
+
 
 def entity_universe(triples: DataFrame) -> DataFrame:
     """Distinct entity URIs: all subjects + URI-shaped objects."""
@@ -74,13 +80,13 @@ def key_shingles(key) -> "F.Column":
     return char_shingles(key, 3)
 
 
-def with_canonical_key(entities: DataFrame, uri_col: str = "uri") -> DataFrame:
+def with_canonical_key(entities: DataFrame) -> DataFrame:
     """Add `key` (normalized local name) and `shingles` (char 3-grams).
 
     All pure Catalyst: local name = after last '/' then last '#';
     lowercase; strip non-alnum; strip one trailing corporate suffix.
     """
-    local = F.element_at(F.split(F.element_at(F.split(F.col(uri_col), "/"), -1), "#"), -1)
+    local = F.element_at(F.split(F.element_at(F.split(F.col("uri"), "/"), -1), "#"), -1)
     unsuffixed = F.regexp_replace(local, f"(?<=[a-z0-9])({_SUFFIXES})$", "")
     norm = F.lower(F.regexp_replace(local, "[^a-zA-Z0-9]", ""))
     stripped = F.lower(F.regexp_replace(unsuffixed, "[^a-zA-Z0-9]", ""))
@@ -91,9 +97,8 @@ def with_canonical_key(entities: DataFrame, uri_col: str = "uri") -> DataFrame:
 
 def prefix_candidate_pairs(
     entities_with_shingles: DataFrame,
-    threshold: float = 0.85,
-    max_bucket_size: int = 200,
-    uri_col: str = "uri",
+    threshold: float = LINK_THRESHOLD,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
     rank_prefixes: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """(candidate_pairs(uri_a, uri_b), oversized_report) via PREFIX
@@ -116,7 +121,7 @@ def prefix_candidate_pairs(
     if rank_prefixes:
         pairs, report = _bucket_candidate_pairs(
             rarest_first_prefix(
-                entities_with_shingles.select(F.col(uri_col).alias("id"), "shingles"),
+                entities_with_shingles.select(F.col("uri").alias("id"), "shingles"),
                 threshold,
             ),
             ["g"],
@@ -136,7 +141,7 @@ def prefix_candidate_pairs(
         # job-latency floor is the whole cost.  Oversized-report is
         # vacuously empty.
         inv = entities_with_shingles.select(
-            F.col(uri_col).alias("id"), F.explode("shingles").alias("g")
+            F.col("uri").alias("id"), F.explode("shingles").alias("g")
         )
         a = inv.select(F.col("id").alias("id_a"), "g")
         b = inv.select(F.col("id").alias("id_b"), "g")
@@ -158,8 +163,7 @@ def prefix_candidate_pairs(
 def verified_edges(
     pairs: DataFrame,
     entities_with_shingles: DataFrame,
-    threshold: float = 0.85,
-    uri_col: str = "uri",
+    threshold: float = LINK_THRESHOLD,
 ) -> DataFrame:
     """Filter candidates(uri_a, uri_b) to shingle Jaccard ≥ t.
 
@@ -178,7 +182,7 @@ def verified_edges(
     # array_distinct on the hashes makes them SETS even under a hash
     # collision, as _verified_pairs requires
     sets = entities_with_shingles.select(
-        F.col(uri_col).alias("id"),
+        F.col("uri").alias("id"),
         F.array_distinct(shingle_hash_col(F.col("shingles"))).alias("h"),
     )
     cands = pairs.select(F.col("uri_a").alias("id_a"), F.col("uri_b").alias("id_b"))
@@ -187,11 +191,7 @@ def verified_edges(
     )
 
 
-def link_entities(
-    triples: DataFrame,
-    threshold: float = 0.85,
-    max_bucket_size: int = 200,
-) -> DataFrame:
+def link_entities(triples: DataFrame) -> DataFrame:
     """Full linking stage: triples → mapping(uri, canonical).
 
     canonical = min URI of the connected component (deterministic).
@@ -207,7 +207,7 @@ def link_entities(
        coreference (suffix/punctuation variants) with a single
        shuffle.
     2. **Fuzzy tier** — prefix-filtered candidates (exact recall at
-       `threshold`; see prefix_candidate_pairs) + Jaccard verification
+       `LINK_THRESHOLD`; see prefix_candidate_pairs) + Jaccard verification
        + connected components run only over the key REPRESENTATIVES
        (typo-level variants whose keys differ).  Universes of at most
        `RANKED_PREFIX_MIN_ENTITIES` entities skip the rarity ranking
@@ -255,21 +255,18 @@ def link_entities(
     ).persist()
 
     # tier 2: fuzzy linking over representatives — prefix-filtered
-    # candidates (EXACT recall at `threshold`, no sketch UDF, no
+    # candidates (EXACT recall at `LINK_THRESHOLD`, no sketch UDF, no
     # python worker round-trip; see prefix_candidate_pairs for the
     # MinHash-vs-prefix measurement that motivated the switch).  The
     # rarity ranking is switched on by the universe size (count on the
     # checkpointed table is a cached-scan job) — the same kind of size
     # dispatch as connected_components' driver arm.
     pairs, _oversized = prefix_candidate_pairs(
-        reps,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
-        rank_prefixes=ent.count() > RANKED_PREFIX_MIN_ENTITIES,
+        reps, rank_prefixes=ent.count() > RANKED_PREFIX_MIN_ENTITIES
     )
     # representatives have distinct URIs and pairs come out ordered
     # (uri_a < uri_b), so every verified pair is a true fuzzy edge
-    edges = verified_edges(pairs, reps, threshold=threshold)
+    edges = verified_edges(pairs, reps)
     components = connected_components(edges, src="uri_a", dst="uri_b")
     rep_canon = (
         key_rep.select(F.col("rep").alias("node"), "key")

@@ -7,18 +7,20 @@ checkpoint, per-partition lineage + metrics.
 Design (Spark-first, not a port — the reference is one sequential
 in-memory loop, ref:src/core/extractor.rs:199-208):
 
-    pages ──text──► s1_text ──extract──► s2_extracted ──┬─► s3_triples
-                                                        └─► lineage
+    pages ──html→text→extract──► s2_extracted ──┬─► s3_triples
+                                                └─► s3_lineage
     s3_triples ──link──► s4_mapping ──canonicalize──► s5_graph
 
-Each stage materializes to a checkpoint table (parquet here; Iceberg
-`MERGE INTO` partitioned by bucket(subject) in production — this repo
-targets the sandbox where Iceberg jars aren't available, the layout
-is identical).  A `_MANIFEST.json` per stage records row count,
-wall-clock, partition count and a params fingerprint; `resume=True`
-skips any stage whose manifest matches the fingerprint.  Per-partition
-metrics (rows per partition id) are captured via observable metrics +
-a partition-id aggregation and stored in the manifest.
+Extraction is the fused `extract_triples_stage(…, html_col="html")`:
+html crosses into Python once and only triple rows come back.  Each
+stage materializes to a checkpoint table (parquet here; an Iceberg
+table in production — this repo targets the sandbox where Iceberg jars
+aren't available).  A `_MANIFEST.json` per stage records row count,
+wall-clock, partition count and a params fingerprint, and is written
+atomically (temporary file + `os.replace`); `run` skips any stage whose
+manifest matches the fingerprint.  Per-partition metrics (rows per
+partition id) come from a partition-id aggregation and are stored in
+the manifest.
 """
 
 from __future__ import annotations
@@ -37,12 +39,10 @@ from rdf_knowledge_extractor_spark.functions.extract import (
     extract_triples_stage,
     split_triples_and_lineage,
 )
-from rdf_knowledge_extractor_spark.functions.html_text import with_extracted_text
 from rdf_knowledge_extractor_spark.operators.canonicalize import canonicalize_triples
 from rdf_knowledge_extractor_spark.operators.dedup import merge_results
 from rdf_knowledge_extractor_spark.operators.linking import link_entities
-
-GRAPH_BUCKETS = 64  # production: Iceberg PARTITIONED BY (bucket(N, subject))
+from rdf_knowledge_extractor_spark.plans.store import TripleStore, write_json_atomic
 
 
 @dataclass
@@ -120,15 +120,12 @@ class KgPipeline:
                 return self.spark.read.parquet(str(self.base / stage / "data"))
         return None
 
-    def _run_stage(
-        self, stage: str, params: dict, build, resume: bool = True
-    ) -> DataFrame:
+    def _run_stage(self, stage: str, params: dict, build) -> DataFrame:
         fp = self._fingerprint(stage, params)
-        if resume:
-            cached = self._load_if_done(stage, fp)
-            if cached is not None:
-                self.results.append(StageResult(stage, -1, 0.0, -1, True))
-                return cached
+        cached = self._load_if_done(stage, fp)
+        if cached is not None:
+            self.results.append(StageResult(stage, -1, 0.0, -1, True))
+            return cached
         t0 = time.monotonic()
         df: DataFrame = build()
         out = str(self.base / stage / "data")
@@ -152,53 +149,30 @@ class KgPipeline:
             "params": params,
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        self._manifest_path(stage).write_text(json.dumps(manifest, indent=2))
+        write_json_atomic(self._manifest_path(stage), manifest)
         self.results.append(StageResult(stage, rows, elapsed, len(part_rows), False))
         return persisted
 
     # -- the pipeline ----------------------------------------------------
-    def run(
-        self, pages: DataFrame, resume: bool = True, fused: bool = False
-    ) -> DataFrame:
-        """`fused=True` merges the text and extract stages into ONE
-        mapInPandas (html crosses the Arrow boundary once — the
-        production hot path; see extract_triples_stage(html_col=…)),
-        trading away the standalone s1_text checkpoint.  Default keeps
-        the two-stage shape so a text-only resume point exists."""
+    def run(self, pages: DataFrame) -> DataFrame:
+        """pages(url, doc_seq, html) → canonicalized graph table,
+        resuming every stage whose checkpoint matches its fingerprint."""
         n = self.partitions
         # input identity folds into every stage fingerprint: re-running on
         # different pages (or an edited config) recomputes instead of
         # silently returning a stale checkpoint
         self._input_id = self._input_identity(pages)
 
-        if fused:
-            s2 = self._run_stage(
-                "s2_extracted",
-                {"n": n, "client": self.client_kind, "fused": True},
-                lambda: extract_triples_stage(
-                    pages.repartition(n, "url"),
-                    self.config,
-                    self.client_kind,
-                    html_col="html",
-                ),
-                resume,
-            )
-        else:
-            s1 = self._run_stage(
-                "s1_text",
-                {"n": n},
-                lambda: with_extracted_text(
-                    pages.repartition(n, "url"), html_col="html", out_col="text"
-                ).select("url", "doc_seq", "text", "lang"),
-                resume,
-            )
-
-            s2 = self._run_stage(
-                "s2_extracted",
-                {"n": n, "client": self.client_kind},
-                lambda: extract_triples_stage(s1, self.config, self.client_kind),
-                resume,
-            )
+        s2 = self._run_stage(
+            "s2_extracted",
+            {"n": n, "client": self.client_kind},
+            lambda: extract_triples_stage(
+                pages.repartition(n, "url"),
+                self.config,
+                self.client_kind,
+                html_col="html",
+            ),
+        )
 
         triples, lineage = split_triples_and_lineage(s2)
         s3 = self._run_stage(
@@ -209,25 +183,16 @@ class KgPipeline:
                 triples.repartition(n, "subject", "predicate", "object"),
                 deduplicate=self.config.post_processing.deduplicate,
             ),
-            resume,
         )
-        self._run_stage("s3_lineage", {"n": n}, lambda: lineage, resume)
+        self._run_stage("s3_lineage", {"n": n}, lambda: lineage)
 
-        s4 = self._run_stage(
-            "s4_mapping", {"n": n}, lambda: link_entities(s3), resume
-        )
+        s4 = self._run_stage("s4_mapping", {"n": n}, lambda: link_entities(s3))
 
-        s5 = self._run_stage(
+        return self._run_stage(
             "s5_graph",
-            {"n": n, "buckets": GRAPH_BUCKETS},
-            lambda: canonicalize_triples(s3, s4)
-            .withColumn(
-                "subject_bucket", F.pmod(F.xxhash64("subject"), F.lit(GRAPH_BUCKETS))
-            )
-            .repartition(n, "subject_bucket"),
-            resume,
+            {"n": n},
+            lambda: canonicalize_triples(s3, s4).repartition(n, "subject"),
         )
-        return s5
 
     def commit_to_store(
         self, graph: DataFrame, store_root: str, batch_id: str | None = None
@@ -239,8 +204,6 @@ class KgPipeline:
         (ref:src/knowledge_graph/mod.rs:91-114) held under crash/retry.
         Default batch_id is the run's input+config fingerprint, so
         re-running the same pipeline twice commits once."""
-        from rdf_knowledge_extractor_spark.plans.store import TripleStore
-
         bid = batch_id or self._fingerprint("store_commit", {})
         return TripleStore(self.spark, store_root).insert_if_absent(graph, bid)
 

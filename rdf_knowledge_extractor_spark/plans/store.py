@@ -13,18 +13,20 @@ semantics hold under failure and retry WITHOUT Iceberg jars:
 - **atomic manifest swap**: visibility is a single `os.replace` of
   `manifest.json` (atomic on POSIX).  A crash after data files are
   written but before the swap leaves orphan files that no reader ever
-  sees — the retry simply redoes the anti-join and commits.
+  sees — the retry simply recomputes and commits.
 - **idempotent by batch_id**: a batch_id already in the manifest is a
-  no-op returning added=0, so at-least-once drivers (Structured
-  Streaming `foreachBatch`, task retries, resumed pipelines) converge
-  to exactly-once — mirroring Iceberg's WAP/snapshot-id dedup.
+  no-op returning its original added count, so at-least-once drivers
+  (Structured Streaming `foreachBatch`, task retries, resumed
+  pipelines) converge to exactly-once — mirroring Iceberg's
+  WAP/snapshot-id dedup.
 - **optimistic concurrency**: the commit re-reads the manifest and
   aborts if another writer advanced the version (the reference is
   single-writer; we fail loudly instead of corrupting).
 
-The COMPUTE is unchanged: new rows = left ANTI join of the batch
+The COMPUTE is `dedup.insert_new_triples`, the same insert-if-absent
+the CLI runs: batch first-occurrence dedup, then a left ANTI join
 against the committed graph (AQE picks broadcast vs SMJ) — only the
-COMMIT becomes transactional.  Scale: the manifest holds file paths +
+COMMIT is this module's.  Scale: the manifest holds file paths +
 counts (O(batches)), not rows; data stays partitioned parquet exactly
 as an Iceberg table's data layer would.
 
@@ -49,10 +51,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from rdf_knowledge_extractor_spark.operators.dedup import (
-    TRIPLE_KEY,
-    first_occurrence_dedup,
-)
+from rdf_knowledge_extractor_spark.operators.dedup import insert_new_triples
 
 _MANIFEST = "manifest.json"
 
@@ -119,9 +118,7 @@ class TripleStore:
                     f"store version moved {expected_version} -> {current['version']} "
                     "during commit; retry the batch"
                 )
-            tmp = self._manifest_path().with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
-            tmp.write_text(json.dumps(manifest, indent=2))
-            os.replace(tmp, self._manifest_path())  # atomic visibility point
+            write_json_atomic(self._manifest_path(), manifest)  # visibility point
 
     # -- reads ---------------------------------------------------------
     def committed_paths(self) -> list[str]:
@@ -173,12 +170,7 @@ class TripleStore:
             return manifest["batches"][batch_id]["added"]
         expected_version = manifest["version"]
 
-        rows = first_occurrence_dedup(batch) if dedup_batch else batch
-        existing = self.read()
-        if existing is not None:
-            rows = rows.join(
-                existing.select(*TRIPLE_KEY), on=list(TRIPLE_KEY), how="left_anti"
-            )
+        rows, _ = insert_new_triples(self.read(), batch, dedup_batch)
 
         out_dir = self.root / "data" / f"{_safe(batch_id)}-{uuid.uuid4().hex[:8]}"
         rows.write.mode("overwrite").parquet(str(out_dir))
@@ -263,6 +255,15 @@ class TripleStore:
             shutil.rmtree(d)
             deleted.append(str(d))
         return deleted
+
+
+def write_json_atomic(path: Path, obj) -> None:
+    """Write `obj` as JSON to a temporary sibling, then `os.replace` it
+    over `path` (atomic on POSIX): a reader or a crash sees the old file
+    or the new one, never a truncated one."""
+    tmp = path.with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
+    tmp.write_text(json.dumps(obj, indent=2))
+    os.replace(tmp, path)
 
 
 def _live_paths(manifest: dict) -> list[str]:

@@ -2,9 +2,9 @@
 
 The reference persists its entire store as one pretty-printed JSON
 array of triple structs (ref:src/knowledge_graph/mod.rs:47-66 load,
-:82-89 save).  Reader: `spark.read.json(multiLine=True)` with the
-explicit triple schema (spark-side schema inference would scan twice).
-The row order in the file is the store's insertion order — we
+:82-89 save).  Reader: a driver-side `json.load`, which keeps the
+array order (the reference rewrites the whole file per insert, so
+files are small).  The row order in the file is the store's insertion order — we
 materialize it as `doc_seq=-1, triple_seq=<file position>` so loaded
 store rows sort strictly BEFORE any new extraction batch (whose docs
 start at doc_seq=0).  The reference appends new triples after existing
@@ -18,19 +18,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_FILE_SCHEMA = T.StructType(
-    [
-        T.StructField("subject", T.StringType()),
-        T.StructField("predicate", T.StringType()),
-        T.StructField("object", T.StringType()),
-        T.StructField("confidence", T.FloatType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("metadata", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
 
 
 def read_kg_json(spark, path: str) -> DataFrame:
@@ -55,16 +42,6 @@ def read_kg_json(spark, path: str) -> DataFrame:
     from rdf_knowledge_extractor_spark.schemas import TRIPLE_SCHEMA
 
     return spark.createDataFrame(rows, TRIPLE_SCHEMA)
-
-
-def read_kg_json_distributed(spark, path: str) -> DataFrame:
-    """Scale path: multiline JSON array via spark.read.json (no order)."""
-    return (
-        spark.read.schema(_FILE_SCHEMA)
-        .option("multiLine", True)
-        .json(path)
-        .withColumn("confidence", F.coalesce(F.col("confidence"), F.lit(1.0)))
-    )
 
 
 def write_kg_json(df: DataFrame, path: str) -> None:

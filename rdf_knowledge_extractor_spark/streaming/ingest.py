@@ -4,14 +4,14 @@ The reference is strictly batch (no streams anywhere; SURVEY §1.3),
 and the north_rule is satisfied by checkpoint-resumable *batch*
 stages — this module is the additive streaming path for continuously
 arriving crawl data: `readStream` over a pages directory/table →
-the same html→text + extraction transformations → append sink with
-exactly-once checkpointing.
+the same fused html→text→extract call → append sink with exactly-once
+checkpointing.
 
 Design notes for scale:
-- the extraction transformations are IDENTICAL DataFrame functions as
-  the batch path (html_to_text UDF, extract_triples_stage works on any
-  DataFrame incl. streaming ones since mapInPandas is
-  streaming-compatible);
+- extraction is the batch pipeline's own call,
+  `extract_triples_stage(…, html_col="html")`: one `mapInPandas`
+  (streaming-compatible), so html crosses into Python once and only
+  triple rows come back;
 - `foreachBatch` is used for the graph-merge sink because the
   insert-if-absent semantics (anti-join against the accumulating
   graph) is a batch-side MERGE per micro-batch — the standard pattern
@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from rdf_knowledge_extractor_spark.config import Configuration
 from rdf_knowledge_extractor_spark.functions.extract import extract_triples_stage
-from rdf_knowledge_extractor_spark.functions.html_text import html_to_text
 from rdf_knowledge_extractor_spark.schemas import PAGES_SCHEMA
 
 
@@ -52,9 +51,10 @@ def read_pages_stream(
 
 
 def streaming_triples(pages_stream: DataFrame, config: Configuration) -> DataFrame:
-    """pages stream → extracted-triples stream (same ops as batch)."""
-    with_text = pages_stream.withColumn("text", html_to_text(F.col("html")))
-    return extract_triples_stage(with_text, config, client_kind="stub")
+    """pages stream → extracted-triples stream (the batch pipeline's call)."""
+    return extract_triples_stage(
+        pages_stream, config, client_kind="stub", html_col="html"
+    )
 
 
 def start_triples_sink(

@@ -91,6 +91,27 @@ def test_link_and_canonicalize_end_to_end(spark):
     assert names == {"TechCorp Inc.", "DataSystems Corp"}
 
 
+def test_canonicalize_keeps_input_column_order(spark):
+    """The subject and object joins move their keys to the front; the
+    output must still carry the input's columns in the input's order."""
+    triples = _triples(
+        spark,
+        [
+            (BASE + "TechcorpInc", NS + "hasName", "TechCorp Inc.", 1.0, "d1", {}, 0, 0),
+            (BASE + "JohnSmith", NS + "worksFor", BASE + "Techcorp", 1.0, "d2", {}, 1, 0),
+        ],
+    )
+    mapping = link_entities(triples)
+    assert canonicalize_triples(triples, mapping).columns == triples.columns
+    shuffled = triples.select(
+        "doc_seq", "object", "predicate", "subject",
+        "source", "metadata", "confidence", "triple_seq",
+    )
+    out = canonicalize_triples(shuffled, mapping)
+    assert out.columns == shuffled.columns
+    assert {r.object for r in out.collect()} == {"TechCorp Inc.", BASE + "Techcorp"}
+
+
 def test_linking_on_generated_corpus(spark, example_config):
     """Alias mentions in the synthetic corpus must merge: cluster
     assignment = stem rule (same stripped key ⇒ same component)."""

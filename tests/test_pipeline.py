@@ -27,7 +27,7 @@ def test_pipeline_run_and_resume(spark, example_config, tmp_path):
     # manifests written with per-partition rows
     manifests = {m["stage"]: m for m in pipe.stage_manifests()}
     assert set(manifests) == {
-        "s1_text", "s2_extracted", "s3_triples", "s3_lineage", "s4_mapping", "s5_graph"
+        "s2_extracted", "s3_triples", "s3_lineage", "s4_mapping", "s5_graph"
     }
     assert manifests["s5_graph"]["rows"] == n1
     assert sum(manifests["s5_graph"]["partition_rows"].values()) == n1
@@ -135,23 +135,69 @@ def test_pipeline_fingerprint_covers_input_and_config(spark, tmp_path):
     assert not any(r.resumed for r in pipe4.results)
 
 
-def test_pipeline_fused_matches_two_stage(spark, tmp_path):
-    from pyspark.sql import functions as F
+def test_pipeline_manifest_write_is_atomic(
+    spark, example_config, tmp_path, monkeypatch
+):
+    """A stage manifest is replaced atomically: a failure at the
+    s4_mapping manifest leaves no partial file, and the next run resumes
+    s2/s3, recomputes s4/s5 and produces a clean run's graph."""
+    import os
 
-    from rdf_knowledge_extractor_spark.config import Configuration
-    from rdf_knowledge_extractor_spark.plans.pipeline import KgPipeline
-    from rdf_knowledge_extractor_spark.sources.pages import pages_dataframe
+    import pytest
 
-    cfg = Configuration.example()
-    pages = pages_dataframe(spark, 30, seed=5).drop("text")
-    g1 = KgPipeline(spark, cfg, str(tmp_path / "a"), partitions=2).run(pages)
-    g2 = KgPipeline(spark, cfg, str(tmp_path / "b"), partitions=2).run(
-        pages, fused=True
-    )
+    pages = pages_dataframe(spark, 10, seed=3).drop("text")
+    real_replace = os.replace
+    failed = []
+
+    def replace_failing_once(src, dst):
+        if str(dst).endswith("s4_mapping/_MANIFEST.json") and not failed:
+            failed.append(dst)
+            raise OSError("simulated crash at the s4_mapping manifest")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace_failing_once)
+    ckpt = tmp_path / "ck"
+    with pytest.raises(OSError, match="simulated crash"):
+        KgPipeline(spark, example_config, str(ckpt), partitions=2).run(pages)
+    assert failed
+    assert not (ckpt / "s4_mapping" / "_MANIFEST.json").exists()
+
+    pipe = KgPipeline(spark, example_config, str(ckpt), partitions=2)
+    graph = pipe.run(pages)
+    resumed = {r.name: r.resumed for r in pipe.results}
+    assert resumed == {
+        "s2_extracted": True, "s3_triples": True, "s3_lineage": True,
+        "s4_mapping": False, "s5_graph": False,
+    }
+    clean = KgPipeline(spark, example_config, str(tmp_path / "clean"), partitions=2)
     cols = ["subject", "predicate", "object"]
-    a = sorted(tuple(r[c] for c in cols) for r in g1.select(cols).collect())
-    b = sorted(tuple(r[c] for c in cols) for r in g2.select(cols).collect())
-    assert a == b and len(a) > 0
+    got = sorted(tuple(r) for r in graph.select(cols).collect())
+    want = sorted(tuple(r) for r in clean.run(pages).select(cols).collect())
+    assert got == want and len(got) > 0
+
+
+def test_pipeline_commit_holds_only_triple_columns(spark, example_config, tmp_path):
+    """Every file set committed from a pipeline graph holds exactly the
+    triple columns, in TRIPLE_SCHEMA order — no partitioning helper
+    column leaks into the store."""
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore
+    from rdf_knowledge_extractor_spark.schemas import TRIPLE_SCHEMA
+
+    store_root = str(tmp_path / "kgstore")
+    for seed in (7, 8):
+        pages = pages_dataframe(spark, 10, seed=seed).drop("text")
+        ckpt = str(tmp_path / f"ck{seed}")
+        pipe = KgPipeline(spark, example_config, ckpt, partitions=2)
+        graph = pipe.run(pages)
+        assert graph.columns == TRIPLE_SCHEMA.names
+        assert pipe.commit_to_store(graph, store_root) > 0
+
+    store = TripleStore(spark, store_root)
+    paths = store.committed_paths()
+    assert len(paths) == 2
+    for path in paths:
+        assert spark.read.parquet(path).columns == TRIPLE_SCHEMA.names
+    assert store.read().columns == TRIPLE_SCHEMA.names
 
 
 def test_pipeline_commit_to_store_idempotent(spark, example_config, tmp_path):
