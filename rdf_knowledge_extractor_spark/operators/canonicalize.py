@@ -5,10 +5,11 @@ triple table: subjects always, objects only when URI-shaped (literal
 objects are never entity references).  Missing mapping rows fall back
 to the original term, so the remap is total.
 
-Scale: two equi-joins on the mapping.  The mapping is usually much
-smaller than the triple table (distinct entities ≪ triples) — let AQE
-pick broadcast when it fits; both joins reuse the same shuffle key
-domain.  After the remap, coreferent duplicates are collapsed with
+Scale: two equi-joins on the mapping.  At or below
+`dispatch.DRIVER_MAX_EDGES` entities the mapping is a local relation, a
+leaf the planner broadcasts with no linking join to re-plan; above it,
+distinct entities ≪ triples, so AQE picks broadcast when it fits.
+After the remap, coreferent duplicates are collapsed with
 first-occurrence dedup (same semantics as the merge path).  The output
 keeps the input's column order.
 """

@@ -4,7 +4,8 @@ Two algorithms behind one dispatcher:
 
 - **driver union-find** (`_components_driver`) — the small-input arm
   (at most `dispatch.DRIVER_MAX_EDGES` edges): one collect +
-  path-compressed union-find, min-label semantics; at this size the
+  `union_find` (path-compressed, min-label semantics; the linking
+  driver arm calls the same function); at this size the
   distributed loop's per-round driver jobs ARE the cost.  NULL
   endpoints are out of the component contract (an entity id is never
   NULL): the star arm drops NULL-endpoint edges, the driver arm keeps
@@ -37,34 +38,24 @@ from pyspark.sql import functions as F
 from rdf_knowledge_extractor_spark.operators import dispatch
 
 
-def _components_driver(
-    edges: DataFrame, src: str, dst: str, rows: list | None = None
-) -> DataFrame:
-    """Union-find on a collected edge list — small-input fast path.
-    `rows`, the already collected (src, dst) pairs, spares the collect.
+def union_find(pairs) -> dict:
+    """node → min node of its component, over (a, b) pairs — the one
+    pure-Python union-find (path compression, the min as root).
 
-    Semantics identical to the distributed arms: component = min
-    reachable node under the same ordering Spark uses (UTF-8 byte
-    order ≡ code-point order, which is Python's `<` on str), isolated
-    nodes appear iff present in `edges`, self-loops allowed, NULL
-    endpoints ignored by the joins' equality semantics (a NULL never
-    equals anything, so distributed rounds never propagate through
-    it; we drop NULL-endpoint edges likewise)."""
-    spark = edges.sparkSession
-    if rows is None:
-        rows = edges.select(src, dst).collect()
+    Every non-NULL endpoint is a node; a pair with a NULL endpoint
+    joins nothing, as a NULL never equals anything in the distributed
+    arms' joins."""
     parent: dict = {}
 
     def find(x):
         root = x
-        while parent[root] is not root and parent[root] != root:
+        while parent[root] != root:
             root = parent[root]
         while parent[x] != root:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in pairs:
         for n in (a, b):
             if n is not None and n not in parent:
                 parent[n] = n
@@ -76,8 +67,24 @@ def _components_driver(
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
+    return {n: find(n) for n in parent}
+
+
+def _components_driver(
+    edges: DataFrame, src: str, dst: str, rows: list | None = None
+) -> DataFrame:
+    """Union-find on a collected edge list — small-input fast path.
+    `rows`, the already collected (src, dst) pairs, spares the collect.
+
+    Semantics identical to the distributed arms: component = min
+    reachable node under the same ordering Spark uses (UTF-8 byte
+    order ≡ code-point order, which is Python's `<` on str), isolated
+    nodes appear iff present in `edges`, self-loops allowed, NULL
+    endpoints ignored (see `union_find`)."""
     from pyspark.sql import types as T
 
+    if rows is None:
+        rows = edges.select(src, dst).collect()
     node_type = edges.schema[src].dataType
     schema = T.StructType(
         [
@@ -85,8 +92,9 @@ def _components_driver(
             T.StructField("component", node_type, True),
         ]
     )
-    out = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(out, schema)
+    return edges.sparkSession.createDataFrame(
+        list(union_find(rows).items()), schema
+    )
 
 
 def connected_components(
@@ -195,10 +203,14 @@ def connected_components_star(
         if new_fp == fp:
             break
         fp = new_fp
-    # converged: edges are (node, component-min) stars
+    # converged: edges are (node, component-min) stars.  The labels are
+    # materialized before the caches under them are released (here and
+    # in connected_components), so reading them never re-runs the edge
+    # plan
     labels = (
         universe.join(e, universe["node"] == e["u"], "left")
         .select("node", F.coalesce(F.col("v"), F.col("node")).alias("component"))
+        .localCheckpoint(eager=True)
     )
     universe.unpersist()
     return labels, rounds

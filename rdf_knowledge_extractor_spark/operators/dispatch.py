@@ -2,8 +2,9 @@
 
 Traversal, seeded and full property paths and connected components
 each choose between a driver-side arm and a distributed loop by edge
-count.  They read `DRIVER_MAX_EDGES` from this module at call time, so
-patching the one name forces either arm everywhere.
+count, and entity linking by entity count and candidate-pair count.
+They read `DRIVER_MAX_EDGES` from this module at call time, so patching
+the one name forces either arm everywhere.
 
 Below the bound a whole edge list fits the driver comfortably (a few
 MB of node strings, output bounded by the node set), and one collect

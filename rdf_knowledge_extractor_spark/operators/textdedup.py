@@ -36,6 +36,8 @@ corpora in one session should clear between corpora (bench.py does).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -263,9 +265,10 @@ def _with_hashed_shingles(docs: DataFrame, id_col: str, text_col: str, k: int) -
     )
 
 
-def _prefix_len(threshold: float, n):
-    """PPJoin prefix length ⌊(1−t)·n⌋+1 for a set of size `n` (a
-    Column).
+def _prefix_len(threshold, n):
+    """PPJoin prefix length ⌊(1−t)·n⌋+1 for a set of size `n`: an int
+    for numbers, a Column when `threshold` or `n` is one — the same
+    double arithmetic on either path, so both give the same integer.
 
     Never shorter than the exact value for any n < 2⁵³: t's binary
     rounding, the subtraction and the product each err by at most
@@ -276,7 +279,10 @@ def _prefix_len(threshold: float, n):
     removed by the exact verifier.  It also covers the verifier's own
     double rounding: a pair whose computed ratio reaches t has a true
     Jaccard within 2⁻⁵³ of t, far above t − slack."""
-    return (F.floor((1.0 - threshold + _PREFIX_SLACK) * n) + F.lit(1)).cast("int")
+    span = (1.0 - threshold + _PREFIX_SLACK) * n
+    if isinstance(span, float):
+        return math.floor(span) + 1
+    return (F.floor(span) + F.lit(1)).cast("int")
 
 
 def rarest_first_prefix(sets: DataFrame, threshold: float) -> DataFrame:

@@ -186,15 +186,60 @@ def test_cc_dispatcher_small_and_shapes(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_link_arms_match_bruteforce_on_hostile_universe(spark, monkeypatch):
-    """Both candidate arms of link_entities (direct self-join at or below
-    RANKED_PREFIX_MIN_ENTITIES, rarest-first prefix above it) give the
-    mapping of a brute-force pairwise Jaccard ≥ 0.85 + union-find over
-    every entity, on a universe sitting on each edge of that rule."""
+def _bruteforce_mapping(triples):
+    """uri → canonical by pairwise Jaccard ≥ 0.85 over every non-NULL
+    entity's shingle set and a naive union-find, min URI as label."""
     import itertools
 
+    ents = with_canonical_key(entity_universe(triples)).collect()
+    sh = {r.uri: set(r.shingles) for r in ents if r.uri is not None}
+
+    def jac(a, b):
+        i = len(sh[a] & sh[b])
+        return i / (len(sh[a]) + len(sh[b]) - i)
+
+    parent = {u: u for u in sh}
+
+    def find(u):
+        while parent[u] != u:
+            u = parent[u]
+        return u
+
+    for a, b in itertools.combinations(sorted(sh), 2):
+        if jac(a, b) >= 0.85:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {u: find(u) for u in sh}, jac
+
+
+def _link_both_arms(triples, monkeypatch, bounds=(0, 10**9)):
+    """link_entities' mapping with dispatch.DRIVER_MAX_EDGES patched to
+    each bound, and which arm gave it."""
+    from rdf_knowledge_extractor_spark.operators import dispatch
     from rdf_knowledge_extractor_spark.operators import linking as L
 
+    arms = []
+    real = L._link_driver
+
+    def spy(*args):
+        out = real(*args)
+        arms.append("driver" if out is not None else "budget")
+        return out
+
+    monkeypatch.setattr(L, "_link_driver", spy)
+    got = {}
+    for bound in bounds:
+        monkeypatch.setattr(dispatch, "DRIVER_MAX_EDGES", bound)
+        got[bound] = {r.uri: r.canonical for r in L.link_entities(triples).collect()}
+    monkeypatch.undo()
+    return got, arms
+
+
+def test_link_arms_match_bruteforce_on_hostile_universe(spark, monkeypatch):
+    """Both arms of link_entities (distributed with DRIVER_MAX_EDGES
+    forced to 0, driver with it at 10⁹) give the mapping of a
+    brute-force pairwise Jaccard ≥ 0.85 + union-find over every entity,
+    on a universe sitting on each edge of that rule."""
     fwd = "abcdefghijklmnopqrstuvwxyz0123456789"
     rev = fwd[::-1]  # no 3-gram in common with fwd
     names = [
@@ -221,41 +266,92 @@ def test_link_arms_match_bruteforce_on_hostile_universe(spark, monkeypatch):
     rows.append((BASE + "person1", NS + "worksFor", BASE + "Datasystem", 1.0, "d", {}, 99, 0))
     triples = _triples(spark, rows)
 
-    ents = with_canonical_key(entity_universe(triples)).collect()
-    sh = {r.uri: set(r.shingles) for r in ents}
-
-    def jac(a, b):
-        i = len(sh[a] & sh[b])
-        return i / (len(sh[a]) + len(sh[b]) - i)
-
+    expected, jac = _bruteforce_mapping(triples)
     assert jac(BASE + rev[0:21], BASE + rev[2:22]) == 0.85
     assert jac(BASE + fwd[0:30], BASE + fwd[4:34]) < 0.85
-    parent = {u: u for u in sh}
-
-    def find(u):
-        while parent[u] != u:
-            u = parent[u]
-        return u
-
-    for a, b in itertools.combinations(sorted(sh), 2):
-        if jac(a, b) >= 0.85:
-            ra, rb = find(a), find(b)
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {u: find(u) for u in sh}
     assert expected[BASE + fwd[4:34]] == BASE + fwd[0:30]
     assert expected[BASE + "person17"] == BASE + "person17"
 
-    ranked_flags = []
-    real = L.prefix_candidate_pairs
+    got, arms = _link_both_arms(triples, monkeypatch)
+    assert arms == ["driver"]
+    assert got[0] == got[10**9] == expected
 
-    def spy(*args, **kwargs):
-        ranked_flags.append(kwargs["rank_prefixes"])
-        return real(*args, **kwargs)
 
-    monkeypatch.setattr(L, "prefix_candidate_pairs", spy)
-    got = {}
-    for bound in (10**9, 0):
-        monkeypatch.setattr(L, "RANKED_PREFIX_MIN_ENTITIES", bound)
-        got[bound] = {r.uri: r.canonical for r in L.link_entities(triples).collect()}
-    assert ranked_flags == [False, True]
-    assert got[10**9] == got[0] == expected
+def test_link_hot_gram_trips_pair_budget(spark, monkeypatch):
+    """A hot-gram universe: every key is a run of 'a's, so every
+    shingle set is {'aaa'} and that one gram is every entity's whole
+    prefix — C(n, 2) candidate pairs from one posting.  With the bound
+    at the entity count the universe is collected, the pair budget
+    trips, and the distributed arm answers; with a large bound the
+    driver arm pairs the posting itself.  Both equal the brute force."""
+    names = ["a" * k for k in range(3, 33)] + ["AAA", "aaaInc", "AaaaGroup"]
+    rows = [
+        (BASE + n, NS + "hasName", "x", 1.0, f"d{i}", {}, i, 0)
+        for i, n in enumerate(names)
+    ]
+    triples = _triples(spark, rows)
+    expected, _ = _bruteforce_mapping(triples)
+    assert set(expected.values()) == {BASE + "AAA"}
+
+    n_ent = len(names)
+    got, arms = _link_both_arms(triples, monkeypatch, bounds=(n_ent, 10**9))
+    # 30 representatives share one posting: 435 pairs > n_ent
+    assert arms == ["budget", "driver"]
+    assert got[n_ent] == got[10**9] == expected
+
+
+def test_link_arms_agree_on_null_subjects(spark, monkeypatch):
+    """A NULL subject is no entity: neither arm gives it a mapping row,
+    and two of them (which the driver arm must not compare with a
+    string) leave every other row as the brute force has it."""
+    from pyspark.sql import types as T
+
+    from rdf_knowledge_extractor_spark.schemas import TRIPLE_SCHEMA
+
+    schema = T.StructType(
+        [T.StructField("subject", T.StringType(), True), *TRIPLE_SCHEMA.fields[1:]]
+    )
+    rows = [
+        (None, NS + "hasName", "x", 1.0, "d0", {}, 0, 0),
+        (BASE + "TechcorpInc", NS + "worksFor", BASE + "Techcorp", 1.0, "d1", {}, 1, 0),
+        (None, NS + "worksFor", BASE + "Datasystems", 1.0, "d2", {}, 2, 0),
+        (BASE + "Datasystem", NS + "hasName", "y", 1.0, "d3", {}, 3, 0),
+    ]
+    triples = spark.createDataFrame(rows, schema)
+    expected, _ = _bruteforce_mapping(triples)
+    assert expected == {
+        BASE + "TechcorpInc": BASE + "Techcorp",
+        BASE + "Techcorp": BASE + "Techcorp",
+        BASE + "Datasystems": BASE + "Datasystem",
+        BASE + "Datasystem": BASE + "Datasystem",
+    }
+    got, arms = _link_both_arms(triples, monkeypatch)
+    assert arms == ["driver"]
+    assert got[0] == got[10**9] == expected
+
+
+def test_star_labels_do_not_rerun_the_edge_plan(spark, monkeypatch):
+    """The distributed components arm materializes its labels before it
+    releases the caches under them: reading the returned labels calls
+    no function of the edge plan again."""
+    from pyspark.sql import types as T
+
+    from rdf_knowledge_extractor_spark.operators import dispatch
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf(T.StringType())
+    def counted(x):
+        calls.add(1)
+        return x
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y"), ("z", "z")], "src string, dst string"
+    ).select(counted("src").alias("src"), "dst")
+    monkeypatch.setattr(dispatch, "DRIVER_MAX_EDGES", 0)
+    labels = connected_components(edges)
+    before = calls.value
+    assert before > 0
+    got = {r.node: r.component for r in labels.collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z"}
+    assert calls.value == before

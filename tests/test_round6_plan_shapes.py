@@ -315,5 +315,5 @@ def test_prefix_filter_exact_recall_at_threshold_boundary(spark):
     ents = spark.createDataFrame(
         rows, "uri string, key string, shingles array<string>"
     )
-    pairs, _ = prefix_candidate_pairs(ents, threshold=0.9, rank_prefixes=True)
+    pairs, _ = prefix_candidate_pairs(ents, threshold=0.9)
     assert [(r.uri_a, r.uri_b) for r in pairs.collect()] == [("A", "B")]

@@ -191,3 +191,6 @@ def test_prefix_len_exact_at_large_n(spark):
     df = spark.createDataFrame(rows, "t double, n int, exact long")
     bad = df.filter(_prefix_len(F.col("t"), F.col("n")) != F.col("exact")).collect()
     assert len(rows) > 10_000 and not bad, bad[:5]
+    # the int path (the linking driver arm) gives the same integer
+    bad_int = [r for r in rows if _prefix_len(r[0], r[1]) != r[2]]
+    assert not bad_int, bad_int[:5]
