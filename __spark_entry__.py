@@ -1219,9 +1219,7 @@ def q_corpus_chunks(spark, sf):
 def q_corpus_pack(spark, sf):
     """Sequence packing (round-5 training-data op): bounded-overflow
     bin assignment — one window over the shard partitioning = one
-    shuffle (operators/packing.py; the exact greedy variant is
-    applyInPandas per shard, pytest-verified against an independent
-    packer)."""
+    shuffle (operators/packing.py)."""
     from rdf_knowledge_extractor_spark.operators.packing import (
         pack_sequences_binned,
     )

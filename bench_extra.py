@@ -84,9 +84,7 @@ def main() -> None:
         "id", F.posexplode(bands_of(F.col("h"))).alias("band_idx", "band_val")
     )
     timed("minhash/bands-udf+posexplode", lambda: noop(bucketed))
-    cands, _rep = _bucket_candidate_pairs(
-        bucketed, ["band_idx", "band_val"], "id", max_bucket_size=200
-    )
+    cands = _bucket_candidate_pairs(bucketed, ["band_idx", "band_val"], "id")
     timed("minhash/candidates", lambda: noop(cands))
     spark.catalog.clearCache()
     timed(

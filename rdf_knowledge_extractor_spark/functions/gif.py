@@ -202,63 +202,3 @@ def gif_stats(data: bytes) -> tuple[int, int, int, list[float]]:
     h, w, c = img.shape
     means = (img.reshape(-1, c).mean(axis=0) / 255.0).tolist()
     return w, h, c, [float(m) for m in means]
-
-
-def encode_gif(img: np.ndarray) -> bytes:
-    """HxW palette-index array + implicit grayscale palette, or HxWx3
-    RGB quantized to the exact colors present (≤256 unique) → GIF89a
-    bytes.  Fixture generator for tests; also a valid encoder
-    (uncompressed-style LZW: emits literal codes with interleaved
-    clears so the code width never grows)."""
-    arr = np.asarray(img, dtype=np.uint8)
-    if arr.ndim == 2:  # grayscale → 256-entry gray palette
-        palette = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-        idx = arr
-    elif arr.ndim == 3 and arr.shape[2] == 3:
-        flat = arr.reshape(-1, 3)
-        palette, inverse = np.unique(flat, axis=0, return_inverse=True)
-        if len(palette) > 256:
-            raise GifError("encoder supports <=256 unique colors")
-        pad = np.zeros((256 - len(palette), 3), dtype=np.uint8)
-        palette = np.concatenate([palette, pad])
-        idx = inverse.astype(np.uint8).reshape(arr.shape[:2])
-    else:
-        raise GifError("expected HxW indices or HxWx3 RGB")
-    h, w = idx.shape
-    out = bytearray()
-    out += b"GIF89a"
-    out += struct.pack("<HHBBB", w, h, 0x80 | 0x07, 0, 0)  # GCT, 256 colors
-    out += palette.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    min_code = 8
-    out.append(min_code)
-    clear, eoi = 256, 257
-    # literal-only LZW: after a clear, codes are 9-bit; emitting a clear
-    # every 254 literals keeps the table from growing past 9 bits
-    bits = bytearray()
-    acc = 0
-    nbits = 0
-
-    def put(code: int):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += 9
-        while nbits >= 8:
-            bits.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    put(clear)
-    for i, px in enumerate(idx.flatten()):
-        put(int(px))
-        if (i + 1) % 254 == 0:
-            put(clear)
-    put(eoi)
-    if nbits:
-        bits.append(acc & 0xFF)
-    for i in range(0, len(bits), 255):
-        chunk = bits[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)

@@ -5,10 +5,10 @@ prefer ``pypdf`` when importable; this container has no PDF library
 and no network, so a minimal built-in extractor handles the common
 machine-generated case: uncompressed or FlateDecode content streams
 with literal/hex strings under ``Tj``/``TJ``/``'``/``"`` operators,
-WinAnsi/ASCII text.  That is exactly the class of PDF our fixture
-generator (`make_simple_pdf`) emits, so the path is tested end-to-end
-without external dependencies; scanned/CID/encrypted PDFs raise a
-clear error rather than emitting garbage.
+WinAnsi/ASCII text.  That is exactly the class of PDF the tests'
+fixture writer (`make_simple_pdf`) emits, so the path is tested
+end-to-end without external dependencies; scanned/CID/encrypted PDFs
+raise a clear error rather than emitting garbage.
 
 Spark surface: `spark.read.format("binaryFile")` scan + Arrow-batched
 pandas UDF (`pdf_to_text`).
@@ -130,43 +130,3 @@ def read_pdf_files(spark, path_glob: str) -> DataFrame:
             F.lit("size"), F.col("length").cast("string"),
         ).alias("metadata"),
     )
-
-
-def make_simple_pdf(lines: list[str]) -> bytes:
-    """Deterministic single-page PDF fixture (FlateDecode content
-    stream, Helvetica, one Tj per line) for tests — no PDF lib needed."""
-    def esc(s: str) -> str:
-        return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
-    content_ops = ["BT", "/F1 12 Tf", "72 720 Td"]
-    for i, line in enumerate(lines):
-        if i:
-            content_ops.append("0 -14 Td")
-        content_ops.append(f"({esc(line)}) Tj")
-    content_ops.append("ET")
-    content = zlib.compress("\n".join(content_ops).encode("latin-1"))
-
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(content)
-        + content
-        + b"\nendstream",
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-    ]
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)

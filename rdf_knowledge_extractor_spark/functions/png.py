@@ -137,31 +137,3 @@ def png_stats(data: bytes) -> tuple[int, int, int, list[float]]:
     h, w, c = img.shape
     means = (img.reshape(-1, c).mean(axis=0) / 255.0).tolist()
     return w, h, c, [float(m) for m in means]
-
-
-def encode_png(img: np.ndarray) -> bytes:
-    """HxW, HxWx1, HxWx2, HxWx3 or HxWx4 uint8 → PNG bytes (filter 0,
-    non-interlaced).  Fixture generator for tests; also a valid encoder."""
-    arr = np.asarray(img, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    if arr.ndim != 3:
-        raise PngError(f"expected HxW or HxWxC array, got {arr.ndim} dims")
-    h, w, c = arr.shape
-    if c not in (1, 2, 3, 4):
-        raise PngError(f"unsupported channel count {c} (expected 1-4)")
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    raw = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-    idat = zlib.compress(raw, 9)
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
-
-    return (
-        PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
-    )

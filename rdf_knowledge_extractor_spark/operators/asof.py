@@ -21,11 +21,12 @@ Scale notes (100 TB):
   — same cost as any keyed sort, vs. the O(|L|·|R|) blow-up of the
   naive `l.ts >= r.ts` theta-join Spark would otherwise plan.
 - a hot key serializes into one window partition (windows cannot be
-  split by AQE).  `time_slices=S` wires the mitigation: partition the
-  window by (key, time-slice) so a monster key's history splits into S
-  parallel sorts, then patch slice boundaries with a tiny per-slice
-  carry-in aggregate (|keys|·S rows) — results are identical to the
-  unsliced plan (asserted in tests/test_asof.py hot-key test).
+  split by AQE).  A sampled probe finds hot keys; when it does, the
+  window partitions by (key, time-slice) so a monster key's history
+  splits into S parallel sorts, and slice boundaries are patched with a
+  tiny per-slice carry-in aggregate (|keys|·S rows) — results are
+  identical to the unsliced plan (asserted in tests/test_asof.py
+  hot-key test).
 - `tolerance` keeps the same plan and nulls out stale matches
   afterwards (pure projection, no extra shuffle).
 """
@@ -35,6 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# hot-key probe (see asof_join): the share of all rows and the row count
+# that make a key hot, and the Bernoulli sample the probe reads
+HOT_KEY_RATIO = 0.05
+HOT_KEY_MIN_COUNT = 10_000
+PROBE_FRACTION = 0.01
+
 
 def asof_join(
     left: DataFrame,
@@ -42,10 +49,6 @@ def asof_join(
     on: list[str] | str,
     ts_col: str = "ts",
     tolerance_sec: float | None = None,
-    time_slices: int | str | None = "auto",
-    auto_threshold_ratio: float = 0.05,
-    auto_min_count: int = 10_000,
-    probe_fraction: float | None = 0.01,
 ) -> DataFrame:
     """Left as-of join: every left row + latest right row with
     right.ts ≤ left.ts on the same key (nulls when no prior right row,
@@ -54,31 +57,23 @@ def asof_join(
     Right-side non-key, non-ts columns must not collide with left
     columns (rename on the right first) — collisions raise.
 
-    `time_slices=S` splits each key's timeline into S uniform slices
-    (global min/max ts) so a hot key no longer serializes through one
-    window task; slice boundaries are patched with a per-(key, slice)
-    carry-in so the result is identical.  `time_slices=None` forces the
-    single-window plan (no join node, ≤1 Exchange).
-
-    `time_slices="auto"` (the DEFAULT — r3 verdict item 8: hot-key
-    mitigation should not be caller-opt-in at scale) runs the
-    detect_hot_keys probe (operators/skew.py) over the union's keys:
-    if any key holds ≥ `auto_threshold_ratio` of all rows (and ≥
-    `auto_min_count` rows), the sliced plan is selected with S =
-    defaultParallelism (capped at 32); otherwise the plan is the exact
-    single-window plan, unchanged.
-
-    The probe runs on a deterministic `probe_fraction` Bernoulli sample
-    (round-4 brief #4) whenever the sample is statistically reliable
-    for the requested `auto_min_count` (expected hot-key sample ≥ 30
-    rows, i.e. `min_count · fraction ≥ 30`); the sampled thresholds are
-    scaled with a 0.7 slack factor so borderline hot keys err toward
-    slicing (a false positive is still an exact plan; a false negative
-    is a straggler).  Small inputs — where the sample would be too
-    noisy — and `probe_fraction=None` fall back to the exact full-pass
-    probe.  At 100 TB the sampled probe costs ~1% of an aggregation
-    pass instead of a full one; callers on known-uniform keys pass
-    `time_slices=None` to skip probing entirely."""
+    Hot keys: every call probes the union's keys with
+    `detect_hot_keys` (operators/skew.py) on a deterministic
+    `PROBE_FRACTION` Bernoulli sample.  The thresholds are scaled to the
+    sample with a 0.7 slack, so borderline hot keys err toward slicing
+    (a false positive is still an exact plan; a false negative is a
+    straggler): a key is hot when its sampled count reaches
+    0.7·`HOT_KEY_RATIO` of the sample and
+    0.7·`HOT_KEY_MIN_COUNT`·`PROBE_FRACTION` rows (70 by default).
+    The decision never looks at the input's size, so small inputs are
+    sampled too, and below ~7,000 rows per key nothing is hot.  When a
+    key is hot, each key's timeline splits into S uniform slices
+    (global min/max ts, S = defaultParallelism capped at 32) so it no
+    longer serializes through one window task; slice boundaries are
+    patched with a per-(key, slice) carry-in so the result is
+    identical.  Otherwise the plan is the single window (no join node,
+    ≤1 Exchange).  At 100 TB the sampled probe costs ~1% of an
+    aggregation pass."""
     keys = [on] if isinstance(on, str) else list(on)
     l_cols = [c for c in left.columns if c not in keys]
     r_payload = [c for c in right.columns if c not in keys and c != ts_col]
@@ -87,13 +82,8 @@ def asof_join(
         raise ValueError(f"right payload columns collide with left: {sorted(clash)}")
 
     merged = _merged_frame(left, right, keys, ts_col, r_payload)
-
-    if time_slices == "auto":
-        time_slices = _probe_hot_keys(
-            merged, keys, auto_threshold_ratio, auto_min_count, probe_fraction
-        )
-
-    if time_slices is None:
+    slices = _probe_hot_keys(merged, keys)
+    if slices is None:
         w = (
             Window.partitionBy(*keys)
             .orderBy(F.col(ts_col).asc(), F.col("_side").asc())
@@ -105,7 +95,7 @@ def asof_join(
             .drop("_side")
         )
     else:
-        out = _sliced_fill(merged, keys, ts_col, int(time_slices))
+        out = _sliced_fill(merged, keys, ts_col, slices)
 
     if tolerance_sec is not None:
         stale = F.col("_r").getField("_r_ts") < F.col(ts_col) - F.expr(
@@ -145,55 +135,19 @@ def _merged_frame(
     return l_tag.unionByName(r_tag, allowMissingColumns=True)
 
 
-def _probe_frame(
-    left: DataFrame, right: DataFrame, keys: list[str], ts_col: str
-) -> DataFrame:
-    """The hot-key probe's input: key-struct column over the tagged
-    union.  Kept as its own function so the plan test can assert the
-    probe scan prunes to ONLY the key columns on columnar sources."""
-    r_payload = [c for c in right.columns if c not in keys and c != ts_col]
-    merged = _merged_frame(left, right, keys, ts_col, r_payload)
-    return merged.select(F.struct(*[F.col(k) for k in keys]).alias("_k"))
-
-
-def _probe_plan(
-    threshold_ratio: float, min_count: int, fraction: float | None
-) -> tuple[str, float, int]:
-    """(mode, effective_ratio, effective_min_count) for the hot-key
-    probe.  mode == "sampled" only when a `fraction` Bernoulli sample
-    carries ≥ 30 expected rows of a min_count-sized hot key — below
-    that the sample is too noisy and the probe runs exact.  Sampled
-    thresholds get a 0.7 slack so borderline keys still trigger
-    slicing (false positive = different-but-exact plan; false
-    negative = straggler)."""
-    if fraction is None or not (0.0 < fraction < 1.0) or min_count * fraction < 30:
-        return "exact", threshold_ratio, min_count
-    return (
-        "sampled",
-        threshold_ratio * 0.7,
-        max(1, int(min_count * fraction * 0.7)),
-    )
-
-
-def _probe_hot_keys(
-    merged: DataFrame,
-    keys: list[str],
-    threshold_ratio: float,
-    min_count: int,
-    fraction: float | None = 0.01,
-) -> int | None:
-    """Auto-slicing decision: S (int) when a hot key would serialize the
+def _probe_hot_keys(merged: DataFrame, keys: list[str]) -> int | None:
+    """Slicing decision: S (int) when a hot key would serialize the
     window, else None (single-window plan).  Composite keys probe as one
-    struct column through detect_hot_keys (operators/skew.py); the pass
-    is sampled when _probe_plan deems the sample reliable."""
+    struct column through detect_hot_keys (operators/skew.py), on a
+    sample with the thresholds scaled as `asof_join` describes."""
     from rdf_knowledge_extractor_spark.operators.skew import detect_hot_keys
 
     probe = merged.select(F.struct(*[F.col(k) for k in keys]).alias("_k"))
-    mode, eff_ratio, eff_min = _probe_plan(threshold_ratio, min_count, fraction)
-    if mode == "sampled":
-        probe = probe.sample(fraction=fraction, seed=17)
     hot = detect_hot_keys(
-        probe, "_k", threshold_ratio=eff_ratio, min_count=eff_min
+        probe.sample(fraction=PROBE_FRACTION, seed=17),
+        "_k",
+        threshold_ratio=HOT_KEY_RATIO * 0.7,
+        min_count=max(1, int(HOT_KEY_MIN_COUNT * PROBE_FRACTION * 0.7)),
     )
     if hot.isEmpty():
         return None

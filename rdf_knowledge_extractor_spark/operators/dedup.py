@@ -6,8 +6,8 @@ The reference has two dedup paths, both O(n²)/O(n·m) in-memory scans:
   keep the FIRST occurrence of each (s,p,o); the first row's
   confidence/source/metadata win.  DataFrames are unordered, so "first"
   is materialized via explicit `(doc_seq, triple_seq)` ordinals and a
-  window `row_number() == 1` — a single hash-partitioned shuffle on the
-  key, scale-safe (no O(n²)).
+  `min_by` aggregate — a single hash-partitioned shuffle on the key,
+  scale-safe (no O(n²)).
 
 - store insert-if-absent (ref:src/knowledge_graph/mod.rs:91-114):
   `add_triples` skips (s,p,o) already present and reports how many rows
@@ -21,18 +21,16 @@ The reference has two dedup paths, both O(n²)/O(n·m) in-memory scans:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TRIPLE_KEY = ("subject", "predicate", "object")
+# the ordinal that decides which occurrence is first
+ORDER_COLS = ("doc_seq", "triple_seq")
 
 
-def first_occurrence_dedup(
-    df: DataFrame,
-    keys: tuple[str, ...] = TRIPLE_KEY,
-    order_cols: tuple[str, ...] = ("doc_seq", "triple_seq"),
-) -> DataFrame:
-    """Keep the first occurrence per key (first row's payload wins).
+def first_occurrence_dedup(df: DataFrame) -> DataFrame:
+    """Keep the first occurrence per (s, p, o) (first row's payload wins).
 
     Equivalent semantics to ref:src/core/extractor.rs:327-343,
     expressed as `min_by(payload, ordinal)` aggregation rather than a
@@ -41,10 +39,10 @@ def first_occurrence_dedup(
     shuffle — a window would shuffle EVERY duplicate row and sort each
     group.  At web scale (many near-identical extractions per key) the
     shuffled volume drops from O(rows) to O(distinct keys × partitions).
-    Determinism: `order_cols` form a unique ordinal per row
+    Determinism: `ORDER_COLS` form a unique ordinal per row
     (`dropDuplicates` would be nondeterministic about the survivor).
     """
-    payload = [c for c in df.columns if c not in keys]
+    payload = [c for c in df.columns if c not in TRIPLE_KEY]
     # Order on the NATIVE column types (string/timestamp/numeric all
     # compare correctly inside the struct); a leading is-null flag per
     # ordinal column gives nulls-last parity with the previous window
@@ -53,7 +51,7 @@ def first_occurrence_dedup(
     ordinal = F.struct(
         *[
             part
-            for c in order_cols
+            for c in ORDER_COLS
             for part in (
                 F.col(c).isNull().cast("int").alias(f"_isnull_{c}"),
                 F.col(c).alias(c),
@@ -62,9 +60,9 @@ def first_occurrence_dedup(
     )
     first = F.min_by(F.struct(*payload), ordinal)
     return (
-        df.groupBy(*keys)
+        df.groupBy(*TRIPLE_KEY)
         .agg(first.alias("_first"))
-        .select(*keys, *[F.col(f"_first.{c}").alias(c) for c in payload])
+        .select(*TRIPLE_KEY, *[F.col(f"_first.{c}").alias(c) for c in payload])
         .select(*df.columns)  # restore original column order
     )
 
@@ -99,25 +97,3 @@ def merge_results(per_doc_triples: DataFrame, deduplicate: bool = True) -> DataF
     if deduplicate:
         return first_occurrence_dedup(per_doc_triples)
     return per_doc_triples
-
-
-def exact_dedup_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact-hash document dedup: one representative per identical text.
-
-    Map-side partial aggregation via groupBy(min) — scale-safe: a
-    single shuffle on the 64-bit content hash, not on the full text.
-    """
-    h = F.xxhash64(F.col(text_col))
-    key_col = "_text_hash"
-    ordered_id = docs.columns[0]
-    return (
-        docs.withColumn(key_col, h)
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(key_col).orderBy(F.col(ordered_id).asc())
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", key_col)
-    )

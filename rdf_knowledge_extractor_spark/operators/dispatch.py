@@ -1,15 +1,22 @@
-"""Size dispatch shared by the operators' small-input arms.
+"""Size dispatch shared by the operators: two bounds.
 
-Traversal, seeded and full property paths and connected components
-each choose between a driver-side arm and a distributed loop by edge
-count, and entity linking by entity count and candidate-pair count.
-They read `DRIVER_MAX_EDGES` from this module at call time, so patching
-the one name forces either arm everywhere.
+`DRIVER_MAX_EDGES` — traversal, seeded and full property paths and
+connected components each choose between a driver-side arm and a
+distributed loop by edge count, and entity linking by entity count and
+candidate-pair count.  Below the bound a whole edge list fits the
+driver comfortably (a few MB of node strings, output bounded by the
+node set), and one collect replaces the distributed loops' ~2 jobs per
+round, which at this size ARE the cost.  Above it the distributed arms
+run unchanged.
 
-Below the bound a whole edge list fits the driver comfortably (a few
-MB of node strings, output bounded by the node set), and one collect
-replaces the distributed loops' ~2 jobs per round, which at this size
-ARE the cost.  Above it the distributed arms run unchanged.
+`MAX_BUCKET_SIZE` — blocking (`textdedup._bucket_candidate_pairs`, which
+the dedup families and entity linking's distributed arm call) expands a
+bucket of at most this many members into pairs in-array, inside one
+row; a larger bucket goes through a distributed self-join, so a giant
+cluster never materializes O(c²) pairs in one task.
+
+Callers read both bounds from this module at call time, so patching
+one name forces either arm everywhere.
 """
 
 from __future__ import annotations
@@ -17,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row
 
 DRIVER_MAX_EDGES = 100_000
+MAX_BUCKET_SIZE = 200
 
 
 def bounded_collect(df: DataFrame, n: int) -> list[Row] | None:

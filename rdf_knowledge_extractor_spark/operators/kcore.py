@@ -101,28 +101,3 @@ def coreness(
                 F.col("u").alias("node"), F.col("c").alias("coreness")
             )
     raise RuntimeError(f"coreness did not converge in {max_iter} rounds")
-
-
-def k_core(
-    edges: DataFrame, k: int, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Edges of the k-core subgraph (canonical a<b orientation):
-    derived from the exact coreness table — both endpoints must have
-    coreness >= k.  One decomposition serves every k."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    cn = coreness(edges, src=src, dst=dst).filter(F.col("coreness") >= k)
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    keep = cn.select(F.col("node"))
-    return (
-        canon.join(keep.withColumnRenamed("node", "a"), on="a", how="left_semi")
-        .join(keep.withColumnRenamed("node", "b"), on="b", how="left_semi")
-        .select("a", "b")
-    )

@@ -23,13 +23,16 @@ the shared `dispatch.DRIVER_MAX_EDGES`, picks the arm:
 - **driver arm** (`_link_driver`) — a universe of at most that many
   entities comes back in one `bounded_collect` and steps 2–5 run in
   Python; the mapping returns as a local relation built through Arrow.
-  It first sums c·(c−1)/2 over its prefix postings and gives way to
-  the distributed arm above the same bound, so a hot gram in every
-  prefix cannot make the driver build quadratic pairs.
+  While it builds its prefix postings it counts the pairs they hold
+  (each append to a posting of c keys adds c pairs) and gives way to
+  the distributed arm as soon as the count passes the same bound, so a
+  hot gram in every prefix cannot make the driver build quadratic
+  pairs.
 - **distributed arm** (`_link_distributed`) — a groupBy for the key
   tier, `textdedup._bucket_candidate_pairs` over the ranked prefixes
-  (hot postings routed through a distributed self-join, never
-  dropped), `textdedup._verified_pairs` and `connected_components`.
+  (postings over `dispatch.MAX_BUCKET_SIZE` routed through a
+  distributed self-join, never dropped), `textdedup._verified_pairs`
+  and `connected_components`.
 """
 
 from __future__ import annotations
@@ -59,11 +62,8 @@ from rdf_knowledge_extractor_spark.operators.textdedup import (
 # keep their embedded "corp"
 _SUFFIXES = "Inc|Corp|Corporation|Solutions|Industries|Group|Labs|Ltd|Llc|Gmbh"
 
-# shingle-Jaccard threshold of a fuzzy link (see verified_edges) and the
-# posting-list size above which a prefix bucket is paired through the
-# distributed self-join arm instead of in-array combinations
+# shingle-Jaccard threshold of a fuzzy link (see verified_edges)
 LINK_THRESHOLD = 0.85
-MAX_BUCKET_SIZE = 200
 
 
 def entity_universe(triples: DataFrame) -> DataFrame:
@@ -103,29 +103,23 @@ def with_canonical_key(entities: DataFrame) -> DataFrame:
 def prefix_candidate_pairs(
     entities_with_shingles: DataFrame,
     threshold: float = LINK_THRESHOLD,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-) -> tuple[DataFrame, DataFrame]:
-    """(candidate_pairs(uri_a, uri_b), oversized_report) via PREFIX
-    FILTERING over the canonical-key shingles: only each set's rarest
-    `_prefix_len` shingles enter the inverted index, with exact recall.
+) -> DataFrame:
+    """Candidate pairs(uri_a, uri_b) via PREFIX FILTERING over the
+    canonical-key shingles: only each set's rarest `_prefix_len`
+    shingles enter the inverted index, with exact recall.
     MinHash banding, measured on numeric-suffix key families ("doc123…",
     "doc124…"), gave 2.07M candidate pairs from 15k representatives at
     sf0.1; rarest-first postings hold the few entities sharing a RARE
     gram.  Oversized postings go through the distributed self-join arm.
     """
-    pairs, report = _bucket_candidate_pairs(
+    return _bucket_candidate_pairs(
         rarest_first_prefix(
             entities_with_shingles.select(F.col("uri").alias("id"), "shingles"),
             threshold,
         ),
         ["g"],
         "id",
-        max_bucket_size=max_bucket_size,
-    )
-    return (
-        pairs.select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b")),
-        report,
-    )
+    ).select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b"))
 
 
 def verified_edges(
@@ -156,7 +150,7 @@ def verified_edges(
 
 def _link_driver(rows, threshold: float, max_pairs: int) -> dict | None:
     """uri → canonical from collected (uri, key, shingles) rows, or None
-    when the prefix postings hold more than `max_pairs` pairs.  The
+    as soon as the prefix postings hold more than `max_pairs` pairs.  The
     distributed arm's steps and answers: prefixes ranked by document
     frequency across the representatives (ties by value), the exact
     string-set Jaccard, and a NULL `uri` skipped as its key join skips
@@ -172,12 +166,15 @@ def _link_driver(rows, threshold: float, max_pairs: int) -> dict | None:
             rep[key] = uri
     freq = Counter(g for s in sets.values() for g in s)
     postings = defaultdict(list)
+    n_pairs = 0
     for key, s in sets.items():
         ranked = sorted(s, key=lambda g: (freq[g], g))
         for g in ranked[: _prefix_len(threshold, len(s))]:
-            postings[g].append(key)
-    if sum(len(p) * (len(p) - 1) // 2 for p in postings.values()) > max_pairs:
-        return None
+            posting = postings[g]
+            n_pairs += len(posting)
+            if n_pairs > max_pairs:
+                return None
+            posting.append(key)
     cands = {
         (a, b) if a < b else (b, a)
         for keys in postings.values()
@@ -202,7 +199,7 @@ def _link_distributed(ent: DataFrame) -> DataFrame:
     reps = key_rep.select(
         F.col("rep").alias("uri"), "key", key_shingles(F.col("key")).alias("shingles")
     ).persist()
-    pairs, _oversized = prefix_candidate_pairs(reps)
+    pairs = prefix_candidate_pairs(reps)
     # representatives have distinct URIs and pairs come out ordered
     # (uri_a < uri_b), so every verified pair is a true fuzzy edge
     edges = verified_edges(pairs, reps)

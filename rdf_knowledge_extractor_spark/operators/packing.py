@@ -7,24 +7,17 @@ throughput lever.  Corpus-scale packing joins the curation/decontam
 family of beyond-reference operators (the reference engine scopes
 itself to small KGs — /root/reference/README.md).
 
-Two variants, both deterministic and shard-parallel (a GLOBAL greedy
-pack would be a single sequential pass — a one-partition window that
-cannot scale; real pipelines pack per shard/worker, which is exactly
-Spark's partition model):
-
-- `pack_sequences_binned` — pure Catalyst: within each shard
-  (doc_id % n_shards), order by doc_id, take the exclusive running
-  token count, and cut bins at multiples of `max_tokens`
-  (bin = floor(cumsum_exclusive / max_tokens)).  One window over the
-  shard partitioning = ONE shuffle at any scale.  Bins can overshoot
-  by at most (longest doc - 1) tokens — the documented
-  bounded-overflow trade for staying whole-stage-codegen; exactly
-  SQL-expressible, so it carries the DuckDB oracle.
-- `pack_sequences_greedy` — exact first-fit-in-order capacity packing
-  (a bin NEVER exceeds `max_tokens` unless a single document alone
-  does, which then gets a bin of its own).  The bin-reset recurrence
-  is inherently sequential, so it runs per-shard via applyInPandas —
-  Arrow-batched, parallel across shards, sequential only within one.
+`pack_sequences_binned` is deterministic and shard-parallel (a GLOBAL
+greedy pack would be a single sequential pass — a one-partition window
+that cannot scale; real pipelines pack per shard/worker, which is
+exactly Spark's partition model) and pure Catalyst: within each shard
+(doc_id % n_shards), order by doc_id, take the exclusive running token
+count, and cut bins at multiples of `max_tokens` (bin =
+floor(cumsum_exclusive / max_tokens)).  One window over the shard
+partitioning = ONE shuffle at any scale.  Bins can overshoot by at most
+(longest doc - 1) tokens — the documented bounded-overflow trade for
+staying whole-stage-codegen; exactly SQL-expressible, so it carries
+the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -33,18 +26,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from rdf_knowledge_extractor_spark.functions.text_analysis import word_count
-
-
-def _with_shard_tokens(
-    docs: DataFrame, n_shards: int, id_col: str, text_col: str
-) -> DataFrame:
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    return docs.select(
-        F.col(id_col),
-        (F.col(id_col) % n_shards).cast("int").alias("shard"),
-        word_count(F.col(text_col)).cast("long").alias("n_tokens"),
-    )
 
 
 def pack_sequences_binned(
@@ -59,7 +40,13 @@ def pack_sequences_binned(
     shard's doc_id order."""
     if max_tokens < 1:
         raise ValueError(f"max_tokens must be >= 1, got {max_tokens}")
-    t = _with_shard_tokens(docs, n_shards, id_col, text_col)
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+    t = docs.select(
+        F.col(id_col),
+        (F.col(id_col) % n_shards).cast("int").alias("shard"),
+        word_count(F.col(text_col)).cast("long").alias("n_tokens"),
+    )
     w = (
         Window.partitionBy("shard")
         .orderBy(id_col)
@@ -71,43 +58,4 @@ def pack_sequences_binned(
         "shard",
         F.floor(cum_excl / max_tokens).cast("long").alias("bin"),
         "n_tokens",
-    )
-
-
-def pack_sequences_greedy(
-    docs: DataFrame,
-    max_tokens: int,
-    n_shards: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """DataFrame(<id_col>, shard, bin, n_tokens) — exact first-fit-in-
-    order packing per shard; no bin exceeds max_tokens unless a single
-    oversized document occupies it alone."""
-    if max_tokens < 1:
-        raise ValueError(f"max_tokens must be >= 1, got {max_tokens}")
-    t = _with_shard_tokens(docs, n_shards, id_col, text_col)
-    id_field = t.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_field}, shard int, bin long, n_tokens long"
-
-    def pack(pdf):
-        pdf = pdf.sort_values(id_col, ignore_index=True)
-        bins, running, cur = [], 0, 0
-        for n in pdf["n_tokens"]:
-            if running > 0 and running + n > max_tokens:
-                cur += 1
-                running = 0
-            bins.append(cur)
-            running += n
-        pdf["bin"] = bins
-        return pdf[[id_col, "shard", "bin", "n_tokens"]]
-
-    return t.groupBy("shard").applyInPandas(pack, out_schema)
-
-
-def packing_report(packed: DataFrame) -> DataFrame:
-    """Per-bin fill report: (shard, bin, n_docs, sum_tokens)."""
-    return packed.groupBy("shard", "bin").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("sum_tokens"),
     )

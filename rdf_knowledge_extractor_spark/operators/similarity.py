@@ -5,10 +5,14 @@
 - `cosine_topk_bruteforce` — exact top-k for a query set: broadcast
   the (small) query side against the corpus, per-query window top-k.
   This is the baseline/oracle path.
-- `cosine_pairs` — all pairs above a threshold (near-dup detection).
-- `lsh_cosine_topk` — the scale path: random-hyperplane (sign) LSH
-  buckets shrink the candidate set, then exact re-rank.  Approximate;
-  benchmarked against the brute-force baseline, not oracle-checked.
+- `cosine_pairs_bucketed` — all pairs above a threshold (near-dup
+  detection) through sign-LSH buckets and exact verification;
+  `cosine_pairs`, the O(n²) crossJoin, is the reference it is tested
+  against.
+- `lsh_cosine_topk` and `ivf_cosine_topk` — the scale paths for top-k:
+  LSH buckets or IVF cells shrink the candidate set, then exact
+  re-rank.  Approximate; benchmarked against the brute-force baseline,
+  not oracle-checked.
 """
 
 from __future__ import annotations
@@ -40,37 +44,6 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """`_dot` unrolled for a KNOWN dimension: the same 0.0-seeded
-    left-to-right fold (bit-identical IEEE result), but as a flat
-    expression tree that whole-stage codegen compiles — the
-    `aggregate`/`zip_with` higher-order form is interpreted per row
-    and dominated the brute-force scoring stage (guide §4.1: prefer
-    built-ins/codegen over interpreted paths in the hot loop)."""
-    e: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        e = e + F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-    return e
-
-
-def _sqnorm_fixed(a: Column, dim: int) -> Column:
-    """Σx² with `_norm`'s exact fold order (codegen-friendly twin)."""
-    e: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        x = F.element_at(a, i).cast("double")
-        e = e + x * x
-    return e
-
-
-def _norm_fixed(a: Column, dim: int) -> Column:
-    return F.sqrt(_sqnorm_fixed(a, dim))
-
-
-def cosine_fixed(a: Column, b: Column, dim: int) -> Column:
-    """cosine() for a known dim — bit-identical values, codegen path."""
-    return _dot_fixed(a, b, dim) / (_norm_fixed(a, dim) * _norm_fixed(b, dim))
 
 
 def _sim_expr(round_digits: int, dim: int | None,
@@ -149,7 +122,8 @@ def cosine_pairs(
     round_digits: int = 4,
 ) -> DataFrame:
     """All (id_a < id_b) pairs with cosine ≥ threshold.  Exact; the
-    O(n²) compare is the baseline — use lsh buckets at scale."""
+    O(n²) compare is the reference `cosine_pairs_bucketed` is tested
+    against."""
     a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (

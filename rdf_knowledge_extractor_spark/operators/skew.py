@@ -1,4 +1,4 @@
-"""Skew handling: head-entity salting for hot join keys.
+"""Skew handling: hot-key detection for keyed operators.
 
 Web-scale KGs have Zipfian entity popularity — a handful of head
 entities (popular URIs) can dominate a join key's distribution and
@@ -11,12 +11,12 @@ Layers of defense in this engine, in order of preference:
    session.py) splits oversized sort-merge partitions at runtime —
    free, but only for join patterns AQE recognizes.
 2. **Blocking bucket caps** (textdedup._bucket_candidate_pairs) bound
-   the in-row candidate blow-up from hot blocking keys: oversized
-   buckets go through a distributed self-join and are reported.
-3. **Explicit salting** (this module) for aggregations/joins where a
-   known-hot key must still be processed completely: the hot side's
-   key is split into `factor` sub-keys; the small side is replicated
-   `factor`×; results are exact.
+   the in-row candidate blow-up from hot blocking keys: buckets over
+   `dispatch.MAX_BUCKET_SIZE` members go through a distributed
+   self-join.
+3. **Hot-key detection** (`detect_hot_keys`, this module) for an
+   operator AQE cannot split: the as-of join's window (operators/asof.py)
+   probes for hot keys and then splits each key's timeline into slices.
 """
 
 from __future__ import annotations
@@ -39,41 +39,3 @@ def detect_hot_keys(
         )
         .select(key, "n")
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    factor: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Exact equi-join with the big side salted `factor` ways.
-
-    big:   salt = pmod(xxhash64(all cols), factor)  → spreads a hot
-           key's rows over `factor` reducers
-    small: exploded `factor`× with every salt value
-    join:  on (key, salt) — co-partitioned, no single hot reducer.
-    """
-    salted_big = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(factor))
-    )
-    replicated_small = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(factor - 1)))
-    )
-    out = salted_big.join(replicated_small, on=[on, "_salt"], how=how)
-    return out.drop("_salt")
-
-
-def salted_aggregate_count(
-    df: DataFrame, key: str, factor: int = 16
-) -> DataFrame:
-    """Two-phase count per key: partial count on (key, salt), final
-    combine on key — the classic map-side-combine pattern made
-    explicit for keys too hot for a single reducer."""
-    partial = (
-        df.withColumn("_salt", F.pmod(F.xxhash64(F.rand(seed=7)), F.lit(factor)))
-        .groupBy(key, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
-    return partial.groupBy(key).agg(F.sum("_partial").alias("n"))

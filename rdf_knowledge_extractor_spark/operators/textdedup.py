@@ -20,10 +20,10 @@ Four strategies over a corpus DataFrame(id, text):
 
 All three blocking families generate candidates through
 `_bucket_candidate_pairs`: benign buckets expand i<j combinations
-in-array after ONE groupBy shuffle; buckets over `max_bucket_size`
-route through a distributed self-join (exact, and reported) — a giant
-near-dup cluster can never materialize O(c²) pair structs in a single
-row (round-4 verdict, wrong #1).  Every Jaccard ≥ t decision is made by
+in-array after ONE groupBy shuffle; buckets over
+`dispatch.MAX_BUCKET_SIZE` route through a distributed self-join
+(exact) — a giant near-dup cluster can never materialize O(c²) pair
+structs in a single row (round-4 verdict, wrong #1).  Every Jaccard ≥ t decision is made by
 `_verified_pairs`.
 
 Cache contract: these operators persist() their shingle/sketch
@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rdf_knowledge_extractor_spark.functions.text_analysis import char_shingles
+from rdf_knowledge_extractor_spark.operators import dispatch
 from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
 _MERSENNE = (1 << 61) - 1
@@ -178,37 +179,34 @@ def _bucket_candidate_pairs(
     bucketed: DataFrame,
     key_cols: list[str],
     member_col: str,
-    max_bucket_size: int = 200,
     with_buckets: bool = False,
 ):
-    """Skew-safe candidate pairs from a (bucket-key, member) table.
+    """Skew-safe candidate pairs(id_a, id_b), distinct, from a
+    (bucket-key, member) table.
 
     One shuffle (groupBy bucket key → collect members).  Buckets with
-    ≤ `max_bucket_size` members expand all i<j combinations IN-ARRAY
-    (map-side, zero extra shuffle — the round-4 fast shape).  Larger
-    buckets — a giant near-dup cluster of boilerplate/parked pages,
-    guaranteed at 100-TB web scale — must NOT materialize O(c²) structs
-    in a single row of a single task (round-4 verdict, wrong #1), so
-    their members are exploded back to rows and self-equi-joined on the
-    bucket key, producing the SAME exact pair set but distributed across
-    tasks; the join reuses the groupBy's hash partitioning (no extra
-    Exchange) and AQE's skew-join splitter spreads a single hot key over
-    many tasks.
+    ≤ `dispatch.MAX_BUCKET_SIZE` members (read at call time) expand all
+    i<j combinations IN-ARRAY (map-side, zero extra shuffle — the
+    round-4 fast shape).  Larger buckets — a giant near-dup cluster of
+    boilerplate/parked pages, guaranteed at 100-TB web scale — must NOT
+    materialize O(c²) structs in a single row of a single task (round-4
+    verdict, wrong #1), so their members are exploded back to rows and
+    self-equi-joined on the bucket key, producing the SAME exact pair
+    set but distributed across tasks; the join reuses the groupBy's hash
+    partitioning (no extra Exchange) and AQE's skew-join splitter
+    spreads a single hot key over many tasks.
 
-    The oversized buckets are REPORTED, never silent: returns
-    (pairs(id_a, id_b) distinct, report(*key_cols, n)).  The per-bucket
-    member ARRAY is O(c) (~1 MB at c=100k) — well under row limits; only
-    the combos expansion needed the guard.
+    The per-bucket member ARRAY is O(c) (~1 MB at c=100k) — well under
+    row limits; only the combos expansion needed the guard.
+    `with_buckets=True` also returns the persisted bucket aggregate.
     """
-    # persisted: the aggregate feeds up to three plan branches (report,
-    # small, and the selfjoin arm twice) — the module's cache contract
-    # for intermediates read on multiple join branches
+    max_bucket_size = dispatch.MAX_BUCKET_SIZE
+    # persisted: the aggregate feeds up to three plan branches (small,
+    # and the selfjoin arm twice) — the module's cache contract for
+    # intermediates read on multiple join branches
     buckets = bucketed.groupBy(*key_cols).agg(
         F.array_sort(F.collect_list(member_col)).alias("_ids")
     ).persist()
-    report = buckets.filter(F.size("_ids") > max_bucket_size).select(
-        *key_cols, F.size("_ids").alias("n")
-    )
     small = (
         buckets.filter((F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket_size))
         .select(F.explode(_pair_combos(F.col("_ids"))).alias("_p"))
@@ -231,8 +229,8 @@ def _bucket_candidate_pairs(
         # verify-join strategy dispatch) without recomputing the
         # groupBy — the stats job materializes the same cache the main
         # action needs anyway
-        return pairs.distinct(), report, buckets
-    return pairs.distinct(), report
+        return pairs.distinct(), buckets
+    return pairs.distinct()
 
 
 def _with_shingles(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
@@ -323,8 +321,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     k: int = 9,
     threshold: float = 0.8,
-    max_bucket_size: int = 200,
-    with_report: bool = False,
 ):
     """DataFrame(id_a, id_b, jaccard) for pairs with Jaccard ≥ threshold.
 
@@ -342,10 +338,8 @@ def ngram_jaccard_pairs(
     # skew-safe one-shuffle candidate generation over the inverted
     # prefix index (see _bucket_candidate_pairs): rarest-first prefixes
     # keep postings lists short; an oversized posting (hot gram) is
-    # routed/reported instead of exploding in one row
-    cands, report = _bucket_candidate_pairs(
-        rarest_first_prefix(sh, threshold), ["g"], "id", max_bucket_size=max_bucket_size
-    )
+    # routed through the self-join instead of exploding in one row
+    cands = _bucket_candidate_pairs(rarest_first_prefix(sh, threshold), ["g"], "id")
     # verification runs on xxhash64-HASHED shingles: long set-ops are
     # several times cheaper than hashing 9-char strings into the
     # intersect hash set, and |∩|/|∪| is unchanged up to a 2⁻⁶⁴ in-pair
@@ -356,8 +350,7 @@ def ngram_jaccard_pairs(
     hashed = sh.select(
         "id", F.array_distinct(shingle_hash_col(F.col("shingles"))).alias("h")
     )
-    out = _verified_pairs(cands, hashed, hashed, threshold)
-    return (out, report) if with_report else out
+    return _verified_pairs(cands, hashed, hashed, threshold)
 
 
 def minhash_lsh_pairs(
@@ -368,8 +361,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     num_perm: int = 64,
     bands: int = 16,
-    max_bucket_size: int = 200,
-    with_report: bool = False,
 ):
     """MinHash-LSH candidates verified with exact Jaccard ≥ threshold.
 
@@ -408,7 +399,7 @@ def minhash_lsh_pairs(
     # twice.  Buckets are near-dup clusters (4-row bands ⇒ background
     # collision p≈J⁴), so the collected id arrays stay small; a
     # pathological giant duplicate cluster is routed through the
-    # distributed self-join arm / reported (_bucket_candidate_pairs).
+    # distributed self-join arm (_bucket_candidate_pairs).
     # posexplode is applied DIRECTLY to the UDF call: the former
     # withColumn + posexplode-in-a-second-select shape made the
     # optimizer copy the UDF below the Generate — two stacked
@@ -416,12 +407,8 @@ def minhash_lsh_pairs(
     bucketed = sh.select(
         "id", F.posexplode(bands_of(F.col("h"))).alias("band_idx", "band_val")
     )
-    cands, report, buckets = _bucket_candidate_pairs(
-        bucketed,
-        ["band_idx", "band_val"],
-        "id",
-        max_bucket_size=max_bucket_size,
-        with_buckets=True,
+    cands, buckets = _bucket_candidate_pairs(
+        bucketed, ["band_idx", "band_val"], "id", with_buckets=True
     )
     # verify-join strategy: MEASURED, not guessed (guide §1.1).  A
     # scalar job over the already-persisted bucket aggregate bounds
@@ -454,12 +441,11 @@ def minhash_lsh_pairs(
     # completes); the array-carrying half additionally needs
     # pairs × mean-width bytes to fit.  Above the budget the verify
     # falls back to planner-chosen joins (the r5-proven robust shape).
-    out = _verified_pairs(
+    return _verified_pairs(
         cands, sh, sh, threshold,
         broadcast_candidates=pair_bound * 24.0 < 256 * 1024 * 1024,
         broadcast_halves=est_broadcast_bytes < 256 * 1024 * 1024,
     )
-    return (out, report) if with_report else out
 
 
 def _verified_pairs(cands, a, b, threshold: float,
@@ -575,8 +561,6 @@ def simhash_pairs(
     text_col: str = "text",
     k: int = 9,
     max_hamming: int = 3,
-    max_bucket_size: int = 200,
-    with_report: bool = False,
 ):
     """DataFrame(id_a, id_b, hamming) with hamming(simhash) ≤ max_hamming.
 
@@ -615,18 +599,16 @@ def simhash_pairs(
     # buckets; a giant identical-sketch cluster routes through the
     # distributed self-join arm (struct members order by id first, so
     # id_a < id_b is preserved)
-    cands, report = _bucket_candidate_pairs(
+    cands = _bucket_candidate_pairs(
         chunks.select(
             "chunk_idx", "chunk_val", F.struct("id", "sig").alias("m")
         ),
         ["chunk_idx", "chunk_val"],
         "m",
-        max_bucket_size=max_bucket_size,
     )
     hamming = F.bit_count(F.col("id_a.sig").bitwiseXOR(F.col("id_b.sig")))
-    out = cands.select(
+    return cands.select(
         F.col("id_a.id").alias("id_a"),
         F.col("id_b.id").alias("id_b"),
         hamming.alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
-    return (out, report) if with_report else out

@@ -151,7 +151,6 @@ class TripleStore:
         batch: DataFrame,
         batch_id: str,
         dedup_batch: bool = True,
-        _crash_before_commit: bool = False,
     ) -> int:
         """Exactly-once insert-if-absent; returns the added-row count
         (the reference's `add_triples` return,
@@ -161,9 +160,6 @@ class TripleStore:
         - already-committed batch_id → no-op, returns the original count;
         - crash before the manifest swap → orphan files, zero visible
           effect; the retry recomputes and commits.
-
-        `_crash_before_commit` is a test hook that aborts between the
-        data write and the manifest swap (simulating a driver crash).
         """
         manifest = self._read_manifest()
         if batch_id in manifest["batches"]:
@@ -175,9 +171,6 @@ class TripleStore:
         out_dir = self.root / "data" / f"{_safe(batch_id)}-{uuid.uuid4().hex[:8]}"
         rows.write.mode("overwrite").parquet(str(out_dir))
         added = _parquet_row_count(out_dir)
-
-        if _crash_before_commit:
-            raise RuntimeError("simulated crash before manifest swap")
 
         manifest["version"] += 1
         manifest["batches"][batch_id] = {

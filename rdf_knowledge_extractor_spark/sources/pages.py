@@ -304,23 +304,3 @@ def pages_dataframe_distributed(
     n_part = num_partitions or spark.sparkContext.defaultParallelism * 2
     base = spark.range(0, n_pages, numPartitions=n_part).select(F.col("id"))
     return base.mapInPandas(gen, schema=schema)
-
-
-def gold_triples_dataframe(spark, n_pages: int, seed: int = 42):
-    from pyspark.sql import types as T
-
-    corpus = generate_corpus(n_pages, seed)
-    schema = T.StructType(
-        [
-            T.StructField("subject", T.StringType(), False),
-            T.StructField("predicate", T.StringType(), False),
-            T.StructField("object", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-        ]
-    )
-    rows = [
-        (s, p, o, page.url)
-        for page in corpus
-        for (s, p, o) in page.gold_triples
-    ]
-    return spark.createDataFrame(rows, schema)

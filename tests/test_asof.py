@@ -7,6 +7,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from rdf_knowledge_extractor_spark.operators import asof
 from rdf_knowledge_extractor_spark.operators.asof import asof_join
 
 
@@ -115,26 +116,57 @@ def skewed_sides(spark):
     return left, right
 
 
-def test_asof_time_sliced_equals_unsliced(skewed_sides):
-    """Hot-key mitigation: time_slices=S gives byte-identical results to
+def _force_slices(monkeypatch, s):
+    """Make the hot-key probe answer `s` (None: the single window)."""
+    monkeypatch.setattr(asof, "_probe_hot_keys", lambda merged, keys: s)
+
+
+def _single_window(left, right, **kw):
+    """Rows of the unsliced plan, whatever the probe would decide."""
+    with pytest.MonkeyPatch.context() as m:
+        _force_slices(m, None)
+        return sorted(
+            map(
+                tuple,
+                asof_join(left, right, on="user", ts_col="ts", **kw).collect(),
+            )
+        )
+
+
+def _spy_probe(monkeypatch):
+    """Record what the probe hands to detect_hot_keys."""
+    from rdf_knowledge_extractor_spark.operators import skew
+
+    seen = {}
+    real = skew.detect_hot_keys
+
+    def spy(df, key, threshold_ratio, min_count):
+        seen.update(df=df, ratio=threshold_ratio, min_count=min_count)
+        return real(df, key, threshold_ratio=threshold_ratio, min_count=min_count)
+
+    monkeypatch.setattr(skew, "detect_hot_keys", spy)
+    return seen
+
+
+def test_asof_time_sliced_equals_unsliced(skewed_sides, monkeypatch):
+    """Hot-key mitigation: S time slices give byte-identical results to
     the single-window plan on a skewed fixture (VERDICT r2 #2)."""
     left, right = skewed_sides
     base = sorted(
         map(tuple, asof_join(left, right, on="user", ts_col="ts").collect())
     )
     for s in (3, 8):
+        _force_slices(monkeypatch, s)
         sliced = sorted(
             map(
                 tuple,
-                asof_join(
-                    left, right, on="user", ts_col="ts", time_slices=s
-                ).collect(),
+                asof_join(left, right, on="user", ts_col="ts").collect(),
             )
         )
-        assert sliced == base, f"time_slices={s} diverged"
+        assert sliced == base, f"{s} slices diverged"
 
 
-def test_asof_time_sliced_with_tolerance(skewed_sides):
+def test_asof_time_sliced_with_tolerance(skewed_sides, monkeypatch):
     left, right = skewed_sides
     base = sorted(
         map(
@@ -144,24 +176,25 @@ def test_asof_time_sliced_with_tolerance(skewed_sides):
             ).collect(),
         )
     )
+    _force_slices(monkeypatch, 5)
     sliced = sorted(
         map(
             tuple,
             asof_join(
-                left, right, on="user", ts_col="ts",
-                tolerance_sec=300, time_slices=5,
+                left, right, on="user", ts_col="ts", tolerance_sec=300
             ).collect(),
         )
     )
     assert sliced == base
 
 
-def test_asof_sliced_window_partitions_by_slice(skewed_sides):
+def test_asof_sliced_window_partitions_by_slice(skewed_sides, monkeypatch):
     """The sliced plan's big window must partition by (key, _slice) —
     i.e. the hot key's history is split across slice partitions."""
     left, right = skewed_sides
+    _force_slices(monkeypatch, 4)
     plan = (
-        asof_join(left, right, on="user", ts_col="ts", time_slices=4)
+        asof_join(left, right, on="user", ts_col="ts")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -174,29 +207,22 @@ def test_asof_sliced_window_partitions_by_slice(skewed_sides):
 
 # -- round-4: auto hot-key slicing (VERDICT r3 item 8) -------------------
 
-def test_asof_auto_slices_on_hot_key_without_caller_optin(skewed_sides):
-    """With time_slices='auto' (the default) and the probe tuned to this
-    fixture's size, the hot key triggers the sliced plan WITHOUT the
-    caller passing S — and the result still equals the unsliced plan."""
+def test_asof_auto_slices_on_hot_key_without_caller_optin(skewed_sides, monkeypatch):
+    """With the probe tuned to this fixture's size (the whole input as
+    the sample, hot from 50 rows), the hot key triggers the sliced plan
+    WITHOUT the caller passing S — and the result still equals the
+    unsliced plan."""
     left, right = skewed_sides
-    base = sorted(
-        map(
-            tuple,
-            asof_join(
-                left, right, on="user", ts_col="ts", time_slices=None
-            ).collect(),
-        )
-    )
-    auto = asof_join(
-        left, right, on="user", ts_col="ts",
-        time_slices="auto", auto_min_count=50,
-    )
+    base = _single_window(left, right)
+    monkeypatch.setattr(asof, "HOT_KEY_MIN_COUNT", 50)
+    monkeypatch.setattr(asof, "PROBE_FRACTION", 1.0)
+    auto = asof_join(left, right, on="user", ts_col="ts")
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "_slice" in plan, "hot key should have auto-selected the sliced plan"
     assert sorted(map(tuple, auto.collect())) == base
 
 
-def test_asof_auto_keeps_single_window_plan_for_uniform_keys(spark):
+def test_asof_auto_keeps_single_window_plan_for_uniform_keys(spark, monkeypatch):
     left = spark.createDataFrame(
         [(i, f"u{i % 40}", _ts(i % 59)) for i in range(200)],
         "lid long, user string, ts timestamp",
@@ -205,41 +231,30 @@ def test_asof_auto_keeps_single_window_plan_for_uniform_keys(spark):
         [(f"u{i % 40}", _ts((i * 3) % 59), i, float(i)) for i in range(120)],
         "user string, ts timestamp, rid long, rval double",
     )
-    auto = asof_join(left, right, on="user", ts_col="ts", auto_min_count=50)
+    monkeypatch.setattr(asof, "HOT_KEY_MIN_COUNT", 50)
+    monkeypatch.setattr(asof, "PROBE_FRACTION", 1.0)
+    auto = asof_join(left, right, on="user", ts_col="ts")
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "_slice" not in plan, "uniform keys must keep the unsliced plan"
-    base = sorted(
-        map(
-            tuple,
-            asof_join(left, right, on="user", ts_col="ts", time_slices=None).collect(),
-        )
-    )
+    base = _single_window(left, right)
     assert sorted(map(tuple, auto.collect())) == base
 
 
 # -- round-5: sampled hot-key probe (VERDICT r4 item 4) ------------------
 
-def test_probe_plan_small_min_count_falls_back_to_exact():
-    """Tiny inputs (and the existing small-fixture tests) must keep the
-    deterministic exact probe: a 1% sample of a 50-row hot key is
-    noise, not signal."""
-    from rdf_knowledge_extractor_spark.operators.asof import _probe_plan
-
-    assert _probe_plan(0.05, 50, 0.01) == ("exact", 0.05, 50)
-    assert _probe_plan(0.05, 10_000, None) == ("exact", 0.05, 10_000)
-    assert _probe_plan(0.05, 10_000, 1.0) == ("exact", 0.05, 10_000)
-
-
-def test_probe_plan_scale_defaults_sample_with_slack():
-    from rdf_knowledge_extractor_spark.operators.asof import _probe_plan
-
-    mode, ratio, min_count = _probe_plan(0.05, 10_000, 0.01)
-    assert mode == "sampled"
-    assert ratio == pytest.approx(0.035)
-    assert min_count == 70  # 10_000 * 0.01 * 0.7
+def test_probe_plan_scale_defaults_sample_with_slack(sides, monkeypatch):
+    """At the default constants the probe reads a 1% Bernoulli sample,
+    with both thresholds scaled by the 0.7 slack: ratio 0.05 → 0.035 and
+    min count 10_000 · 0.01 · 0.7 = 70."""
+    left, right = sides
+    seen = _spy_probe(monkeypatch)
+    asof_join(left, right, on="user", ts_col="ts")
+    assert seen["ratio"] == pytest.approx(0.035)
+    assert seen["min_count"] == 70  # 10_000 * 0.01 * 0.7
+    assert "Sample 0.0, 0.01" in seen["df"]._jdf.queryExecution().logical().toString()
 
 
-def test_asof_sampled_probe_triggers_slicing_and_stays_exact(spark):
+def test_asof_sampled_probe_triggers_slicing_and_stays_exact(spark, monkeypatch):
     """Large enough for the sampled path (min_count*fraction >= 30):
     the hot key must still auto-select the sliced plan off the sample,
     and the sliced result must equal the exact single-window plan."""
@@ -250,22 +265,16 @@ def test_asof_sampled_probe_triggers_slicing_and_stays_exact(spark):
         [(k, _ts(m), m, float(m)) for k in ["hot", "u3"] for m in range(0, 59, 2)],
         "user string, ts timestamp, rid long, rval double",
     )
-    auto = asof_join(
-        left, right, on="user", ts_col="ts",
-        auto_min_count=300, probe_fraction=0.1,
-    )
+    monkeypatch.setattr(asof, "HOT_KEY_MIN_COUNT", 300)
+    monkeypatch.setattr(asof, "PROBE_FRACTION", 0.1)
+    auto = asof_join(left, right, on="user", ts_col="ts")
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "_slice" in plan, "sampled probe should have detected the hot key"
-    base = sorted(
-        map(
-            tuple,
-            asof_join(left, right, on="user", ts_col="ts", time_slices=None).collect(),
-        )
-    )
+    base = _single_window(left, right)
     assert sorted(map(tuple, auto.collect())) == base
 
 
-def test_asof_probe_scan_prunes_to_keys(spark, tmp_path):
+def test_asof_probe_scan_prunes_to_keys(spark, tmp_path, monkeypatch):
     """The auto-probe's extra pass is ~free on columnar sources: its
     scan must read ONLY the key column from both union branches
     (ReadSchema pruned), so at 100 TB the probe reads ~1% of one
@@ -274,10 +283,6 @@ def test_asof_probe_scan_prunes_to_keys(spark, tmp_path):
     import contextlib
     import io
     import re
-
-    from pyspark.sql import functions as F
-
-    from rdf_knowledge_extractor_spark.operators.asof import _probe_frame
 
     spark.range(100).select(
         F.col("id").alias("user"),
@@ -292,10 +297,11 @@ def test_asof_probe_scan_prunes_to_keys(spark, tmp_path):
     left = spark.read.parquet(str(tmp_path / "left"))
     right = spark.read.parquet(str(tmp_path / "right"))
 
-    probe = _probe_frame(left, right, ["user"], "ts")
+    seen = _spy_probe(monkeypatch)
+    asof_join(left, right, on="user", ts_col="ts")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        probe.groupBy("_k").count().explain("formatted")
+        seen["df"].groupBy("_k").count().explain("formatted")
     schemas = re.findall(r"ReadSchema: (\S+)", buf.getvalue())
     assert len(schemas) == 2  # both union branches scanned
     for s in schemas:

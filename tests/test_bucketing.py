@@ -1,69 +1,8 @@
-"""Bucketed graph layout: subject self-joins must plan WITHOUT any
-Exchange (the co-located-join evidence for 100 TB BGP queries)."""
+"""Bucketed graph layout: the SPARQL engine's subject self-joins plan
+WITHOUT any Exchange over a subject-bucketed table (the co-located-join
+evidence for 100 TB BGP queries)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-
-def test_bucketed_self_join_has_no_exchange(spark, tmp_path):
-    from rdf_knowledge_extractor_spark.plans.bucketing import (
-        bucketed_graph,
-        subject_self_join,
-        write_bucketed_graph,
-    )
-    from rdf_knowledge_extractor_spark.schemas import TRIPLE_SCHEMA
-
-    ns = "http://kg.example.org/ontology#"
-    rows = []
-    for i in range(200):
-        rows.append((f"http://e/s{i}", ns + "hasLang", f"l{i % 5}", 1.0, None, {}, 0, 0))
-        rows.append((f"http://e/s{i}", ns + "hasSource", f"src{i % 7}", 1.0, None, {}, 0, 1))
-    df = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-
-    write_bucketed_graph(df, "graph_bucketed_test", buckets=8)
-    # suppress broadcast: at test size the planner would broadcast and
-    # skip bucketed scans; at 100 TB neither side broadcasts — the
-    # SMJ-over-buckets shape below is the one that matters
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        g = bucketed_graph(spark, "graph_bucketed_test")
-        joined = subject_self_join(g, ns + "hasLang", ns + "hasSource")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed self-join still shuffles:\n{plan}"
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan
-        # correctness: every subject pairs its lang with its source
-        assert joined.count() == 200
-        one = joined.filter(F.col("subject") == "http://e/s3").collect()[0]
-        assert one["a"] == "l3" and one["b"] == "src3"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS graph_bucketed_test")
-
-
-def test_unbucketed_same_join_does_exchange(spark):
-    """Control: the identical join over a plain DataFrame shuffles —
-    proving the bucketing (not AQE/broadcast) removes the exchange."""
-    from rdf_knowledge_extractor_spark.plans.bucketing import subject_self_join
-    from rdf_knowledge_extractor_spark.schemas import TRIPLE_SCHEMA
-
-    ns = "http://kg.example.org/ontology#"
-    rows = []
-    for i in range(200):
-        rows.append((f"http://e/s{i}", ns + "hasLang", f"l{i % 5}", 1.0, None, {}, 0, 0))
-        rows.append((f"http://e/s{i}", ns + "hasSource", f"src{i % 7}", 1.0, None, {}, 0, 1))
-    df = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    # suppress broadcast so the shuffle shows
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = subject_self_join(df, ns + "hasLang", ns + "hasSource")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_sparql_bgp_on_bucketed_graph_is_exchange_free(spark, tmp_path):
@@ -71,10 +10,6 @@ def test_sparql_bgp_on_bucketed_graph_is_exchange_free(spark, tmp_path):
     co-location THROUGH its variable aliasing: on a subject-bucketed
     graph table the whole query plans with ZERO Exchange nodes
     (broadcast disabled to force the join to prove co-location)."""
-    from rdf_knowledge_extractor_spark.plans.bucketing import (
-        bucketed_graph,
-        write_bucketed_graph,
-    )
     from rdf_knowledge_extractor_spark.query.sparql import execute_sparql
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -88,8 +23,14 @@ def test_sparql_bgp_on_bucketed_graph_is_exchange_free(spark, tmp_path):
         g = spark.createDataFrame(
             rows, "subject string, predicate string, object string"
         )
-        write_bucketed_graph(g, "g_sparql_bucketed", buckets=8)
-        bg = bucketed_graph(spark, "g_sparql_bucketed")
+        (
+            g.write.bucketBy(8, "subject")
+            .sortBy("subject")
+            .mode("overwrite")
+            .format("parquet")
+            .saveAsTable("g_sparql_bucketed")
+        )
+        bg = spark.table("g_sparql_bucketed")
         q = (
             f"PREFIX kg: <{ns}> "
             "SELECT ?s ?n ?l WHERE { ?s kg:hasName ?n ; kg:hasLang ?l }"

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from rdf_knowledge_extractor_spark.operators.dedup import (
-    exact_dedup_documents,
     first_occurrence_dedup,
     insert_new_triples,
 )
@@ -58,18 +57,9 @@ def test_insert_into_empty(spark):
     assert new_rows.count() == 1 and updated.count() == 1
 
 
-def test_exact_dedup_documents(spark):
-    docs = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other")], "doc_id long, text string"
-    )
-    out = exact_dedup_documents(docs)
-    assert out.count() == 2
-    assert {r.doc_id for r in out.collect()} == {1, 3}  # min doc_id survives
-
-
 def test_first_occurrence_dedup_native_order_types(spark):
-    """order_cols may be string/timestamp — native-type struct ordering,
-    not a lossy cast-to-long (ADVICE r2); nulls still lose."""
+    """The ordinal columns may be string/timestamp — native-type struct
+    ordering, not a lossy cast-to-long (ADVICE r2); nulls still lose."""
     from datetime import datetime
 
     from rdf_knowledge_extractor_spark.operators.dedup import (
@@ -84,10 +74,10 @@ def test_first_occurrence_dedup_native_order_types(spark):
             ("s2", "p", "o", None, None, "only-null"),
         ],
         "subject string, predicate string, object string, "
-        "src string, seen timestamp, tag string",
+        "doc_seq string, triple_seq timestamp, tag string",
     )
     out = {
         r.subject: r.tag
-        for r in first_occurrence_dedup(df, order_cols=("src", "seen")).collect()
+        for r in first_occurrence_dedup(df).collect()
     }
     assert out == {"s": "early", "s2": "only-null"}

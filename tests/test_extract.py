@@ -19,7 +19,7 @@ from rdf_knowledge_extractor_spark.functions.prompts import (
     truncate_to_bytes,
 )
 from rdf_knowledge_extractor_spark.sources.pages import (
-    gold_triples_dataframe,
+    generate_corpus,
     pages_dataframe,
 )
 
@@ -42,10 +42,7 @@ def test_pipeline_precision_recall(spark, extracted):
         (r.subject, r.predicate, r.object)
         for r in triples.select("subject", "predicate", "object").collect()
     }
-    gold = {
-        (r.subject, r.predicate, r.object)
-        for r in gold_triples_dataframe(spark, N_PAGES, seed=42).collect()
-    }
+    gold = {t for page in generate_corpus(N_PAGES, 42) for t in page.gold_triples}
     assert got, "no triples extracted"
     tp = len(got & gold)
     precision = tp / len(got)

@@ -11,10 +11,10 @@ import pytest
 from rdf_knowledge_extractor_spark.functions.gif import (
     GifError,
     decode_gif,
-    encode_gif,
     gif_stats,
     is_gif,
 )
+from fixture_encoders import encode_gif
 
 
 def _rng(seed):
@@ -135,7 +135,7 @@ def test_spark_real_decode_dispatch(spark):
         MEDIA_SCHEMA,
         extract_media_features,
     )
-    from rdf_knowledge_extractor_spark.functions.png import encode_png
+    from fixture_encoders import encode_png
 
     rows = [
         (0, bytearray(encode_gif(np.full((3, 5), 100, dtype=np.uint8))), "image", {}),

@@ -33,10 +33,7 @@ from pathlib import Path
 
 import pytest
 
-from rdf_knowledge_extractor_spark.functions.html5_tree import (
-    parse_document_full,
-    serialize_test_format,
-)
+from fixture_encoders import parse_document_full, serialize_test_format
 
 _DAT = Path(__file__).parent / "data" / "html5lib_tree_cases.dat"
 

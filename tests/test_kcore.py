@@ -6,7 +6,7 @@ from collections import defaultdict
 
 import pytest
 
-from rdf_knowledge_extractor_spark.operators.kcore import coreness, k_core
+from rdf_knowledge_extractor_spark.operators.kcore import coreness
 
 
 def _peel_coreness(pairs):
@@ -50,17 +50,6 @@ def test_coreness_matches_peeling(spark, pairs):
     df = spark.createDataFrame(pairs, ["src", "dst"])
     got = {r.node: r.coreness for r in coreness(df).collect()}
     assert got == _peel_coreness(pairs)
-
-
-def test_k_core_subgraph(spark):
-    pairs = CASES[0]  # K4 + tail
-    df = spark.createDataFrame(pairs, ["src", "dst"])
-    e3 = {(r.a, r.b) for r in k_core(df, 3).collect()}
-    assert e3 == {(a, b) for a in range(4) for b in range(4) if a < b}
-    e1 = k_core(df, 1)
-    assert e1.count() == len(set(map(tuple, map(sorted, pairs))))
-    with pytest.raises(ValueError):
-        k_core(df, 0)
 
 
 def test_coreness_duplicate_and_reversed_edges(spark):

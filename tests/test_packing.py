@@ -1,6 +1,6 @@
-"""Sequence packing (operators/packing.py): binned vs greedy
-semantics, capacity guarantees, determinism, and the one-shuffle /
-shard-parallel plan shapes."""
+"""Sequence packing (operators/packing.py): binned semantics, the
+overflow bound, determinism, and the one-shuffle / shard-parallel plan
+shape."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from rdf_knowledge_extractor_spark.operators.packing import (
-    pack_sequences_binned,
-    pack_sequences_greedy,
-    packing_report,
-)
+from rdf_knowledge_extractor_spark.operators.packing import pack_sequences_binned
 
 
 @pytest.fixture(scope="module")
@@ -24,50 +20,11 @@ def docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def _greedy_reference(items, max_tokens):
-    """Independent first-fit-in-order packer."""
-    out, running, cur = {}, 0, 0
-    for doc_id, n in items:
-        if running > 0 and running + n > max_tokens:
-            cur += 1
-            running = 0
-        out[doc_id] = cur
-        running += n
-    return out
-
-
-def test_greedy_matches_independent_reference(docs):
-    packed = pack_sequences_greedy(docs, max_tokens=10, n_shards=4)
-    rows = packed.collect()
-    by_shard = {}
-    for r in sorted(rows, key=lambda r: r.doc_id):
-        by_shard.setdefault(r.shard, []).append((r.doc_id, r.n_tokens))
-    for shard, items in by_shard.items():
-        expect = _greedy_reference(items, 10)
-        got = {r.doc_id: r.bin for r in rows if r.shard == shard}
-        assert got == expect, f"shard {shard}"
-
-
-def test_greedy_capacity_never_exceeded(docs):
-    report = packing_report(pack_sequences_greedy(docs, max_tokens=10, n_shards=4))
-    # every doc here is <= 7 tokens < max, so NO bin may exceed 10
-    assert report.filter(F.col("sum_tokens") > 10).count() == 0
-
-
-def test_greedy_oversized_doc_gets_own_bin(spark):
-    df = spark.createDataFrame(
-        [(0, "a b"), (1, " ".join(["x"] * 50)), (2, "c d e")],
-        ["doc_id", "text"],
-    )
-    rows = {r.doc_id: r for r in
-            pack_sequences_greedy(df, max_tokens=10, n_shards=1).collect()}
-    assert rows[1].bin not in (rows[0].bin, rows[2].bin)
-    assert rows[0].bin != rows[2].bin  # 50-token doc closed bin 0
-
-
 def test_binned_bounded_overflow(docs):
     packed = pack_sequences_binned(docs, max_tokens=10, n_shards=4)
-    report = packing_report(packed)
+    report = packed.groupBy("shard", "bin").agg(
+        F.sum("n_tokens").alias("sum_tokens")
+    )
     # overflow bound: sum_tokens < max + (longest doc = 7)
     assert report.filter(F.col("sum_tokens") >= 10 + 7).count() == 0
     # bins are dense from 0 within each shard
@@ -104,4 +61,4 @@ def test_validation(docs):
     with pytest.raises(ValueError):
         pack_sequences_binned(docs, max_tokens=0)
     with pytest.raises(ValueError):
-        pack_sequences_greedy(docs, max_tokens=10, n_shards=0)
+        pack_sequences_binned(docs, max_tokens=10, n_shards=0)

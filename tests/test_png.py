@@ -17,10 +17,10 @@ from rdf_knowledge_extractor_spark.functions.png import (
     PNG_MAGIC,
     PngError,
     decode_png,
-    encode_png,
     is_png,
     png_stats,
 )
+from fixture_encoders import encode_png
 
 
 def _rng(seed=7):

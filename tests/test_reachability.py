@@ -1,0 +1,170 @@
+"""Every package def is reachable from a production entry point.
+
+A static walk with `ast`, no Spark.  The roots are the entry points
+(`__spark_entry__.py`, `bench.py`, `kgbench/`, `examples/`, `tools/` and
+the CLI), the package's module-level code and the kept surfaces in
+`KEPT`.  A def is reached when a reached body names it (a call, an
+attribute, an import); a method also needs its class reached, and a
+dunder method comes with its class.  Matching is by name, so a name two
+defs share reaches both: the walk can miss dead code, never flag live
+code.  A def that only tests reach fails `test_every_package_def_is_reachable`.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PACKAGE = ROOT / "rdf_knowledge_extractor_spark"
+ENTRY_POINTS = (
+    "__spark_entry__.py",
+    "bench.py",
+    "kgbench",
+    "examples",
+    "tools",
+    "rdf_knowledge_extractor_spark/cli.py",
+)
+
+# Surfaces kept although no entry point calls them: the streaming sinks,
+# the N-Triples reader and the template surface are part of the system;
+# cosine_pairs is the reference cosine_pairs_bucketed is tested against;
+# the distributed page generator and with_extracted_text are imported by
+# the worker script tools/scaling_bench.py runs from a string; the
+# store's compaction, vacuum and batch ledger and the pipeline's stage
+# manifests are how an operator maintains and inspects what they wrote.
+KEPT = frozenset(
+    {
+        "streaming/ingest.py:read_pages_stream",
+        "streaming/ingest.py:streaming_triples",
+        "streaming/ingest.py:start_triples_sink",
+        "streaming/ingest.py:start_graph_merge_sink",
+        "streaming/ingest.py:streaming_hourly_counts",
+        "streaming/ingest.py:streaming_curate",
+        "streaming/ingest.py:start_attribution_sink",
+        "streaming/neardup.py:start_neardup_filter_sink",
+        "streaming/neardup.py:compact_state",
+        "streaming/stateful.py:streaming_sessions_stateful",
+        "sources/ntriples.py:read_ntriples",
+        "templates/engine.py:extract_template_fields",
+        "templates/engine.py:TemplateManager.load_dir",
+        "operators/similarity.py:cosine_pairs",
+        "sources/pages.py:pages_dataframe_distributed",
+        "functions/html_text.py:with_extracted_text",
+        "plans/store.py:TripleStore.compact",
+        "plans/store.py:TripleStore.vacuum",
+        "plans/store.py:TripleStore.batch_ids",
+        "plans/pipeline.py:KgPipeline.stage_manifests",
+    }
+)
+
+
+def _names(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _prefixes(node: ast.AST) -> set[str]:
+    """String arguments of `.startswith(...)`: a class that dispatches
+    to its own methods by name prefix (`getattr` over `dir(self)`)."""
+    return {
+        a.value
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "startswith"
+        for a in n.args
+        if isinstance(a, ast.Constant)
+        and isinstance(a.value, str)
+        and a.value.isidentifier()
+    }
+
+
+def _signature_parts(fn) -> list[ast.AST]:
+    a = fn.args
+    return [*fn.decorator_list, *a.defaults, *(d for d in a.kw_defaults if d)]
+
+
+def _package_defs():
+    """([(label, class or None, name, node)], module-level code)."""
+    defs, module_code = [], []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        mod = path.relative_to(PACKAGE).as_posix()
+        for st in ast.parse(path.read_text()).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.append((f"{mod}:{st.name}", None, st.name, st))
+                module_code += _signature_parts(st)
+            elif isinstance(st, ast.ClassDef):
+                defs.append((f"{mod}:{st.name}", None, st.name, st))
+                module_code += [*st.decorator_list, *st.bases, *st.keywords]
+                for b in st.body:
+                    if isinstance(b, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        defs.append((f"{mod}:{st.name}.{b.name}", f"{mod}:{st.name}", b.name, b))
+                        module_code += _signature_parts(b)
+                    else:
+                        module_code.append(b)
+            else:
+                module_code.append(st)
+    return defs, module_code
+
+
+def _unreachable(kept: frozenset[str] = KEPT) -> list[str]:
+    defs, module_code = _package_defs()
+    names: set[str] = set()
+    prefixes: set[str] = set()
+    roots = list(module_code)
+    for entry in ENTRY_POINTS:
+        p = ROOT / entry
+        for f in [p] if p.is_file() else sorted(p.rglob("*.py")):
+            roots.append(ast.parse(f.read_text()))
+    for node in roots:
+        names |= _names(node)
+        prefixes |= _prefixes(node)
+    reached: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for label, cls, name, node in defs:
+            if label in reached:
+                continue
+            if label in kept:
+                hit = True
+            elif cls is None:
+                hit = name in names
+            else:
+                hit = cls in reached and (
+                    name in names
+                    or (name.startswith("__") and name.endswith("__"))
+                    or any(name.startswith(p) for p in prefixes)
+                )
+            if hit:
+                reached.add(label)
+                grew = True
+                if not isinstance(node, ast.ClassDef):
+                    names |= _names(node)
+                    prefixes |= _prefixes(node)
+    return [label for label, *_ in defs if label not in reached]
+
+
+def test_every_package_def_is_reachable():
+    unreached = _unreachable()
+    assert not unreached, (
+        "package defs that no entry point, module-level code or kept "
+        "surface reaches (delete them, or add a production caller):\n  "
+        + "\n  ".join(unreached)
+    )
+
+
+def test_kept_surfaces_exist_and_need_the_list():
+    """Each `KEPT` entry names a def that is reported without the list:
+    a stale entry (deleted def, or one a production caller now reaches)
+    fails here.  This also shows the walk can flag a def."""
+    flagged = set(_unreachable(kept=frozenset()))
+    assert KEPT <= flagged, sorted(KEPT - flagged)

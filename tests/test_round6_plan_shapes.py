@@ -5,8 +5,8 @@ Covers (OPTIMIZATION_r06.md):
 - MinHash sketch UDF evaluated ONCE (the withColumn+posexplode shape
   duplicated it into two stacked ArrowEvalPython nodes — guide §4.4);
 - derive_triples single-scan inline form ≡ the former 6-branch union;
-- fixed-dim codegen cosine ≡ the interpreted higher-order-function
-  fold, bit-for-bit;
+- the known-dim top-k path (per-vector norms computed once) ≡ the
+  generic path;
 - bands UDF output invariant under the cache-friendly chunk size.
 """
 
@@ -92,32 +92,6 @@ def test_derive_triples_single_scan_matches_union_twin(spark):
     key = lambda r: (r.subject, r.predicate, r.object, r.doc_seq, r.triple_seq)  # noqa: E731
     assert sorted(map(key, new.collect())) == sorted(map(key, old.collect()))
     assert new.schema == old.schema
-
-
-def test_cosine_fixed_bit_identical_to_hof(spark):
-    """The unrolled fold must reproduce the interpreted HOF cosine
-    bit-for-bit (same 0.0-seeded left-to-right addition order)."""
-    import random
-
-    from rdf_knowledge_extractor_spark.operators.similarity import (
-        cosine,
-        cosine_fixed,
-    )
-
-    rng = random.Random(7)
-    dim = 16
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(dim)], [rng.uniform(-1, 1) for _ in range(dim)])
-        for i in range(64)
-    ]
-    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
-    got = df.select(
-        "id",
-        cosine(F.col("a"), F.col("b")).alias("hof"),
-        cosine_fixed(F.col("a"), F.col("b"), dim).alias("fixed"),
-    ).collect()
-    for r in got:
-        assert r.hof == r.fixed, f"row {r.id}: {r.hof!r} != {r.fixed!r}"
 
 
 def test_topk_dim_path_equals_generic_path(spark):
@@ -315,5 +289,5 @@ def test_prefix_filter_exact_recall_at_threshold_boundary(spark):
     ents = spark.createDataFrame(
         rows, "uri string, key string, shingles array<string>"
     )
-    pairs, _ = prefix_candidate_pairs(ents, threshold=0.9)
+    pairs = prefix_candidate_pairs(ents, threshold=0.9)
     assert [(r.uri_a, r.uri_b) for r in pairs.collect()] == [("A", "B")]

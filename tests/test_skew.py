@@ -1,15 +1,9 @@
-"""Skew handling: hot-key detection, salted join exactness, and the
-hot-head-entity smoke for the linking stage (SURVEY §5.6)."""
+"""Skew handling: hot-key detection and the hot-head-entity smoke for
+the linking stage (SURVEY §5.6)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from rdf_knowledge_extractor_spark.operators.skew import (
-    detect_hot_keys,
-    salted_aggregate_count,
-    salted_join,
-)
+from rdf_knowledge_extractor_spark.operators.skew import detect_hot_keys
 
 
 def test_detect_hot_keys(spark):
@@ -19,37 +13,11 @@ def test_detect_hot_keys(spark):
     assert [(r.k, r.n) for r in hot.collect()] == [("hot", 5000)]
 
 
-def test_salted_join_matches_plain_join(spark):
-    # Zipf-ish: one hot key with 10k rows, long tail of singletons
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(10_000)] + [(f"k{i}", i) for i in range(500)],
-        "k string, v long",
-    )
-    small = spark.createDataFrame(
-        [("hot", "H"), ("k1", "A"), ("k2", "B"), ("missing", "Z")], "k string, label string"
-    )
-    plain = big.join(small, on="k").groupBy("k", "label").count()
-    salted = salted_join(big, small, on="k", factor=8).groupBy("k", "label").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # left join parity incl. unmatched rows
-    pl = big.join(small, on="k", how="left").count()
-    sl = salted_join(big, small, on="k", factor=8, how="left").count()
-    assert pl == sl == big.count()
-
-
-def test_salted_aggregate_count(spark):
-    df = spark.createDataFrame(
-        [("hot",)] * 7777 + [("cold",)] * 3, "k string"
-    )
-    got = {r.k: r.n for r in salted_aggregate_count(df, "k", factor=8).collect()}
-    assert got == {"hot": 7777, "cold": 3}
-
-
 def test_linking_with_hot_head_entity(spark, example_config):
     """Hot head entity: one company referenced by thousands of triples.
     The linking stage must complete and produce the same mapping as the
-    cold-key case (LSH bucket caps + AQE; salting unneeded but the
-    result must stay exact)."""
+    cold-key case (prefix bucket caps + AQE; the result must stay
+    exact)."""
     from rdf_knowledge_extractor_spark.operators.linking import link_entities
 
     BASE = "http://business.example.org/resource/"

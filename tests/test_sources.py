@@ -77,10 +77,8 @@ def test_process_documents_mixed(spark, tmp_path):
 def test_pdf_extraction_roundtrip(spark, tmp_path):
     """S1: binaryFile scan + built-in PDF text extraction (golden
     fixture generated without any PDF library; ref:src/handlers/mod.rs:14-41)."""
-    from rdf_knowledge_extractor_spark.functions.pdf_text import (
-        extract_pdf_text,
-        make_simple_pdf,
-    )
+    from fixture_encoders import make_simple_pdf
+    from rdf_knowledge_extractor_spark.functions.pdf_text import extract_pdf_text
     from rdf_knowledge_extractor_spark.sources.text_files import read_pdf_files
 
     lines = ["Acme Corp quarterly report.", "Revenue rose 12% (unaudited)."]
@@ -98,10 +96,8 @@ def test_pdf_extraction_roundtrip(spark, tmp_path):
 
 
 def test_pdf_escapes_and_tj_arrays():
-    from rdf_knowledge_extractor_spark.functions.pdf_text import (
-        extract_pdf_text,
-        make_simple_pdf,
-    )
+    from fixture_encoders import make_simple_pdf
+    from rdf_knowledge_extractor_spark.functions.pdf_text import extract_pdf_text
 
     # parens + backslash escapes survive the round trip
     assert extract_pdf_text(make_simple_pdf([r"a(b)c\d"])) == r"a(b)c\d"
@@ -125,7 +121,7 @@ def test_pdf_not_a_pdf_raises():
 def test_process_documents_pdf_and_unmatched_url(spark, tmp_path):
     """pdf + missing-url inputs get real rows (error or text), never
     silently dropped."""
-    from rdf_knowledge_extractor_spark.functions.pdf_text import make_simple_pdf
+    from fixture_encoders import make_simple_pdf
 
     pdf = tmp_path / "doc.pdf"
     pdf.write_bytes(make_simple_pdf(["Text inside a PDF."]))

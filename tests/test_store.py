@@ -4,6 +4,7 @@ ref:src/knowledge_graph/mod.rs:91-114)."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 
 import pytest
@@ -22,6 +23,18 @@ def _triples(spark, rows):
 @pytest.fixture()
 def store(spark, tmp_path):
     return TripleStore(spark, str(tmp_path / "kg"))
+
+
+@contextlib.contextmanager
+def _crash_at_manifest_swap(monkeypatch):
+    """A driver crash between the data write and the manifest swap."""
+
+    def crash(self, manifest, expected_version):
+        raise RuntimeError("simulated crash before manifest swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(TripleStore, "_swap_manifest", crash)
+        yield
 
 
 def test_insert_and_anti_join_semantics(store, spark):
@@ -44,7 +57,7 @@ def test_duplicate_batch_id_is_idempotent_noop(store, spark):
     assert store.batch_ids() == ["b1"]
 
 
-def test_crash_before_commit_then_retry_no_duplicates(store, spark):
+def test_crash_before_commit_then_retry_no_duplicates(store, spark, monkeypatch):
     """Kill-and-rerun: data files written, manifest swap never happened
     — the store must show ZERO effect, and the retry must commit
     exactly once with the correct added-count."""
@@ -52,8 +65,10 @@ def test_crash_before_commit_then_retry_no_duplicates(store, spark):
     assert store.insert_if_absent(a, "b1") == 2
 
     b = _triples(spark, [("s2", "p", "o2"), ("s3", "p", "o3")])
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        store.insert_if_absent(b, "b2", _crash_before_commit=True)
+    with _crash_at_manifest_swap(monkeypatch), pytest.raises(
+        RuntimeError, match="simulated crash"
+    ):
+        store.insert_if_absent(b, "b2")
     # orphan files invisible: nothing changed
     assert store.read().count() == 2
     assert store.batch_ids() == ["b1"]
@@ -107,12 +122,14 @@ def test_manifest_is_the_only_visibility_point(store, spark, tmp_path):
 
 # -- round-4 hardening: flock'd commit, vacuum, footer counts ------------
 
-def test_vacuum_removes_crashed_orphans_keeps_committed(store, spark):
+def test_vacuum_removes_crashed_orphans_keeps_committed(store, spark, monkeypatch):
     a = _triples(spark, [("s1", "p", "o1")])
     store.insert_if_absent(a, "b1")
     b = _triples(spark, [("s2", "p", "o2")])
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        store.insert_if_absent(b, "b2", _crash_before_commit=True)
+    with _crash_at_manifest_swap(monkeypatch), pytest.raises(
+        RuntimeError, match="simulated crash"
+    ):
+        store.insert_if_absent(b, "b2")
     data = store.root / "data"
     assert len(list(data.iterdir())) == 2  # committed + orphan
     deleted = store.vacuum(min_age_sec=0)
@@ -123,10 +140,12 @@ def test_vacuum_removes_crashed_orphans_keeps_committed(store, spark):
     assert store.read().count() == 2
 
 
-def test_vacuum_retention_guard_skips_young_dirs(store, spark):
+def test_vacuum_retention_guard_skips_young_dirs(store, spark, monkeypatch):
     a = _triples(spark, [("s1", "p", "o1")])
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        store.insert_if_absent(a, "b1", _crash_before_commit=True)
+    with _crash_at_manifest_swap(monkeypatch), pytest.raises(
+        RuntimeError, match="simulated crash"
+    ):
+        store.insert_if_absent(a, "b1")
     # default-ish retention: the just-written orphan is younger than the
     # guard, so an operator running vacuum mid-commit deletes nothing
     assert store.vacuum(min_age_sec=3600) == []
@@ -199,7 +218,7 @@ def _spo(df):
     return sorted((r.subject, r.predicate, r.object) for r in df.collect())
 
 
-def test_read_reuses_relation_until_manifest_changes(store, spark):
+def test_read_reuses_relation_until_manifest_changes(store, spark, monkeypatch):
     import shutil
 
     assert store.read() is None
@@ -228,9 +247,10 @@ def test_read_reuses_relation_until_manifest_changes(store, spark):
     assert g4 is not g3 and _spo(g4) == want
 
     # a crashed commit and a vacuum leave the live set alone
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        store.insert_if_absent(_triples(spark, [("s4", "p", "o4")]), "b4",
-                               _crash_before_commit=True)
+    with _crash_at_manifest_swap(monkeypatch), pytest.raises(
+        RuntimeError, match="simulated crash"
+    ):
+        store.insert_if_absent(_triples(spark, [("s4", "p", "o4")]), "b4")
     assert store.read() is g4
     assert len(store.vacuum(min_age_sec=0)) == 4  # b1, b2, b3 and the crashed b4
     assert store.read() is g4 and _spo(g4) == want

@@ -163,7 +163,7 @@ def test_mixed_media_types_dispatch(spark):
         MEDIA_SCHEMA,
         extract_media_features,
     )
-    from rdf_knowledge_extractor_spark.functions.png import encode_png
+    from fixture_encoders import encode_png
 
     rows = [
         (0, bytearray(encode_png(np.full((2, 2, 3), 10, dtype=np.uint8))), "image", {}),

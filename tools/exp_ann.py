@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from rdf_knowledge_extractor_spark.session import get_spark
 from rdf_knowledge_extractor_spark.operators.similarity import (
     cosine_topk_bruteforce,
-    _norm_fixed,
+    _norm,
     _sim_expr,
 )
 from rdf_knowledge_extractor_spark.operators.dispatch import spread
@@ -52,10 +52,10 @@ timed("HOF dim=None", lambda: cosine_topk_bruteforce(
 def scored_noop():
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
-        _norm_fixed(F.col("embedding"), 64).alias("q_norm"))
+        _norm(F.col("embedding")).alias("q_norm"))
     c = spread(emb).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
-        _norm_fixed(F.col("embedding"), 64).alias("c_norm"))
+        _norm(F.col("embedding")).alias("c_norm"))
     s = (c.crossJoin(F.broadcast(q))
          .filter(F.col("query_id") != F.col("neighbor_id"))
          .withColumn("sim", _sim_expr(4, 64))
@@ -69,10 +69,10 @@ timed("scored-only noop (unrolled)", scored_noop)
 def no_spread():
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
-        _norm_fixed(F.col("embedding"), 64).alias("q_norm"))
+        _norm(F.col("embedding")).alias("q_norm"))
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
-        _norm_fixed(F.col("embedding"), 64).alias("c_norm"))
+        _norm(F.col("embedding")).alias("c_norm"))
     s = (c.crossJoin(F.broadcast(q))
          .filter(F.col("query_id") != F.col("neighbor_id"))
          .withColumn("sim", _sim_expr(4, 64)))

@@ -56,8 +56,7 @@ def main():
     bucketed = sh.withColumn("_bands", bands_of(F.col("h"))).select(
         "id", F.posexplode("_bands").alias("band_idx", "band_val"))
     timed(spark, "bands UDF + posexplode", lambda: noop(bucketed))
-    cands, report = _bucket_candidate_pairs(
-        bucketed, ["band_idx", "band_val"], "id", max_bucket_size=200)
+    cands = _bucket_candidate_pairs(bucketed, ["band_idx", "band_val"], "id")
     timed(spark, "bucket pairs (incl re-run bands)", lambda: noop(cands))
     a = sh.select(F.col("id").alias("id_a"), F.col("h").alias("h_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("h").alias("h_b"))
