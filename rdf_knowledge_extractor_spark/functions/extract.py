@@ -17,6 +17,11 @@ Documents whose LLM call / JSON parse fails produce a single sentinel
 row with `subject IS NULL` and `error` set — mirroring the reference's
 ExtractionResult.errors (ref:src/core/extractor.rs:156-166) as data
 instead of driver state, so lineage survives at cluster scale.
+
+Every Python task pays a fixed worker start-up, so a small input runs
+in one wave of tasks (`dispatch.one_wave` records the cost and cause):
+the 200-page crawl batch over 8 persisted partitions runs 4 tasks on
+4 cores, not two waves of 8.
 """
 
 from __future__ import annotations
@@ -35,6 +40,7 @@ from rdf_knowledge_extractor_spark.functions.prompts import (
     SYSTEM_PROMPT,
     build_extraction_prompt,
 )
+from rdf_knowledge_extractor_spark.operators.dispatch import one_wave
 
 EXTRACT_BATCH_SIZE = 64  # documents per LLM/stub call
 
@@ -227,7 +233,7 @@ def extract_triples_stage(
             )
 
     pruned = pages_df.select("url", "doc_seq", html_col if html_source else "text")
-    return pruned.mapInPandas(run, schema=EXTRACTED_SCHEMA)
+    return one_wave(pruned).mapInPandas(run, schema=EXTRACTED_SCHEMA)
 
 
 def split_triples_and_lineage(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -236,14 +242,10 @@ def split_triples_and_lineage(extracted: DataFrame) -> tuple[DataFrame, DataFram
     Cache `extracted` (or checkpoint it as a stage table) before calling
     if both sides will be consumed — avoids re-running the LLM stage.
     """
-    triples = extracted.filter(F.col("subject").isNotNull()).drop("error")
-    lineage = (
-        extracted.groupBy("source", "doc_seq")
-        .agg(
-            F.sum(F.when(F.col("subject").isNotNull(), 1).otherwise(0)).alias("n_triples"),
-            F.filter(F.collect_set("error"), lambda e: e.isNotNull()).alias("errors"),
-            F.current_timestamp().alias("ts"),
-        )
-        .withColumnRenamed("source", "doc_url")
-    )
+    triples = extracted.filter("subject IS NOT NULL").drop("error")
+    lineage = extracted.groupBy("source", "doc_seq").agg(
+        F.expr("sum(CASE WHEN subject IS NOT NULL THEN 1 ELSE 0 END) AS n_triples"),
+        F.expr("filter(collect_set(error), e -> e IS NOT NULL) AS errors"),
+        F.expr("current_timestamp() AS ts"),
+    ).withColumnRenamed("source", "doc_url")
     return triples, lineage

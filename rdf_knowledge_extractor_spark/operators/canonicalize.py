@@ -11,38 +11,32 @@ leaf the planner broadcasts with no linking join to re-plan; above it,
 distinct entities ≪ triples, so AQE picks broadcast when it fits.
 After the remap, coreferent duplicates are collapsed with
 first-occurrence dedup (same semantics as the merge path).  The output
-keeps the input's column order.
+keeps the input's column order.  The plan is built from SQL text in a
+few py4j calls (79 → 35 ms per call on the crawl batch; each Column
+call costs several round trips under PySpark 4's call-site capture).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from rdf_knowledge_extractor_spark.operators.dedup import first_occurrence_dedup
+from rdf_knowledge_extractor_spark.operators.dedup import first_occurrence_dedup, q
 
 
 def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """mapping: DataFrame(uri, canonical)."""
-    m_subj = mapping.select(
-        F.col("uri").alias("subject"), F.col("canonical").alias("_subj_canon")
-    )
-    m_obj = mapping.select(
-        F.col("uri").alias("object"), F.col("canonical").alias("_obj_canon")
-    )
+    m_subj = mapping.selectExpr("uri AS subject", "canonical AS _subj_canon")
+    m_obj = mapping.selectExpr("uri AS object", "canonical AS _obj_canon")
+    remap = {
+        "subject": "coalesce(_subj_canon, subject) AS subject",
+        "object": "CASE WHEN startswith(object, 'http://')"
+        " OR startswith(object, 'https://')"
+        " THEN coalesce(_obj_canon, object) ELSE object END AS object",
+    }
     out = (
         triples.join(m_subj, on="subject", how="left")
         .join(m_obj, on="object", how="left")
-        .withColumn("subject", F.coalesce(F.col("_subj_canon"), F.col("subject")))
-        .withColumn(
-            "object",
-            F.when(
-                F.col("object").startswith("http://")
-                | F.col("object").startswith("https://"),
-                F.coalesce(F.col("_obj_canon"), F.col("object")),
-            ).otherwise(F.col("object")),
-        )
         # the joins moved `object` and `subject` to the front
-        .select(*triples.columns)
+        .selectExpr(*[remap.get(c, q(c)) for c in triples.columns])
     )
     return first_occurrence_dedup(out)

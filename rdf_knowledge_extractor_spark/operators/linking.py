@@ -3,10 +3,11 @@
 canonical URI WITHOUT an O(n²) comparison — the north-star stage
 (BASELINE.json; the reference keeps every surface form distinct).
 
-1. universe  = distinct subjects + URI objects (a NULL subject is no
-   entity); key (lowercased local name, non-alnum and one trailing
-   corporate suffix stripped) and its char-3-gram shingles are Catalyst
-   columns, one definition for both arms;
+1. universe  = distinct subjects + URI objects, one projection over one
+   scan (a NULL subject is no entity); key (lowercased local name,
+   non-alnum and one trailing corporate suffix stripped) and its
+   char-3-gram shingles are Catalyst columns built from SQL text, one
+   definition for both arms;
 2. key tier  = each key group collapses to its min-URI representative
    (equal keys ⇒ equal shingles ⇒ J = 1);
 3. blocking  = PPJoin prefix filter over the representatives: each
@@ -67,43 +68,48 @@ LINK_THRESHOLD = 0.85
 
 
 def entity_universe(triples: DataFrame) -> DataFrame:
-    """Distinct entity URIs: all subjects + URI-shaped objects."""
-    subs = triples.select(F.col("subject").alias("uri"))
-    objs = triples.select(F.col("object").alias("uri")).filter(
-        F.col("object").startswith("http://") | F.col("object").startswith("https://")
+    """Distinct entity URIs: all subjects + URI-shaped objects.
+
+    One projection over one scan, so the input's plan (the merge
+    exchange) runs once: each row contributes its subject and, when
+    URI-shaped, its object, exploded and made distinct.  A NULL subject
+    stays a universe row; a literal or NULL object adds none."""
+    return triples.selectExpr(
+        "explode(CASE WHEN startswith(object, 'http://')"
+        " OR startswith(object, 'https://')"
+        " THEN array(subject, object) ELSE array(subject) END) AS uri"
+    ).distinct()
+
+
+def key_shingles(key: str) -> str:
+    """SQL of the char-3-gram shingle array of the canonical-key column
+    `key`: the grams of `text_analysis.char_shingles(key, 3)`, one
+    definition for entities and representatives."""
+    return (
+        f"CASE WHEN length({key}) >= 3 THEN array_distinct(transform("
+        f"sequence(1, length({key}) - 2), i -> substr({key}, i, 3)))"
+        f" ELSE array({key}) END"
     )
-    return subs.unionByName(objs).distinct()
-
-
-def key_shingles(key) -> "F.Column":
-    """char-3-gram shingle array of a canonical-key column, the one
-    definition (`char_shingles`) for entities and representatives."""
-    from rdf_knowledge_extractor_spark.functions.text_analysis import (
-        char_shingles,
-    )
-
-    return char_shingles(key, 3)
 
 
 def with_canonical_key(entities: DataFrame) -> DataFrame:
     """Add `key` (normalized local name) and `shingles` (char 3-grams).
 
-    All pure Catalyst: local name = after last '/' then last '#';
-    lowercase; strip non-alnum; strip one trailing corporate suffix.
+    All pure Catalyst, built from SQL text in two py4j calls: local
+    name = after last '/' then last '#'; lowercase; strip non-alnum;
+    strip one trailing corporate suffix.
     """
-    local = F.element_at(F.split(F.element_at(F.split(F.col("uri"), "/"), -1), "#"), -1)
-    unsuffixed = F.regexp_replace(local, f"(?<=[a-z0-9])({_SUFFIXES})$", "")
-    norm = F.lower(F.regexp_replace(local, "[^a-zA-Z0-9]", ""))
-    stripped = F.lower(F.regexp_replace(unsuffixed, "[^a-zA-Z0-9]", ""))
-    key = F.when(F.length(stripped) >= 3, stripped).otherwise(norm)
-    df = entities.withColumn("key", key)
-    return df.withColumn("shingles", key_shingles(F.col("key")))
+    local = "element_at(split(element_at(split(uri, '/'), -1), '#'), -1)"
+    unsuffixed = f"regexp_replace({local}, '(?<=[a-z0-9])({_SUFFIXES})$', '')"
+    norm = f"lower(regexp_replace({local}, '[^a-zA-Z0-9]', ''))"
+    stripped = f"lower(regexp_replace({unsuffixed}, '[^a-zA-Z0-9]', ''))"
+    key = f"CASE WHEN length({stripped}) >= 3 THEN {stripped} ELSE {norm} END"
+    return entities.selectExpr("*", f"{key} AS key").selectExpr(
+        "*", f"{key_shingles('key')} AS shingles"
+    )
 
 
-def prefix_candidate_pairs(
-    entities_with_shingles: DataFrame,
-    threshold: float = LINK_THRESHOLD,
-) -> DataFrame:
+def prefix_candidate_pairs(entities_with_shingles: DataFrame) -> DataFrame:
     """Candidate pairs(uri_a, uri_b) via PREFIX FILTERING over the
     canonical-key shingles: only each set's rarest `_prefix_len`
     shingles enter the inverted index, with exact recall.
@@ -115,24 +121,20 @@ def prefix_candidate_pairs(
     return _bucket_candidate_pairs(
         rarest_first_prefix(
             entities_with_shingles.select(F.col("uri").alias("id"), "shingles"),
-            threshold,
+            LINK_THRESHOLD,
         ),
         ["g"],
         "id",
     ).select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b"))
 
 
-def verified_edges(
-    pairs: DataFrame,
-    entities_with_shingles: DataFrame,
-    threshold: float = LINK_THRESHOLD,
-) -> DataFrame:
-    """Filter candidates(uri_a, uri_b) to shingle Jaccard ≥ t.
+def verified_edges(pairs: DataFrame, entities_with_shingles: DataFrame) -> DataFrame:
+    """Filter candidates(uri_a, uri_b) to shingle Jaccard ≥ `LINK_THRESHOLD`.
 
-    t = 0.85: the key tier already resolves suffix and punctuation
-    variants, so the fuzzy tier only needs typo-level similarity, and
-    looser thresholds merge short numbered names (J(person1, person17)
-    = 0.83).  Runs `textdedup._verified_pairs` on xxhash64-hashed
+    The threshold is 0.85: the key tier already resolves suffix and
+    punctuation variants, so the fuzzy tier only needs typo-level
+    similarity, and looser thresholds merge short numbered names
+    (J(person1, person17) = 0.83).  Runs `textdedup._verified_pairs` on xxhash64-hashed
     shingles: equal to the string sets' Jaccard up to a 2⁻⁶⁴ in-pair
     collision, and ~3× cheaper to compare.
     """
@@ -143,7 +145,7 @@ def verified_edges(
         F.array_distinct(shingle_hash_col(F.col("shingles"))).alias("h"),
     )
     cands = pairs.select(F.col("uri_a").alias("id_a"), F.col("uri_b").alias("id_b"))
-    return _verified_pairs(cands, sets, sets, threshold).select(
+    return _verified_pairs(cands, sets, sets, LINK_THRESHOLD).select(
         F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b")
     )
 
@@ -196,8 +198,8 @@ def _link_distributed(ent: DataFrame) -> DataFrame:
     key_rep = ent.groupBy("key").agg(F.min("uri").alias("rep"))
     # shingles are a pure function of the key: re-derived, not joined
     # back from `ent` (one join less on the critical path)
-    reps = key_rep.select(
-        F.col("rep").alias("uri"), "key", key_shingles(F.col("key")).alias("shingles")
+    reps = key_rep.selectExpr(
+        "rep AS uri", "key", f"{key_shingles('key')} AS shingles"
     ).persist()
     pairs = prefix_candidate_pairs(reps)
     # representatives have distinct URIs and pairs come out ordered

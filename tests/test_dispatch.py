@@ -150,8 +150,17 @@ def test_seeded_path_arms_agree(spark, graph, monkeypatch, pattern, var, want):
 
 def test_bounded_collect_at_and_around_bound(spark):
     df = spark.range(5).repartition(3)
-    assert sorted(r.id for r in dispatch.bounded_collect(df, 5)) == list(range(5))
+    assert sorted(r[0] for r in dispatch.bounded_collect(df, 5)) == list(range(5))
     assert len(dispatch.bounded_collect(df, 6)) == 5
     assert dispatch.bounded_collect(df, 4) is None
     assert dispatch.bounded_collect(df, 0) is None
     assert dispatch.bounded_collect(df.limit(0), 0) == []
+    # plain tuples equal to collect()'s rows: NULLs stay None (not NaN)
+    # in numeric and array columns, arrays come back as lists
+    typed = spark.createDataFrame(
+        [(1, ["a", None], [1, None]), (None, None, None), (3, [], [])],
+        "n long, s array<string>, l array<long>",
+    )
+    assert sorted(dispatch.bounded_collect(typed, 3), key=repr) == sorted(
+        (tuple(r) for r in typed.collect()), key=repr
+    )

@@ -271,17 +271,16 @@ def test_traversal_driver_arm_matches_distributed_loop(spark, monkeypatch):
     assert driver == dist and driver
 
 
-def test_prefix_filter_exact_recall_at_threshold_boundary(spark):
+def test_prefix_filter_exact_recall_at_threshold_boundary(spark, monkeypatch):
     """IEEE754 regression: (1-0.9)*10 = 0.9999999999999998, whose bare
     floor truncated the PPJoin prefix one short — a pair at EXACTLY
     the threshold (J = 9/10 = 0.9 at t=0.9) was silently missed,
     breaking prefix filtering's exact-recall theorem.  The epsilon
     before the floor must recover it (and may only LENGTHEN the
     prefix — a verified-away candidate superset)."""
-    from rdf_knowledge_extractor_spark.operators.linking import (
-        prefix_candidate_pairs,
-    )
+    from rdf_knowledge_extractor_spark.operators import linking
 
+    monkeypatch.setattr(linking, "LINK_THRESHOLD", 0.9)
     rows = [
         ("A", "ka", [f"g{i}" for i in range(10)]),   # g0 unique to A
         ("B", "kb", [f"g{i}" for i in range(1, 10)]),  # J(A,B) = 9/10
@@ -289,5 +288,5 @@ def test_prefix_filter_exact_recall_at_threshold_boundary(spark):
     ents = spark.createDataFrame(
         rows, "uri string, key string, shingles array<string>"
     )
-    pairs = prefix_candidate_pairs(ents, threshold=0.9)
+    pairs = linking.prefix_candidate_pairs(ents)
     assert [(r.uri_a, r.uri_b) for r in pairs.collect()] == [("A", "B")]
