@@ -75,12 +75,13 @@ def _serialize_text(s: str) -> str:
     )
 
 
-def extract_metadata(html: str, source: str = "") -> dict[str, str]:
+def extract_metadata(html: str) -> dict[str, str]:
     """HTML metadata (ref:src/handlers/mod.rs:143-177): title via
     `inner_html()` (re-serialized, so entities are RE-escaped — 'A &amp;
-    B' stays 'A &amp; B') + <meta name=description|keywords|author>."""
+    B' stays 'A &amp; B') + <meta name=description|keywords|author>.
+    `source` is empty: the page's URL lives in its own column."""
     root = parse_document(html)
-    meta: dict[str, str] = {"source": source, "type": "url"}
+    meta: dict[str, str] = {"source": "", "type": "url"}
     titles = root.find_all("title")
     if titles:
         # title is RCDATA: children are text nodes; inner_html re-escapes

@@ -121,9 +121,7 @@ def wav_stats(data: bytes) -> tuple[int, int, float, list[float]]:
     return rate, channels, float(duration), [float(v) for v in rms]
 
 
-def encode_wav(
-    samples: np.ndarray, sample_rate: int = 16000, bits: int = 16
-) -> bytes:
+def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     """(frames,) or (frames, channels) floats in [-1, 1] → 16-bit PCM
     WAV bytes.  Fixture generator for tests; also a valid encoder."""
     arr = np.asarray(samples, dtype=np.float64)
@@ -131,8 +129,6 @@ def encode_wav(
         arr = arr[:, None]
     if arr.ndim != 2:
         raise WavError(f"expected (frames,) or (frames, channels), got {arr.ndim} dims")
-    if bits != 16:
-        raise WavError("encoder emits 16-bit PCM only")
     frames, channels = arr.shape
     pcm = (
         np.clip(arr, -1.0, 1.0) * 32767.0

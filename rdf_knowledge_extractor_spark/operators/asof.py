@@ -57,9 +57,10 @@ def asof_join(
     Right-side non-key, non-ts columns must not collide with left
     columns (rename on the right first) — collisions raise.
 
-    Hot keys: every call probes the union's keys with
-    `detect_hot_keys` (operators/skew.py) on a deterministic
-    `PROBE_FRACTION` Bernoulli sample.  The thresholds are scaled to the
+    Hot keys: every call probes the union's keys with `has_hot_key`
+    (operators/skew.py, one aggregate: the sample's row total and its
+    largest per-key count) on a deterministic `PROBE_FRACTION`
+    Bernoulli sample.  The thresholds are scaled to the
     sample with a 0.7 slack, so borderline hot keys err toward slicing
     (a false positive is still an exact plan; a false negative is a
     straggler): a key is hot when its sampled count reaches
@@ -138,18 +139,17 @@ def _merged_frame(
 def _probe_hot_keys(merged: DataFrame, keys: list[str]) -> int | None:
     """Slicing decision: S (int) when a hot key would serialize the
     window, else None (single-window plan).  Composite keys probe as one
-    struct column through detect_hot_keys (operators/skew.py), on a
+    struct column through has_hot_key (operators/skew.py), on a
     sample with the thresholds scaled as `asof_join` describes."""
-    from rdf_knowledge_extractor_spark.operators.skew import detect_hot_keys
+    from rdf_knowledge_extractor_spark.operators.skew import has_hot_key
 
     probe = merged.select(F.struct(*[F.col(k) for k in keys]).alias("_k"))
-    hot = detect_hot_keys(
+    if not has_hot_key(
         probe.sample(fraction=PROBE_FRACTION, seed=17),
         "_k",
         threshold_ratio=HOT_KEY_RATIO * 0.7,
         min_count=max(1, int(HOT_KEY_MIN_COUNT * PROBE_FRACTION * 0.7)),
-    )
-    if hot.isEmpty():
+    ):
         return None
     parallelism = merged.sparkSession.sparkContext.defaultParallelism
     return max(2, min(32, parallelism))

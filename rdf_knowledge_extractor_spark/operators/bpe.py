@@ -95,11 +95,10 @@ def train_bpe(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    min_pair_count: int = 2,
 ) -> list[tuple[str, str, int]]:
     """Train `n_merges` BPE merges on the corpus; returns the ordered
     merge table [(left, right, pair_count), …] — the model artifact.
-    Stops early when no pair reaches `min_pair_count`."""
+    Stops early when no pair occurs at least twice."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     words = _word_counts(docs, text_col).localCheckpoint(eager=True)
@@ -125,7 +124,7 @@ def train_bpe(
             .limit(1)
             .collect()
         )
-        if not top or top[0]["n"] < min_pair_count:
+        if not top or top[0]["n"] < 2:
             break
         left, right, n = top[0]["l"], top[0]["r"], int(top[0]["n"])
         merges.append((left, right, n))
@@ -139,15 +138,12 @@ def bpe_merges_df(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    min_pair_count: int = 2,
 ) -> DataFrame:
     """(rank, left, right, merged, pair_count) — the trained merge
     table as a DataFrame (driver-contract surface for the trainer;
     iterative training is not SQL-expressible, so correctness is
     carried by the independent-Python differential test)."""
-    merges = train_bpe(
-        docs, n_merges, text_col=text_col, min_pair_count=min_pair_count
-    )
+    merges = train_bpe(docs, n_merges, text_col=text_col)
     return docs.sparkSession.createDataFrame(
         [
             (i + 1, l, r, l + r, n)

@@ -101,7 +101,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 30,
 ) -> DataFrame:
     """DataFrame(node, component) — component = min node id (lexicographic
     for strings) reachable from `node`.  Isolated nodes appear iff they
@@ -120,7 +119,7 @@ def connected_components(
         return _components_driver(e, "a", "b", rows)
     e = e.persist()
     try:
-        return connected_components_star(e, "a", "b", max_iter)[0]
+        return connected_components_star(e, "a", "b")[0]
     finally:
         e.unpersist()
 
@@ -129,9 +128,9 @@ def connected_components_star(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 30,
 ) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star; returns (labels, rounds).
+    """Alternating large-star/small-star; returns (labels, rounds),
+    at most 30 rounds.
 
     Per round (both phases are one shuffle each):
       large-star: every node u connects its LARGER neighbors to
@@ -166,7 +165,7 @@ def connected_components_star(
 
     rounds = 0
     fp = _fp(e)
-    for _ in range(max_iter):
+    for _ in range(30):
         rounds += 1
         # -- large-star: symmetrize, m(u) = min(neighbors ∪ self),
         #    emit (larger neighbor, m)

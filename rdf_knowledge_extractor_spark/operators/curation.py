@@ -34,6 +34,9 @@ from rdf_knowledge_extractor_spark.functions.text_analysis import (
     quality_metrics,
 )
 
+# the quality-score quantiles `quality_percentiles` reports
+QUALITY_QUANTILES = (0.5, 0.9, 0.99)
+
 
 def _hash_hex8(col: Column) -> Column:
     """First 8 lowercase hex chars of md5 — an engine-portable uniform
@@ -100,15 +103,15 @@ def curate_corpus(
     docs: DataFrame,
     lang: str = "en",
     min_words: int = 10,
-    max_digit_ratio: float = 0.3,
     min_quality: float = 0.3,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Composite training-data gate: exact dedup (keep-first) →
-    predicted-language filter → length / digit-ratio / quality-score
-    thresholds.  Returns (id, lang_pred, n_words, quality_score) —
-    the manifest a downstream tokenizer job would consume.
+    predicted-language filter → length / digit-ratio (≤ 0.3) /
+    quality-score thresholds.  Returns (id, lang_pred, n_words,
+    quality_score) — the manifest a downstream tokenizer job would
+    consume.
 
     Plan shape (audited — two prior versions were scale traps):
     - metrics + gate run SCAN-SIDE, before the dedup shuffle: they are
@@ -138,7 +141,7 @@ def curate_corpus(
     gated = packed.filter(
         (F.col("_m.lang_pred") == lang)
         & (F.col("_m.n_words") >= min_words)
-        & (F.col("_m.digit_ratio") <= max_digit_ratio)
+        & (F.col("_m.digit_ratio") <= 0.3)
         & (F.col("_m.quality_score") >= min_quality)
     )
     return dedup_keep_first(gated, text_col=text_col, id_col=id_col).select(
@@ -178,10 +181,9 @@ def rollup_report(
     count_alias: str = "n_docs",
     sum_col: str = "n_chars",
     sum_alias: str = "sum_chars",
-    total_label: str = "ALL",
 ) -> DataFrame:
-    """ROLLUP report over `group_cols` with subtotal rows labelled via
-    `grouping()` — a data-NULL group value stays NULL in detail rows
+    """ROLLUP report over `group_cols` with subtotal rows labelled 'ALL'
+    via `grouping()` — a data-NULL group value stays NULL in detail rows
     and is NEVER conflated with the rollup-total line (a
     `coalesce(col, 'ALL')` would silently merge dirty-data NULLs into
     the subtotal at scale).
@@ -196,7 +198,7 @@ def rollup_report(
         *gflags,
     )
     labelled = [
-        F.when(F.col(f"_g_{c}") == 1, F.lit(total_label))
+        F.when(F.col(f"_g_{c}") == 1, F.lit("ALL"))
         .otherwise(F.col(c))
         .alias(c)
         for c in group_cols
@@ -204,28 +206,18 @@ def rollup_report(
     return agged.select(*labelled, count_alias, sum_alias)
 
 
-def quality_percentiles(
-    docs: DataFrame,
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    exact: bool = False,
-    accuracy: int = 10000,
-    round_digits: int = 4,
-) -> DataFrame:
+def quality_percentiles(docs: DataFrame, exact: bool = False) -> DataFrame:
     """Per-predicted-language quality-score distribution
-    (n_docs + one column per requested quantile, named p50/p90/…).
+    (n_docs + one column per `QUALITY_QUANTILES` entry, named
+    p50/p90/p99), rounded to 4 dp.
 
     `exact=False` (the 100-TB default) aggregates with
     `approx_percentile` — constant memory per group (Greenwald-Khanna
-    sketch, error ≤ 1/accuracy of rank) — so a billion-doc language
-    group never buffers its values.  `exact=True` uses `percentile`
+    sketch, accuracy 10000: error ≤ 1e-4 of rank) — so a billion-doc
+    language group never buffers its values.  `exact=True` uses `percentile`
     (linear interpolation, buffers each group) and hash-matches the
     DuckDB `quantile_cont` oracle; it is the small-scale/oracle arm.
     """
-    from rdf_knowledge_extractor_spark.functions.text_analysis import (
-        detect_language,
-        quality_metrics,
-    )
-
     scored = quality_metrics(docs).withColumn(
         "lang_pred", detect_language(F.col("text"))
     )
@@ -235,11 +227,11 @@ def quality_percentiles(
         if exact:
             col = F.percentile("quality_score", F.lit(q))
         else:
-            col = F.approx_percentile("quality_score", F.lit(q), F.lit(accuracy))
-        return F.round(col, round_digits).alias(name)
+            col = F.approx_percentile("quality_score", F.lit(q), F.lit(10000))
+        return F.round(col, 4).alias(name)
 
     return scored.groupBy("lang_pred").agg(
-        F.count(F.lit(1)).alias("n_docs"), *[pct(q) for q in quantiles]
+        F.count(F.lit(1)).alias("n_docs"), *[pct(q) for q in QUALITY_QUANTILES]
     )
 
 

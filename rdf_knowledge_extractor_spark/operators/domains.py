@@ -1,5 +1,5 @@
 """Domain-level web-corpus analytics: registrable-domain extraction,
-per-domain rollups, and list-based admission filtering.
+per-domain rollups, and blocklist admission filtering.
 
 At 100 TB of web text the natural curation unit above the document is
 the DOMAIN: quota capping, blocklists, and quality triage all key on
@@ -9,8 +9,8 @@ beyond fetching a page — /root/reference/src/handlers/mod.rs).
 
 Scale shape: extraction is pure Catalyst string work evaluated at
 scan speed (no UDF, no shuffle); the per-domain report is ONE
-map-side-combined hash aggregate; list filters broadcast the list
-side (block/allow lists are small by construction).
+map-side-combined hash aggregate; the blocklist filter broadcasts the
+list side (a blocklist is small by construction).
 
 The suffix handling is a deliberately small embedded subset of the
 public-suffix list — the common two-label country suffixes — kept
@@ -92,31 +92,19 @@ def domain_report(
 
 
 def filter_domains(
-    docs: DataFrame,
-    blocklist: list[str] | None = None,
-    allowlist: list[str] | None = None,
-    url_col: str = "url",
+    docs: DataFrame, blocklist: list[str], url_col: str = "url"
 ) -> DataFrame:
-    """Admission filter on the registrable domain.  With an allowlist
-    only listed domains survive; a blocklist removes listed domains;
-    both may be given (allow first, then block).  The lists ride as
-    broadcast hash joins (left_semi / left_anti) so the corpus is
-    never re-shuffled."""
-    if blocklist is None and allowlist is None:
-        raise ValueError("need a blocklist and/or an allowlist")
-    spark = docs.sparkSession
-    out = docs.withColumn("_dom", registrable_domain(F.col(url_col)))
-    if allowlist is not None:
-        allow = spark.createDataFrame(
-            [(d.lower(),) for d in allowlist], ["_dom"]
-        )
-        out = out.join(F.broadcast(allow), on="_dom", how="left_semi")
-    if blocklist is not None:
-        block = spark.createDataFrame(
-            [(d.lower(),) for d in blocklist], ["_dom"]
-        )
-        out = out.join(F.broadcast(block), on="_dom", how="left_anti")
-    return out.drop("_dom")
+    """Admission filter on the registrable domain: a blocklist removes
+    listed domains.  The list rides as a broadcast left_anti hash join
+    so the corpus is never re-shuffled."""
+    block = docs.sparkSession.createDataFrame(
+        [(d.lower(),) for d in blocklist], ["_dom"]
+    )
+    return (
+        docs.withColumn("_dom", registrable_domain(F.col(url_col)))
+        .join(F.broadcast(block), on="_dom", how="left_anti")
+        .drop("_dom")
+    )
 
 
 # query parameters dropped during canonicalization (tracking noise)

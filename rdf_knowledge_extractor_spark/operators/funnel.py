@@ -36,6 +36,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# seconds allowed between matched funnel steps; None puts no bound
+MAX_GAP_SECONDS: float | None = None
+
 
 def funnel_depths(
     events: DataFrame,
@@ -43,10 +46,9 @@ def funnel_depths(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    max_gap_seconds: float | None = None,
 ) -> DataFrame:
     """(user_col, depth) — per user, the furthest funnel step reached
-    (0 = none).  With `max_gap_seconds`, each step must also occur
+    (0 = none).  With `MAX_GAP_SECONDS`, each step must also occur
     within that many seconds of the previous matched step — under the
     FIRST-TOUCH interpretation (the chain anchors on each step's
     earliest qualifying event; a user who'd only convert by skipping
@@ -77,10 +79,10 @@ def funnel_depths(
 
     def _step(acc, e):
         gap_ok = F.lit(True)
-        if max_gap_seconds is not None:
+        if MAX_GAP_SECONDS is not None:
             gap_ok = e["ts"].cast("double") - acc["last"].cast(
                 "double"
-            ) <= F.lit(float(max_gap_seconds))
+            ) <= F.lit(float(MAX_GAP_SECONDS))
         advance = (
             (acc["depth"] < k)
             & (e["t"] == F.element_at(step_arr, acc["depth"] + 1))
@@ -198,14 +200,12 @@ def funnel_report(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    max_gap_seconds: float | None = None,
 ) -> DataFrame:
     """(step, event_type, n_users, conv_rate) — one row per funnel
     step: users reaching at least that step, and the conversion rate
     relative to step 1 (4 dp; step 1 rate is 1.0 when anyone enters)."""
     depths = funnel_depths(
-        events, steps, user_col=user_col, ts_col=ts_col,
-        type_col=type_col, max_gap_seconds=max_gap_seconds,
+        events, steps, user_col=user_col, ts_col=ts_col, type_col=type_col
     )
     # collapse to a <=(k+1)-row histogram so every downstream step —
     # per-step cumulative counts, the conversion base, the rates —

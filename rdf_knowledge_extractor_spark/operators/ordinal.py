@@ -28,7 +28,6 @@ def zip_with_ordinal(
     df: DataFrame,
     order_cols: list[str],
     out_col: str = "_i",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Return ``df`` + dense 0-based ``out_col`` ranking by ``order_cols``.
 
@@ -37,7 +36,7 @@ def zip_with_ordinal(
     (same as the window form).
     """
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     parted = (
         df.repartitionByRange(n, *order_cols)
         .withColumn("_zo_pid", F.spark_partition_id())

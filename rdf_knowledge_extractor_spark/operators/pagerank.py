@@ -30,11 +30,10 @@ from pyspark.sql import DataFrame, functions as F
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
-    damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
 ) -> DataFrame:
-    """(node, rank) — damped PageRank after `iterations` rounds over
+    """(node, rank) — PageRank (damping 0.85) after `iterations` rounds over
     the distinct directed edge set.  Ranks sum to 1 and are rounded
     to 6 dp.  Nodes are every endpoint; dangling nodes (no out-edges)
     redistribute their mass uniformly."""
@@ -58,7 +57,7 @@ def pagerank(
     )
     has_out = outdeg.select(F.col("_s").alias("node"))
 
-    base = F.lit((1.0 - damping) / n)
+    base = F.lit((1.0 - 0.85) / n)
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(iterations):
         contrib = (
@@ -77,7 +76,7 @@ def pagerank(
                 "node",
                 (
                     base
-                    + F.lit(damping)
+                    + F.lit(0.85)
                     * (
                         F.coalesce(F.col("_con"), F.lit(0.0))
                         + F.col("_dm") / F.lit(float(n))

@@ -11,11 +11,8 @@ into a single Expand + two-level aggregate (rows are replicated once
 per distinct-column, the textbook exact-multi-distinct plan), so the
 table is scanned once regardless of column count.  The wide 1-row
 result is then unpivoted driver-side into (column, …) rows via
-`stack` — k rows, no data movement.  For very wide tables or when
-exactness is not needed, `approx=True` swaps in HyperLogLog
-`approx_count_distinct` which needs no Expand at all (single
-hash-agg pass; not oracle-comparable, so the driver query uses the
-exact arm).
+`stack` — k rows, no data movement.  Distincts are exact, so the
+profile is oracle-comparable.
 """
 
 from __future__ import annotations
@@ -70,25 +67,22 @@ def robust_outliers(
 def table_profile(
     df: DataFrame,
     columns: list[str] | None = None,
-    approx: bool = False,
 ) -> DataFrame:
     """(col_name, n_rows, n_nulls, n_distinct) — one row per profiled
     column.  `n_distinct` ignores NULLs (SQL COUNT DISTINCT
-    semantics, identical in DuckDB).  With `approx=True` distincts
-    are HyperLogLog estimates (scan stays a single pass, no Expand)."""
+    semantics, identical in DuckDB)."""
     cols = columns if columns is not None else df.columns
     if not cols:
         raise ValueError("no columns to profile")
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"unknown columns: {missing}")
-    ndv = F.approx_count_distinct if approx else F.count_distinct
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in cols:
         aggs.append(
             (F.count(F.lit(1)) - F.count(F.col(c))).alias(f"_nulls_{c}")
         )
-        aggs.append(ndv(F.col(c)).alias(f"_ndv_{c}"))
+        aggs.append(F.count_distinct(F.col(c)).alias(f"_ndv_{c}"))
     wide = df.agg(*aggs)
     stack_args = ", ".join(
         f"'{c}', _nulls_{c}, _ndv_{c}" for c in cols

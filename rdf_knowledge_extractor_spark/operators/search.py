@@ -6,7 +6,8 @@ probes, retrieval-augmented filtering).  Beyond-reference family: the
 reference engine scopes itself to small KGs and has no text index
 (/root/reference/README.md).
 
-Scale shape (Okapi BM25, k1/b standard):
+Scale shape (Okapi BM25 with the standard k1 = 1.2, b = 0.75, shared
+by the operator and its SQL twin):
 
 - documents are tokenized ONCE scan-side (`split` + `filter`, pure
   Catalyst); the doc length rides along the explode so no second
@@ -35,6 +36,8 @@ import re
 from pyspark.sql import DataFrame, Window, functions as F
 
 TOKEN_SPLIT = "[^a-z0-9]+"
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def _tokens(col):
@@ -71,11 +74,8 @@ def bm25_topk(
     docs: DataFrame,
     queries: dict[str, str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_df_ratio: float | None = None,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score) — top-k BM25 hits per query.
 
@@ -83,15 +83,7 @@ def bm25_topk(
     (standard bag-of-words BM25 with binary query term frequency).
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)) — the Robertson/Lucene
     non-negative form.  Docs containing no query term never surface
-    (score would be 0).
-
-    `max_df_ratio` is the 100-TB skew guard: a query term appearing
-    in more than that fraction of documents ("the", boilerplate
-    tokens) is elided from scoring — such terms contribute near-zero
-    idf but would drag a corpus-sized postings sliver through the
-    score aggregate and concentrate it on one query's tasks.  The
-    filter keys off the already-tiny per-term dfreq frame, so the cut
-    happens before the heavy rows move."""
+    (score would be 0)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if not queries:
@@ -128,14 +120,6 @@ def bm25_topk(
     dfreq = hits.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("_df")
     )
-    if max_df_ratio is not None:
-        if not 0.0 < max_df_ratio <= 1.0:
-            raise ValueError(
-                f"max_df_ratio must be in (0, 1], got {max_df_ratio}"
-            )
-        dfreq = dfreq.crossJoin(F.broadcast(stats.select("_n"))).filter(
-            F.col("_df") <= F.lit(max_df_ratio) * F.col("_n")
-        ).drop("_n")
     scored = (
         hits.join(F.broadcast(qterms), on="term")
         .join(F.broadcast(dfreq), on="term")
@@ -150,10 +134,11 @@ def bm25_topk(
         .withColumn(
             "_w",
             F.col("_idf")
-            * (F.col("tf") * (k1 + 1.0))
+            * (F.col("tf") * (BM25_K1 + 1.0))
             / (
                 F.col("tf")
-                + k1 * (1.0 - b + b * F.col("doc_len") / F.col("_avgdl"))
+                + BM25_K1
+                * (1.0 - BM25_B + BM25_B * F.col("doc_len") / F.col("_avgdl"))
             ),
         )
         .groupBy("query_id", "doc_id")
@@ -174,13 +159,11 @@ def bm25_topk(
     )
 
 
-def rrf_fuse(
-    rankings: list[DataFrame], k: int = 10, c: float = 60.0
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
     """(query_id, rank, doc_id, rrf) — reciprocal-rank fusion
     (Cormack/Clarke/Buettcher 2009) of N per-query rankings, each a
     DataFrame with (query_id, doc_id, rank).  rrf = Σ 1/(c + rank)
-    over the systems that retrieved the doc.
+    over the systems that retrieved the doc, with the paper's c = 60.
 
     Scale shape: the inputs are already top-k slivers (k·|queries|
     rows each), so the union + hash aggregate + WindowGroupLimit all
@@ -195,7 +178,7 @@ def rrf_fuse(
     for r in rankings[1:]:
         u = u.unionByName(r.select("query_id", "doc_id", "rank"))
     fused = u.groupBy("query_id", "doc_id").agg(
-        F.sum(1.0 / (F.lit(c) + F.col("rank"))).alias("_rrf")
+        F.sum(1.0 / (F.lit(60.0) + F.col("rank"))).alias("_rrf")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("_rrf"), 6).desc(), F.col("doc_id")
@@ -212,8 +195,6 @@ def rrf_fuse(
 def bm25_oracle_sql(
     queries: dict[str, str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     table: str = "documents",
 ) -> str:
     """DuckDB twin of `bm25_topk` over the pre-registered `documents`
@@ -256,8 +237,8 @@ def bm25_oracle_sql(
           SELECT h.query_id, h.doc_id,
                  sum(
                    ln(1.0 + (s.n - f.df + 0.5) / (f.df + 0.5))
-                   * (h.tf * ({k1} + 1.0))
-                   / (h.tf + {k1} * (1.0 - {b} + {b} * h.doc_len / s.avgdl))
+                   * (h.tf * ({BM25_K1} + 1.0))
+                   / (h.tf + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * h.doc_len / s.avgdl))
                  ) AS score
           FROM hits h JOIN dfreq f USING (term) CROSS JOIN stats s
           GROUP BY h.query_id, h.doc_id

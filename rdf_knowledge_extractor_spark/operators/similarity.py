@@ -46,11 +46,11 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _sim_expr(round_digits: int, dim: int | None,
+def _sim_expr(dim: int | None,
               q_vec: str = "q_vec", c_vec: str = "c_vec") -> Column:
-    """Rounded cosine between two joined vector columns.  With a known
-    `dim`, uses the PRE-COMPUTED norm columns (`q_norm`/`c_norm`) the
-    fixed-dim paths attach before the join — each vector's norm is
+    """Cosine between two joined vector columns, rounded to 4 dp.  With
+    a known `dim`, uses the PRE-COMPUTED norm columns (`q_norm`/`c_norm`)
+    the fixed-dim paths attach before the join — each vector's norm is
     computed once instead of once per compared pair; values are
     bit-identical (same fold order, same doubles divided).
 
@@ -64,11 +64,11 @@ def _sim_expr(round_digits: int, dim: int | None,
     (sf1.0-scale A/B on this box: unrolled 2.11 s vs HOF-dot+prenorm
     0.58 s end-to-end, results exactly equal)."""
     if dim is None:
-        return F.round(cosine(F.col(q_vec), F.col(c_vec)), round_digits)
+        return F.round(cosine(F.col(q_vec), F.col(c_vec)), 4)
     return F.round(
         _dot(F.col(q_vec), F.col(c_vec))
         / (F.col("q_norm") * F.col("c_norm")),
-        round_digits,
+        4,
     )
 
 
@@ -78,7 +78,6 @@ def cosine_topk_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, sim) — exact top-k per query, excluding
@@ -102,7 +101,7 @@ def cosine_topk_bruteforce(
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", _sim_expr(round_digits, dim))
+        .withColumn("sim", _sim_expr(dim))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
@@ -161,11 +160,9 @@ def _hyperplane_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int = 
     return buckets_of
 
 
-def lsh_params_for_threshold(
-    threshold: float, target_miss: float = 1e-5, n_planes: int | None = None
-) -> tuple[int, int]:
+def lsh_params_for_threshold(threshold: float) -> tuple[int, int]:
     """(n_planes, n_tables) such that a pair at exactly `threshold`
-    cosine is missed by every table with probability ≤ target_miss.
+    cosine is missed by every table with probability ≤ 1e-5.
 
     Sign-LSH collision per plane: p = 1 - arccos(s)/π.  Higher
     thresholds allow more planes per table (smaller buckets, fewer
@@ -175,11 +172,10 @@ def lsh_params_for_threshold(
     embedding dedup runs at t ≥ 0.8 where this is cheap)."""
     import math
 
-    if n_planes is None:
-        n_planes = 8 if threshold >= 0.8 else 6 if threshold >= 0.6 else 4
+    n_planes = 8 if threshold >= 0.8 else 6 if threshold >= 0.6 else 4
     p = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     q = p**n_planes  # per-table collision probability at sim = threshold
-    n_tables = min(96, max(1, math.ceil(math.log(target_miss) / math.log(1.0 - q))))
+    n_tables = min(96, max(1, math.ceil(math.log(1e-5) / math.log(1.0 - q))))
     return n_planes, n_tables
 
 
@@ -189,11 +185,6 @@ def cosine_pairs_bucketed(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 4,
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-    target_miss: float = 1e-5,
-    seed: int = 5,
 ) -> DataFrame:
     """All (id_a < id_b) pairs with cosine ≥ threshold — the SCALE path
     for `cosine_pairs` (round-1 verdict: the only verified embedding
@@ -203,17 +194,13 @@ def cosine_pairs_bucketed(
     explode to (bucket, id) → self-equi-join per bucket → distinct
     candidate pairs → EXACT cosine verification.  Cost ∝ Σ bucket²
     per table instead of n²; output equals `cosine_pairs` up to the
-    engineered miss probability (≤ target_miss per qualifying pair at
+    engineered miss probability (≤ 1e-5 per qualifying pair at
     sim == threshold, lower above it)."""
-    auto_planes, auto_tables = lsh_params_for_threshold(
-        threshold, target_miss, n_planes
-    )
     from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    n_planes = n_planes or auto_planes
-    n_tables = n_tables or auto_tables
+    n_planes, n_tables = lsh_params_for_threshold(threshold)
     corpus = spread(corpus)  # single-row-group scans → 1-task UDF stage
-    buckets_of = _hyperplane_buckets_udf(dim, n_planes, n_tables, seed=seed)
+    buckets_of = _hyperplane_buckets_udf(dim, n_planes, n_tables)
     bucketed = corpus.select(
         F.col(id_col).alias("id"),
         F.explode(buckets_of(F.col(vec_col))).alias("bucket"),
@@ -247,7 +234,7 @@ def cosine_pairs_bucketed(
     return (
         cands.join(va, on="id_a")
         .join(vb, on="id_b")
-        .withColumn("sim", _sim_expr(round_digits, dim, "va", "vb"))
+        .withColumn("sim", _sim_expr(dim, "va", "vb"))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
         .distinct()
@@ -258,26 +245,23 @@ def train_ivf_centroids(
     corpus: DataFrame,
     dim: int,
     n_centroids: int = 16,
-    iters: int = 5,
-    sample: int = 2048,
-    seed: int = 9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
-    """Spherical k-means centroids from a DETERMINISTIC sample
+    """Spherical k-means centroids from a DETERMINISTIC 2048-row sample
     (ordered by id — no nondeterministic sampling), trained driver-side
-    with numpy Lloyd iterations.  Centroids are (n_centroids × dim)
+    with 5 numpy Lloyd iterations.  Centroids are (n_centroids × dim)
     floats — kilobytes — so driver training + closure broadcast is the
     right topology even at 10^12 corpus rows (the sample, not the
     corpus, bounds the work; production would sample per-partition)."""
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
+    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(2048).collect()
     X = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
     if X.shape[1] != dim:
         raise ValueError(f"embedding width {X.shape[1]} != declared dim {dim}")
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(9)
     cents = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(5):
         assign = (X @ cents.T).argmax(axis=1)
         for c in range(len(cents)):
             members = X[assign == c]
@@ -353,7 +337,7 @@ def ivf_cosine_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "q_vec", "c_vec", "q_norm", "c_norm")
     )
-    scored = cands.withColumn("sim", _sim_expr(4, dim))
+    scored = cands.withColumn("sim", _sim_expr(dim))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("_rn", F.row_number().over(w))
@@ -396,7 +380,7 @@ def lsh_cosine_topk(
         .select("query_id", "neighbor_id", "q_vec", "c_vec", "q_norm", "c_norm")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.withColumn("sim", _sim_expr(4, dim))
+    scored = cands.withColumn("sim", _sim_expr(dim))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("_rn", F.row_number().over(w))

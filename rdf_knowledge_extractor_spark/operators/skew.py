@@ -14,9 +14,9 @@ Layers of defense in this engine, in order of preference:
    the in-row candidate blow-up from hot blocking keys: buckets over
    `dispatch.MAX_BUCKET_SIZE` members go through a distributed
    self-join.
-3. **Hot-key detection** (`detect_hot_keys`, this module) for an
+3. **Hot-key detection** (`has_hot_key`, this module) for an
    operator AQE cannot split: the as-of join's window (operators/asof.py)
-   probes for hot keys and then splits each key's timeline into slices.
+   probes for a hot key and then splits each key's timeline into slices.
 """
 
 from __future__ import annotations
@@ -25,17 +25,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def detect_hot_keys(
-    df: DataFrame, key: str, threshold_ratio: float = 0.01, min_count: int = 10_000
-) -> DataFrame:
-    """Keys holding more than `threshold_ratio` of all rows (and at
-    least `min_count` rows) — one aggregation pass, broadcastable."""
-    total = df.count()
-    return (
+def has_hot_key(
+    df: DataFrame, key: str, threshold_ratio: float, min_count: int
+) -> bool:
+    """Whether some key holds at least `threshold_ratio` of all rows and
+    at least `min_count` rows.  Both are lower bounds on one key's
+    count, so some key meets them exactly when the largest count does:
+    the row total and the largest count come from ONE aggregate (one
+    collect) over the per-key counts."""
+    row = (
         df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(
-            (F.col("n") >= min_count) & (F.col("n") >= F.lit(int(total * threshold_ratio)))
-        )
-        .select(key, "n")
+        .count()
+        .agg(F.sum("count").alias("total"), F.max("count").alias("top"))
+        .collect()[0]
     )
+    top, total = row["top"], row["total"]
+    if top is None:  # no rows
+        return False
+    return top >= min_count and top >= int(total * threshold_ratio)

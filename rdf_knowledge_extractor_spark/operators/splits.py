@@ -58,12 +58,9 @@ def split_column(id_col: Column, weights: dict[str, float]) -> Column:
 
 
 def assign_splits(
-    docs: DataFrame,
-    weights: dict[str, float] | None = None,
-    id_col: str = "doc_id",
-    out_col: str = "split",
+    docs: DataFrame, id_col: str = "doc_id", out_col: str = "split"
 ) -> DataFrame:
-    """Adds `out_col` with the deterministic split label (default
-    90/5/5 train/val/test)."""
-    weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
+    """Adds `out_col` with the deterministic 90/5/5 train/val/test
+    split label."""
+    weights = {"train": 0.9, "val": 0.05, "test": 0.05}
     return docs.withColumn(out_col, split_column(F.col(id_col), weights))

@@ -2,9 +2,8 @@
 
 Parity targets:
 - stats (ref:src/knowledge_graph/mod.rs:234-253): total + distinct
-  subjects/predicates/objects.  Exact count-distinct shuffles once per
-  column; `approx=True` switches to HLL `approx_count_distinct` for the
-  10^12-triple scale path (single pass, no extra shuffles).
+  subjects/predicates/objects.  Exact count-distinct: Catalyst plans the
+  three distincts as one Expand + two-level aggregate over one scan.
 - get_entities_by_type (ref:src/knowledge_graph/mod.rs:168-185):
   predicate CONTAINS 'type' (substring, faithfully loose) and object ==
   namespace-qualified type URI.
@@ -18,13 +17,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def graph_statistics(graph: DataFrame, approx: bool = False) -> DataFrame:
-    cd = F.approx_count_distinct if approx else F.countDistinct
+def graph_statistics(graph: DataFrame) -> DataFrame:
     return graph.agg(
         F.count(F.lit(1)).alias("total_triples"),
-        cd("subject").alias("unique_subjects"),
-        cd("predicate").alias("unique_predicates"),
-        cd("object").alias("unique_objects"),
+        F.countDistinct("subject").alias("unique_subjects"),
+        F.countDistinct("predicate").alias("unique_predicates"),
+        F.countDistinct("object").alias("unique_objects"),
     )
 
 

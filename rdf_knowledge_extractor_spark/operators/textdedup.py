@@ -62,7 +62,7 @@ def shingle_hash_col(shingles_col):
     return F.transform(shingles_col, lambda s: F.xxhash64(s))
 
 
-def _minhash_band_udf(num_perm: int, bands: int, seed: int = 17):
+def _minhash_band_udf(num_perm: int, bands: int):
     """Banded-MinHash over PRE-HASHED shingles (array<long> input).
 
     Fully batch-vectorized: one (Σ shingles × num_perm) universal-hash
@@ -70,7 +70,7 @@ def _minhash_band_udf(num_perm: int, bands: int, seed: int = 17):
     `np.minimum.reduceat`, band folding via wrapping-multiply mixing —
     zero per-row Python beyond list assembly."""
     rows_per_band = num_perm // bands
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(17)
     a = rng.randint(1, _MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
     b = rng.randint(0, _MERSENNE, size=num_perm, dtype=np.int64).astype(np.uint64)
     _MIX = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 def tfidf_top_terms(
     docs: DataFrame,
     k: int = 5,
-    min_df: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -47,9 +46,7 @@ def tfidf_top_terms(
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
     ).filter(F.length("term") > 0)
     tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_tbl = tf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df")
-    ).filter(F.col("df") >= min_df)
+    df_tbl = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(
         F.count_distinct(F.col(id_col)).alias("_n")
     )

@@ -84,17 +84,22 @@ class KgPipeline:
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
     def _input_identity(self, pages: DataFrame) -> str:
-        """Cheap content fingerprint of the input: row count + xor/sum of
-        per-row xxhash64 over the identifying columns (one parallel agg
-        job; order-independent)."""
+        """Cheap content fingerprint of the input: row count + xor and sum
+        of per-row xxhash64 over the identifying columns (one parallel agg
+        job; order-independent).  The xor alone cancels a repeated row,
+        so {A, A, C} and {B, B, C} would collide; the DECIMAL(38,0) sum
+        does not cancel and cannot overflow (plain `sum` of longs does,
+        and raises under ANSI mode)."""
         cols = [c for c in ("url", "doc_seq", "warc_ts") if c in pages.columns]
         if not cols:
             cols = pages.columns[:2]
+        h = F.xxhash64(*cols)
         row = pages.select(
             F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(*cols)).alias("h"),  # xor-fold: overflow-free
+            F.bit_xor(h).alias("x"),
+            F.sum(h.cast("decimal(38,0)")).alias("s"),
         ).collect()[0]
-        return f"{row['n']}:{row['h']}"
+        return f"{row['n']}:{row['x']}:{row['s']}"
 
     def _fingerprint(self, stage: str, params: dict) -> str:
         blob = json.dumps(

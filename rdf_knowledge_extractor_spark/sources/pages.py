@@ -86,17 +86,15 @@ class _HtmlComposer:
         if in_body:
             self.body_text_nodes.append(s)
 
-    def entity_text(self, markup: str, decoded: str, in_body: bool = True):
-        """Raw markup containing entities; `decoded` is the resulting node."""
+    def entity_text(self, markup: str, decoded: str):
+        """Raw body markup with entities; `decoded` is the resulting node."""
         self.parts.append(markup)
-        if in_body:
-            self.body_text_nodes.append(decoded)
+        self.body_text_nodes.append(decoded)
 
-    def ws(self, s: str, in_body: bool = True):
+    def ws(self, s: str):
         """Inter-tag whitespace — still a text node inside body."""
         self.parts.append(s)
-        if in_body:
-            self.body_text_nodes.append(s)
+        self.body_text_nodes.append(s)
 
     def html_bytes(self) -> bytes:
         return "".join(self.parts).encode("utf-8")

@@ -134,17 +134,17 @@ def _single_window(left, right, **kw):
 
 
 def _spy_probe(monkeypatch):
-    """Record what the probe hands to detect_hot_keys."""
+    """Record what the probe hands to has_hot_key."""
     from rdf_knowledge_extractor_spark.operators import skew
 
     seen = {}
-    real = skew.detect_hot_keys
+    real = skew.has_hot_key
 
     def spy(df, key, threshold_ratio, min_count):
         seen.update(df=df, ratio=threshold_ratio, min_count=min_count)
         return real(df, key, threshold_ratio=threshold_ratio, min_count=min_count)
 
-    monkeypatch.setattr(skew, "detect_hot_keys", spy)
+    monkeypatch.setattr(skew, "has_hot_key", spy)
     return seen
 
 

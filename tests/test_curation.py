@@ -174,12 +174,20 @@ def test_rollup_report_null_group_not_conflated_with_total(spark):
     assert got == oracle
 
 
-def test_quality_percentiles_approx_close_to_exact(spark):
+def test_quality_percentiles_approx_close_to_exact(spark, monkeypatch):
     """The approx_percentile production arm must track the exact arm
     within a tight bound on the fixture (VERDICT r2 #6)."""
+    from rdf_knowledge_extractor_spark.operators import curation
     from rdf_knowledge_extractor_spark.operators.curation import (
         quality_percentiles,
     )
+
+    def at(quantiles):
+        monkeypatch.setattr(curation, "QUALITY_QUANTILES", quantiles)
+        return {
+            r.lang_pred: r
+            for r in quality_percentiles(docs, exact=True).collect()
+        }
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     # rank-tolerance check: approx_percentile returns an actual data
@@ -188,19 +196,9 @@ def test_quality_percentiles_approx_close_to_exact(spark):
     # percentiles at q ∓ 0.01 (a fixed value-bound would be wrong
     # wherever the tail is steep).
     qs = (0.5, 0.9, 0.99)
-    lo = {
-        r.lang_pred: r
-        for r in quality_percentiles(
-            docs, quantiles=tuple(max(q - 0.01, 0.0) for q in qs), exact=True
-        ).collect()
-    }
-    hi = {
-        r.lang_pred: r
-        for r in quality_percentiles(
-            docs, quantiles=tuple(min(q + 0.01, 1.0) for q in qs), exact=True
-        ).collect()
-    }
-    exact = {r.lang_pred: r for r in quality_percentiles(docs, exact=True).collect()}
+    lo = at(tuple(max(q - 0.01, 0.0) for q in qs))
+    hi = at(tuple(min(q + 0.01, 1.0) for q in qs))
+    exact = at(qs)
     approx = {r.lang_pred: r for r in quality_percentiles(docs, exact=False).collect()}
     assert set(exact) == set(approx)
     eps = 1e-4  # both sides round to 4 digits

@@ -56,7 +56,10 @@ def test_funnel_report_counts_and_rates(spark):
     ]
 
 
-def test_funnel_max_gap_first_touch(spark):
+def test_funnel_max_gap_first_touch(spark, monkeypatch):
+    from rdf_knowledge_extractor_spark.operators import funnel
+
+    monkeypatch.setattr(funnel, "MAX_GAP_SECONDS", 50)
     df = _ev(spark, [
         (1, 0, "view"), (1, 10, "click"),
         (2, 0, "view"), (2, 100, "click"),
@@ -66,8 +69,7 @@ def test_funnel_max_gap_first_touch(spark):
     ])
     got = {
         r.user_id: r.depth
-        for r in funnel_depths(df, ["view", "click"],
-                               max_gap_seconds=50).collect()
+        for r in funnel_depths(df, ["view", "click"]).collect()
     }
     assert got == {1: 2, 2: 1, 3: 1}
 

@@ -132,12 +132,12 @@ def test_metadata_meta_tags_and_duplicate_attrs():
         '<meta name="other" content="ignored">'
         "<body>x</body>"
     )
-    meta = extract_metadata(html, source="u")
+    meta = extract_metadata(html)
     assert meta["description"] == "first"  # first duplicate attribute wins
     assert meta["keywords"] == "a,&b"
     assert meta["author"] == "X"
     assert "other" not in meta
-    assert meta["source"] == "u" and meta["type"] == "url"
+    assert meta["source"] == "" and meta["type"] == "url"
 
 
 def test_metadata_attr_entity_legacy_rule():

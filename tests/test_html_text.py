@@ -90,12 +90,12 @@ def test_metadata():
         '<meta name="viewport" content="ignored">'
         "</head><body>x</body></html>"
     )
-    md = extract_metadata(html, source="http://x.example/")
+    md = extract_metadata(html)
     assert md["title"] == "My Page"
     assert md["description"] == "desc here"
     assert md["keywords"] == "a,b"
     assert md["author"] == "Jane"
-    assert md["source"] == "http://x.example/"
+    assert md["source"] == ""
     assert md["type"] == "url"
     assert "viewport" not in md
 

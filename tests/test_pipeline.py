@@ -135,6 +135,29 @@ def test_pipeline_fingerprint_covers_input_and_config(spark, tmp_path):
     assert not any(r.resumed for r in pipe4.results)
 
 
+def test_pipeline_identity_keeps_repeated_rows_apart(spark, tmp_path):
+    """{A, A, C} and {B, B, C} have the same row count and the same xor
+    of row hashes (a repeated row cancels); the second run must not
+    resume the first one's checkpoints."""
+    from rdf_knowledge_extractor_spark.config import Configuration
+
+    html = b"<html><body>Acme Corp is led by Jane Doe, who serves as CEO.</body></html>"
+
+    def pages(rows):
+        return spark.createDataFrame(
+            [(f"https://x/{r}", html, seq) for r, seq in rows],
+            "url string, html binary, doc_seq long",
+        ).withColumn("lang", F.lit("en"))
+
+    cfg = Configuration.example()
+    pipe = KgPipeline(spark, cfg, str(tmp_path / "ckpt"), partitions=2)
+    pipe.run(pages([("a", 0), ("a", 0), ("c", 2)]))
+    pipe2 = KgPipeline(spark, cfg, str(tmp_path / "ckpt"), partitions=2)
+    pipe2.run(pages([("b", 1), ("b", 1), ("c", 2)]))
+    resumed = {r.name: r.resumed for r in pipe2.results}
+    assert resumed["s2_extracted"] is False
+
+
 def test_pipeline_manifest_write_is_atomic(
     spark, example_config, tmp_path, monkeypatch
 ):

@@ -40,24 +40,6 @@ def test_profile_subset_and_validation(spark):
         table_profile(_df(spark), [])
 
 
-def test_profile_approx_arm_no_expand(spark):
-    exact = table_profile(_df(spark))
-    approx = table_profile(_df(spark), approx=True)
-    # small data: HLL is exact here; arms agree
-    assert sorted(map(tuple, exact.collect())) == sorted(
-        map(tuple, approx.collect())
-    )
-
-    def plan(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode="formatted")
-        return buf.getvalue()
-
-    assert "Expand" in plan(exact)  # exact multi-distinct plan
-    assert "Expand" not in plan(approx)  # HLL needs no row replication
-
-
 def test_robust_outliers_closed_form(spark):
     from rdf_knowledge_extractor_spark.operators.profile import (
         robust_outliers,

@@ -8,6 +8,13 @@ attribute, an import); a method also needs its class reached, and a
 dunder method comes with its class.  Matching is by name, so a name two
 defs share reaches both: the walk can miss dead code, never flag live
 code.  A def that only tests reach fails `test_every_package_def_is_reachable`.
+
+The same roots guard the options: a keyword parameter with a default
+that no call in the package or the entry points sets (by keyword, at
+its position, or through `*args`/`**kwargs`) fails
+`test_every_option_has_a_production_setter`.  Calls match by name and
+a constructor by its class's name, so a call sets the option of every
+def that shares its name: the scan can miss an unset option.
 """
 
 from __future__ import annotations
@@ -92,6 +99,14 @@ def _signature_parts(fn) -> list[ast.AST]:
     return [*fn.decorator_list, *a.defaults, *(d for d in a.kw_defaults if d)]
 
 
+def _entry_files() -> list[Path]:
+    files = []
+    for entry in ENTRY_POINTS:
+        p = ROOT / entry
+        files += [p] if p.is_file() else sorted(p.rglob("*.py"))
+    return files
+
+
 def _package_defs():
     """([(label, class or None, name, node)], module-level code)."""
     defs, module_code = [], []
@@ -119,11 +134,7 @@ def _unreachable(kept: frozenset[str] = KEPT) -> list[str]:
     defs, module_code = _package_defs()
     names: set[str] = set()
     prefixes: set[str] = set()
-    roots = list(module_code)
-    for entry in ENTRY_POINTS:
-        p = ROOT / entry
-        for f in [p] if p.is_file() else sorted(p.rglob("*.py")):
-            roots.append(ast.parse(f.read_text()))
+    roots = list(module_code) + [ast.parse(f.read_text()) for f in _entry_files()]
     for node in roots:
         names |= _names(node)
         prefixes |= _prefixes(node)
@@ -168,3 +179,85 @@ def test_kept_surfaces_exist_and_need_the_list():
     fails here.  This also shows the walk can flag a def."""
     flagged = set(_unreachable(kept=frozenset()))
     assert KEPT <= flagged, sorted(KEPT - flagged)
+
+
+# Keyword options with a default that no production call sets, kept on
+# purpose.  Column names (`_COLUMN_SUFFIXES`, `_COLUMN_PARAMS`) name the
+# caller's schema, not a behaviour, and are not options.
+KEPT_OPTIONS = {
+    "functions/jpeg.py:encode_jpeg(quality=)": "tests build decoder inputs at other qualities; the decoder reads outside bytes",
+    "functions/jpeg.py:encode_jpeg(subsampling=)": "tests build the 4:2:0 decoder inputs",
+    "functions/jpeg.py:encode_jpeg(restart_interval=)": "tests build the restart-marker decoder inputs",
+    "plans/pipeline.py:KgPipeline.__init__(partitions=)": "the deployment's shuffle width",
+    "plans/pipeline.py:KgPipeline.commit_to_store(batch_id=)": "a commit's identity",
+    "templates/engine.py:TemplateManager.generate_document(overrides=)": "the template surface's per-query overrides",
+}
+_COLUMN_SUFFIXES = ("_col", "_cols", "_alias")
+_COLUMN_PARAMS = frozenset({"src", "dst", "col", "table"})
+
+
+def _calls() -> dict[str, list[tuple[set, int, int | None, bool]]]:
+    """Every call in the package and the entry points, by called name:
+    (keywords, positional count, index of the first `*args`, has `**kwargs`)."""
+    calls: dict = {}
+    for f in sorted(PACKAGE.rglob("*.py")) + _entry_files():
+        for n in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(n, ast.Call):
+                continue
+            fn = n.func
+            name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+            star = next((i for i, a in enumerate(n.args) if isinstance(a, ast.Starred)), None)
+            calls.setdefault(name, []).append(
+                (
+                    {k.arg for k in n.keywords},
+                    len(n.args),
+                    star,
+                    any(k.arg is None for k in n.keywords),
+                )
+            )
+    return calls
+
+
+def _unset_options(kept_options=KEPT_OPTIONS) -> list[str]:
+    """Options with a default that no call in the roots sets: by keyword,
+    at its positional index, or through `*args`/`**kwargs`.  Calls match
+    by name; a constructor matches by its class's name."""
+    calls = _calls()
+    unset = []
+    for label, cls, name, node in _package_defs()[0]:
+        if label in KEPT or isinstance(node, ast.ClassDef):
+            continue
+        a = node.args
+        pos = [*a.posonlyargs, *a.args]
+        offset = 1 if cls is not None and pos and pos[0].arg in ("self", "cls") else 0
+        opts = [(i - offset, p.arg) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+        opts += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        called = cls.split(":")[1] if name == "__init__" else name
+        for i, opt in opts:
+            key = f"{label}({opt}=)"
+            if opt.endswith(_COLUMN_SUFFIXES) or opt in _COLUMN_PARAMS or key in kept_options:
+                continue
+            if not any(
+                opt in kws
+                or kwstar
+                or (i is not None and (i < npos or (star is not None and i >= star)))
+                for kws, npos, star, kwstar in calls.get(called, [])
+            ):
+                unset.append(key)
+    return unset
+
+
+def test_every_option_has_a_production_setter():
+    unset = _unset_options()
+    assert not unset, (
+        "keyword options that no production call sets (make them a fixed "
+        "value, or add a production caller):\n  " + "\n  ".join(unset)
+    )
+
+
+def test_kept_options_need_the_list():
+    """Each `KEPT_OPTIONS` entry names an option reported without the
+    list: a stale entry (deleted option, or one production now sets)
+    fails here."""
+    flagged = set(_unset_options(kept_options={}))
+    assert set(KEPT_OPTIONS) <= flagged, sorted(set(KEPT_OPTIONS) - flagged)

@@ -1,16 +1,22 @@
-"""Skew handling: hot-key detection and the hot-head-entity smoke for
+"""Skew handling: the hot-key probe and the hot-head-entity smoke for
 the linking stage (SURVEY §5.6)."""
 
 from __future__ import annotations
 
-from rdf_knowledge_extractor_spark.operators.skew import detect_hot_keys
+from rdf_knowledge_extractor_spark.operators.skew import has_hot_key
 
 
-def test_detect_hot_keys(spark):
+def test_has_hot_key_bounds(spark):
+    """Hot = one key meets both lower bounds (share of rows, row count);
+    each bound is checked at its edge, and no rows means no hot key."""
     rows = [("hot",)] * 5000 + [(f"k{i}",) for i in range(100)]
     df = spark.createDataFrame(rows, "k string")
-    hot = detect_hot_keys(df, "k", threshold_ratio=0.5, min_count=100)
-    assert [(r.k, r.n) for r in hot.collect()] == [("hot", 5000)]
+    assert has_hot_key(df, "k", threshold_ratio=0.5, min_count=100)
+    assert has_hot_key(df, "k", threshold_ratio=0.5, min_count=5000)
+    assert not has_hot_key(df, "k", threshold_ratio=0.5, min_count=5001)
+    assert has_hot_key(df, "k", threshold_ratio=5000 / 5100, min_count=1)
+    assert not has_hot_key(df, "k", threshold_ratio=0.99, min_count=1)
+    assert not has_hot_key(df.limit(0), "k", threshold_ratio=0.5, min_count=1)
 
 
 def test_linking_with_hot_head_entity(spark, example_config):

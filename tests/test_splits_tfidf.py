@@ -88,14 +88,6 @@ def test_tfidf_scores_and_ranks(spark):
     assert len(rows) == 6
 
 
-def test_tfidf_min_df_filters_rare_terms(spark):
-    df = spark.createDataFrame(
-        [(1, "rare common"), (2, "common other")], ["doc_id", "text"]
-    )
-    out = tfidf_top_terms(df, k=5, min_df=2)
-    assert {r.term for r in out.collect()} == {"common"}
-
-
 def test_tfidf_topk_is_window_group_limit(spark):
     df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
     out = tfidf_top_terms(df, k=2)
