@@ -293,10 +293,12 @@ def q_kg_sparql_path(spark, sf):
 def q_kg_sparql_path_star(spark, sf):
     """SPARQL transitive path `*` (round-4 extension): zero-or-more
     hops over a deterministic doc-chain graph (lead() within
-    source/20-doc buckets caps chain length).  The engine lowers `+`/`*`
-    to the semi-naive frontier loop (query/sparql.py
-    _transitive_closure, same shape as operators/components.py); the
-    oracle recomputes the closure with DuckDB WITH RECURSIVE."""
+    source/20-doc buckets caps chain length).  The engine lowers the
+    var-var `*` to the full closure (query/sparql.py
+    _transitive_closure): at this size one bounded collect of the
+    edges, then a per-source BFS inside executor tasks; above the
+    shared driver bound the semi-naive frontier loop.  The oracle
+    recomputes the closure with DuckDB WITH RECURSIVE."""
     from pyspark.sql import Window
 
     from rdf_knowledge_extractor_spark.query.sparql import execute_sparql

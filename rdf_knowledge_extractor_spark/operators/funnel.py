@@ -36,9 +36,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# seconds allowed between matched funnel steps; None puts no bound
-MAX_GAP_SECONDS: float | None = None
-
 
 def funnel_depths(
     events: DataFrame,
@@ -48,14 +45,9 @@ def funnel_depths(
     type_col: str = "event_type",
 ) -> DataFrame:
     """(user_col, depth) — per user, the furthest funnel step reached
-    (0 = none).  With `MAX_GAP_SECONDS`, each step must also occur
-    within that many seconds of the previous matched step — under the
-    FIRST-TOUCH interpretation (the chain anchors on each step's
-    earliest qualifying event; a user who'd only convert by skipping
-    an early touch in favour of a later one does not count, matching
-    classic first-touch product-analytics funnels).  Without the gap
-    constraint greedy-earliest is provably optimal, so depth is
-    exactly "can k strictly-increasing timestamps be chosen"."""
+    (0 = none).  Greedy-earliest matching is provably optimal for a
+    strict-order funnel, so depth is exactly "can k strictly-increasing
+    timestamps be chosen"."""
     if len(steps) < 2:
         raise ValueError(f"a funnel needs >= 2 steps, got {steps}")
     if len(set(steps)) != len(steps):
@@ -78,15 +70,10 @@ def funnel_depths(
     )
 
     def _step(acc, e):
-        gap_ok = F.lit(True)
-        if MAX_GAP_SECONDS is not None:
-            gap_ok = e["ts"].cast("double") - acc["last"].cast(
-                "double"
-            ) <= F.lit(float(MAX_GAP_SECONDS))
         advance = (
             (acc["depth"] < k)
             & (e["t"] == F.element_at(step_arr, acc["depth"] + 1))
-            & ((acc["depth"] == 0) | ((e["ts"] > acc["last"]) & gap_ok))
+            & ((acc["depth"] == 0) | (e["ts"] > acc["last"]))
         )
         return F.when(
             advance,

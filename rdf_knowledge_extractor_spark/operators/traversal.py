@@ -12,7 +12,9 @@ Spark shape: build the bidirectional edge list once, then walk it
 with `reachable`, the one hop-by-hop search in the package (the
 SPARQL engine's seeded `p+` paths call it too): a driver-side BFS for
 small edge lists, a broadcast-frontier loop above the shared size
-bound (operators/dispatch.py).
+bound (operators/dispatch.py).  The BFS itself is `_walk`, which also
+serves the SPARQL engine's full `p+`/`p*` closure below that bound,
+one walk per source inside executor tasks.
 
 Faithfulness notes (both reproduced):
 - reverse edges additionally require the *current* node to look
@@ -28,6 +30,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdf_knowledge_extractor_spark.operators import dispatch
+
+
+def _adjacency(rows) -> dict[str, list[str]]:
+    """{src: [dst, …]} of collected (src, dst) edge rows."""
+    adj: dict[str, list[str]] = {}
+    for src, dst in rows:
+        adj.setdefault(src, []).append(dst)
+    return adj
+
+
+def _walk(
+    adj: dict[str, list[str]], seed: str, max_hops: int | None
+) -> tuple[set[str], int]:
+    """(nodes reached from `seed` over 1..`max_hops` hops of `adj`,
+    rounds) — the level-synchronous BFS behind `reachable`'s driver arm
+    and the full property-path closure's walk arm.  Each round expands
+    the whole frontier; `rounds` counts expansions, including the one
+    that came back empty."""
+    frontier: set[str] = {seed}
+    reached: set[str] = set()
+    rounds = 0
+    while max_hops is None or rounds < max_hops:
+        rounds += 1
+        new = {d for s in frontier for d in adj.get(s, ())} - reached
+        if not new:
+            break
+        reached |= new
+        frontier = new
+    return reached, rounds
 
 
 def reachable(
@@ -49,25 +80,14 @@ def reachable(
     spark = edges.sparkSession
     edges = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     rows = dispatch.bounded_collect(edges, dispatch.DRIVER_MAX_EDGES)
-    rounds = 0
     if rows is not None:
-        adj: dict[str, list[str]] = {}
-        for src, dst in rows:
-            adj.setdefault(src, []).append(dst)
-        frontier_set = {seed}
-        reached_set: set[str] = set()
-        while max_hops is None or rounds < max_hops:
-            rounds += 1
-            new = {d for s in frontier_set for d in adj.get(s, ())} - reached_set
-            if not new:
-                break
-            reached_set |= new
-            frontier_set = new
+        reached_set, rounds = _walk(_adjacency(rows), seed, max_hops)
         return (
             spark.createDataFrame([(n,) for n in sorted(reached_set)], "node string"),
             rounds,
         )
 
+    rounds = 0
     frontier = spark.createDataFrame([(seed,)], "src string")
     reached = spark.createDataFrame([], "node string")
     while max_hops is None or rounds < max_hops:

@@ -20,8 +20,10 @@ Two engines:
    COUNT/SUM/MIN/MAX/AVG/GROUP_CONCAT(…; SEPARATOR="…")/SAMPLE
    with GROUP BY + HAVING (GROUP_CONCAT sorts values for determinism;
    SAMPLE is min()), ORDER BY (ASC|DESC)(?v), LIMIT n, OFFSET n,
-   property paths: modifiers +/*/? (transitive closure via semi-naive
-   frontier loop), sequence `/`, alternative `|`, inverse `^`, and
+   property paths: modifiers +/*/? (transitive closure: a per-source
+   walk in executor tasks under the shared driver bound, a semi-naive
+   frontier loop above it; a constant endpoint seeds a BFS instead),
+   sequence `/`, alternative `|`, inverse `^`, and
    negated property sets !iri / !(iri|…) (forward members only),
    BIND(expr AS ?v), VALUES ?v { … } / (?a ?b) { … }
    with UNDEF, MINUS { … } (shared-domain anti-join),
@@ -41,6 +43,7 @@ Two engines:
 
 from __future__ import annotations
 
+import itertools
 import re
 from dataclasses import dataclass, field
 
@@ -48,7 +51,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdf_knowledge_extractor_spark.operators import dispatch
-from rdf_knowledge_extractor_spark.operators.traversal import reachable
+from rdf_knowledge_extractor_spark.operators.traversal import (
+    _adjacency,
+    _walk,
+    reachable,
+)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -134,24 +141,36 @@ def _tokenize(text: str) -> list[str]:
     return toks
 
 
-# the full closure's small-input arm (at most dispatch.DRIVER_MAX_EDGES
-# base edges) is path doubling, whose per-round cost scales with the
-# CLOSURE, which the edge count does not bound (a 100k-edge chain has
-# a ~5e9-pair closure); past this many closure pairs the loop abandons
-# doubling and restarts the work-optimal semi-naive iteration from the
-# base edges (restart, not resume: a mixed schedule would skip pairs
-# whose length-L prefix was found in an older round's closure,
-# violating the semi-naive frontier invariant)
-_DOUBLING_MAX_CLOSURE = 2_000_000
+def _walk_closure(spark, adj: dict[str, list[str]]) -> DataFrame:
+    """(_src, _dst) ≥1-hop closure of the adjacency `adj`: a local
+    relation of its distinct sources, each walked inside a
+    `mapInPandas` task; frames hold at most
+    `spark.sql.execution.arrow.maxRecordsPerBatch` rows."""
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def walk(frames):
+        import pandas as pd
+
+        pairs = (
+            (src, dst)
+            for frame in frames
+            for src in frame["_src"]
+            for dst in _walk(adj, src, None)[0]
+        )
+        while chunk := list(itertools.islice(pairs, batch)):
+            yield pd.DataFrame(chunk, columns=["_src", "_dst"])
+
+    sources = spark.createDataFrame([(s,) for s in adj], "_src string")
+    return sources.mapInPandas(walk, "_src string, _dst string")
 
 
 class SparqlEngine:
     def __init__(self, graph: DataFrame):
         self.graph = graph
         #: diagnostics of the most recent transitive-path evaluation:
-        #: {"mode": "seeded", "rounds": int} or {"mode": "full",
-        #: "doubling_rounds": int, "seminaive_rounds": int} — lets tests
-        #: assert a bound-endpoint path never computed the full closure
+        #: {"mode": "seeded" | "seminaive", "rounds": int} or
+        #: {"mode": "walk"} — lets tests assert which arm ran, and that
+        #: a bound-endpoint path never computed the full closure
         self.last_path_stats: dict | None = None
 
     # -- parsing -----------------------------------------------------
@@ -717,78 +736,56 @@ class SparqlEngine:
 
     def _graph_nodes(self) -> DataFrame:
         """Zero-length path endpoints: every term appearing as subject
-        or object, paired with itself (SPARQL 1.1 §9.3 ZeroLengthPath)."""
+        or object, paired with itself (SPARQL 1.1 §9.3 ZeroLengthPath).
+        A NULL is no RDF term, so it is no node."""
         g = self.graph
         nodes = (
             g.select(F.col("subject").alias("_n"))
             .unionByName(g.select(F.col("object").alias("_n")))
+            .where(F.col("_n").isNotNull())
             .distinct()
         )
         return nodes.select(F.col("_n").alias("_src"), F.col("_n").alias("_dst"))
 
     def _transitive_closure(self, edges: DataFrame) -> DataFrame:
-        """Distinct (src, dst) pairs connected by ≥1 edge hops —
-        semi-naive iteration: join the NEW frontier (not the whole
-        closure) against the base edges each round, anti-join out known
-        pairs, stop at fixed point.  Same Spark shape as the
-        connected-components loop (operators/components.py):
-        localCheckpoint(eager) every round truncates the nested-join
-        lineage that would otherwise make driver-side re-analysis the
-        bottleneck, and bounds rounds by graph diameter.
+        """Distinct (src, dst) pairs connected by ≥1 edge hops, for a
+        path whose endpoints are BOTH variables (a bound endpoint
+        routes to `_seeded_closure`: O(reachable-from-seed) instead of
+        O(closure)).
 
-        Scale note: this computes the FULL closure — used only when
-        BOTH endpoints are variables.  A bound endpoint routes to
-        `_seeded_closure` instead (round-4 brief #3): O(reachable-
-        from-seed) vs O(closure) — at web scale the difference between
-        touching one entity's neighborhood and the whole graph."""
+        Size dispatch (operators/dispatch.py), one decision on the
+        distinct edges:
+
+        - at most DRIVER_MAX_EDGES: the walk arm.  The edges come back
+          in the decision's collect; executor tasks walk every distinct
+          source with the BFS `reachable` runs on the driver
+          (traversal._walk) and stream the pairs out in Arrow-sized
+          frames.  Each source scans only what it reaches, and the
+          driver never holds the closure, so its size needs no guard.
+        - above it: semi-naive iteration.  Each round joins the NEW
+          frontier (not the whole closure) against the base edges and
+          anti-joins out known pairs, until a fixed point; rounds are
+          bounded by the graph diameter.  localCheckpoint(eager) every
+          round truncates the nested-join lineage that would otherwise
+          make driver-side re-analysis the bottleneck (same shape as
+          operators/components.py)."""
         # NULL endpoints are dropped up front: an RDF term is never
         # NULL, a NULL never joins forward anyway, and keeping them
         # let base/closure rows surface spurious NULL bindings (the
-        # driver/distributed arms would also diverge on them)
+        # two arms would also diverge on them).  The checkpoint is
+        # lazy: the size probe's collect fills it (as in
+        # linking.link_entities), and only the semi-naive arm reads it
+        # again.
         base = (
             edges.select("_src", "_dst")
             .filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
             .distinct()
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        doubling_rounds = 0
-        if base.count() <= dispatch.DRIVER_MAX_EDGES:
-            # small-input arm: PATH DOUBLING — closure ∘ closure per
-            # round reaches fixed point in O(log diameter) rounds
-            # instead of semi-naive's O(diameter), and each round is
-            # still 2 driver jobs; a 19-hop chain costs ~6 rounds
-            # instead of 19 (the per-round job-latency floor is the
-            # whole cost at this size).  Result identical: both
-            # compute the distinct ≥1-hop closure.  Semi-naive stays
-            # the big-graph arm below — it is work-optimal (each pair
-            # generated from the new frontier only), where doubling
-            # re-joins the full closure log-diameter times.
-            closure = base
-            while True:
-                left = closure.select(
-                    F.col("_src"), F.col("_dst").alias("_mid")
-                )
-                right = closure.select(
-                    F.col("_src").alias("_mid"), F.col("_dst").alias("_nd")
-                )
-                nxt = (
-                    left.join(right, on="_mid")
-                    .select("_src", F.col("_nd").alias("_dst"))
-                    .distinct()
-                )
-                new = nxt.join(closure, on=["_src", "_dst"], how="left_anti")
-                new = new.localCheckpoint(eager=True)
-                doubling_rounds += 1
-                if new.isEmpty():
-                    self.last_path_stats = {
-                        "mode": "full",
-                        "doubling_rounds": doubling_rounds,
-                        "seminaive_rounds": 0,
-                    }
-                    return closure
-                closure = closure.unionByName(new).localCheckpoint(eager=True)
-                if closure.count() > _DOUBLING_MAX_CLOSURE:
-                    break  # restart semi-naive below (see constant note)
+        rows = dispatch.bounded_collect(base, dispatch.DRIVER_MAX_EDGES)
+        if rows is not None:
+            self.last_path_stats = {"mode": "walk"}
+            return _walk_closure(base.sparkSession, _adjacency(rows))
         closure = base
         frontier = base
         hop = base.select(
@@ -805,11 +802,7 @@ class SparqlEngine:
             new = new.localCheckpoint(eager=True)
             rounds += 1
             if new.isEmpty():
-                self.last_path_stats = {
-                    "mode": "full",
-                    "doubling_rounds": doubling_rounds,
-                    "seminaive_rounds": rounds,
-                }
+                self.last_path_stats = {"mode": "seminaive", "rounds": rounds}
                 return closure
             closure = closure.unionByName(new).localCheckpoint(eager=True)
             frontier = new
@@ -844,17 +837,19 @@ class SparqlEngine:
     def _compile_path_pattern(self, p: _Pattern) -> tuple[DataFrame, set[str]]:
         kind = p.p[0] if isinstance(p.p, tuple) else None
         s_val, o_val = self._term_value(p.s), self._term_value(p.o)
-        if kind in ("pplus", "pstar") and (s_val is not None or o_val is not None):
-            # bound-endpoint transitive path: seed the frontier at the
+        if kind in ("pplus", "pstar", "popt") and (
+            s_val is not None or o_val is not None
+        ):
+            # bound-endpoint modified path: seed the frontier at the
             # constant instead of computing the full closure and
-            # filtering (round-4 brief #3).  When both ends are bound,
-            # seed from the subject; the constant-object filter below
-            # still applies.
+            # filtering (round-4 brief #3); `?` is one hop.  When both
+            # ends are bound, seed from the subject; the constant-object
+            # filter in `_bind_terms` still applies.
             inner = self._path_df(p.p[1])
             forward = s_val is not None
             seed = s_val if forward else o_val
-            df = self._seeded_closure(inner, seed, forward)
-            if kind == "pstar":
+            df = inner if kind == "popt" else self._seeded_closure(inner, seed, forward)
+            if kind != "pplus":
                 # zero-length path at a constant endpoint binds the
                 # other end to the constant itself (SPARQL 1.1 §18.4
                 # ZeroLengthPath with a term argument — unconditional,
@@ -865,30 +860,23 @@ class SparqlEngine:
                 df = df.unionByName(zero).distinct()
         else:
             df = self._path_df(p.p)
-        var_cols: dict[str, str] = {}
-        for term, col in ((p.s, "_src"), (p.o, "_dst")):
-            if term.startswith("?"):
-                var = term[1:]
-                if var in var_cols:
-                    df = df.filter(F.col(col) == F.col(var_cols[var]))
-                else:
-                    var_cols[var] = col
-            elif term.startswith("\0LIT"):
-                df = df.filter(F.col(col) == term[4:])
-            else:
-                df = df.filter(F.col(col) == term)
-        if var_cols:
-            out = df.select(*[F.col(c).alias(v) for v, c in var_cols.items()])
-        else:
-            out = df.select(F.lit(1).alias("_one")).limit(1)
-        return out, set(var_cols)
+        return self._bind_terms(df, ((p.s, "_src"), (p.o, "_dst")))
 
     def _compile_pattern(self, p: _Pattern) -> tuple[DataFrame, set[str]]:
         if isinstance(p.p, tuple):  # property path in predicate position
             return self._compile_path_pattern(p)
-        df = self.graph
+        return self._bind_terms(
+            self.graph, ((p.s, "subject"), (p.p, "predicate"), (p.o, "object"))
+        )
+
+    @staticmethod
+    def _bind_terms(df: DataFrame, terms) -> tuple[DataFrame, set[str]]:
+        """Bind one pattern's (term, column) pairs over `df`: a constant
+        filters its column, a variable names its first column and
+        equates any repeat to it.  Returns (solutions, bound vars); a
+        pattern with no variable yields one `_one` row iff it matches."""
         var_cols: dict[str, str] = {}  # var name → first source column
-        for term, col in ((p.s, "subject"), (p.p, "predicate"), (p.o, "object")):
+        for term, col in terms:
             if term.startswith("?"):
                 var = term[1:]
                 if var in var_cols:  # repeated var within one pattern
@@ -947,18 +935,7 @@ class SparqlEngine:
         if not compat:
             out = left.join(right, on=common, how=how)
         else:
-            ren = right
-            for c in common:
-                ren = ren.withColumnRenamed(c, "_r_" + c)
-            cond = F.lit(True)
-            for c in eq:
-                cond = cond & (F.col(c) == F.col("_r_" + c))
-            for c in compat:
-                cond = cond & (
-                    F.col(c).isNull()
-                    | F.col("_r_" + c).isNull()
-                    | (F.col(c) == F.col("_r_" + c))
-                )
+            ren, cond = SparqlEngine._compat_cond(right, common, lmaybe | rmaybe)
             joined = left.join(ren, on=cond, how=how)
             out = joined.select(
                 *lonly,
@@ -973,6 +950,23 @@ class SparqlEngine:
         maybe |= {c for c in lonly if c in lmaybe}
         maybe |= set(ronly) if how == "left" else {c for c in ronly if c in rmaybe}
         return out, maybe
+
+    @staticmethod
+    def _compat_cond(right: DataFrame, common: list[str], maybe: set[str]):
+        """(`right` with each `common` column renamed `_r_<c>`, the
+        compatibility condition against those columns): equality on
+        every shared column, widened to isnull-or-equal where the
+        column is in `maybe`."""
+        ren = right
+        for c in common:
+            ren = ren.withColumnRenamed(c, "_r_" + c)
+        cond = F.lit(True)
+        for c in common:
+            same = F.col(c) == F.col("_r_" + c)
+            if c in maybe:
+                same = F.col(c).isNull() | F.col("_r_" + c).isNull() | same
+            cond = cond & same
+        return ren, cond
 
     @staticmethod
     def _union_all(parts: list[tuple[DataFrame, set[str]]]) -> tuple[DataFrame, set[str]]:
@@ -1053,19 +1047,7 @@ class SparqlEngine:
             if not any(c in maybe or c in smaybe for c in common):
                 df = df.join(sdf, on=common, how=how)
             else:
-                ren = sdf
-                for c in common:
-                    ren = ren.withColumnRenamed(c, "_r_" + c)
-                cond = F.lit(True)
-                for c in common:
-                    if c in maybe or c in smaybe:
-                        cond = cond & (
-                            F.col(c).isNull()
-                            | F.col("_r_" + c).isNull()
-                            | (F.col(c) == F.col("_r_" + c))
-                        )
-                    else:
-                        cond = cond & (F.col(c) == F.col("_r_" + c))
+                ren, cond = self._compat_cond(sdf, common, maybe | smaybe)
                 df = df.join(ren, on=cond, how=how)
         for sub in g.minus:
             # MINUS (SPARQL 1.1 §8.3.3): drop μ1 iff some right solution
@@ -1081,19 +1063,7 @@ class SparqlEngine:
             common = sorted(set(df.columns) & set(mdf.columns))
             if not common:
                 continue  # disjoint domains: removes nothing
-            ren = mdf
-            for c in common:
-                ren = ren.withColumnRenamed(c, "_r_" + c)
-            compat = F.lit(True)
-            for c in common:
-                if c in maybe or c in mmaybe:
-                    compat = compat & (
-                        F.col(c).isNull()
-                        | F.col("_r_" + c).isNull()
-                        | (F.col(c) == F.col("_r_" + c))
-                    )
-                else:
-                    compat = compat & (F.col(c) == F.col("_r_" + c))
+            ren, compat = self._compat_cond(mdf, common, maybe | mmaybe)
             shared_dom = F.lit(False)
             for c in common:
                 shared_dom = shared_dom | (

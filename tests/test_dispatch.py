@@ -6,6 +6,12 @@ SPARQL engine's seeded `p+` paths — run once with the default
 around the edge count, down to 0 (distributed frontier loop).  The
 graph has a cycle back to the seed, a self-loop, NULL endpoints, a
 literal object and an edge under another predicate.
+
+The full var-var `p+`/`p*` closure runs its walk arm at the default
+bound and its semi-naive loop at 0, over a graph with a cycle, a
+self-loop, a diamond, a broom, NULL endpoints, duplicate edges, a
+literal object and two components; both must equal a brute-force
+closure.  The walk arm's job count is pinned on a multi-chain graph.
 """
 
 from __future__ import annotations
@@ -164,3 +170,90 @@ def test_bounded_collect_at_and_around_bound(spark):
     assert sorted(dispatch.bounded_collect(typed, 3), key=repr) == sorted(
         (tuple(r) for r in typed.collect()), key=repr
     )
+
+
+CLOSURE_ROWS = [
+    # component 1: cycle c1 → c2 → c3 → c1, a self-loop on c3, and a
+    # diamond c3 → {d1, d2} → d3 ending in a literal
+    (X + "c1", P, X + "c2"),
+    (X + "c2", P, X + "c3"),
+    (X + "c3", P, X + "c1"),
+    (X + "c3", P, X + "c3"),
+    (X + "c3", P, X + "d1"),
+    (X + "c3", P, X + "d2"),
+    (X + "d1", P, X + "d3"),
+    (X + "d2", P, X + "d3"),
+    (X + "d3", P, LIT),
+    (X + "d1", P, X + "d3"),  # duplicate edge
+    # component 2: a broom — a 3-edge handle, 4 bristles at its end
+    *[(X + f"h{i}", P, X + f"h{i + 1}") for i in range(3)],
+    *[(X + "h3", P, X + f"b{i}") for i in range(4)],
+    (None, P, X + "h0"),     # NULL subject
+    (X + "h0", P, None),     # NULL object
+    (X + "c1", Q, X + "h0"),  # other predicate joins the components
+]
+
+
+def _brute_closure(edges):
+    """≥1-hop pairs of `edges` by repeated composition to a fixpoint."""
+    pairs = set(edges)
+    while True:
+        more = {(a, d) for a, b in pairs for c, d in edges if b == c} - pairs
+        if not more:
+            return pairs
+        pairs |= more
+
+
+@pytest.mark.parametrize("mod", ["+", "*"])
+def test_full_closure_walk_and_seminaive_agree(spark, monkeypatch, mod):
+    from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
+
+    g = spark.createDataFrame(
+        CLOSURE_ROWS, "subject string, predicate string, object string"
+    )
+    q = f"SELECT ?a ?b WHERE {{ ?a <{P}>{mod} ?b }}"
+
+    def run():
+        eng = SparqlEngine(g)
+        got = {(r.a, r.b) for r in eng.execute(q).collect()}
+        return got, eng.last_path_stats
+
+    walked, walk_stats = run()
+    with monkeypatch.context() as m:
+        m.setattr(dispatch, "DRIVER_MAX_EDGES", 0)
+        iterated, seminaive_stats = run()
+    assert walk_stats == {"mode": "walk"}
+    # round k finds the pairs k + 1 hops apart; the longest shortest
+    # path is c1 → c2 → c3 → d1 → d3 → LIT, so round 5 finds nothing
+    assert seminaive_stats == {"mode": "seminaive", "rounds": 5}
+    want = _brute_closure({(s, o) for s, p, o in CLOSURE_ROWS if p == P and s and o})
+    if mod == "*":
+        nodes = {t for s, _, o in CLOSURE_ROWS for t in (s, o)} - {None}
+        want |= {(n, n) for n in nodes}
+    assert walked == iterated == want
+
+
+def test_walk_arm_job_count(spark):
+    """25 chains of 19 hops: the walk arm's probe and its walk run at
+    most 4 jobs, however long the chains are (one round per hop would
+    be ~2 jobs each)."""
+    from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
+
+    rows = [
+        (X + f"n{c}_{i}", P, X + f"n{c}_{i + 1}")
+        for c in range(25)
+        for i in range(19)
+    ]
+    g = spark.createDataFrame(rows, "subject string, predicate string, object string")
+    eng = SparqlEngine(g)
+    q = f"SELECT ?a ?b WHERE {{ ?a <{P}>+ ?b }}"
+    sc = spark.sparkContext
+    sc.setJobGroup("walk-arm-jobs", "walk-arm-jobs")
+    try:
+        n = eng.execute(q).count()
+    finally:
+        sc.setJobGroup("idle", "idle")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("walk-arm-jobs"))
+    assert n == 25 * 19 * 20 // 2
+    assert eng.last_path_stats == {"mode": "walk"}
+    assert jobs <= 4, jobs

@@ -56,24 +56,6 @@ def test_funnel_report_counts_and_rates(spark):
     ]
 
 
-def test_funnel_max_gap_first_touch(spark, monkeypatch):
-    from rdf_knowledge_extractor_spark.operators import funnel
-
-    monkeypatch.setattr(funnel, "MAX_GAP_SECONDS", 50)
-    df = _ev(spark, [
-        (1, 0, "view"), (1, 10, "click"),
-        (2, 0, "view"), (2, 100, "click"),
-        # first-touch: the view@0 anchor makes click@100 too late even
-        # though view@90 would qualify
-        (3, 0, "view"), (3, 90, "view"), (3, 100, "click"),
-    ])
-    got = {
-        r.user_id: r.depth
-        for r in funnel_depths(df, ["view", "click"]).collect()
-    }
-    assert got == {1: 2, 2: 1, 3: 1}
-
-
 def test_cohort_retention_closed_form(spark):
     from rdf_knowledge_extractor_spark.operators.funnel import (
         cohort_retention,

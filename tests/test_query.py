@@ -667,6 +667,26 @@ def test_sparql_path_optional_mod(chain_graph):
     ]
 
 
+@pytest.mark.parametrize(
+    "pattern, var, want",
+    [
+        ("<urn:zzz> kg:next? ?v", "v", ["urn:zzz"]),
+        ("?v kg:next? <urn:zzz>", "v", ["urn:zzz"]),
+        ("?v kg:next? <urn:b>", "v", ["urn:a", "urn:b"]),
+        ("<urn:a> kg:next? <urn:a>", None, [1]),
+        ("<urn:a> kg:next? <urn:c>", None, []),
+    ],
+)
+def test_sparql_path_optional_mod_constant_endpoint(chain_graph, pattern, var, want):
+    # ZeroLengthPath with a term argument is unconditional (SPARQL 1.1
+    # §18.4): a constant endpoint binds the other end to itself even
+    # when it is not in the graph, as `p*` already does
+    q = f"""PREFIX kg: <{NS}>
+    SELECT {'?' + var if var else '*'} WHERE {{ {pattern} }}"""
+    rows = execute_sparql(chain_graph, q).collect()
+    assert sorted(r[0] for r in rows) == want
+
+
 def test_sparql_path_inverse_plus(chain_graph):
     # ^next+ : ancestors of c
     q = f"""PREFIX kg: <{NS}>
@@ -822,7 +842,9 @@ def two_chain_graph(spark):
     )
 
 
-def test_sparql_path_bound_subject_is_seeded_not_full_closure(two_chain_graph):
+def test_sparql_path_bound_subject_is_seeded_not_full_closure(
+    two_chain_graph, monkeypatch
+):
     from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
 
     eng = SparqlEngine(two_chain_graph)
@@ -831,51 +853,19 @@ def test_sparql_path_bound_subject_is_seeded_not_full_closure(two_chain_graph):
     assert sorted(r.b for r in eng.execute(q).collect()) == ["urn:b", "urn:c"]
     # seeded BFS from urn:a: frontiers {b}, {c}, {} -> 3 rounds,
     # bounded by the SHORT chain; the full closure's rounds follow the
-    # long chain's diameter (5 hops -> 4 doubling rounds), asserted below
+    # long chain's diameter (5 hops -> 5 semi-naive rounds), asserted
+    # below
     assert eng.last_path_stats == {"mode": "seeded", "rounds": 3}
 
     q_full = f"""PREFIX kg: <{NS}>
     SELECT ?a ?b WHERE {{ ?a kg:next+ ?b }}"""
-    eng.execute(q_full).count()
-    assert eng.last_path_stats["mode"] == "full"
-    assert eng.last_path_stats["doubling_rounds"] > 3
-    assert eng.last_path_stats["seminaive_rounds"] == 0
-
-
-def test_sparql_path_doubling_restart_reports_rounds_per_schedule(spark, monkeypatch):
-    """Broom graph (9-edge handle, 10 bristles at its end): with the
-    doubling guard patched low the full closure abandons doubling
-    after one round and restarts semi-naive.  Rows must equal the
-    unrestarted run, and the two schedules' rounds are reported
-    apart — the semi-naive count equals a pure semi-naive run's."""
-    from rdf_knowledge_extractor_spark.query import sparql
-
-    handle = [f"urn:h{i}" for i in range(10)]
-    rows = [(s, NS + "next", o) for s, o in zip(handle, handle[1:])]
-    rows += [(handle[-1], NS + "next", f"urn:b{i}") for i in range(10)]
-    g = spark.createDataFrame(rows, "subject string, predicate string, object string")
-    q = f"""PREFIX kg: <{NS}>
-    SELECT ?a ?b WHERE {{ ?a kg:next+ ?b }}"""
-
-    def run():
-        eng = sparql.SparqlEngine(g)
-        got = {(r.a, r.b) for r in eng.execute(q).collect()}
-        return got, eng.last_path_stats
-
-    doubled, doubled_stats = run()
-    assert len(doubled) == 45 + 10 * 10
-    assert doubled_stats == {"mode": "full", "doubling_rounds": 5, "seminaive_rounds": 0}
-
-    with monkeypatch.context() as m:
-        m.setattr("rdf_knowledge_extractor_spark.operators.dispatch.DRIVER_MAX_EDGES", 0)
-        seminaive, seminaive_stats = run()
-    assert seminaive == doubled
-    assert seminaive_stats == {"mode": "full", "doubling_rounds": 0, "seminaive_rounds": 10}
-
-    monkeypatch.setattr(sparql, "_DOUBLING_MAX_CLOSURE", 30)
-    restarted, restarted_stats = run()
-    assert restarted == doubled
-    assert restarted_stats == {"mode": "full", "doubling_rounds": 1, "seminaive_rounds": 10}
+    assert eng.execute(q_full).count() == 3 + 15
+    assert eng.last_path_stats == {"mode": "walk"}
+    monkeypatch.setattr(
+        "rdf_knowledge_extractor_spark.operators.dispatch.DRIVER_MAX_EDGES", 0
+    )
+    assert eng.execute(q_full).count() == 3 + 15
+    assert eng.last_path_stats == {"mode": "seminaive", "rounds": 5}
 
 
 def test_sparql_path_bound_object_seeds_reverse(two_chain_graph):
