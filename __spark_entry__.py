@@ -294,11 +294,11 @@ def q_kg_sparql_path_star(spark, sf):
     """SPARQL transitive path `*` (round-4 extension): zero-or-more
     hops over a deterministic doc-chain graph (lead() within
     source/20-doc buckets caps chain length).  The engine lowers the
-    var-var `*` to the full closure (query/sparql.py
-    _transitive_closure): at this size one bounded collect of the
+    var-var `*` to the full closure (operators/traversal.py
+    `closure`, unseeded): at this size one bounded collect of the
     edges, then a per-source BFS inside executor tasks; above the
-    shared driver bound the semi-naive frontier loop.  The oracle
-    recomputes the closure with DuckDB WITH RECURSIVE."""
+    shared driver bound the semi-naive loop.  The oracle recomputes
+    the closure with DuckDB WITH RECURSIVE."""
     from pyspark.sql import Window
 
     from rdf_knowledge_extractor_spark.query.sparql import execute_sparql
@@ -326,9 +326,10 @@ def q_kg_sparql_path_star(spark, sf):
 
 def q_kg_sparql_path_seeded(spark, sf):
     """Bound-endpoint transitive path (round-5, verdict brief #3):
-    `<d0> kg:nextDoc+ ?b` seeds the frontier at the constant
-    (query/sparql.py _seeded_closure — broadcast BFS over only the
-    reachable region) instead of computing the full closure and
+    `<d0> kg:nextDoc+ ?b` seeds the closure at the constant
+    (operators/traversal.py `closure` from the seed: a driver BFS
+    under the shared driver bound, a semi-naive loop from the seed's
+    edges above it) instead of computing the full closure and
     filtering; the oracle recomputes with DuckDB WITH RECURSIVE seeded
     from the same constant."""
     from pyspark.sql import Window

@@ -1,15 +1,16 @@
 """Size dispatch shared by the operators: two bounds, two width rules.
 
-`DRIVER_MAX_EDGES` — traversal, seeded property paths and connected
+`DRIVER_MAX_EDGES` — `traversal.closure`, the one closure operator
+(behind traversal and every SPARQL `p+`/`p*` path), and connected
 components each choose between a driver-side arm and a distributed
 loop by edge count, and entity linking by entity count and
-candidate-pair count.  The full var-var property-path closure makes
-the same choice; its small arm collects the edges but walks them in
-executor tasks, since its output (the closure) is not bounded by the
-node set.  Below the bound a whole edge list fits the driver
-comfortably (a few MB of node strings), and one collect replaces the
-distributed loops' ~2 jobs per round, which at this size ARE the cost.
-Above it the distributed arms run unchanged.
+candidate-pair count.  The closure's small arm walks a seed on the
+driver; without a seed it walks every source in executor tasks, since
+the full closure is not bounded by the node set.  Below the bound a
+whole edge list fits the driver comfortably (a few MB of node
+strings), and one collect replaces the distributed loops' ~2 jobs per
+round, which at this size ARE the cost.  Above it the distributed
+arms run unchanged.
 
 `MAX_BUCKET_SIZE` — blocking (`textdedup._bucket_candidate_pairs`, which
 the dedup families and entity linking's distributed arm call) expands a

@@ -1,4 +1,5 @@
-"""Graph traversal — `find_related_entities` as iterative frontier joins.
+"""Graph traversal — `closure`, the one transitive-closure operator,
+and `find_related_entities` on top of it.
 
 The reference walks a LIFO stack over the full triple Vec per hop
 (ref:src/knowledge_graph/mod.rs:201-232), following edges in BOTH
@@ -8,13 +9,14 @@ reference output are artifacts of the stack; the *set* of reachable
 entities (excluding the seed) is the meaningful result, which is what
 this operator returns.
 
-Spark shape: build the bidirectional edge list once, then walk it
-with `reachable`, the one hop-by-hop search in the package (the
-SPARQL engine's seeded `p+` paths call it too): a driver-side BFS for
-small edge lists, a broadcast-frontier loop above the shared size
-bound (operators/dispatch.py).  The BFS itself is `_walk`, which also
-serves the SPARQL engine's full `p+`/`p*` closure below that bound,
-one walk per source inside executor tasks.
+Spark shape: `closure` computes the pairs joined by 1..`max_hops`
+hops of an edge list, from one seed or from every source.  It serves
+`find_related_entities` (the bidirectional edge list, seeded) and the
+SPARQL engine's `p+`/`p*` paths (var-var paths unseeded, a constant
+endpoint seeded).  One size decision (operators/dispatch.py) picks
+its arm: below the shared bound the BFS `_walk`, on the driver for a
+seed and per source inside executor tasks without one; above it one
+semi-naive loop over (src, dst) pairs.
 
 Faithfulness notes (both reproduced):
 - reverse edges additionally require the *current* node to look
@@ -25,6 +27,8 @@ Faithfulness notes (both reproduced):
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,10 +48,9 @@ def _walk(
     adj: dict[str, list[str]], seed: str, max_hops: int | None
 ) -> tuple[set[str], int]:
     """(nodes reached from `seed` over 1..`max_hops` hops of `adj`,
-    rounds) — the level-synchronous BFS behind `reachable`'s driver arm
-    and the full property-path closure's walk arm.  Each round expands
-    the whole frontier; `rounds` counts expansions, including the one
-    that came back empty."""
+    rounds) — the level-synchronous BFS of `closure`'s walk arm.  Each
+    round expands the whole frontier; `rounds` counts expansions,
+    including the one that came back empty."""
     frontier: set[str] = {seed}
     reached: set[str] = set()
     rounds = 0
@@ -61,49 +64,94 @@ def _walk(
     return reached, rounds
 
 
-def reachable(
-    edges: DataFrame, seed: str, max_hops: int | None = None
-) -> tuple[DataFrame, int]:
-    """(DataFrame(node: string), rounds) — distinct nodes reached from
-    `seed` over 1..`max_hops` hops of the (src, dst) edge list
-    (unbounded when `max_hops` is None).  The seed is included iff a
-    cycle leads back to it.  `rounds` counts frontier expansions,
-    including the one that came back empty.  Edges with a NULL
-    endpoint are dropped on both arms, so NULL is never reached.
+def _walk_closure(
+    spark, adj: dict[str, list[str]], max_hops: int | None
+) -> DataFrame:
+    """(src, dst) pairs 1..`max_hops` hops apart in the adjacency
+    `adj`: a local relation of its distinct sources, each walked inside a
+    `mapInPandas` task; frames hold at most
+    `spark.sql.execution.arrow.maxRecordsPerBatch` rows."""
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
-    Size dispatch (operators/dispatch.py): an edge list of at most
-    DRIVER_MAX_EDGES rows comes back in one bounded collect and is
-    walked on the driver; a bigger one runs the distributed loop —
-    tiny broadcast frontier joined against the edges, anti-join on the
-    reached set, localCheckpoint per round.  Same frontier/reached
-    semantics and round count on both arms."""
+    def walk(frames):
+        import pandas as pd
+
+        pairs = (
+            (src, dst)
+            for frame in frames
+            for src in frame["src"]
+            for dst in _walk(adj, src, max_hops)[0]
+        )
+        while chunk := list(itertools.islice(pairs, batch)):
+            yield pd.DataFrame(chunk, columns=["src", "dst"])
+
+    sources = spark.createDataFrame([(s,) for s in adj], "src string")
+    return sources.mapInPandas(walk, "src string, dst string")
+
+
+def closure(
+    edges: DataFrame, seed: str | None = None, max_hops: int | None = None
+) -> tuple[DataFrame, dict]:
+    """(DataFrame(src, dst), stats) — the distinct pairs joined by
+    1..`max_hops` hops of the (src, dst) edge list (unbounded when
+    `max_hops` is None), from `seed` only when it is given.  A pair
+    (x, x) appears iff a cycle leads back to x.  Edges with a NULL
+    endpoint are dropped, so NULL is never reached.
+
+    `stats` is {"mode": "walk" | "seminaive", "rounds": n, "seed":
+    seed}: which arm ran and its hop expansions, counting the one that
+    came back empty; the unseeded walk has no rounds.
+
+    Size dispatch (operators/dispatch.py), one decision on the
+    NULL-free edges:
+
+    - at most DRIVER_MAX_EDGES: the walk arm.  The edges come back in
+      the decision's collect.  A seed is walked on the driver; without
+      one, executor tasks walk every distinct source and stream the
+      pairs out in Arrow-sized frames, so the driver never holds the
+      closure.  The walk's sets absorb duplicate edges, so this arm
+      runs no `distinct` (it cost graph_query's 2-hop traversal a
+      shuffle job).
+    - above it: semi-naive iteration over the distinct edges,
+      checkpointed once, from the one-hop pairs (those of the seed
+      only, when seeded).  Each round joins only the NEW pairs against
+      the edges and anti-joins out known pairs, until a fixed point or
+      `max_hops`; rounds are bounded by the graph diameter plus one.
+      Each round's new pairs are checkpointed eagerly, so the known
+      pairs stay a flat union of checkpoints: no round re-analyses a
+      nested-join lineage, the driver-side bottleneck
+      operators/components.py measured."""
+    edges = edges.select("src", "dst").where(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
     spark = edges.sparkSession
-    edges = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     rows = dispatch.bounded_collect(edges, dispatch.DRIVER_MAX_EDGES)
     if rows is not None:
-        reached_set, rounds = _walk(_adjacency(rows), seed, max_hops)
-        return (
-            spark.createDataFrame([(n,) for n in sorted(reached_set)], "node string"),
-            rounds,
+        if seed is None:
+            pairs = _walk_closure(spark, _adjacency(rows), max_hops)
+            return pairs, {"mode": "walk", "seed": None}
+        reached, rounds = _walk(_adjacency(rows), seed, max_hops)
+        pairs = spark.createDataFrame(
+            [(seed, n) for n in sorted(reached)], "src string, dst string"
         )
+        return pairs, {"mode": "walk", "rounds": rounds, "seed": seed}
 
-    rounds = 0
-    frontier = spark.createDataFrame([(seed,)], "src string")
-    reached = spark.createDataFrame([], "node string")
-    while max_hops is None or rounds < max_hops:
+    base = edges.distinct().localCheckpoint(eager=True)
+    hop = base.select(F.col("src").alias("_mid"), F.col("dst").alias("_nd"))
+    new = base if seed is None else base.where(F.col("src") == seed)
+    pairs = new
+    rounds = 1
+    while (max_hops is None or rounds < max_hops) and not new.isEmpty():
         rounds += 1
         new = (
-            edges.join(F.broadcast(frontier), on="src")
-            .select(F.col("dst").alias("node"))
+            new.join(hop, new["dst"] == hop["_mid"])
+            .select("src", F.col("_nd").alias("dst"))
             .distinct()
-            .join(reached, on="node", how="left_anti")
+            .join(pairs, on=["src", "dst"], how="left_anti")
             .localCheckpoint(eager=True)
         )
-        if new.isEmpty():
-            break
-        reached = reached.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select(F.col("node").alias("src"))
-    return reached, rounds
+        pairs = pairs.unionByName(new)
+    return pairs, {"mode": "seminaive", "rounds": rounds, "seed": seed}
 
 
 def find_related_entities(
@@ -124,7 +172,7 @@ def find_related_entities(
     # the reference's visited set starts with the seed; reaching it
     # again over a cycle adds nothing else (its neighbours were all
     # reached in round 1), so dropping it afterwards gives the same set
-    reached, _ = reachable(fwd.unionByName(rev), entity_uri, max_hops=max_depth)
-    return reached.where(F.col("node") != entity_uri).select(
-        F.col("node").alias("entity")
+    pairs, _ = closure(fwd.unionByName(rev), entity_uri, max_depth)
+    return pairs.where(F.col("dst") != entity_uri).select(
+        F.col("dst").alias("entity")
     )

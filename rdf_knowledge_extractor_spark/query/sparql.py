@@ -20,9 +20,9 @@ Two engines:
    COUNT/SUM/MIN/MAX/AVG/GROUP_CONCAT(…; SEPARATOR="…")/SAMPLE
    with GROUP BY + HAVING (GROUP_CONCAT sorts values for determinism;
    SAMPLE is min()), ORDER BY (ASC|DESC)(?v), LIMIT n, OFFSET n,
-   property paths: modifiers +/*/? (transitive closure: a per-source
-   walk in executor tasks under the shared driver bound, a semi-naive
-   frontier loop above it; a constant endpoint seeds a BFS instead),
+   property paths: modifiers +/*/? (transitive closure by
+   operators/traversal.py `closure`: a walk under the shared driver
+   bound, a semi-naive loop above it; a constant endpoint seeds it),
    sequence `/`, alternative `|`, inverse `^`, and
    negated property sets !iri / !(iri|…) (forward members only),
    BIND(expr AS ?v), VALUES ?v { … } / (?a ?b) { … }
@@ -43,19 +43,13 @@ Two engines:
 
 from __future__ import annotations
 
-import itertools
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf_knowledge_extractor_spark.operators import dispatch
-from rdf_knowledge_extractor_spark.operators.traversal import (
-    _adjacency,
-    _walk,
-    reachable,
-)
+from rdf_knowledge_extractor_spark.operators.traversal import closure
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -141,36 +135,20 @@ def _tokenize(text: str) -> list[str]:
     return toks
 
 
-def _walk_closure(spark, adj: dict[str, list[str]]) -> DataFrame:
-    """(_src, _dst) ≥1-hop closure of the adjacency `adj`: a local
-    relation of its distinct sources, each walked inside a
-    `mapInPandas` task; frames hold at most
-    `spark.sql.execution.arrow.maxRecordsPerBatch` rows."""
-    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-
-    def walk(frames):
-        import pandas as pd
-
-        pairs = (
-            (src, dst)
-            for frame in frames
-            for src in frame["_src"]
-            for dst in _walk(adj, src, None)[0]
-        )
-        while chunk := list(itertools.islice(pairs, batch)):
-            yield pd.DataFrame(chunk, columns=["_src", "_dst"])
-
-    sources = spark.createDataFrame([(s,) for s in adj], "_src string")
-    return sources.mapInPandas(walk, "_src string, _dst string")
+def _swap(pairs: DataFrame) -> DataFrame:
+    """(src, dst) pairs with their endpoints exchanged."""
+    return pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
 
 class SparqlEngine:
     def __init__(self, graph: DataFrame):
         self.graph = graph
-        #: diagnostics of the most recent transitive-path evaluation:
-        #: {"mode": "seeded" | "seminaive", "rounds": int} or
-        #: {"mode": "walk"} — lets tests assert which arm ran, and that
-        #: a bound-endpoint path never computed the full closure
+        #: the stats of the most recent transitive path's
+        #: `traversal.closure` (the one closure operator): {"mode":
+        #: "walk" | "seminaive", "rounds": n, "seed": constant | None},
+        #: no rounds for an unseeded walk — lets tests assert which arm
+        #: ran, and that a bound-endpoint path never computed the full
+        #: closure
         self.last_path_stats: dict | None = None
 
     # -- parsing -----------------------------------------------------
@@ -686,7 +664,7 @@ class SparqlEngine:
 
     # -- compilation ---------------------------------------------------
     def _path_df(self, node) -> DataFrame:
-        """Property path → (_src, _dst) endpoint pairs.  Spark-first:
+        """Property path → (src, dst) endpoint pairs.  Spark-first:
         sequence = equi-join chain on the intermediate node, inverse =
         column swap, alternative = bag union — Catalyst reorders the
         joins and pushes the predicate constants into each scan."""
@@ -694,7 +672,7 @@ class SparqlEngine:
             if node.startswith("?") or node.startswith("\0LIT"):
                 raise SparqlError("property path elements must be IRIs")
             return self.graph.filter(F.col("predicate") == node).select(
-                F.col("subject").alias("_src"), F.col("object").alias("_dst")
+                F.col("subject").alias("src"), F.col("object").alias("dst")
             )
         kind = node[0]
         if kind == "pneg":
@@ -702,20 +680,17 @@ class SparqlEngine:
             # a NOT IN filter pushed into the scan, never a join.
             return self.graph.filter(
                 ~F.col("predicate").isin(*node[1])
-            ).select(F.col("subject").alias("_src"), F.col("object").alias("_dst"))
+            ).select(F.col("subject").alias("src"), F.col("object").alias("dst"))
         if kind == "pinv":
-            d = self._path_df(node[1])
-            return d.select(
-                F.col("_dst").alias("_src"), F.col("_src").alias("_dst")
-            )
+            return _swap(self._path_df(node[1]))
         if kind == "pseq":
             cur = self._path_df(node[1][0])
             for elt in node[1][1:]:
                 nxt = self._path_df(elt).select(
-                    F.col("_src").alias("_mid"), F.col("_dst").alias("_nd")
+                    F.col("src").alias("_mid"), F.col("dst").alias("_nd")
                 )
-                cur = cur.join(nxt, F.col("_dst") == F.col("_mid")).select(
-                    "_src", F.col("_nd").alias("_dst")
+                cur = cur.join(nxt, F.col("dst") == F.col("_mid")).select(
+                    "src", F.col("_nd").alias("dst")
                 )
             return cur
         if kind == "palt":
@@ -725,14 +700,20 @@ class SparqlEngine:
                 out = out.unionByName(p2)
             return out
         if kind == "pplus":
-            return self._transitive_closure(self._path_df(node[1]))
+            return self._closure(self._path_df(node[1]), None)
         if kind == "pstar":
-            return self._transitive_closure(self._path_df(node[1])).unionByName(
+            return self._closure(self._path_df(node[1]), None).unionByName(
                 self._graph_nodes()
             ).distinct()
         if kind == "popt":
             return self._path_df(node[1]).unionByName(self._graph_nodes()).distinct()
         raise SparqlError(f"bad path node {node!r}")
+
+    def _closure(self, edges: DataFrame, seed: str | None) -> DataFrame:
+        """`traversal.closure` of the path's (src, dst) pairs, recording
+        its stats as `last_path_stats`."""
+        pairs, self.last_path_stats = closure(edges, seed)
+        return pairs
 
     def _graph_nodes(self) -> DataFrame:
         """Zero-length path endpoints: every term appearing as subject
@@ -745,86 +726,7 @@ class SparqlEngine:
             .where(F.col("_n").isNotNull())
             .distinct()
         )
-        return nodes.select(F.col("_n").alias("_src"), F.col("_n").alias("_dst"))
-
-    def _transitive_closure(self, edges: DataFrame) -> DataFrame:
-        """Distinct (src, dst) pairs connected by ≥1 edge hops, for a
-        path whose endpoints are BOTH variables (a bound endpoint
-        routes to `_seeded_closure`: O(reachable-from-seed) instead of
-        O(closure)).
-
-        Size dispatch (operators/dispatch.py), one decision on the
-        distinct edges:
-
-        - at most DRIVER_MAX_EDGES: the walk arm.  The edges come back
-          in the decision's collect; executor tasks walk every distinct
-          source with the BFS `reachable` runs on the driver
-          (traversal._walk) and stream the pairs out in Arrow-sized
-          frames.  Each source scans only what it reaches, and the
-          driver never holds the closure, so its size needs no guard.
-        - above it: semi-naive iteration.  Each round joins the NEW
-          frontier (not the whole closure) against the base edges and
-          anti-joins out known pairs, until a fixed point; rounds are
-          bounded by the graph diameter.  localCheckpoint(eager) every
-          round truncates the nested-join lineage that would otherwise
-          make driver-side re-analysis the bottleneck (same shape as
-          operators/components.py)."""
-        # NULL endpoints are dropped up front: an RDF term is never
-        # NULL, a NULL never joins forward anyway, and keeping them
-        # let base/closure rows surface spurious NULL bindings (the
-        # two arms would also diverge on them).  The checkpoint is
-        # lazy: the size probe's collect fills it (as in
-        # linking.link_entities), and only the semi-naive arm reads it
-        # again.
-        base = (
-            edges.select("_src", "_dst")
-            .filter(F.col("_src").isNotNull() & F.col("_dst").isNotNull())
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        rows = dispatch.bounded_collect(base, dispatch.DRIVER_MAX_EDGES)
-        if rows is not None:
-            self.last_path_stats = {"mode": "walk"}
-            return _walk_closure(base.sparkSession, _adjacency(rows))
-        closure = base
-        frontier = base
-        hop = base.select(
-            F.col("_src").alias("_mid"), F.col("_dst").alias("_nd")
-        )
-        rounds = 0
-        while True:
-            nxt = (
-                frontier.join(hop, frontier["_dst"] == hop["_mid"])
-                .select("_src", F.col("_nd").alias("_dst"))
-                .distinct()
-            )
-            new = nxt.join(closure, on=["_src", "_dst"], how="left_anti")
-            new = new.localCheckpoint(eager=True)
-            rounds += 1
-            if new.isEmpty():
-                self.last_path_stats = {"mode": "seminaive", "rounds": rounds}
-                return closure
-            closure = closure.unionByName(new).localCheckpoint(eager=True)
-            frontier = new
-
-    def _seeded_closure(self, edges: DataFrame, seed: str, forward: bool) -> DataFrame:
-        """(_src, _dst) pairs of the ≥1-hop closure restricted to one
-        CONSTANT endpoint — `reachable` (operators/traversal.py) from
-        the seed over only the reachable region.  `forward=True`
-        evaluates `<seed> p+ ?y` (rows (seed, y)); `forward=False`
-        evaluates `?x p+ <seed>` by walking the transposed edges (rows
-        (x, seed)).  Never materializes pairs outside the seed's
-        reachable set — the round-4 brief #3 scale fix."""
-        e = (
-            edges.select(F.col("_src").alias("src"), F.col("_dst").alias("dst"))
-            if forward
-            else edges.select(F.col("_dst").alias("src"), F.col("_src").alias("dst"))
-        ).distinct().localCheckpoint(eager=True)
-        reached, rounds = reachable(e, seed)
-        self.last_path_stats = {"mode": "seeded", "rounds": rounds}
-        if forward:
-            return reached.select(F.lit(seed).alias("_src"), F.col("node").alias("_dst"))
-        return reached.select(F.col("node").alias("_src"), F.lit(seed).alias("_dst"))
+        return nodes.select(F.col("_n").alias("src"), F.col("_n").alias("dst"))
 
     @staticmethod
     def _term_value(term: str) -> str | None:
@@ -840,27 +742,30 @@ class SparqlEngine:
         if kind in ("pplus", "pstar", "popt") and (
             s_val is not None or o_val is not None
         ):
-            # bound-endpoint modified path: seed the frontier at the
+            # bound-endpoint modified path: seed the closure at the
             # constant instead of computing the full closure and
-            # filtering (round-4 brief #3); `?` is one hop.  When both
-            # ends are bound, seed from the subject; the constant-object
-            # filter in `_bind_terms` still applies.
-            inner = self._path_df(p.p[1])
+            # filtering; `?` is one hop.  A constant object seeds the
+            # closure of the transposed edges.  When both ends are
+            # bound, seed from the subject; the constant-object filter
+            # in `_bind_terms` still applies.
             forward = s_val is not None
             seed = s_val if forward else o_val
-            df = inner if kind == "popt" else self._seeded_closure(inner, seed, forward)
+            df = self._path_df(p.p[1])
+            if kind != "popt":
+                df = self._closure(df if forward else _swap(df), seed)
+                df = df if forward else _swap(df)
             if kind != "pplus":
                 # zero-length path at a constant endpoint binds the
                 # other end to the constant itself (SPARQL 1.1 §18.4
                 # ZeroLengthPath with a term argument — unconditional,
                 # no graph-membership test)
                 zero = df.sparkSession.createDataFrame(
-                    [(seed, seed)], "_src string, _dst string"
+                    [(seed, seed)], "src string, dst string"
                 )
                 df = df.unionByName(zero).distinct()
         else:
             df = self._path_df(p.p)
-        return self._bind_terms(df, ((p.s, "_src"), (p.o, "_dst")))
+        return self._bind_terms(df, ((p.s, "src"), (p.o, "dst")))
 
     def _compile_pattern(self, p: _Pattern) -> tuple[DataFrame, set[str]]:
         if isinstance(p.p, tuple):  # property path in predicate position

@@ -1,17 +1,20 @@
 """Both arms behind operators/dispatch.py agree on hostile inputs.
 
-`reachable` and its two callers — `find_related_entities` and the
-SPARQL engine's seeded `p+` paths — run once with the default
-`DRIVER_MAX_EDGES` (driver BFS) and once per forced bound at and
-around the edge count, down to 0 (distributed frontier loop).  The
-graph has a cycle back to the seed, a self-loop, NULL endpoints, a
-literal object and an edge under another predicate.
+`traversal.closure`, the one closure operator, and its callers —
+`find_related_entities` and the SPARQL engine's seeded `p+` paths —
+run once with the default `DRIVER_MAX_EDGES` (walk arm) and once per
+forced bound at and around the edge count, down to 0 (semi-naive
+loop).  The graph has a cycle back to the seed, a self-loop, NULL
+endpoints, a literal object and an edge under another predicate; the
+hostile seeds are a node outside the graph and a literal with no
+out-edges.
 
 The full var-var `p+`/`p*` closure runs its walk arm at the default
 bound and its semi-naive loop at 0, over a graph with a cycle, a
 self-loop, a diamond, a broom, NULL endpoints, duplicate edges, a
 literal object and two components; both must equal a brute-force
-closure.  The walk arm's job count is pinned on a multi-chain graph.
+closure.  The walk arm's job count is pinned on a multi-chain graph,
+for the full closure and for a seeded path.
 """
 
 from __future__ import annotations
@@ -69,12 +72,12 @@ def _arms(monkeypatch, run):
     return out
 
 
-@pytest.mark.parametrize("max_hops", [1, 2, None])
-@pytest.mark.parametrize("forward", [True, False])
-def test_reachable_arms_agree(spark, graph, monkeypatch, forward, max_hops):
+def _closure_arms(spark, graph, monkeypatch, seed, forward, max_hops):
+    """{bound: ((reached nodes, rounds, seed), took the walk arm)} of
+    `closure` from `seed` over the P edges, forward or transposed."""
     from pyspark.sql import functions as F
 
-    from rdf_knowledge_extractor_spark.operators.traversal import reachable
+    from rdf_knowledge_extractor_spark.operators.traversal import closure
 
     s, o = F.col("subject"), F.col("object")
     p_edges = graph.where(F.col("predicate") == P)
@@ -83,12 +86,23 @@ def test_reachable_arms_agree(spark, graph, monkeypatch, forward, max_hops):
     )
 
     def run():
-        reached, rounds = reachable(edges, X + "a", max_hops=max_hops)
-        return frozenset(r.node for r in reached.collect()), rounds
+        pairs, stats = closure(edges, seed, max_hops)
+        rows = pairs.collect()
+        assert {r.src for r in rows} <= {seed}
+        return frozenset(r.dst for r in rows), stats["rounds"], stats["seed"]
 
     got = _arms(monkeypatch, run)
     assert got[dispatch.DRIVER_MAX_EDGES][1] and got[N_P_EDGES][1]
     assert not got[N_P_EDGES - 1][1] and not got[0][1]
+    return got
+
+
+@pytest.mark.parametrize("max_hops", [1, 2, None])
+@pytest.mark.parametrize("forward", [True, False])
+def test_reachable_arms_agree(spark, graph, monkeypatch, forward, max_hops):
+    """The seeded `closure`: both arms reach the same nodes in the
+    same rounds."""
+    got = _closure_arms(spark, graph, monkeypatch, X + "a", forward, max_hops)
     results = {res for res, _ in got.values()}
     assert len(results) == 1, got
     want = {
@@ -100,9 +114,19 @@ def test_reachable_arms_agree(spark, graph, monkeypatch, forward, max_hops):
         (False, 2): ({"c", "e", "b"}, 2),
         (False, None): ({"c", "e", "b", "a"}, 4),
     }[(forward, max_hops)]
-    nodes, rounds = results.pop()
+    nodes, rounds, seed = results.pop()
     assert nodes == {n if n == LIT else X + n for n in want[0]}
     assert rounds == want[1]
+    assert seed == X + "a"
+
+
+@pytest.mark.parametrize("max_hops", [1, None])
+@pytest.mark.parametrize("seed", [X + "nowhere", LIT])
+def test_closure_hostile_seeds_arms_agree(spark, graph, monkeypatch, seed, max_hops):
+    """A seed outside the graph and a literal with no out-edges: both
+    arms reach nothing, after the one empty expansion."""
+    got = _closure_arms(spark, graph, monkeypatch, seed, True, max_hops)
+    assert {res for res, _ in got.values()} == {(frozenset(), 1, seed)}
 
 
 @pytest.mark.parametrize("max_depth", [1, 2, 10])
@@ -222,15 +246,20 @@ def test_full_closure_walk_and_seminaive_agree(spark, monkeypatch, mod):
     with monkeypatch.context() as m:
         m.setattr(dispatch, "DRIVER_MAX_EDGES", 0)
         iterated, seminaive_stats = run()
-    assert walk_stats == {"mode": "walk"}
-    # round k finds the pairs k + 1 hops apart; the longest shortest
-    # path is c1 → c2 → c3 → d1 → d3 → LIT, so round 5 finds nothing
-    assert seminaive_stats == {"mode": "seminaive", "rounds": 5}
+    assert walk_stats == {"mode": "walk", "seed": None}
+    # round k finds the pairs k hops apart; the longest shortest path
+    # is c1 → c2 → c3 → d1 → d3 → LIT, so round 6 finds nothing
+    assert seminaive_stats == {"mode": "seminaive", "rounds": 6, "seed": None}
     want = _brute_closure({(s, o) for s, p, o in CLOSURE_ROWS if p == P and s and o})
     if mod == "*":
         nodes = {t for s, _, o in CLOSURE_ROWS for t in (s, o)} - {None}
         want |= {(n, n) for n in nodes}
     assert walked == iterated == want
+
+
+CHAIN_ROWS = [
+    (X + f"n{c}_{i}", P, X + f"n{c}_{i + 1}") for c in range(25) for i in range(19)
+]
 
 
 def test_walk_arm_job_count(spark):
@@ -239,12 +268,7 @@ def test_walk_arm_job_count(spark):
     be ~2 jobs each)."""
     from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
 
-    rows = [
-        (X + f"n{c}_{i}", P, X + f"n{c}_{i + 1}")
-        for c in range(25)
-        for i in range(19)
-    ]
-    g = spark.createDataFrame(rows, "subject string, predicate string, object string")
+    g = spark.createDataFrame(CHAIN_ROWS, "subject string, predicate string, object string")
     eng = SparqlEngine(g)
     q = f"SELECT ?a ?b WHERE {{ ?a <{P}>+ ?b }}"
     sc = spark.sparkContext
@@ -255,5 +279,26 @@ def test_walk_arm_job_count(spark):
         sc.setJobGroup("idle", "idle")
     jobs = len(sc.statusTracker().getJobIdsForGroup("walk-arm-jobs"))
     assert n == 25 * 19 * 20 // 2
-    assert eng.last_path_stats == {"mode": "walk"}
+    assert eng.last_path_stats == {"mode": "walk", "seed": None}
     assert jobs <= 4, jobs
+
+
+def test_seeded_walk_arm_job_count(spark):
+    """A seeded path `<seed> p+ ?b` on the same chains compiles and
+    collects in at most 3 jobs: one collect decides the size and
+    fetches the edges, and the walk runs on the driver."""
+    from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
+
+    g = spark.createDataFrame(CHAIN_ROWS, "subject string, predicate string, object string")
+    eng = SparqlEngine(g)
+    q = f"SELECT ?b WHERE {{ <{X}n0_0> <{P}>+ ?b }}"
+    sc = spark.sparkContext
+    sc.setJobGroup("seeded-walk-jobs", "seeded-walk-jobs")
+    try:
+        got = {r.b for r in eng.execute(q).collect()}
+    finally:
+        sc.setJobGroup("idle", "idle")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("seeded-walk-jobs"))
+    assert got == {X + f"n0_{i}" for i in range(1, 20)}
+    assert eng.last_path_stats == {"mode": "walk", "rounds": 20, "seed": X + "n0_0"}
+    assert jobs <= 3, jobs

@@ -851,21 +851,21 @@ def test_sparql_path_bound_subject_is_seeded_not_full_closure(
     q = f"""PREFIX kg: <{NS}>
     SELECT ?b WHERE {{ <urn:a> kg:next+ ?b }}"""
     assert sorted(r.b for r in eng.execute(q).collect()) == ["urn:b", "urn:c"]
-    # seeded BFS from urn:a: frontiers {b}, {c}, {} -> 3 rounds,
+    # seeded walk from urn:a: frontiers {b}, {c}, {} -> 3 rounds,
     # bounded by the SHORT chain; the full closure's rounds follow the
-    # long chain's diameter (5 hops -> 5 semi-naive rounds), asserted
+    # long chain's diameter (5 hops, then the empty 6th), asserted
     # below
-    assert eng.last_path_stats == {"mode": "seeded", "rounds": 3}
+    assert eng.last_path_stats == {"mode": "walk", "rounds": 3, "seed": "urn:a"}
 
     q_full = f"""PREFIX kg: <{NS}>
     SELECT ?a ?b WHERE {{ ?a kg:next+ ?b }}"""
     assert eng.execute(q_full).count() == 3 + 15
-    assert eng.last_path_stats == {"mode": "walk"}
+    assert eng.last_path_stats == {"mode": "walk", "seed": None}
     monkeypatch.setattr(
         "rdf_knowledge_extractor_spark.operators.dispatch.DRIVER_MAX_EDGES", 0
     )
     assert eng.execute(q_full).count() == 3 + 15
-    assert eng.last_path_stats == {"mode": "seminaive", "rounds": 5}
+    assert eng.last_path_stats == {"mode": "seminaive", "rounds": 6, "seed": None}
 
 
 def test_sparql_path_bound_object_seeds_reverse(two_chain_graph):
@@ -875,7 +875,7 @@ def test_sparql_path_bound_object_seeds_reverse(two_chain_graph):
     q = f"""PREFIX kg: <{NS}>
     SELECT ?a WHERE {{ ?a kg:next+ <urn:g> }}"""
     assert sorted(r.a for r in eng.execute(q).collect()) == ["urn:e", "urn:f"]
-    assert eng.last_path_stats["mode"] == "seeded"
+    assert eng.last_path_stats["seed"] == "urn:g"
 
 
 def test_sparql_path_star_bound_subject_includes_seed(two_chain_graph):
@@ -885,7 +885,7 @@ def test_sparql_path_star_bound_subject_includes_seed(two_chain_graph):
     q = f"""PREFIX kg: <{NS}>
     SELECT ?b WHERE {{ <urn:b> kg:next* ?b }}"""
     assert sorted(r.b for r in eng.execute(q).collect()) == ["urn:b", "urn:c"]
-    assert eng.last_path_stats["mode"] == "seeded"
+    assert eng.last_path_stats["seed"] == "urn:b"
 
 
 def test_sparql_path_both_endpoints_bound(two_chain_graph):

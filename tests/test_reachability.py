@@ -15,6 +15,10 @@ its position, or through `*args`/`**kwargs`) fails
 `test_every_option_has_a_production_setter`.  Calls match by name and
 a constructor by its class's name, so a call sets the option of every
 def that shares its name: the scan can miss an unset option.
+
+A package module that imports another package module's
+underscore-prefixed name fails `test_no_private_imports_across_modules`,
+unless `SHARED_PRIVATE` lists the import with a reason.
 """
 
 from __future__ import annotations
@@ -261,3 +265,50 @@ def test_kept_options_need_the_list():
     fails here."""
     flagged = set(_unset_options(kept_options={}))
     assert set(KEPT_OPTIONS) <= flagged, sorted(set(KEPT_OPTIONS) - flagged)
+
+
+# Underscore-prefixed names one package module imports from another,
+# kept on purpose: "importer:source:name" → reason.
+SHARED_PRIVATE = {
+    "operators/linking:operators/textdedup:_bucket_candidate_pairs": "linking's distributed arm blocks with the dedup families' one blocking step",
+    "operators/linking:operators/textdedup:_prefix_len": "linking's PPJoin prefix is the one exact prefix length",
+    "operators/linking:operators/textdedup:_verified_pairs": "linking verifies with the one Jaccard verifier",
+    "streaming/neardup:operators/textdedup:_minhash_band_udf": "the streaming filter bands with the batch MinHash sketch",
+    "streaming/neardup:operators/textdedup:_verified_pairs": "the streaming filter verifies with the one Jaccard verifier",
+    "streaming/neardup:operators/textdedup:_with_hashed_shingles": "the streaming filter shingles as the batch families do",
+    "functions/extract:functions/html_text:_decode": "fused extraction decodes page bytes as the text stage does",
+    "operators/splits:operators/curation:_hash_hex8": "splits and sampling share one hash family",
+}
+
+
+def _private_imports() -> set[str]:
+    """"importer:source:name" of every underscore-prefixed (not dunder)
+    name a package module imports from another package module."""
+    found = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        mod = path.relative_to(PACKAGE).with_suffix("").as_posix()
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(n, ast.ImportFrom) and n.module):
+                continue
+            if n.level:
+                base = mod.split("/")[: -n.level]
+                src = "/".join([*base, *n.module.split(".")])
+            elif n.module.startswith(PACKAGE.name + "."):
+                src = n.module[len(PACKAGE.name) + 1:].replace(".", "/")
+            else:
+                continue
+            found |= {
+                f"{mod}:{src}:{a.name}"
+                for a in n.names
+                if a.name.startswith("_") and not a.name.startswith("__") and src != mod
+            }
+    return found
+
+
+def test_no_private_imports_across_modules():
+    """A module's underscore-prefixed names are its own: another package
+    module imports one only with a `SHARED_PRIVATE` entry, and every
+    entry still names an import."""
+    found = _private_imports()
+    assert found <= set(SHARED_PRIVATE), sorted(found - set(SHARED_PRIVATE))
+    assert set(SHARED_PRIVATE) <= found, sorted(set(SHARED_PRIVATE) - found)
