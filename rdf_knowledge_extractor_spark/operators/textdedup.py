@@ -359,14 +359,13 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     k: int = 9,
     threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
 ):
     """MinHash-LSH candidates verified with exact Jaccard ≥ threshold.
 
-    16 bands × 4 rows: candidate probability J⁴ per band — background
-    pairs at J≈0.1 collide with p≈1.6e-3 total (so the verify join
-    stays tiny) while true near-dups at J ≥ 0.85 are caught with
+    64 permutations in 16 bands × 4 rows: candidate probability J⁴
+    per band — background pairs at J≈0.1 collide with p≈1.6e-3 total
+    (so the verify join stays tiny) while true near-dups at J ≥ 0.85
+    are caught with
     p = 1-(1-J⁴)^16 ≥ 0.9998; at the J ≥ 0.9 typical of real web
     near-dups, miss probability < 1e-7.  The verified output therefore
     equals the exact pairwise answer without materializing O(n²).
@@ -392,7 +391,7 @@ def minhash_lsh_pairs(
     sh = _with_hashed_shingles(spread(docs), id_col, text_col, k).localCheckpoint(
         eager=False
     )
-    bands_of = _minhash_band_udf(num_perm, bands)
+    bands_of = _minhash_band_udf(num_perm=64, bands=16)
     # candidate generation: ONE shuffle (groupBy band key) + in-array
     # pair combinations, instead of the former window-count + banded
     # self-join that shuffled the table and probed the persisted copy

@@ -15,10 +15,12 @@ Extraction is the fused `extract_triples_stage(…, html_col="html")`:
 html crosses into Python once and only triple rows come back.  Each
 stage materializes to a checkpoint table (parquet here; an Iceberg
 table in production — this repo targets the sandbox where Iceberg jars
-aren't available).  A `_MANIFEST.json` per stage records row count,
-wall-clock, partition count and a params fingerprint, and is written
-atomically (temporary file + `os.replace`); `run` skips any stage whose
-manifest matches the fingerprint.  Per-partition metrics (rows per
+aren't available).  A `_MANIFEST.json` per stage names the stage's
+data dir and records row count, wall-clock, partition count and a
+params fingerprint.  Each run writes a fresh data dir, then replaces
+the manifest atomically (temporary file + `os.replace`), so a manifest
+only ever vouches for the rows its own run wrote; `run` skips any stage
+whose manifest matches the fingerprint.  Per-partition metrics (rows per
 partition id) come from a partition-id aggregation and are stored in
 the manifest.
 """
@@ -27,7 +29,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+import shutil
 import time
+import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -117,12 +121,17 @@ class KgPipeline:
     def _manifest_path(self, stage: str) -> Path:
         return self.base / stage / "_MANIFEST.json"
 
-    def _load_if_done(self, stage: str, fp: str) -> DataFrame | None:
+    def _manifest(self, stage: str) -> dict | None:
         mp = self._manifest_path(stage)
-        if mp.exists():
-            manifest = json.loads(mp.read_text())
-            if manifest.get("fingerprint") == fp:
-                return self.spark.read.parquet(str(self.base / stage / "data"))
+        return json.loads(mp.read_text()) if mp.exists() else None
+
+    def _data_path(self, manifest: dict) -> str:
+        return str(self.base / manifest["stage"] / manifest["data"])
+
+    def _load_if_done(self, stage: str, fp: str) -> DataFrame | None:
+        manifest = self._manifest(stage)
+        if manifest and manifest.get("fingerprint") == fp and "data" in manifest:
+            return self.spark.read.parquet(self._data_path(manifest))
         return None
 
     def _run_stage(self, stage: str, params: dict, build) -> DataFrame:
@@ -133,8 +142,12 @@ class KgPipeline:
             return cached
         t0 = time.monotonic()
         df: DataFrame = build()
-        out = str(self.base / stage / "data")
-        df.write.mode("overwrite").parquet(out)
+        # a fresh dir per run, named by the manifest: the manifest on
+        # disk keeps vouching for the data it names until the swap, so
+        # a crash in between can never pair it with another run's rows
+        data = f"data-{uuid.uuid4().hex[:8]}"
+        out = str(self.base / stage / data)
+        df.write.parquet(out)
         persisted = self.spark.read.parquet(out)
         # per-partition lineage: rows per physical partition of the output
         part_rows = (
@@ -147,6 +160,7 @@ class KgPipeline:
         manifest = {
             "stage": stage,
             "fingerprint": fp,
+            "data": data,
             "rows": rows,
             "seconds": elapsed,
             "partitions": len(part_rows),
@@ -155,6 +169,10 @@ class KgPipeline:
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         write_json_atomic(self._manifest_path(stage), manifest)
+        # the superseded dir, and any a crashed run left, is unreachable now
+        for old in (self.base / stage).glob("data*"):
+            if old.name != data:
+                shutil.rmtree(old)
         self.results.append(StageResult(stage, rows, elapsed, len(part_rows), False))
         return persisted
 
@@ -213,7 +231,7 @@ class KgPipeline:
         return TripleStore(self.spark, store_root).insert_if_absent(graph, bid)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(str(self.base / "s3_lineage" / "data"))
+        return self.spark.read.parquet(self._data_path(self._manifest("s3_lineage")))
 
     def stage_manifests(self) -> list[dict]:
         out = []

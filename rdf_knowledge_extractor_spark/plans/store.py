@@ -23,12 +23,17 @@ semantics hold under failure and retry WITHOUT Iceberg jars:
   aborts if another writer advanced the version (the reference is
   single-writer; we fail loudly instead of corrupting).
 
-The COMPUTE is `dedup.insert_new_triples`, the same insert-if-absent
-the CLI runs: batch first-occurrence dedup, then a left ANTI join
-against the committed graph (AQE picks broadcast vs SMJ) — only the
-COMMIT is this module's.  Scale: the manifest holds file paths +
-counts (O(batches)), not rows; data stays partitioned parquet exactly
-as an Iceberg table's data layer would.
+`commit(rows, batch_id, version)` is the one commit step: fresh file
+set, footer row count, manifest swap.  Every writer goes through it:
+`insert_if_absent` commits the rows `dedup.insert_new_triples` (the
+same insert-if-absent the CLI runs: batch first-occurrence dedup, then
+a left ANTI join against the committed graph) computes, and the
+streaming near-dup filter (streaming/neardup.py) commits its admitted
+set the same way.  Nothing but `insert_if_absent` assumes the triple
+schema: `read`, `commit`, `compact` and `vacuum` serve any table.
+Scale: the manifest holds file paths + counts (O(batches)), not rows;
+data stays partitioned parquet exactly as an Iceberg table's data
+layer would.
 
 Reads reuse one relation per manifest version: `read()` re-reads the
 manifest on every call (so another writer's commit is visible on the
@@ -42,6 +47,7 @@ are immutable, every commit and compaction bumps the version, and
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import json
 import os
 import shutil
@@ -145,17 +151,20 @@ class TripleStore:
     def batch_ids(self) -> list[str]:
         return sorted(self._read_manifest()["batches"])
 
-    # -- the transactional insert --------------------------------------
-    def insert_if_absent(
-        self,
-        batch: DataFrame,
-        batch_id: str,
-        dedup_batch: bool = True,
-    ) -> int:
-        """Exactly-once insert-if-absent; returns the added-row count
-        (the reference's `add_triples` return,
-        ref:src/knowledge_graph/mod.rs:91-114).
+    def version(self) -> int:
+        """The manifest version: a writer that computes its rows from
+        `read()` takes it first and hands it to `commit`."""
+        return self._read_manifest()["version"]
 
+    # -- the commit ------------------------------------------------------
+    def commit(self, rows: DataFrame, batch_id: str, version: int) -> int:
+        """The store's one commit step; returns the committed row count.
+
+        Writes `rows` as a fresh file set, counts them from the parquet
+        footers and swaps in a manifest that adds the set under
+        `batch_id`.  `version` is the manifest version the caller read
+        before computing `rows`; if another writer committed since, the
+        swap raises `CommitConflict` and the batch must be retried.
         Retry-safe at every point:
         - already-committed batch_id → no-op, returns the original count;
         - crash before the manifest swap → orphan files, zero visible
@@ -164,26 +173,35 @@ class TripleStore:
         manifest = self._read_manifest()
         if batch_id in manifest["batches"]:
             return manifest["batches"][batch_id]["added"]
-        expected_version = manifest["version"]
-
-        rows, _ = insert_new_triples(self.read(), batch, dedup_batch)
-
-        out_dir = self.root / "data" / f"{_safe(batch_id)}-{uuid.uuid4().hex[:8]}"
-        rows.write.mode("overwrite").parquet(str(out_dir))
-        added = _parquet_row_count(out_dir)
-
+        path, added = self._write_file_set(rows, batch_id)
         manifest["version"] += 1
         manifest["batches"][batch_id] = {
-            "path": str(out_dir),
+            "path": path,
             "rows": added,
             "added": added,
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         manifest["total_rows"] += added
-        self._swap_manifest(manifest, expected_version)
+        self._swap_manifest(manifest, version)
         return added
 
-    def compact(self, target_dir: str | None = None) -> int:
+    def insert_if_absent(
+        self,
+        batch: DataFrame,
+        batch_id: str,
+        dedup_batch: bool = True,
+    ) -> int:
+        """Exactly-once insert-if-absent; returns the added-row count
+        (the reference's `add_triples` return,
+        ref:src/knowledge_graph/mod.rs:91-114): the rows of `batch` not
+        yet in the store, committed under `batch_id` (see `commit`)."""
+        manifest = self._read_manifest()
+        if batch_id in manifest["batches"]:
+            return manifest["batches"][batch_id]["added"]
+        rows, _ = insert_new_triples(self.read(), batch, dedup_batch)
+        return self.commit(rows, batch_id, manifest["version"])
+
+    def compact(self) -> int:
         """Rewrite all committed files into one file set and swap the
         manifest to reference only it (Iceberg `rewrite_data_files`
         equivalent).  Returns total rows.  Crash-safe the same way:
@@ -193,11 +211,7 @@ class TripleStore:
         df = self.read()
         if df is None:
             return 0
-        out_dir = Path(target_dir) if target_dir else (
-            self.root / "data" / f"compact-{uuid.uuid4().hex[:8]}"
-        )
-        df.write.mode("overwrite").parquet(str(out_dir))
-        total = _parquet_row_count(out_dir)
+        path, total = self._write_file_set(df, "compact")
         # keep idempotency history: batch_ids stay known with their
         # original added counts but reference no data; the compacted
         # file set is the single live entry (it must come LAST so a
@@ -212,7 +226,7 @@ class TripleStore:
             "batches": {
                 **history,
                 "__compacted__": {
-                    "path": str(out_dir),
+                    "path": path,
                     "rows": total,
                     "added": 0,
                     "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -223,6 +237,12 @@ class TripleStore:
         self._swap_manifest(new_manifest, expected_version)
         return total
 
+    def _write_file_set(self, rows: DataFrame, name: str) -> tuple[str, int]:
+        """Write `rows` to a fresh, uniquely named directory under
+        `data/`; returns (path, row count from the footers)."""
+        out_dir = self.root / "data" / f"{_safe(name)}-{uuid.uuid4().hex[:8]}"
+        rows.write.mode("overwrite").parquet(str(out_dir))
+        return str(out_dir), _parquet_row_count(out_dir)
 
     def vacuum(self, min_age_sec: float = 3600.0) -> list[str]:
         """Delete data directories not referenced by the manifest —
@@ -248,6 +268,14 @@ class TripleStore:
             shutil.rmtree(d)
             deleted.append(str(d))
         return deleted
+
+
+def checkpoint_tag(checkpoint_path: str) -> str:
+    """The batch-id prefix of a streaming sink's commits, whose keys are
+    `<tag>-<batch_id>`: Spark replays a failed micro-batch under the
+    same checkpoint and id, which the store no-ops, while a fresh
+    checkpoint gets new keys."""
+    return hashlib.sha256(checkpoint_path.encode()).hexdigest()[:8]
 
 
 def write_json_atomic(path: Path, obj) -> None:

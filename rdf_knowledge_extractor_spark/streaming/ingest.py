@@ -94,11 +94,9 @@ def start_graph_merge_sink(
     checkpoint gets new keys and falls through to the anti-join.
     `graph_path` is the store root; read it back with
     `TripleStore(spark, graph_path).read()`."""
-    import hashlib
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore, checkpoint_tag
 
-    from rdf_knowledge_extractor_spark.plans.store import TripleStore
-
-    ckpt_tag = hashlib.sha256(checkpoint_path.encode()).hexdigest()[:8]
+    ckpt_tag = checkpoint_tag(checkpoint_path)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         store = TripleStore(batch_df.sparkSession, graph_path)

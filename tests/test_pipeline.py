@@ -199,6 +199,51 @@ def test_pipeline_manifest_write_is_atomic(
     assert got == want and len(got) > 0
 
 
+def test_pipeline_crashed_run_never_pairs_a_manifest_with_its_rows(
+    spark, example_config, tmp_path, monkeypatch
+):
+    """Run pages A; run pages B and crash it at s5_graph's manifest; run
+    A again.  The last run resumes s5_graph from A's manifest, which
+    must still name A's rows, not the rows B's crashed run wrote."""
+    import os
+
+    import pytest
+
+    cols = ["subject", "predicate", "object"]
+
+    def spo(graph):
+        return sorted(tuple(r) for r in graph.select(cols).collect())
+
+    pages_a = pages_dataframe(spark, 10, seed=3).drop("text")
+    pages_b = pages_dataframe(spark, 10, seed=4).drop("text")
+    ckpt = str(tmp_path / "ck")
+    want = spo(KgPipeline(spark, example_config, ckpt, partitions=2).run(pages_a))
+
+    real_replace = os.replace
+
+    def crash_at_s5_manifest(src, dst):
+        if str(dst).endswith("s5_graph/_MANIFEST.json"):
+            raise OSError("simulated crash at the s5_graph manifest")
+        return real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_at_s5_manifest)
+        with pytest.raises(OSError, match="simulated crash"):
+            KgPipeline(spark, example_config, ckpt, partitions=2).run(pages_b)
+
+    pipe = KgPipeline(spark, example_config, ckpt, partitions=2)
+    got = spo(pipe.run(pages_a))
+    assert {r.name: r.resumed for r in pipe.results}["s5_graph"] is True
+    assert got == want and len(got) > 0
+    clean_b = KgPipeline(spark, example_config, str(tmp_path / "b"), partitions=2)
+    assert spo(clean_b.run(pages_b)) != want
+    # one data dir per stage: the crashed run's orphan went with the next swap
+    assert all(
+        len(list((tmp_path / "ck" / stage).glob("data*"))) == 1
+        for stage in ("s2_extracted", "s3_triples", "s3_lineage", "s4_mapping")
+    )
+
+
 def test_pipeline_commit_holds_only_triple_columns(spark, example_config, tmp_path):
     """Every file set committed from a pipeline graph holds exactly the
     triple columns, in TRIPLE_SCHEMA order — no partitioning helper

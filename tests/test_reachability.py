@@ -18,7 +18,9 @@ def that shares its name: the scan can miss an unset option.
 
 A package module that imports another package module's
 underscore-prefixed name fails `test_no_private_imports_across_modules`,
-unless `SHARED_PRIVATE` lists the import with a reason.
+unless `SHARED_PRIVATE` lists the import with a reason.  A package
+module that calls `clearCache` fails
+`test_no_package_module_clears_the_session_cache`.
 """
 
 from __future__ import annotations
@@ -42,8 +44,8 @@ ENTRY_POINTS = (
 # cosine_pairs is the reference cosine_pairs_bucketed is tested against;
 # the distributed page generator and with_extracted_text are imported by
 # the worker script tools/scaling_bench.py runs from a string; the
-# store's compaction, vacuum and batch ledger and the pipeline's stage
-# manifests are how an operator maintains and inspects what they wrote.
+# pipeline's stage manifests are how an operator inspects what a run
+# wrote.
 KEPT = frozenset(
     {
         "streaming/ingest.py:read_pages_stream",
@@ -54,7 +56,6 @@ KEPT = frozenset(
         "streaming/ingest.py:streaming_curate",
         "streaming/ingest.py:start_attribution_sink",
         "streaming/neardup.py:start_neardup_filter_sink",
-        "streaming/neardup.py:compact_state",
         "streaming/stateful.py:streaming_sessions_stateful",
         "sources/ntriples.py:read_ntriples",
         "templates/engine.py:extract_template_fields",
@@ -62,9 +63,6 @@ KEPT = frozenset(
         "operators/similarity.py:cosine_pairs",
         "sources/pages.py:pages_dataframe_distributed",
         "functions/html_text.py:with_extracted_text",
-        "plans/store.py:TripleStore.compact",
-        "plans/store.py:TripleStore.vacuum",
-        "plans/store.py:TripleStore.batch_ids",
         "plans/pipeline.py:KgPipeline.stage_manifests",
     }
 )
@@ -273,6 +271,7 @@ SHARED_PRIVATE = {
     "operators/linking:operators/textdedup:_bucket_candidate_pairs": "linking's distributed arm blocks with the dedup families' one blocking step",
     "operators/linking:operators/textdedup:_prefix_len": "linking's PPJoin prefix is the one exact prefix length",
     "operators/linking:operators/textdedup:_verified_pairs": "linking verifies with the one Jaccard verifier",
+    "streaming/neardup:operators/textdedup:_bucket_candidate_pairs": "the streaming filter blocks its in-batch pairs with the one blocking step, over the sketches it already made",
     "streaming/neardup:operators/textdedup:_minhash_band_udf": "the streaming filter bands with the batch MinHash sketch",
     "streaming/neardup:operators/textdedup:_verified_pairs": "the streaming filter verifies with the one Jaccard verifier",
     "streaming/neardup:operators/textdedup:_with_hashed_shingles": "the streaming filter shingles as the batch families do",
@@ -312,3 +311,18 @@ def test_no_private_imports_across_modules():
     found = _private_imports()
     assert found <= set(SHARED_PRIVATE), sorted(found - set(SHARED_PRIVATE))
     assert set(SHARED_PRIVATE) <= found, sorted(set(SHARED_PRIVATE) - found)
+
+
+def test_no_package_module_clears_the_session_cache():
+    """`spark.catalog.clearCache()` drops every cached frame of the
+    session, the caller's included; a package module releases only the
+    frames it persisted itself (`unpersist`)."""
+    calls = [
+        f"{path.relative_to(PACKAGE).as_posix()}:{n.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "clearCache"
+    ]
+    assert not calls, calls

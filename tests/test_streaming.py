@@ -274,58 +274,65 @@ def test_streaming_attribution_equals_batch_asof(spark, tmp_path):
     ) == want
 
 
-def test_streaming_neardup_filter_across_batches(spark, tmp_path):
-    """First-arrival near-dup admission: batch 2's near-copy of an
-    admitted batch-1 doc is rejected; novel docs pass; in-batch
-    near-dups keep the min id; replaying the stream is idempotent."""
-    from pyspark.sql import types as T
+_BASE = (
+    "the quick brown fox jumps over the lazy dog while the cat naps "
+    "in the warm afternoon sun near the old garden wall by the gate"
+)
+_NOVEL = (
+    "totally unrelated content about parquet partition discovery "
+    "and the structured streaming checkpoint commit protocol"
+)
 
+
+def _append_docs(spark, tmp_path, rows, src="in"):
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.mode(
+        "append"
+    ).parquet(str(tmp_path / src))
+
+
+def _run_neardup(spark, tmp_path, src="in", ckpt="ckpt", **kw):
+    """Drain `<tmp_path>/<src>` through the near-dup sink under the
+    checkpoint `<tmp_path>/<ckpt>`; returns every admitted doc id."""
     from rdf_knowledge_extractor_spark.streaming.neardup import (
         start_neardup_filter_sink,
     )
 
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat naps "
-        "in the warm afternoon sun near the old garden wall by the gate"
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(tmp_path / src)
     )
+    q = start_neardup_filter_sink(
+        stream, str(tmp_path / "out"), str(tmp_path / "state"),
+        str(tmp_path / ckpt), threshold=0.7, **kw,
+    )
+    q.awaitTermination(180)
+    return {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+
+
+def _state_ids(spark, tmp_path):
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore
+
+    return {r.id for r in TripleStore(spark, str(tmp_path / "state")).read().collect()}
+
+
+def test_streaming_neardup_filter_across_batches(spark, tmp_path):
+    """First-arrival near-dup admission: batch 2's near-copy of an
+    admitted batch-1 doc is rejected; novel docs pass; in-batch
+    near-dups keep the min id."""
     other = (
         "completely different content about spark structured streaming "
         "microbatches and stateful admission filters for web corpora"
     )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    state_dir = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_stream():
-        stream = spark.readStream.schema(schema).parquet(str(in_dir))
-        q = start_neardup_filter_sink(
-            stream, out_dir, state_dir, ckpt, threshold=0.7
-        )
-        q.awaitTermination(180)
-
     # batch 1: doc0 + an in-batch near-copy (doc1) + a novel doc (doc2)
-    spark.createDataFrame(
-        [(0, base), (1, base + " extra"), (2, other)], schema
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    run_stream()
-    got1 = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
+    _append_docs(spark, tmp_path, [(0, _BASE), (1, _BASE + " extra"), (2, other)])
+    got1 = _run_neardup(spark, tmp_path)
     assert got1 == {0, 2}  # doc1 rejected in-batch (min id 0 kept)
 
     # batch 2: near-copy of admitted doc0 (reject) + novel doc (admit)
-    spark.createDataFrame(
-        [(10, base + " tail"), (11, other.upper() + " but lowercase differs a lot here truly")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    run_stream()
-    got2 = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
+    _append_docs(
+        spark, tmp_path,
+        [(10, _BASE + " tail"), (11, other.upper() + " but lowercase differs a lot here truly")],
+    )
+    got2 = _run_neardup(spark, tmp_path)
     assert 10 not in got2
     assert 11 in got2
     assert got2 >= {0, 2, 11}
@@ -356,158 +363,122 @@ def test_greedy_inbatch_admission_chain(spark):
 
 def test_neardup_state_compaction_preserves_admission(spark, tmp_path):
     """round-4 brief #5: N batches -> compact -> admission decisions
-    identical, state file count bounded; the max batch dir survives."""
-    import os
+    identical, and the state's live file sets fold into one."""
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore
 
-    from pyspark.sql import types as T
-
-    from rdf_knowledge_extractor_spark.streaming.neardup import (
-        _batch_dirs,
-        compact_state,
-        start_neardup_filter_sink,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat naps "
-        "in the warm afternoon sun near the old garden wall by the gate"
-    )
     texts = {
-        0: base,
-        1: "totally unrelated content about parquet partition discovery "
-           "and the structured streaming checkpoint commit protocol",
-        2: base + " trailing near dup marker",  # near-dup of 0 -> reject
+        0: _BASE,
+        1: _NOVEL,
+        2: _BASE + " trailing near dup marker",  # near-dup of 0 -> reject
         3: "third novel document mentioning adaptive query execution "
            "and broadcast joins in distributed sql engines at scale",
     }
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    state_dir = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_stream():
-        stream = spark.readStream.schema(schema).parquet(str(in_dir))
-        q = start_neardup_filter_sink(
-            stream, out_dir, state_dir, ckpt, threshold=0.7
-        )
-        q.awaitTermination(180)
-
     for i in (0, 1, 2):
-        spark.createDataFrame([(i, texts[i])], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(in_dir))
-        run_stream()
-    band_dir = os.path.join(state_dir, "bands")
-    assert len(_batch_dirs(band_dir)) == 3
-
-    reclaimed = compact_state(spark, state_dir, min_batches=2)
-    assert reclaimed >= 1
-    dirs = _batch_dirs(band_dir)
-    assert len(dirs) == 2  # compacted set + protected max id
-    assert max(dirs) == 2
+        _append_docs(spark, tmp_path, [(i, texts[i])])
+        _run_neardup(spark, tmp_path)
+    state = TripleStore(spark, str(tmp_path / "state"))
+    # three commits; doc 2's admitted nothing, so it holds no live set
+    assert len(state.batch_ids()) == 3
+    assert len(state.committed_paths()) == 2
+    assert state.compact() == 2
+    assert len(state.committed_paths()) == 1
 
     # admission against compacted state is unchanged: a near-copy of
     # doc 0 is still rejected, a novel doc still admitted
-    spark.createDataFrame(
-        [(10, base + " another tail"), (3, texts[3])], schema
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    run_stream()
-    got = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-    assert got == {0, 1, 3}
+    _append_docs(spark, tmp_path, [(10, _BASE + " another tail"), (3, texts[3])])
+    assert _run_neardup(spark, tmp_path) == {0, 1, 3}
+    assert _state_ids(spark, tmp_path) == {0, 1, 3}
 
 
-def test_neardup_compaction_crash_recovery(spark, tmp_path):
-    """A _SUCCESS-marked tmp with no target is finished by rename; an
-    unmarked tmp is rolled back."""
-    import os
+def test_neardup_fresh_checkpoint_over_same_state(spark, tmp_path):
+    """A new checkpoint over an existing state restarts its batch ids
+    at 0, yet must read the whole admitted history and add to it: the
+    near-copy it sees is rejected, and neither the admitted state nor
+    the first checkpoint's output is overwritten."""
+    _append_docs(spark, tmp_path, [(0, _BASE)], src="in1")
+    assert _run_neardup(spark, tmp_path, src="in1", ckpt="ckpt1") == {0}
 
-    from rdf_knowledge_extractor_spark.streaming.neardup import (
-        _batch_dirs,
-        _finish_pending_compaction,
-    )
-
-    band_dir = tmp_path / "bands"
-    # complete tmp (crash after olds removed, before rename)
-    done = band_dir / ".compact-tmp-deadbeef-batch=4"
-    done.mkdir(parents=True)
-    (done / "_SUCCESS").touch()
-    (done / "part-0.parquet").write_bytes(b"x")
-    # incomplete tmp (crash mid-write)
-    half = band_dir / ".compact-tmp-cafebabe-batch=2"
-    half.mkdir()
-    (half / "part-0.parquet").write_bytes(b"y")
-    (band_dir / "batch=2").mkdir()  # its olds still exist
-
-    _finish_pending_compaction(str(band_dir))
-    assert (band_dir / "batch=4" / "part-0.parquet").exists()
-    assert not half.exists()
-    assert set(_batch_dirs(str(band_dir))) == {2, 4}
+    _append_docs(spark, tmp_path, [(10, _BASE + " tail"), (11, _NOVEL)], src="in2")
+    assert _run_neardup(spark, tmp_path, src="in2", ckpt="ckpt2") == {0, 11}
+    assert _state_ids(spark, tmp_path) == {0, 11}
 
 
-def test_neardup_sink_recovers_pending_compaction_before_state_read(
-    spark, tmp_path
-):
-    """Round-5 review finding: a compact_state that died after removing
-    the old batch dirs but before renaming its _SUCCESS-marked tmp left
-    the history invisible to the NEXT micro-batch (Spark skips
-    dot-prefixed dirs), wrongly admitting near-dups.  The sink now runs
-    _finish_pending_compaction on both state tables before its state
-    reads, so the compacted history is seen again."""
-    import os
-    import shutil
+def test_neardup_crash_before_state_swap_replays_once(spark, tmp_path, monkeypatch):
+    """A crash after the output write, before the state commit's
+    manifest swap: the replayed micro-batch sees the same history,
+    rewrites the same output dir and commits once."""
+    import pytest
 
-    from pyspark.sql import types as T
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore
 
-    from rdf_knowledge_extractor_spark.streaming.neardup import (
-        start_neardup_filter_sink,
-    )
+    def crash(self, manifest, expected_version):
+        raise RuntimeError("simulated crash before the state swap")
 
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat naps "
-        "in the warm afternoon sun near the old garden wall by the gate"
-    )
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    state_dir = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
+    _append_docs(spark, tmp_path, [(0, _BASE), (1, _NOVEL)])
+    with monkeypatch.context() as m:
+        m.setattr(TripleStore, "_swap_manifest", crash)
+        with pytest.raises(Exception, match="simulated crash"):
+            _run_neardup(spark, tmp_path)
+    state = TripleStore(spark, str(tmp_path / "state"))
+    assert state.read() is None  # the written state files are orphans
 
-    def run_stream():
-        stream = spark.readStream.schema(schema).parquet(str(in_dir))
-        q = start_neardup_filter_sink(
-            stream, out_dir, state_dir, ckpt, threshold=0.7
-        )
-        q.awaitTermination(180)
+    assert _run_neardup(spark, tmp_path) == {0, 1}
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
+    assert len(state.batch_ids()) == 1
+    assert _state_ids(spark, tmp_path) == {0, 1}
 
-    spark.createDataFrame([(0, base)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(in_dir))
-    run_stream()
+    _append_docs(spark, tmp_path, [(10, _BASE + " tail")])
+    assert _run_neardup(spark, tmp_path) == {0, 1}
 
-    # simulate the crash window: every committed batch dir of BOTH
-    # tables has been compacted into a _SUCCESS-marked tmp, olds
-    # removed, rename never happened
-    for table in ("bands", "shingles"):
-        tdir = os.path.join(state_dir, table)
-        for name in os.listdir(tdir):
-            if not name.startswith("batch="):
-                continue
-            src = os.path.join(tdir, name)
-            tmp = os.path.join(tdir, f".compact-tmp-deadbeef-{name}")
-            shutil.copytree(src, tmp)
-            open(os.path.join(tmp, "_SUCCESS"), "w").close()
-            shutil.rmtree(src)
 
-    # a near-dup of doc 0 must still be REJECTED
-    spark.createDataFrame(
-        [(10, base + " trailing near dup marker")], schema
-    ).coalesce(1).write.mode("append").parquet(str(in_dir))
-    run_stream()
-    got = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-    assert got == {0}
+def test_neardup_crash_in_compact_before_swap(spark, tmp_path, monkeypatch):
+    """A crash inside the sink's compact(), after the compacted file set
+    is written but before the manifest swap, leaves the committed state
+    as it was: the replayed batch is a no-op, the next batch still
+    rejects a near-copy, and its compaction reclaims the orphan."""
+    import pytest
+
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore
+
+    real_swap = TripleStore._swap_manifest
+
+    def crash_on_compaction(self, manifest, expected_version):
+        if "__compacted__" in manifest["batches"]:
+            raise RuntimeError("simulated crash before the compaction swap")
+        return real_swap(self, manifest, expected_version)
+
+    _append_docs(spark, tmp_path, [(0, _BASE)])
+    assert _run_neardup(spark, tmp_path, compact_every=1) == {0}
+
+    _append_docs(spark, tmp_path, [(1, _NOVEL)])
+    with monkeypatch.context() as m:
+        m.setattr(TripleStore, "_swap_manifest", crash_on_compaction)
+        with pytest.raises(Exception, match="simulated crash"):
+            _run_neardup(spark, tmp_path, compact_every=1)
+    state = TripleStore(spark, str(tmp_path / "state"))
+    assert len(state.committed_paths()) == 2  # the compacted set is an orphan
+    assert _state_ids(spark, tmp_path) == {0, 1}
+
+    _append_docs(spark, tmp_path, [(10, _BASE + " tail")])
+    assert _run_neardup(spark, tmp_path, compact_every=1) == {0, 1}
+    assert _state_ids(spark, tmp_path) == {0, 1}
+    assert len(state.committed_paths()) == 1
+    assert len(list((tmp_path / "state" / "data").iterdir())) == 1
+
+
+def test_neardup_sink_keeps_callers_cache(spark, tmp_path):
+    """The sink releases only the frames it persisted: a view the caller
+    cached is still cached after a micro-batch, and the sink leaves no
+    persisted RDD of its own behind."""
+    spark.range(5).createOrReplaceTempView("callers_view")
+    spark.catalog.cacheTable("callers_view")
+    try:
+        assert spark.table("callers_view").count() == 5
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+        _append_docs(spark, tmp_path, [(0, _BASE), (1, _BASE + " extra")])
+        assert _run_neardup(spark, tmp_path) == {0}
+        assert spark.catalog.isCached("callers_view")
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    finally:
+        spark.catalog.uncacheTable("callers_view")
+        spark.catalog.dropTempView("callers_view")
