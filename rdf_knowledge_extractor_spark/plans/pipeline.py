@@ -15,14 +15,17 @@ Extraction is the fused `extract_triples_stage(…, html_col="html")`:
 html crosses into Python once and only triple rows come back.  Each
 stage materializes to a checkpoint table (parquet here; an Iceberg
 table in production — this repo targets the sandbox where Iceberg jars
-aren't available).  A `_MANIFEST.json` per stage names the stage's
-data dir and records row count, wall-clock, partition count and a
-params fingerprint.  Each run writes a fresh data dir, then replaces
-the manifest atomically (temporary file + `os.replace`), so a manifest
-only ever vouches for the rows its own run wrote; `run` skips any stage
-whose manifest matches the fingerprint.  Per-partition metrics (rows per
-partition id) come from a partition-id aggregation and are stored in
-the manifest.
+aren't available) through the store's one commit step: stage `s` with
+fingerprint `fp` (stage, config hash, input identity, params) is the
+`TripleStore` at `<base>/<s>/<fp>/` holding one batch keyed `fp`.  A
+stage resumes when `fp` is committed there and otherwise commits
+`build()` under it; either way its other fingerprint roots are removed
+once it resolves, and a recompute first vacuums the orphans of a
+crashed same-fingerprint run (the pipeline is its checkpoint dir's only
+writer).  The commit records each part file's row count from its
+footer, so the per-partition metric costs no Spark job.  A stage reads
+its own file set by key: a stage that committed no rows still has one
+schema-carrying file, which `TripleStore.read()` would skip.
 """
 
 from __future__ import annotations
@@ -31,7 +34,6 @@ import hashlib
 import json
 import shutil
 import time
-import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -46,7 +48,7 @@ from rdf_knowledge_extractor_spark.functions.extract import (
 from rdf_knowledge_extractor_spark.operators.canonicalize import canonicalize_triples
 from rdf_knowledge_extractor_spark.operators.dedup import merge_results
 from rdf_knowledge_extractor_spark.operators.linking import link_entities
-from rdf_knowledge_extractor_spark.plans.store import TripleStore, write_json_atomic
+from rdf_knowledge_extractor_spark.plans.store import TripleStore
 
 
 @dataclass
@@ -118,63 +120,23 @@ class KgPipeline:
         )
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
-    def _manifest_path(self, stage: str) -> Path:
-        return self.base / stage / "_MANIFEST.json"
-
-    def _manifest(self, stage: str) -> dict | None:
-        mp = self._manifest_path(stage)
-        return json.loads(mp.read_text()) if mp.exists() else None
-
-    def _data_path(self, manifest: dict) -> str:
-        return str(self.base / manifest["stage"] / manifest["data"])
-
-    def _load_if_done(self, stage: str, fp: str) -> DataFrame | None:
-        manifest = self._manifest(stage)
-        if manifest and manifest.get("fingerprint") == fp and "data" in manifest:
-            return self.spark.read.parquet(self._data_path(manifest))
-        return None
-
     def _run_stage(self, stage: str, params: dict, build) -> DataFrame:
         fp = self._fingerprint(stage, params)
-        cached = self._load_if_done(stage, fp)
-        if cached is not None:
-            self.results.append(StageResult(stage, -1, 0.0, -1, True))
-            return cached
         t0 = time.monotonic()
-        df: DataFrame = build()
-        # a fresh dir per run, named by the manifest: the manifest on
-        # disk keeps vouching for the data it names until the swap, so
-        # a crash in between can never pair it with another run's rows
-        data = f"data-{uuid.uuid4().hex[:8]}"
-        out = str(self.base / stage / data)
-        df.write.parquet(out)
-        persisted = self.spark.read.parquet(out)
-        # per-partition lineage: rows per physical partition of the output
-        part_rows = (
-            persisted.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        )
-        rows = sum(r["count"] for r in part_rows)
-        elapsed = time.monotonic() - t0
-        manifest = {
-            "stage": stage,
-            "fingerprint": fp,
-            "data": data,
-            "rows": rows,
-            "seconds": elapsed,
-            "partitions": len(part_rows),
-            "partition_rows": {str(r["pid"]): r["count"] for r in part_rows},
-            "params": params,
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        write_json_atomic(self._manifest_path(stage), manifest)
-        # the superseded dir, and any a crashed run left, is unreachable now
-        for old in (self.base / stage).glob("data*"):
-            if old.name != data:
+        store = TripleStore(self.spark, str(self.base / stage / fp))
+        resumed = fp in store.batch_ids()
+        if not resumed:
+            store.vacuum(min_age_sec=0)
+            store.commit(build(), fp, store.version())
+        for old in (self.base / stage).iterdir():
+            if old.name != fp and old.is_dir():
                 shutil.rmtree(old)
-        self.results.append(StageResult(stage, rows, elapsed, len(part_rows), False))
-        return persisted
+        entry = store.batch(fp)
+        elapsed = time.monotonic() - t0
+        self.results.append(
+            StageResult(stage, entry["rows"], elapsed, len(entry["files"]), resumed)
+        )
+        return self.spark.read.parquet(entry["path"])
 
     # -- the pipeline ----------------------------------------------------
     def run(self, pages: DataFrame) -> DataFrame:
@@ -231,10 +193,14 @@ class KgPipeline:
         return TripleStore(self.spark, store_root).insert_if_absent(graph, bid)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self._data_path(self._manifest("s3_lineage")))
+        (entry,) = (m for m in self.stage_manifests() if m["stage"] == "s3_lineage")
+        return self.spark.read.parquet(entry["path"])
 
     def stage_manifests(self) -> list[dict]:
-        out = []
-        for p in sorted(self.base.glob("*/_MANIFEST.json")):
-            out.append(json.loads(p.read_text()))
-        return out
+        """Each committed stage's store entry (path, rows, per-file
+        `files` row counts) with its `stage` and `fingerprint`."""
+        return [
+            {"stage": m.parent.parent.name, "fingerprint": m.parent.name,
+             **TripleStore(self.spark, str(m.parent)).batch(m.parent.name)}
+            for m in sorted(self.base.glob("*/*/manifest.json"))
+        ]

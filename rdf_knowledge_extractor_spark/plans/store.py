@@ -24,16 +24,18 @@ semantics hold under failure and retry WITHOUT Iceberg jars:
   single-writer; we fail loudly instead of corrupting).
 
 `commit(rows, batch_id, version)` is the one commit step: fresh file
-set, footer row count, manifest swap.  Every writer goes through it:
+set, footer row counts, manifest swap.  Every writer goes through it:
 `insert_if_absent` commits the rows `dedup.insert_new_triples` (the
 same insert-if-absent the CLI runs: batch first-occurrence dedup, then
-a left ANTI join against the committed graph) computes, and the
-streaming near-dup filter (streaming/neardup.py) commits its admitted
-set the same way.  Nothing but `insert_if_absent` assumes the triple
-schema: `read`, `commit`, `compact` and `vacuum` serve any table.
-Scale: the manifest holds file paths + counts (O(batches)), not rows;
-data stays partitioned parquet exactly as an Iceberg table's data
-layer would.
+a left ANTI join against the committed graph) computes, the streaming
+near-dup filter (streaming/neardup.py) commits its admitted set the
+same way, and each `KgPipeline` stage (plans/pipeline.py) is a store
+whose one batch is keyed by the stage's fingerprint.  Nothing but
+`insert_if_absent` assumes the triple schema: `read`, `commit`,
+`compact` and `vacuum` serve any table.  Scale: the manifest holds
+file paths and per-file row counts (Iceberg's data-file
+`record_count`), not rows; data stays partitioned parquet exactly as
+an Iceberg table's data layer would.
 
 Reads reuse one relation per manifest version: `read()` re-reads the
 manifest on every call (so another writer's commit is visible on the
@@ -72,8 +74,8 @@ class TripleStore:
         <root>/manifest.json            # the ONLY mutable path (atomic swap)
         <root>/data/<batch>-<uuid>/…    # immutable parquet file sets
 
-    `manifest.json`: {version, batches: {batch_id: {path, rows, added}},
-    total_rows, updated}.
+    `manifest.json`: {version, batches: {batch_id: {path, rows, added,
+    files: {part file: rows}}}, total_rows, updated}.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -151,6 +153,12 @@ class TripleStore:
     def batch_ids(self) -> list[str]:
         return sorted(self._read_manifest()["batches"])
 
+    def batch(self, batch_id: str) -> dict | None:
+        """The manifest entry committed under `batch_id` (None when
+        absent): its file set's `path`, `rows`, `added` and per-file
+        `files` row counts."""
+        return self._read_manifest()["batches"].get(batch_id)
+
     def version(self) -> int:
         """The manifest version: a writer that computes its rows from
         `read()` takes it first and hands it to `commit`."""
@@ -161,10 +169,11 @@ class TripleStore:
         """The store's one commit step; returns the committed row count.
 
         Writes `rows` as a fresh file set, counts them from the parquet
-        footers and swaps in a manifest that adds the set under
-        `batch_id`.  `version` is the manifest version the caller read
-        before computing `rows`; if another writer committed since, the
-        swap raises `CommitConflict` and the batch must be retried.
+        footers (per file, recorded as the entry's `files`) and swaps in
+        a manifest that adds the set under `batch_id`.  `version` is the
+        manifest version the caller read before computing `rows`; if
+        another writer committed since, the swap raises `CommitConflict`
+        and the batch must be retried.
         Retry-safe at every point:
         - already-committed batch_id → no-op, returns the original count;
         - crash before the manifest swap → orphan files, zero visible
@@ -173,12 +182,14 @@ class TripleStore:
         manifest = self._read_manifest()
         if batch_id in manifest["batches"]:
             return manifest["batches"][batch_id]["added"]
-        path, added = self._write_file_set(rows, batch_id)
+        path, files = self._write_file_set(rows, batch_id)
+        added = sum(files.values())
         manifest["version"] += 1
         manifest["batches"][batch_id] = {
             "path": path,
             "rows": added,
             "added": added,
+            "files": files,
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         manifest["total_rows"] += added
@@ -211,13 +222,14 @@ class TripleStore:
         df = self.read()
         if df is None:
             return 0
-        path, total = self._write_file_set(df, "compact")
+        path, files = self._write_file_set(df, "compact")
+        total = sum(files.values())
         # keep idempotency history: batch_ids stay known with their
         # original added counts but reference no data; the compacted
         # file set is the single live entry (it must come LAST so a
         # prior __compacted__ history entry cannot shadow it)
         history = {
-            bid: {**b, "rows": 0}
+            bid: {**b, "rows": 0, "files": {}}
             for bid, b in manifest["batches"].items()
             if bid != "__compacted__"
         }
@@ -229,6 +241,7 @@ class TripleStore:
                     "path": path,
                     "rows": total,
                     "added": 0,
+                    "files": files,
                     "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 },
             },
@@ -237,12 +250,14 @@ class TripleStore:
         self._swap_manifest(new_manifest, expected_version)
         return total
 
-    def _write_file_set(self, rows: DataFrame, name: str) -> tuple[str, int]:
+    def _write_file_set(
+        self, rows: DataFrame, name: str
+    ) -> tuple[str, dict[str, int]]:
         """Write `rows` to a fresh, uniquely named directory under
-        `data/`; returns (path, row count from the footers)."""
+        `data/`; returns (path, {part file: row count from its footer})."""
         out_dir = self.root / "data" / f"{_safe(name)}-{uuid.uuid4().hex[:8]}"
         rows.write.mode("overwrite").parquet(str(out_dir))
-        return str(out_dir), _parquet_row_count(out_dir)
+        return str(out_dir), _parquet_file_rows(out_dir)
 
     def vacuum(self, min_age_sec: float = 3600.0) -> list[str]:
         """Delete data directories not referenced by the manifest —
@@ -281,10 +296,15 @@ def checkpoint_tag(checkpoint_path: str) -> str:
 def write_json_atomic(path: Path, obj) -> None:
     """Write `obj` as JSON to a temporary sibling, then `os.replace` it
     over `path` (atomic on POSIX): a reader or a crash sees the old file
-    or the new one, never a truncated one."""
+    or the new one, never a truncated one.  A failed write or swap
+    removes the temporary file."""
     tmp = path.with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
-    tmp.write_text(json.dumps(obj, indent=2))
-    os.replace(tmp, path)
+    try:
+        tmp.write_text(json.dumps(obj, indent=2))
+        os.replace(tmp, path)
+    except BaseException:
+        tmp.unlink(missing_ok=True)
+        raise
 
 
 def _live_paths(manifest: dict) -> list[str]:
@@ -296,17 +316,16 @@ def _live_paths(manifest: dict) -> list[str]:
     return [b["path"] for b in manifest["batches"].values() if b["rows"] > 0]
 
 
-def _parquet_row_count(out_dir: Path) -> int:
-    """Committed-batch row count from parquet FOOTERS (driver-side
-    metadata read, like Iceberg's manifest stats) — replaces the former
-    full re-read of the just-written files, which doubled sink I/O per
-    batch at streaming cadence (round-3 verdict, wrong #4)."""
+def _parquet_file_rows(out_dir: Path) -> dict[str, int]:
+    """Row count of each part file from its parquet FOOTER (driver-side
+    metadata read, like Iceberg's per-data-file `record_count`) — no
+    Spark job re-reads the just-written files."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for f in out_dir.glob("*.parquet"):
-        total += pq.read_metadata(f).num_rows
-    return total
+    return {
+        f.name: pq.read_metadata(f).num_rows
+        for f in sorted(out_dir.glob("*.parquet"))
+    }
 
 
 def _safe(batch_id: str) -> str:

@@ -2,17 +2,36 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from rdf_knowledge_extractor_spark.plans.pipeline import KgPipeline
 from rdf_knowledge_extractor_spark.sources.pages import pages_dataframe
 
+STAGES = ("s2_extracted", "s3_triples", "s3_lineage", "s4_mapping", "s5_graph")
+
+
+def _is_stage_manifest(path, stage: str) -> bool:
+    """`path` is the store manifest of one of `stage`'s fingerprint
+    roots (`<stage>/<fp>/manifest.json`)."""
+    path = Path(path)
+    return path.name == "manifest.json" and path.parent.parent.name == stage
+
 
 def test_pipeline_run_and_resume(spark, example_config, tmp_path):
     pages = pages_dataframe(spark, 30, seed=42).drop("text")
 
+    sc = spark.sparkContext
     pipe = KgPipeline(spark, example_config, str(tmp_path), partitions=4)
-    graph = pipe.run(pages)
+    sc.setJobGroup("pipeline-fresh", "pipeline-fresh")
+    try:
+        graph = pipe.run(pages)
+    finally:
+        sc.setJobGroup("idle", "idle")
+    # the stage commits count rows from the footers: no re-read job
+    fresh_jobs = len(sc.statusTracker().getJobIdsForGroup("pipeline-fresh"))
+    assert fresh_jobs <= 20, fresh_jobs
     n1 = graph.count()
     assert n1 > 0
     assert not any(r.resumed for r in pipe.results)
@@ -24,18 +43,27 @@ def test_pipeline_run_and_resume(spark, example_config, tmp_path):
     # lineage covers every page
     assert pipe.lineage().count() == 30
 
-    # manifests written with per-partition rows
+    # manifests written with per-partition (per part file) rows
     manifests = {m["stage"]: m for m in pipe.stage_manifests()}
     assert set(manifests) == {
         "s2_extracted", "s3_triples", "s3_lineage", "s4_mapping", "s5_graph"
     }
     assert manifests["s5_graph"]["rows"] == n1
-    assert sum(manifests["s5_graph"]["partition_rows"].values()) == n1
+    assert sum(manifests["s5_graph"]["files"].values()) == n1
 
     # resume: a fresh pipeline over the same dir skips every stage
     pipe2 = KgPipeline(spark, example_config, str(tmp_path), partitions=4)
-    graph2 = pipe2.run(pages)
+    sc.setJobGroup("pipeline-resume", "pipeline-resume")
+    try:
+        graph2 = pipe2.run(pages)
+    finally:
+        sc.setJobGroup("idle", "idle")
+    resume_jobs = len(sc.statusTracker().getJobIdsForGroup("pipeline-resume"))
+    assert resume_jobs <= 7, resume_jobs
     assert all(r.resumed for r in pipe2.results)
+    assert [(r.rows, r.partitions) for r in pipe2.results] == [
+        (r.rows, r.partitions) for r in pipe.results
+    ]
     assert graph2.count() == n1
 
     # changing a stage param invalidates the fingerprint → recompute
@@ -173,7 +201,7 @@ def test_pipeline_manifest_write_is_atomic(
     failed = []
 
     def replace_failing_once(src, dst):
-        if str(dst).endswith("s4_mapping/_MANIFEST.json") and not failed:
+        if _is_stage_manifest(dst, "s4_mapping") and not failed:
             failed.append(dst)
             raise OSError("simulated crash at the s4_mapping manifest")
         return real_replace(src, dst)
@@ -183,7 +211,8 @@ def test_pipeline_manifest_write_is_atomic(
     with pytest.raises(OSError, match="simulated crash"):
         KgPipeline(spark, example_config, str(ckpt), partitions=2).run(pages)
     assert failed
-    assert not (ckpt / "s4_mapping" / "_MANIFEST.json").exists()
+    assert not list((ckpt / "s4_mapping").glob("*/manifest.json"))
+    assert not list((ckpt / "s4_mapping").glob("*/manifest.tmp-*"))
 
     pipe = KgPipeline(spark, example_config, str(ckpt), partitions=2)
     graph = pipe.run(pages)
@@ -222,7 +251,7 @@ def test_pipeline_crashed_run_never_pairs_a_manifest_with_its_rows(
     real_replace = os.replace
 
     def crash_at_s5_manifest(src, dst):
-        if str(dst).endswith("s5_graph/_MANIFEST.json"):
+        if _is_stage_manifest(dst, "s5_graph"):
             raise OSError("simulated crash at the s5_graph manifest")
         return real_replace(src, dst)
 
@@ -237,11 +266,69 @@ def test_pipeline_crashed_run_never_pairs_a_manifest_with_its_rows(
     assert got == want and len(got) > 0
     clean_b = KgPipeline(spark, example_config, str(tmp_path / "b"), partitions=2)
     assert spo(clean_b.run(pages_b)) != want
-    # one data dir per stage: the crashed run's orphan went with the next swap
-    assert all(
-        len(list((tmp_path / "ck" / stage).glob("data*"))) == 1
-        for stage in ("s2_extracted", "s3_triples", "s3_lineage", "s4_mapping")
-    )
+    # one fingerprint root holding one file set per stage, the resumed
+    # s5_graph included: the crashed run's roots and orphans are gone
+    for stage in STAGES:
+        (root,) = (tmp_path / "ck" / stage).iterdir()
+        assert sorted(p.name for p in root.iterdir()) == [
+            ".commit.lock", "data", "manifest.json"
+        ], stage
+        assert len(list((root / "data").iterdir())) == 1, stage
+
+
+def test_pipeline_commits_empty_stages(spark, tmp_path):
+    """One page with an empty body: every stage commits 0 rows, the
+    graph is an empty frame of the triple columns, and a rerun resumes
+    every stage.  The store's `read()` skips a 0-row batch, so a stage
+    must read its own file set."""
+    from rdf_knowledge_extractor_spark.config import Configuration
+    from rdf_knowledge_extractor_spark.schemas import TRIPLE_SCHEMA
+
+    pages = spark.createDataFrame(
+        [("https://x/empty", b"<html><body></body></html>", 0)],
+        "url string, html binary, doc_seq long",
+    ).withColumn("lang", F.lit("en"))
+    for resumed in (False, True):
+        pipe = KgPipeline(spark, Configuration.example(), str(tmp_path), partitions=2)
+        graph = pipe.run(pages)
+        assert [(r.name, r.resumed) for r in pipe.results] == [
+            (stage, resumed) for stage in STAGES
+        ]
+        assert graph.columns == TRIPLE_SCHEMA.names
+        assert graph.count() == 0
+    rows = {m["stage"]: m["rows"] for m in pipe.stage_manifests()}
+    assert rows == dict.fromkeys(STAGES, 0)
+
+
+def test_submit_pipeline_resumes_with_committed_counts(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """examples/submit_pipeline.py end to end, twice over the same
+    checkpoint and store dirs: the second run resumes every stage with
+    the row count its store committed, and the store commit returns the
+    first run's added count."""
+    import re
+    import runpy
+    import sys
+
+    pages = str(tmp_path / "pages.parquet")
+    pages_dataframe(spark, 10, seed=5).drop("text").write.parquet(pages)
+    script = Path(__file__).resolve().parents[1] / "examples" / "submit_pipeline.py"
+    argv = ["submit_pipeline.py", pages, str(tmp_path / "ck"), str(tmp_path / "store")]
+    monkeypatch.setattr(sys, "argv", argv)
+    runs = []
+    for _ in range(2):
+        runpy.run_path(str(script), run_name="__main__")
+        out = capsys.readouterr().out
+        stages = re.findall(r"stage (\w+): rows=(-?\d+) sec=\S+ resumed=(\w+)", out)
+        (added,) = re.findall(r"batch added=(\d+) rows", out)
+        runs.append((stages, int(added)))
+    (first, added1), (second, added2) = runs
+    assert first == [(stage, rows, "False") for stage, rows, _ in first]
+    assert [stage for stage, *_ in first] == list(STAGES)
+    assert second == [(stage, rows, "True") for stage, rows, _ in first]
+    assert all(int(rows) >= 0 for _, rows, _ in second)
+    assert added2 == added1 > 0
 
 
 def test_pipeline_commit_holds_only_triple_columns(spark, example_config, tmp_path):

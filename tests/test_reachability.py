@@ -16,6 +16,10 @@ its position, or through `*args`/`**kwargs`) fails
 a constructor by its class's name, so a call sets the option of every
 def that shares its name: the scan can miss an unset option.
 
+A package module other than `plans/store.py` that calls `os.replace`,
+`os.rename` or `write_json_atomic` fails
+`test_only_the_store_swaps_files`.
+
 A package module that imports another package module's
 underscore-prefixed name fails `test_no_private_imports_across_modules`,
 unless `SHARED_PRIVATE` lists the import with a reason.  A package
@@ -43,9 +47,7 @@ ENTRY_POINTS = (
 # the N-Triples reader and the template surface are part of the system;
 # cosine_pairs is the reference cosine_pairs_bucketed is tested against;
 # the distributed page generator and with_extracted_text are imported by
-# the worker script tools/scaling_bench.py runs from a string; the
-# pipeline's stage manifests are how an operator inspects what a run
-# wrote.
+# the worker script tools/scaling_bench.py runs from a string.
 KEPT = frozenset(
     {
         "streaming/ingest.py:read_pages_stream",
@@ -63,7 +65,6 @@ KEPT = frozenset(
         "operators/similarity.py:cosine_pairs",
         "sources/pages.py:pages_dataframe_distributed",
         "functions/html_text.py:with_extracted_text",
-        "plans/pipeline.py:KgPipeline.stage_manifests",
     }
 )
 
@@ -324,5 +325,28 @@ def test_no_package_module_clears_the_session_cache():
         if isinstance(n, ast.Call)
         and isinstance(n.func, ast.Attribute)
         and n.func.attr == "clearCache"
+    ]
+    assert not calls, calls
+
+
+def _called(call: ast.Call) -> str | None:
+    """The called name, with `os.` kept for an `os.<attr>` call."""
+    fn = call.func
+    if isinstance(fn, ast.Attribute) and getattr(fn.value, "id", None) == "os":
+        return f"os.{fn.attr}"
+    return fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+
+
+def test_only_the_store_swaps_files():
+    """Every commit goes through `TripleStore.commit`: no package module
+    but the store renames files into place or writes its atomic JSON,
+    so a second commit protocol cannot grow back."""
+    calls = [
+        f"{path.relative_to(PACKAGE).as_posix()}:{n.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "plans" / "store.py"
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call)
+        and _called(n) in ("os.replace", "os.rename", "write_json_atomic")
     ]
     assert not calls, calls

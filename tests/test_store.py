@@ -79,6 +79,25 @@ def test_crash_before_commit_then_retry_no_duplicates(store, spark, monkeypatch)
     assert len(rows) == len(set(rows)) == 3
 
 
+def test_failed_manifest_replace_leaves_no_tmp_file(store, spark, monkeypatch):
+    """`os.replace` fails at the manifest swap: the temporary manifest
+    is removed and the store still reads its previous version."""
+    import os
+
+    store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1")
+
+    def fail(src, dst):
+        raise OSError("simulated failed manifest rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", fail)
+        with pytest.raises(OSError, match="simulated"):
+            store.insert_if_absent(_triples(spark, [("s2", "p", "o2")]), "b2")
+    assert not list(store.root.glob("*.tmp-*"))
+    assert {r.subject for r in store.read().collect()} == {"s1"}
+    assert store.version() == 1
+
+
 def test_commit_conflict_detected(store, spark):
     a = _triples(spark, [("s1", "p", "o1")])
     store.insert_if_absent(a, "b1")
@@ -190,6 +209,9 @@ def test_footer_row_count_matches_spark_count(store, spark):
     assert store.insert_if_absent(_triples(spark, rows), "big") == 57
     assert store.read().count() == 57
     assert store.total_rows() == 57
+    files = store.batch("big")["files"]
+    assert sum(files.values()) == 57
+    assert sorted(files) == sorted(p.name for p in store.root.glob("data/*/*.parquet"))
 
 
 def test_vacuum_reclaims_compacted_away_batch_dirs(store, spark):
