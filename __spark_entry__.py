@@ -608,7 +608,7 @@ def q_dedup_exact(spark, sf):
 def q_dedup_ngram_jaccard(spark, sf):
     from rdf_knowledge_extractor_spark.operators.textdedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(_docs(spark, sf), k=9, threshold=0.8)
+    return ngram_jaccard_pairs(_docs(spark, sf))
 
 
 def q_dedup_survivors(spark, sf):
@@ -626,7 +626,7 @@ def q_dedup_survivors(spark, sf):
     )
 
     docs = _docs(spark, sf)
-    pairs = ngram_jaccard_pairs(docs, k=9, threshold=0.8)
+    pairs = ngram_jaccard_pairs(docs)
     comp = connected_components(pairs, src="id_a", dst="id_b")
     losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
@@ -645,7 +645,7 @@ def q_dedup_minhash_lsh(spark, sf):
 def q_dedup_simhash(spark, sf):
     from rdf_knowledge_extractor_spark.operators.textdedup import simhash_pairs
 
-    return simhash_pairs(_docs(spark, sf), k=9, max_hamming=3)
+    return simhash_pairs(_docs(spark, sf))
 
 
 def q_dedup_embedding(spark, sf):
@@ -675,7 +675,7 @@ def q_ann_lsh_topk(spark, sf):
     from rdf_knowledge_extractor_spark.operators.similarity import lsh_cosine_topk
 
     emb = _emb(spark, sf)
-    return lsh_cosine_topk(emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5)
+    return lsh_cosine_topk(emb, emb.filter(F.col("vec_id") < 10), dim=64)
 
 
 def q_ann_ivf_topk(spark, sf):
@@ -686,19 +686,19 @@ def q_ann_ivf_topk(spark, sf):
 
     emb = _emb(spark, sf)
     return ivf_cosine_topk(
-        emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5, n_centroids=16, nprobe=4
+        emb, emb.filter(F.col("vec_id") < 10), dim=64, nprobe=4
     )
 
 
 def q_ann_ivf_fullprobe(spark, sf):
-    """IVF with nprobe = n_centroids is exhaustive — runs the full IVF
+    """IVF with nprobe = its cell count (16) is exhaustive — runs the full IVF
     machinery (k-means cells, cell join, re-rank) yet provably equals
     brute force, so it shares `ann_cosine_topk`'s DuckDB oracle."""
     from rdf_knowledge_extractor_spark.operators.similarity import ivf_cosine_topk
 
     emb = _emb(spark, sf)
     return ivf_cosine_topk(
-        emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5, n_centroids=16, nprobe=16
+        emb, emb.filter(F.col("vec_id") < 10), dim=64, nprobe=16
     )
 
 
@@ -710,7 +710,7 @@ def q_ann_lsh_fullcover(spark, sf):
 
     emb = _emb(spark, sf)
     return lsh_cosine_topk(
-        emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5, n_planes=0, n_tables=1
+        emb, emb.filter(F.col("vec_id") < 10), dim=64, n_planes=0, n_tables=1
     )
 
 
@@ -758,11 +758,9 @@ def q_text_fingerprint(spark, sf):
 def q_text_quality_percentiles(spark, sf):
     """Per-predicted-language quality-score distribution (n, p50/p90/p99).
 
-    `exact=True` arm of `operators.curation.quality_percentiles` so
-    the DuckDB `quantile_cont` oracle can hash-match (identical linear
-    interpolation); the 100-TB path is the same callable's default
-    `approx_percentile` arm (constant memory per group — |exact−approx|
-    bounded in tests/test_curation.py)."""
+    `operators.curation.quality_percentiles` aggregates with `percentile`,
+    so the DuckDB `quantile_cont` oracle can hash-match (identical linear
+    interpolation)."""
     from rdf_knowledge_extractor_spark.operators.curation import (
         quality_percentiles,
     )
@@ -771,7 +769,7 @@ def q_text_quality_percentiles(spark, sf):
 
     # spread: metric computation + exact per-group percentiles
     # otherwise hang off a one-row-group scan's single task
-    return quality_percentiles(spread(_docs(spark, sf)), exact=True)
+    return quality_percentiles(spread(_docs(spark, sf)))
 
 
 def q_docs_rollup(spark, sf):
@@ -797,7 +795,7 @@ def q_corpus_sample(spark, sf):
 def q_corpus_quota(spark, sf):
     from rdf_knowledge_extractor_spark.operators.curation import quota_per_group
 
-    return quota_per_group(_docs(spark, sf), group_col="source", k=5).select(
+    return quota_per_group(_docs(spark, sf), group_col="source").select(
         "doc_id", "source"
     )
 
@@ -825,17 +823,16 @@ def q_corpus_repetition(spark, sf):
 def q_corpus_top_terms(spark, sf):
     from rdf_knowledge_extractor_spark.operators.curation import top_terms
 
-    return top_terms(_docs(spark, sf), k=100, min_count=2)
+    return top_terms(_docs(spark, sf))
 
 
 def q_corpus_decontam(spark, sf):
     """Benchmark decontamination (round-5 training-data op): report
     every document sharing a word n-gram with the 'benchmark' slice
     (doc_id % 37 == 0 — a deterministic stand-in eval set drawn from
-    the same table).  n=3 so the synthetic word-soup vocabulary
-    produces non-trivial overlap; the operator defaults to the
-    published n=13.  Plan: benchmark n-grams broadcast, one shuffle
-    over matched rows only (operators/decontam.py)."""
+    the same table), with word 3-grams (`decontam.NGRAM_N`).  Plan:
+    benchmark n-grams broadcast, one shuffle over matched rows only
+    (operators/decontam.py)."""
     from rdf_knowledge_extractor_spark.operators.decontam import (
         contamination_report,
     )
@@ -847,7 +844,7 @@ def q_corpus_decontam(spark, sf):
     # for the gram stage at sf0.1); no-op at scale
     docs = spread(_docs(spark, sf))
     bench = docs.filter(F.col("doc_id") % 37 == 0)
-    return contamination_report(docs, bench, n=3)
+    return contamination_report(docs, bench)
 
 
 def q_text_entropy(spark, sf):
@@ -862,7 +859,7 @@ def q_text_entropy(spark, sf):
 
     # spread: the bounded bigram explode is Generate-heavy (measured
     # 2.9 s -> 0.6 s at sf0.1 from a one-row-group scan); no-op at scale
-    return char_bigram_entropy(spread(_docs(spark, sf)), max_chars=256)
+    return char_bigram_entropy(spread(_docs(spark, sf)))
 
 
 def q_corpus_split(spark, sf):
@@ -885,7 +882,7 @@ def q_corpus_tfidf(spark, sf):
     # spread: the tokenization feeding both hash aggregates otherwise
     # runs single-task off a one-row-group scan (5.2 -> 4.6 s at
     # sf1-scale); no-op at scale
-    return tfidf_top_terms(spread(_docs(spark, sf)), k=5)
+    return tfidf_top_terms(spread(_docs(spark, sf)))
 
 
 BM25_QUERIES = {
@@ -1110,7 +1107,7 @@ def q_kg_coreness(spark, sf):
             ).alias("dst"),
         )
     )
-    return coreness(edges, max_iter=60)
+    return coreness(edges)
 
 
 HYBRID_PROBES = {"q_scan": 11, "q_hash": 42, "q_agg": 99}
@@ -1154,7 +1151,7 @@ def q_hybrid_search(spark, sf):
             "rank",
         )
     )
-    return rrf_fuse([lex, vec], k=10)
+    return rrf_fuse([lex, vec])
 
 
 def q_corpus_lm_ppl(spark, sf):
@@ -1171,13 +1168,13 @@ def q_corpus_lm_ppl(spark, sf):
 def q_corpus_dupspans(spark, sf):
     """Cross-document duplicate 8-token-window spans, Lee-et-al-style
     (round-5 training-data op): windows explode + gram doc-count
-    aggregate + skew-tolerant join back (operators/dupspans.py).
-    exact_grams=True so the DuckDB oracle compares gram strings."""
+    aggregate + skew-tolerant join back (operators/dupspans.py); the
+    grams are window strings, as the DuckDB oracle compares them."""
     from rdf_knowledge_extractor_spark.operators.dupspans import (
         duplicate_span_report,
     )
 
-    return duplicate_span_report(_docs(spark, sf), k=8, exact_grams=True)
+    return duplicate_span_report(_docs(spark, sf))
 
 
 def q_corpus_mix(spark, sf):
@@ -1212,7 +1209,7 @@ def q_corpus_chunks(spark, sf):
     # spread: the sliding-window Generate otherwise fans out in the
     # single task of a one-row-group scan (4.9 -> 0.6 s at sf1-scale);
     # no-op at scale
-    out = chunk_documents(spread(_docs(spark, sf)), chunk_tokens=32, stride=16)
+    out = chunk_documents(spread(_docs(spark, sf)))
     return out.select(
         "doc_id", "chunk_idx", "n_tokens",
         F.md5("chunk_text").alias("chunk_md5"),
@@ -1334,7 +1331,7 @@ def q_corpus_weighted_sample(spark, sf):
     )
 
     return weighted_sample_per_group(
-        _docs(spark, sf), weight_col="n_chars", group_col="lang", k=20
+        _docs(spark, sf), weight_col="n_chars", group_col="lang"
     ).select("doc_id", "lang", "n_chars")
 
 
@@ -1355,7 +1352,7 @@ def q_kg_pagerank(spark, sf):
         .filter(F.col("predicate") == NS + "belongsTo")
         .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
     )
-    return pagerank(edges, iterations=5)
+    return pagerank(edges)
 
 
 def q_events_funnel(spark, sf):
@@ -1401,14 +1398,14 @@ def q_events_rolling_dau(spark, sf):
         rolling_unique_users,
     )
 
-    return rolling_unique_users(_events(spark, sf), window_days=7)
+    return rolling_unique_users(_events(spark, sf))
 
 
 def q_events_outliers(spark, sf):
     """Robust per-type outlier events (round-5 data-quality op):
     modified z-score on median/MAD — two grouped percentile passes +
     broadcast constants (operators/profile.py::robust_outliers);
-    `exact=True` arm hash-matches DuckDB median."""
+    `percentile` hash-matches DuckDB median."""
     from rdf_knowledge_extractor_spark.operators.profile import (
         robust_outliers,
     )
@@ -1418,8 +1415,6 @@ def q_events_outliers(spark, sf):
         value_col="value",
         group_col="event_type",
         id_col="event_id",
-        z=3.5,
-        exact=True,
     )
 
 

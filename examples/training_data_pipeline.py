@@ -91,7 +91,7 @@ def main(sf_dir: str) -> None:
     bench = docs.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
-    kept, contamination = decontaminate(kept, bench, n=3)
+    kept, contamination = decontaminate(kept, bench)
 
     # 4. PII redaction
     kept = kept.withColumn("text", redact_pii(F.col("text")))

@@ -44,14 +44,18 @@ Your task is to:
 Return your response as a JSON array of triple objects."""
 
 
-def truncate_to_bytes(text: str, limit: int = 8000) -> str:
-    """First `limit` BYTES of text (ref:src/core/llm_client.rs:263-270
+# the prompt's document budget in bytes
+PROMPT_DOC_BYTES = 8000
+
+
+def truncate_to_bytes(text: str) -> str:
+    """First `PROMPT_DOC_BYTES` BYTES of text (ref:src/core/llm_client.rs:263-270
     slices `&document_text[..8000]` — a byte slice).  Rust panics on a
     non-char boundary; we back off to the previous UTF-8 boundary."""
     encoded = text.encode("utf-8")
-    if len(encoded) <= limit:
+    if len(encoded) <= PROMPT_DOC_BYTES:
         return text
-    return encoded[:limit].decode("utf-8", errors="ignore")
+    return encoded[:PROMPT_DOC_BYTES].decode("utf-8", errors="ignore")
 
 
 def build_extraction_prompt(
@@ -62,7 +66,7 @@ def build_extraction_prompt(
     # ref:src/core/llm_client.rs:256-319
     parts: list[str] = []
     parts.append("## Document Content\n")
-    parts.append(truncate_to_bytes(document_text, 8000))
+    parts.append(truncate_to_bytes(document_text))
     parts.append("\n\n")
 
     parts.append("## Information to Extract\n")

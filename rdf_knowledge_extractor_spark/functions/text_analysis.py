@@ -185,25 +185,26 @@ def char_shingles(text: Column, k: int = 9, distinct: bool = True) -> Column:
     return F.when(n >= k, grams).otherwise(F.array(text))
 
 
+# the prefix `char_bigram_entropy` reads, in characters
+ENTROPY_MAX_CHARS = 256
+
+
 def char_bigram_entropy(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_chars: int = 512,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id_col, n_bigrams, entropy) — Shannon entropy (nats, 4 dp) of
-    the character-bigram distribution over the first `max_chars`
-    characters.
+    the character-bigram distribution over the first
+    `ENTROPY_MAX_CHARS` characters.
 
     A Gopher-style gibberish signal: natural language sits in a narrow
     entropy band, while key-mash/minified/encoded blobs score high and
     single-character repetition scores near 0.  The prefix cap bounds
-    the fan-out (≤ max_chars-1 bigram rows per doc) so the explode
-    stays O(docs·max_chars), not O(corpus bytes), at 100 TB; two hash
+    the fan-out (≤ ENTROPY_MAX_CHARS-1 bigram rows per doc) so the explode
+    stays O(docs·ENTROPY_MAX_CHARS), not O(corpus bytes), at 100 TB; two hash
     aggregates (bigram counts, then the entropy fold), both map-side
     combinable.  Docs shorter than 2 chars yield zero bigrams and are
     reported with entropy 0.0."""
-    t = F.substring(F.col(text_col), 1, max_chars)
+    t = F.substring(F.col(text_col), 1, ENTROPY_MAX_CHARS)
     n = F.length(t)
     bigrams = F.when(
         n >= 2,

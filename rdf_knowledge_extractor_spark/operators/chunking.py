@@ -13,10 +13,11 @@ fan-out (× ~n_tokens/stride) handled by Spark's Generate operator,
 never a Python loop.
 
 Window semantics (deliberately the simplest SQL-expressible rule, so
-the DuckDB oracle is exact): chunk i starts at token i*stride
-(0-based) for every i*stride < n_tokens and spans up to chunk_tokens
-tokens.  The final chunk may be shorter than chunk_tokens; a document
-with fewer tokens than chunk_tokens yields exactly one chunk; an
+the DuckDB oracle is exact): chunk i starts at token i*CHUNK_STRIDE
+(0-based) for every i*CHUNK_STRIDE < n_tokens and spans up to
+CHUNK_TOKENS tokens, so consecutive chunks overlap by half and every
+token is covered.  The final chunk may be shorter than CHUNK_TOKENS; a
+document with fewer tokens yields exactly one chunk; an
 empty/whitespace document yields none.
 """
 
@@ -24,40 +25,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+CHUNK_TOKENS = 32
+CHUNK_STRIDE = 16
+
 
 def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 128,
-    stride: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """DataFrame(<id_col>, chunk_idx, n_tokens, chunk_text) — sliding
     whitespace-token windows (see module docstring for the window
-    rule).  stride <= chunk_tokens guarantees full coverage; larger
-    strides are allowed (sampled chunks) but leave gaps."""
-    if chunk_tokens < 1:
-        raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
+    rule)."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     # trim("") splits to [""] — normalize to a true empty array so an
     # empty document yields zero chunks, not one empty chunk
     toks = F.when(F.length(F.trim(F.col(text_col))) == 0,
                   F.array().cast("array<string>")).otherwise(toks)
     n = F.size(toks)
-    # chunk starts: 0, stride, ... while start < n_tokens.  sequence's
+    # chunk starts: 0, CHUNK_STRIDE, ... while start < n_tokens.  sequence's
     # upper bound must not go below the lower bound (it would DESCEND),
     # hence the greatest(...) floor and the outer empty-doc guard.
     starts = F.sequence(
         F.lit(0),
-        F.greatest(F.ceil(n / stride).cast("long") - F.lit(1), F.lit(0)),
+        F.greatest(F.ceil(n / CHUNK_STRIDE).cast("long") - F.lit(1), F.lit(0)),
     )
     chunks = F.transform(
         starts,
         lambda i: F.struct(
             i.alias("chunk_idx"),
-            F.slice(toks, i * stride + F.lit(1), chunk_tokens).alias("_w"),
+            F.slice(toks, i * CHUNK_STRIDE + F.lit(1), CHUNK_TOKENS).alias("_w"),
         ),
     )
     return (

@@ -36,6 +36,12 @@ from rdf_knowledge_extractor_spark.functions.text_analysis import (
 
 # the quality-score quantiles `quality_percentiles` reports
 QUALITY_QUANTILES = (0.5, 0.9, 0.99)
+# docs kept per group by `quota_per_group` and `weighted_sample_per_group`
+QUOTA_K = 5
+WEIGHTED_SAMPLE_K = 20
+# `top_terms`' vocabulary size and its minimum count
+TOP_TERMS_K = 100
+TOP_TERMS_MIN_COUNT = 2
 
 
 def _hash_hex8(col: Column) -> Column:
@@ -70,10 +76,9 @@ def deterministic_sample(
 def quota_per_group(
     docs: DataFrame,
     group_col: str = "source",
-    k: int = 10,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """At most k docs per group, chosen by uniform deterministic
+    """At most `QUOTA_K` docs per group, chosen by uniform deterministic
     priority (md5 of the id; ties broken by id).  rank≤k compiles to
     WindowGroupLimit — map-side partial top-k, see module notes."""
     w = Window.partitionBy(group_col).orderBy(
@@ -81,7 +86,7 @@ def quota_per_group(
     )
     return (
         docs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= QUOTA_K)
         .drop("_rn")
     )
 
@@ -152,13 +157,9 @@ def curate_corpus(
     )
 
 
-def top_terms(
-    docs: DataFrame,
-    k: int = 100,
-    min_count: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
-    """Global top-k vocabulary: (term, cnt), count desc / term asc.
+def top_terms(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Global top-`TOP_TERMS_K` vocabulary of the terms seen at least
+    `TOP_TERMS_MIN_COUNT` times: (term, cnt), count desc / term asc.
 
     explode(split) → hash-agg with map-side partial combine → global
     top-k via orderBy+limit (TakeOrderedAndProject, never a full
@@ -169,9 +170,9 @@ def top_terms(
     return (
         terms.groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        .filter(F.col("cnt") >= TOP_TERMS_MIN_COUNT)
         .orderBy(F.col("cnt").desc(), F.col("term"))
-        .limit(k)
+        .limit(TOP_TERMS_K)
     )
 
 
@@ -206,32 +207,27 @@ def rollup_report(
     return agged.select(*labelled, count_alias, sum_alias)
 
 
-def quality_percentiles(docs: DataFrame, exact: bool = False) -> DataFrame:
+def quality_percentiles(docs: DataFrame) -> DataFrame:
     """Per-predicted-language quality-score distribution
     (n_docs + one column per `QUALITY_QUANTILES` entry, named
     p50/p90/p99), rounded to 4 dp.
 
-    `exact=False` (the 100-TB default) aggregates with
-    `approx_percentile` — constant memory per group (Greenwald-Khanna
-    sketch, accuracy 10000: error ≤ 1e-4 of rank) — so a billion-doc
-    language group never buffers its values.  `exact=True` uses `percentile`
-    (linear interpolation, buffers each group) and hash-matches the
-    DuckDB `quantile_cont` oracle; it is the small-scale/oracle arm.
+    Aggregates with `percentile` (linear interpolation), which
+    hash-matches the DuckDB `quantile_cont` oracle; it buffers each
+    language group's scores.
     """
     scored = quality_metrics(docs).withColumn(
         "lang_pred", detect_language(F.col("text"))
     )
 
-    def pct(q: float) -> Column:
-        name = f"p{round(q * 100)}"
-        if exact:
-            col = F.percentile("quality_score", F.lit(q))
-        else:
-            col = F.approx_percentile("quality_score", F.lit(q), F.lit(10000))
-        return F.round(col, 4).alias(name)
-
     return scored.groupBy("lang_pred").agg(
-        F.count(F.lit(1)).alias("n_docs"), *[pct(q) for q in QUALITY_QUANTILES]
+        F.count(F.lit(1)).alias("n_docs"),
+        *[
+            F.round(F.percentile("quality_score", F.lit(q)), 4).alias(
+                f"p{round(q * 100)}"
+            )
+            for q in QUALITY_QUANTILES
+        ],
     )
 
 
@@ -293,10 +289,9 @@ def weighted_sample_per_group(
     docs: DataFrame,
     weight_col: str,
     group_col: str = "source",
-    k: int = 10,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """At most k docs per group, sampled WITHOUT replacement with
+    """At most `WEIGHTED_SAMPLE_K` docs per group, sampled WITHOUT replacement with
     probability proportional to `weight_col` (Efraimidis–Spirakis
     A-ES: priority = u^(1/w) with u the md5-derived uniform in (0,1];
     the k largest priorities per group are exactly a weighted
@@ -312,8 +307,6 @@ def weighted_sample_per_group(
     computed per row at scan speed — no extra shuffle versus
     `quota_per_group`.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
     u = (
         F.conv(_hash_hex8(F.col(id_col)), 16, 10).cast("double") + 1.0
     ) / F.lit(4294967296.0)
@@ -325,6 +318,6 @@ def weighted_sample_per_group(
         docs.filter(F.col(weight_col) > 0)
         .withColumn("_aes", F.round(key, 12))
         .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= WEIGHTED_SAMPLE_K)
         .drop("_rn", "_aes")
     )

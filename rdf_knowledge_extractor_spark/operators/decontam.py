@@ -5,8 +5,9 @@ Standard LLM training-data hygiene (the reference engine has no
 corpus-scale analytics — /root/reference/README.md scopes it to small
 KGs — so this family extends the engine for the 100-TB pipeline the
 way operators/curation.py does): a document is *contaminated* when any
-of its word n-grams (default n=13, the common published choice for
-test-set decontamination) also occurs in the benchmark corpus.
+of its word `NGRAM_N`-grams also occurs in the benchmark corpus.
+`NGRAM_N` is 3, which gives the synthetic word-soup corpora non-trivial
+overlap; the common published choice for real text is 13.
 
 Spark-first shape, sized for 100 TB of documents vs a benchmark of at
 most a few hundred MB:
@@ -29,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+NGRAM_N = 3
+
 
 def words(text: Column) -> Column:
     """array<string> of lowercase alphanumeric-run tokens."""
@@ -46,8 +49,6 @@ def word_ngrams(text: Column, n: int) -> Column:
     stop < start, and Spark's sequence then DESCENDS instead of being
     empty (same trap as operators/textdedup._pair_combos).
     """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
     t = words(text)
     grams = F.transform(
         F.sequence(F.lit(1), F.size(t) - F.lit(n - 1)),
@@ -61,23 +62,22 @@ def word_ngrams(text: Column, n: int) -> Column:
 def contamination_report(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
 ) -> DataFrame:
     """DataFrame(<id_col>, n_matched) — one row per contaminated doc,
-    n_matched = how many DISTINCT of its n-grams occur in the
+    n_matched = how many DISTINCT of its `NGRAM_N`-grams occur in the
     benchmark.  Docs sharing nothing with the benchmark are absent."""
     bench_grams = (
         benchmark.select(
-            F.explode(word_ngrams(F.col(bench_text_col), n)).alias("_g")
+            F.explode(word_ngrams(F.col(bench_text_col), NGRAM_N)).alias("_g")
         )
         .distinct()
     )
     doc_grams = docs.select(
         F.col(id_col),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("_g"),
+        F.explode(word_ngrams(F.col(text_col), NGRAM_N)).alias("_g"),
     )
     return (
         doc_grams.join(F.broadcast(bench_grams), on="_g", how="inner")
@@ -89,7 +89,6 @@ def contamination_report(
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
@@ -98,7 +97,7 @@ def decontaminate(
     sharing at least one word n-gram with `benchmark`; report is
     contamination_report's per-doc match counts."""
     report = contamination_report(
-        docs, benchmark, n=n,
+        docs, benchmark,
         id_col=id_col, text_col=text_col, bench_text_col=bench_text_col,
     )
     clean = docs.join(report.select(id_col), on=id_col, how="left_anti")

@@ -9,6 +9,8 @@ articles, and licence blocks that whole-doc MinHash misses because
 the surrounding text differs.  Beyond-reference family (the reference
 engine scopes itself to small KGs — /root/reference/README.md).
 
+The window is `WINDOW_TOKENS` (8) tokens wide.
+
 Scale shape (everything Catalyst, no Python):
 
 - window grams are built JVM-side from the token array
@@ -21,62 +23,46 @@ Scale shape (everything Catalyst, no Python):
   repeated across millions of pages) skews only the probe side,
   which AQE skew-join splits — and the per-doc result aggregate
   re-shuffles by doc id, dissolving the hot gram's partition;
-- by default grams travel as `xxhash64` keys, not strings, so the
-  shuffle moves 8 bytes per window instead of the window text
-  (`exact_grams=True` keeps the strings — what the DuckDB oracle
-  compares against; a 64-bit collision is the only way the two can
-  disagree).
+- grams travel as the window text, which is what the DuckDB oracle
+  compares against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+WINDOW_TOKENS = 8
+
 
 def doc_window_grams(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    exact_grams: bool = False,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id_col, gram) — one row per k-token window position (stride
-    1).  Docs with fewer than k tokens contribute no rows.  With
-    `exact_grams=False` the gram column is its xxhash64 (long)."""
-    if k < 2:
-        raise ValueError(f"window size k must be >= 2, got {k}")
+    """(id_col, gram) — one row per `WINDOW_TOKENS`-token window
+    position (stride 1), the gram being the window's tokens joined by
+    one space.  Docs with fewer tokens contribute no rows."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     grams = F.when(
-        F.size(toks) >= k,
+        F.size(toks) >= WINDOW_TOKENS,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(k - 1)),
-            lambda s: F.array_join(F.slice(toks, s, k), " "),
+            F.sequence(F.lit(1), F.size(toks) - F.lit(WINDOW_TOKENS - 1)),
+            lambda s: F.array_join(F.slice(toks, s, WINDOW_TOKENS), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    out = (
+    return (
         docs.filter(F.length(F.trim(F.col(text_col))) > 0)
         .select(F.col(id_col), F.explode(grams).alias("gram"))
     )
-    if not exact_grams:
-        out = out.select(id_col, F.xxhash64("gram").alias("gram"))
-    return out
 
 
 def duplicate_span_report(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    exact_grams: bool = False,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id_col, n_windows, n_shared, shared_frac) — per document: the
-    number of k-token window positions, how many of them carry a gram
-    that also appears in at least one OTHER document, and the shared
-    fraction (4 dp).  Every input document keeps a row; docs with
-    fewer than k tokens report (0, 0, 0.0)."""
-    wins = doc_window_grams(
-        docs, k=k, id_col=id_col, text_col=text_col, exact_grams=exact_grams
-    )
+    number of `WINDOW_TOKENS`-token window positions, how many of them
+    carry a gram that also appears in at least one OTHER document, and
+    the shared fraction (4 dp).  Every input document keeps a row;
+    shorter docs report (0, 0, 0.0)."""
+    wins = doc_window_grams(docs, id_col=id_col, text_col=text_col)
     gram_docs = wins.groupBy("gram").agg(
         F.count_distinct(id_col).alias("_ndocs")
     )

@@ -36,6 +36,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# the trailing window `rolling_unique_users` counts distinct users over
+WINDOW_DAYS = 7
+
 
 def funnel_depths(
     events: DataFrame,
@@ -136,25 +139,20 @@ def cohort_retention(
 
 
 def rolling_unique_users(
-    events: DataFrame,
-    window_days: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
+    events: DataFrame, user_col: str = "user_id", ts_col: str = "ts"
 ) -> DataFrame:
     """(day, dau, uniques_w) — daily active users plus the trailing
-    `window_days`-day distinct-user count ending each day.
+    `WINDOW_DAYS`-day distinct-user count ending each day.
 
     Rolling DISTINCTS cannot be summed from daily counts, and a
     range join (activity × day grid) rebuilds the fact table per
     window day.  The scalable exact shape instead EXPLODES each
-    (user, day) activity row into the `window_days` windows it
+    (user, day) activity row into the `WINDOW_DAYS` windows it
     belongs to (day … day+w-1) — w× the deduped activity sliver, not
     w× the corpus — then one count-distinct aggregate per window day.
     Windows are truncated at the data's last day (no phantom trailing
     windows); leading windows are naturally partial, the standard
     dashboard convention."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
     act = events.select(
         F.col(user_col).alias("_u"), F.to_date(ts_col).alias("_day")
     ).distinct()
@@ -164,7 +162,7 @@ def rolling_unique_users(
         act.select(
             "_u",
             F.explode(
-                F.sequence(F.lit(0), F.lit(window_days - 1))
+                F.sequence(F.lit(0), F.lit(WINDOW_DAYS - 1))
             ).alias("_k"),
             "_day",
         )

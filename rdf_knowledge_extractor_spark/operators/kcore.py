@@ -37,6 +37,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# the round bound of `coreness`' fixpoint loop
+MAX_ITER = 60
+
 
 def _symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct undirected adjacency as directed pairs both ways,
@@ -55,13 +58,10 @@ def _symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 def coreness(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 100,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(node, coreness) — exact core number per node.  Converges when
-    an iteration changes no value (guaranteed; `max_iter` is a
+    an iteration changes no value (guaranteed; `MAX_ITER` is a
     safety rail and raises if hit, since a truncated run would
     silently overestimate).
 
@@ -75,7 +75,7 @@ def coreness(
     vals = adj.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
     vals = vals.localCheckpoint(eager=True)
     w = Window.partitionBy("u").orderBy(F.col("_nc").desc(), F.col("n"))
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         nxt = (
             adj.join(
                 vals.select(F.col("u").alias("n"), F.col("c").alias("_nc")),
@@ -100,4 +100,4 @@ def coreness(
             return vals.select(
                 F.col("u").alias("node"), F.col("c").alias("coreness")
             )
-    raise RuntimeError(f"coreness did not converge in {max_iter} rounds")
+    raise RuntimeError(f"coreness did not converge in {MAX_ITER} rounds")

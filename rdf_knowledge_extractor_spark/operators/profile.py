@@ -19,38 +19,33 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# the modified z-score above which `robust_outliers` flags a row
+OUTLIER_Z = 3.5
+
 
 def robust_outliers(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    id_col: str,
-    z: float = 3.5,
-    exact: bool = False,
+    df: DataFrame, value_col: str, group_col: str, id_col: str
 ) -> DataFrame:
     """(id, group, value, robust_z) — rows whose modified z-score
-    |0.6745·(v − median)| / MAD exceeds `z` within their group
+    |0.6745·(v − median)| / MAD exceeds `OUTLIER_Z` within their group
     (Iglewicz–Hoaglin).  Median/MAD resist the very outliers they
     hunt, unlike mean/stddev.  Groups with MAD = 0 flag nothing
     (degenerate constant groups).
 
-    Scale shape: two grouped percentile passes (value median, then
-    MAD as the median of absolute deviations) — `exact=False` (the
-    100-TB default) uses `approx_percentile`, constant memory per
-    group; `exact=True` buffers per group and hash-matches DuckDB's
-    `median`.  The per-group constants (≤ |groups| rows) ride back
-    as broadcast joins, so the corpus is scanned twice and never
-    re-shuffled."""
-    pct = (
-        (lambda c: F.expr(f"percentile({c}, 0.5)"))
-        if exact
-        else (lambda c: F.expr(f"approx_percentile({c}, 0.5, 10000)"))
+    Scale shape: two grouped `percentile` passes (value median, then
+    MAD as the median of absolute deviations); each buffers its group
+    and hash-matches DuckDB's `median`.  The per-group constants
+    (≤ |groups| rows) ride back as broadcast joins, so the corpus is
+    scanned twice and never re-shuffled."""
+    med = df.groupBy(group_col).agg(
+        F.expr(f"percentile({value_col}, 0.5)").alias("_med")
     )
-    med = df.groupBy(group_col).agg(pct(value_col).alias("_med"))
     dev = df.join(F.broadcast(med), on=group_col).withColumn(
         "_adev", F.abs(F.col(value_col) - F.col("_med"))
     )
-    mad = dev.groupBy(group_col).agg(pct("_adev").alias("_mad"))
+    mad = dev.groupBy(group_col).agg(
+        F.expr("percentile(_adev, 0.5)").alias("_mad")
+    )
     return (
         dev.join(F.broadcast(mad), on=group_col)
         .withColumn(
@@ -59,7 +54,7 @@ def robust_outliers(
                 0.6745 * F.col("_adev") / F.col("_mad"), 4
             ),
         )
-        .filter((F.col("_mad") > 0) & (F.col("robust_z") > z))
+        .filter((F.col("_mad") > 0) & (F.col("robust_z") > OUTLIER_Z))
         .select(id_col, group_col, value_col, "robust_z")
     )
 

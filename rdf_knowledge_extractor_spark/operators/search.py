@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 TOKEN_SPLIT = "[^a-z0-9]+"
 BM25_K1 = 1.2
 BM25_B = 0.75
+# docs `rrf_fuse` keeps per query
+FUSED_K = 10
 
 
 def _tokens(col):
@@ -159,8 +161,9 @@ def bm25_topk(
     )
 
 
-def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
-    """(query_id, rank, doc_id, rrf) — reciprocal-rank fusion
+def rrf_fuse(rankings: list[DataFrame]) -> DataFrame:
+    """(query_id, rank, doc_id, rrf) — the top `FUSED_K` of the
+    reciprocal-rank fusion
     (Cormack/Clarke/Buettcher 2009) of N per-query rankings, each a
     DataFrame with (query_id, doc_id, rank).  rrf = Σ 1/(c + rank)
     over the systems that retrieved the doc, with the paper's c = 60.
@@ -172,8 +175,6 @@ def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
     engine-portable determinism."""
     if not rankings:
         raise ValueError("need at least one ranking to fuse")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
     u = rankings[0].select("query_id", "doc_id", "rank")
     for r in rankings[1:]:
         u = u.unionByName(r.select("query_id", "doc_id", "rank"))
@@ -185,7 +186,7 @@ def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
     )
     return (
         fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= FUSED_K)
         .select(
             "query_id", "rank", "doc_id", F.round("_rrf", 6).alias("rrf")
         )

@@ -23,6 +23,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# neighbours `lsh_cosine_topk` and `ivf_cosine_topk` return per query
+ANN_K = 5
+N_CENTROIDS = 16
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -244,13 +248,12 @@ def cosine_pairs_bucketed(
 def train_ivf_centroids(
     corpus: DataFrame,
     dim: int,
-    n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
     """Spherical k-means centroids from a DETERMINISTIC 2048-row sample
     (ordered by id — no nondeterministic sampling), trained driver-side
-    with 5 numpy Lloyd iterations.  Centroids are (n_centroids × dim)
+    with 5 numpy Lloyd iterations.  Centroids are (N_CENTROIDS × dim)
     floats — kilobytes — so driver training + closure broadcast is the
     right topology even at 10^12 corpus rows (the sample, not the
     corpus, bounds the work; production would sample per-partition)."""
@@ -260,7 +263,7 @@ def train_ivf_centroids(
         raise ValueError(f"embedding width {X.shape[1]} != declared dim {dim}")
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(9)
-    cents = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)].copy()
+    cents = X[rng.choice(len(X), size=min(N_CENTROIDS, len(X)), replace=False)].copy()
     for _ in range(5):
         assign = (X @ cents.T).argmax(axis=1)
         for c in range(len(cents)):
@@ -281,7 +284,7 @@ def _ivf_cells_udf(cents: np.ndarray, nprobe: int):
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        sims = M @ C.T  # (N, n_centroids)
+        sims = M @ C.T  # (N, N_CENTROIDS)
         top = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
         return pd.Series(list(top))
 
@@ -292,26 +295,22 @@ def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    k: int = 5,
-    n_centroids: int = 16,
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k: corpus rows partition into centroid cells
-    (inverted file); each query probes its `nprobe` nearest cells and
-    exact-reranks only those candidates.
+    """IVF approximate top-`ANN_K`: corpus rows partition into
+    `N_CENTROIDS` centroid cells (inverted file); each query probes its
+    `nprobe` nearest cells and exact-reranks only those candidates.
 
-    Scale shape: candidate volume ≈ corpus × nprobe / n_centroids per
+    Scale shape: candidate volume ≈ corpus × nprobe / N_CENTROIDS per
     query — at 10^9 vectors with 4096 cells and nprobe 64 that is a
     64× reduction with recall tunable via nprobe (recall-vs-bruteforce
     pinned in tests).  The cell column doubles as the natural partition
     key for a materialized index table."""
     from rdf_knowledge_extractor_spark.operators.dispatch import spread
 
-    cents = train_ivf_centroids(
-        corpus, dim, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-    )
+    cents = train_ivf_centroids(corpus, dim, id_col=id_col, vec_col=vec_col)
     corpus = spread(corpus)  # single-row-group scans → 1-task UDF stage
     assign1 = _ivf_cells_udf(cents, 1)
     probe = _ivf_cells_udf(cents, nprobe)
@@ -341,7 +340,7 @@ def ivf_cosine_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= ANN_K)
         .select("query_id", "neighbor_id", "sim")
     )
 
@@ -350,13 +349,12 @@ def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    k: int = 5,
     n_planes: int = 12,
     n_tables: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: `n_tables` independent sign-LSH bucketings;
+    """Approximate top-`ANN_K`: `n_tables` independent sign-LSH bucketings;
     candidates = bucket collisions in any table; exact re-rank.
     Recall tunable via n_planes (bucket size) × n_tables."""
     from rdf_knowledge_extractor_spark.operators.dispatch import spread
@@ -384,6 +382,6 @@ def lsh_cosine_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= ANN_K)
         .select("query_id", "neighbor_id", "sim")
     )

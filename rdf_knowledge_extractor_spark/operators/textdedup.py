@@ -32,6 +32,10 @@ multiple join branches — the caches live until the caller evaluates
 the result and releases them (`spark.catalog.clearCache()` or
 `unpersist()` on a retained reference).  A service deduping many
 corpora in one session should clear between corpora (bench.py does).
+A caller that evaluates the pairs itself owns what it persisted: the
+linking arm (`linking._link_distributed`) and the streaming filter
+take `_bucket_candidate_pairs`' aggregate with `with_buckets=True` and
+unpersist it once the pairs have been read.
 """
 
 from __future__ import annotations
@@ -51,6 +55,11 @@ from rdf_knowledge_extractor_spark.operators.dispatch import spread
 _MERSENNE = (1 << 61) - 1
 # added to 1−t before the prefix-length floor; see _prefix_len
 _PREFIX_SLACK = 1e-12
+# char-shingle width of `ngram_jaccard_pairs` and `simhash_pairs`
+SHINGLE_K = 9
+# `ngram_jaccard_pairs`' Jaccard bound and `simhash_pairs`' hamming radius
+JACCARD_THRESHOLD = 0.8
+MAX_HAMMING = 3
 
 
 def shingle_hash_col(shingles_col):
@@ -316,13 +325,10 @@ def rarest_first_prefix(sets: DataFrame, threshold: float) -> DataFrame:
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 9,
-    threshold: float = 0.8,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ):
-    """DataFrame(id_a, id_b, jaccard) for pairs with Jaccard ≥ threshold.
+    """DataFrame(id_a, id_b, jaccard) for pairs with Jaccard ≥
+    `JACCARD_THRESHOLD` over `SHINGLE_K`-char shingles.
 
     EXACT result via prefix filtering (PPJoin family): only each
     document's rarest-first prefix enters the inverted index
@@ -331,7 +337,7 @@ def ngram_jaccard_pairs(
     the surviving candidates.
     """
     sh = (
-        _with_shingles(spread(docs), id_col, text_col, k)
+        _with_shingles(spread(docs), id_col, text_col, SHINGLE_K)
         .withColumn("shingles", F.array_sort("shingles"))
         .persist()
     )
@@ -339,7 +345,9 @@ def ngram_jaccard_pairs(
     # prefix index (see _bucket_candidate_pairs): rarest-first prefixes
     # keep postings lists short; an oversized posting (hot gram) is
     # routed through the self-join instead of exploding in one row
-    cands = _bucket_candidate_pairs(rarest_first_prefix(sh, threshold), ["g"], "id")
+    cands = _bucket_candidate_pairs(
+        rarest_first_prefix(sh, JACCARD_THRESHOLD), ["g"], "id"
+    )
     # verification runs on xxhash64-HASHED shingles: long set-ops are
     # several times cheaper than hashing 9-char strings into the
     # intersect hash set, and |∩|/|∪| is unchanged up to a 2⁻⁶⁴ in-pair
@@ -350,7 +358,7 @@ def ngram_jaccard_pairs(
     hashed = sh.select(
         "id", F.array_distinct(shingle_hash_col(F.col("shingles"))).alias("h")
     )
-    return _verified_pairs(cands, hashed, hashed, threshold)
+    return _verified_pairs(cands, hashed, hashed, JACCARD_THRESHOLD)
 
 
 def minhash_lsh_pairs(
@@ -555,24 +563,21 @@ def _simhash_from_hashes(hashed: pd.Series) -> pd.Series:
 
 
 def simhash_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 9,
-    max_hamming: int = 3,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ):
-    """DataFrame(id_a, id_b, hamming) with hamming(simhash) ≤ max_hamming.
+    """DataFrame(id_a, id_b, hamming) with hamming(simhash) ≤
+    `MAX_HAMMING`, sketched from `SHINGLE_K`-char shingles.
 
-    Pigeonhole blocking: 64 bits split into `max_hamming + 1` chunks —
+    Pigeonhole blocking: 64 bits split into `MAX_HAMMING + 1` chunks —
     any pair within the radius must agree on ≥1 full chunk, so the
     equi-join on (chunk_idx, chunk_value) has guaranteed recall.
     """
-    n_chunks = max_hamming + 1
+    n_chunks = MAX_HAMMING + 1
     chunk_bits = 64 // n_chunks
     sigs = spread(docs).select(
         F.col(id_col).alias("id"),
         _simhash_from_hashes(
-            shingle_hash_col(char_shingles(F.col(text_col), k))
+            shingle_hash_col(char_shingles(F.col(text_col), SHINGLE_K))
         ).alias("sig"),
     )
     chunks = sigs.select(
@@ -610,4 +615,4 @@ def simhash_pairs(
         F.col("id_a.id").alias("id_a"),
         F.col("id_b.id").alias("id_b"),
         hamming.alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
+    ).filter(F.col("hamming") <= MAX_HAMMING)

@@ -28,19 +28,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+TOP_K = 5
+
 
 def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """DataFrame(<id_col>, term, tf, df, tfidf, rank) — per document,
-    the k highest-tf·ln(N/df) terms (rank 1 = most characteristic;
+    the `TOP_K` highest-tf·ln(N/df) terms (rank 1 = most characteristic;
     ties broken by term asc).  Terms are whitespace tokens, exactly
     `curation.top_terms`' tokenization."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
     terms = docs.select(
         F.col(id_col),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
@@ -63,6 +60,6 @@ def tfidf_top_terms(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(id_col, "term", "tf", "df", "tfidf", "rank")
     )

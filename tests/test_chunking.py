@@ -6,32 +6,29 @@ from __future__ import annotations
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from rdf_knowledge_extractor_spark.operators.chunking import chunk_documents
 
 
 def test_chunk_windows_and_tail(spark):
-    text = " ".join(f"t{i}" for i in range(10))
-    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    rows = sorted(
-        chunk_documents(df, chunk_tokens=4, stride=3).collect(),
-        key=lambda r: r.chunk_idx,
-    )
-    # starts 0,3,6,9 (all < 10); last chunk is the 1-token tail
+    toks = [f"t{i}" for i in range(50)]
+    df = spark.createDataFrame([(1, " ".join(toks))], ["doc_id", "text"])
+    rows = sorted(chunk_documents(df).collect(), key=lambda r: r.chunk_idx)
+    # 32-token windows at stride 16: starts 0,16,32,48 (all < 50); the
+    # last chunk is the 2-token tail
     assert [(r.chunk_idx, r.n_tokens, r.chunk_text) for r in rows] == [
-        (0, 4, "t0 t1 t2 t3"),
-        (1, 4, "t3 t4 t5 t6"),
-        (2, 4, "t6 t7 t8 t9"),
-        (3, 1, "t9"),
+        (0, 32, " ".join(toks[0:32])),
+        (1, 32, " ".join(toks[16:48])),
+        (2, 18, " ".join(toks[32:50])),
+        (3, 2, "t48 t49"),
     ]
 
 
 def test_chunk_overlap_covers_every_token(spark):
     text = " ".join(f"t{i}" for i in range(57))
     df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    rows = chunk_documents(df, chunk_tokens=16, stride=8).collect()
+    rows = chunk_documents(df).collect()
     covered = set()
     for r in rows:
         covered.update(r.chunk_text.split(" "))
@@ -43,7 +40,7 @@ def test_short_and_empty_docs(spark):
         [(1, "a b"), (2, ""), (3, "   "), (4, None)],
         "doc_id long, text string",
     )
-    rows = chunk_documents(df, chunk_tokens=8, stride=4).collect()
+    rows = chunk_documents(df).collect()
     # doc 1 -> exactly one (short) chunk; empty/blank/null -> none
     assert [(r.doc_id, r.chunk_idx, r.chunk_text) for r in rows] == [(1, 0, "a b")]
 
@@ -56,10 +53,3 @@ def test_chunking_is_shuffle_free(spark):
         out.explain()
     assert "Exchange" not in buf.getvalue()
 
-
-def test_chunking_validation(spark):
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        chunk_documents(df, chunk_tokens=0)
-    with pytest.raises(ValueError):
-        chunk_documents(df, stride=0)

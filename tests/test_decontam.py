@@ -38,13 +38,12 @@ def corpus(spark):
         # 1: contains it with different case and punctuation
         (1, "What is the CAPITAL of France? The capital of France is "
             "Paris, which lies on the Seine!"),
-        # 2: clean — long but shares no 13-gram
+        # 2: clean — long but shares no 3-gram
         (2, " ".join(f"word{i}" for i in range(60))),
-        # 3: shorter than 13 words — can never match at n=13
-        (3, "the capital of france"),
-        # 4: clean with partial (12-word) overlap only
-        (4, "what is the capital of france the capital of france is rome "
-            "unrelated tail of words"),
+        # 3: shorter than 3 words — can never match
+        (3, "the capital"),
+        # 4: clean with 2-word overlaps only
+        (4, "what is rome the capital city of france"),
     ]
     return rows
 
@@ -73,37 +72,34 @@ def test_word_ngrams_short_text_is_empty_not_descending(spark):
 
 
 def test_decontaminate_flags_verbatim_and_normalized(docs, bench_set):
-    clean, report = decontaminate(docs, bench_set, n=13)
+    clean, report = decontaminate(docs, bench_set)
     flagged = {r.doc_id for r in report.collect()}
     assert flagged == {0, 1}
     assert {r.doc_id for r in clean.collect()} == {2, 3, 4}
 
 
 def test_report_counts_distinct_matched_ngrams(docs, bench_set):
-    report = contamination_report(docs, bench_set, n=13)
+    report = contamination_report(docs, bench_set)
     by_id = {r.doc_id: r.n_matched for r in report.collect()}
-    # the benchmark passage has 17 words -> 5 distinct 13-grams, all
-    # present verbatim in doc 0 and (normalized) in doc 1
-    assert by_id == {0: 5, 1: 5}
+    # the benchmark passage has 17 words -> 15 3-grams, 13 distinct
+    # ("the capital of" and "capital of france" repeat), all present
+    # verbatim in doc 0 and (normalized) in doc 1
+    assert by_id == {0: 13, 1: 13}
 
 
-def test_twelve_word_overlap_is_not_contamination(docs, bench_set):
-    # doc 4 shares a 12-word prefix run but breaks at word 13
-    report = contamination_report(docs, bench_set, n=13)
+def test_two_word_overlap_is_not_contamination(docs, bench_set):
+    # doc 4 shares 2-word runs ("what is", "the capital", "of france")
+    # but no 3-gram
+    report = contamination_report(docs, bench_set)
     assert report.filter(F.col("doc_id") == 4).count() == 0
 
 
 def test_benchmark_side_is_broadcast(docs, bench_set):
-    report = contamination_report(docs, bench_set, n=13)
+    report = contamination_report(docs, bench_set)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         report.explain()
     assert "BroadcastExchange" in buf.getvalue()
-
-
-def test_ngram_n_validation(docs, bench_set):
-    with pytest.raises(ValueError):
-        contamination_report(docs, bench_set, n=0)
 
 
 # -- PII ------------------------------------------------------------
@@ -190,9 +186,11 @@ def test_char_bigram_entropy_closed_forms(spark):
 
 def test_char_bigram_entropy_prefix_cap(spark):
     from rdf_knowledge_extractor_spark.functions.text_analysis import (
+        ENTROPY_MAX_CHARS,
         char_bigram_entropy,
     )
 
     df = spark.createDataFrame([(1, "ab" * 1000)], ["doc_id", "text"])
-    [r] = char_bigram_entropy(df, max_chars=16).collect()
-    assert r.n_bigrams == 15  # capped at the prefix, not the full doc
+    [r] = char_bigram_entropy(df).collect()
+    # capped at the prefix, not the full doc
+    assert r.n_bigrams == ENTROPY_MAX_CHARS - 1

@@ -128,12 +128,12 @@ def test_parse_confidence(example_config):
 # -- prompt construction (ref:src/core/llm_client.rs:256-319) --
 
 def test_truncate_to_bytes():
-    assert truncate_to_bytes("abc", 8000) == "abc"
+    assert truncate_to_bytes("abc") == "abc"
     long = "é" * 5000  # 2 bytes each
-    out = truncate_to_bytes(long, 8000)
+    out = truncate_to_bytes(long)
     assert len(out.encode("utf-8")) == 8000
-    odd = truncate_to_bytes(long, 8001)  # boundary backoff
-    assert len(odd.encode("utf-8")) == 8000
+    odd = truncate_to_bytes("a" + long)  # boundary backoff
+    assert len(odd.encode("utf-8")) == 7999
 
 
 def test_prompt_sections(example_config):

@@ -96,23 +96,25 @@ def test_rolling_unique_users_closed_form(spark):
             (1, day(1)), (2, day(1)),
             (1, day(2)),               # user 1 repeats
             (3, day(4)),
+            (2, day(9)),
+            (4, day(10)),
         ],
         ["user_id", "ts"],
     )
     got = {
         r.day: (r.dau, r.uniques_w)
-        for r in rolling_unique_users(df, window_days=3).collect()
+        for r in rolling_unique_users(df).collect()
     }
-    # 3-day windows: d1={1,2}; d2={1,2}+{1}; d3=d1..d3={1,2};
-    # d4 covers d2..d4={1,3}; no rows for inactive window-only days?
-    # -> only days with dau appear (join on dau days)
+    # 7-day windows: d1={1,2}; d2={1,2}+{1}; d4=d1..d4={1,2,3};
+    # d9 covers d3..d9={3,2} (user 1's d2 has left); d10 covers
+    # d4..d10={3,2,4}; only days with dau appear (join on dau days)
     assert got == {
         "2025-01-01": (2, 2),
         "2025-01-02": (1, 2),
-        "2025-01-04": (1, 2),
+        "2025-01-04": (1, 3),
+        "2025-01-09": (1, 2),
+        "2025-01-10": (1, 3),
     }
-    with pytest.raises(ValueError):
-        rolling_unique_users(df, window_days=0)
 
 
 def test_funnel_validates_steps(spark):

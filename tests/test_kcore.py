@@ -6,6 +6,7 @@ from collections import defaultdict
 
 import pytest
 
+from rdf_knowledge_extractor_spark.operators import kcore
 from rdf_knowledge_extractor_spark.operators.kcore import coreness
 
 
@@ -58,3 +59,13 @@ def test_coreness_duplicate_and_reversed_edges(spark):
     )
     got = {r.node: r.coreness for r in coreness(df).collect()}
     assert got == {1: 2, 2: 2, 3: 2}
+
+
+def test_coreness_raises_when_the_round_bound_is_hit(spark, monkeypatch):
+    """A 5-node path needs 3 rounds (degrees 1,2,2,2,1 settle to 1 one
+    hop per round); at a bound of 1 the loop stops unconverged and must
+    raise, not return the overestimate."""
+    monkeypatch.setattr(kcore, "MAX_ITER", 1)
+    df = spark.createDataFrame([(i, i + 1) for i in range(4)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        coreness(df)

@@ -355,3 +355,49 @@ def test_star_labels_do_not_rerun_the_edge_plan(spark, monkeypatch):
     got = {r.node: r.component for r in labels.collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z"}
     assert calls.value == before
+
+
+def _settled_cache(spark, baseline=None) -> tuple[int, bool]:
+    """(persisted RDDs, CacheManager empty?) once Python and the JVM have
+    collected garbage, so a dropped result no longer pins its blocks.
+    Both sides release asynchronously (py4j's finalizer thread, then
+    Spark's ContextCleaner), so with a `baseline` it retries for up to
+    ten rounds until the session is back at or below it."""
+    import gc
+    import time
+
+    for _ in range(10):
+        gc.collect()
+        time.sleep(1)
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+        got = (
+            spark.sparkContext._jsc.getPersistentRDDs().size(),
+            spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+        )
+        if baseline is None or (got[0] <= baseline[0] and got[1] >= baseline[1]):
+            return got
+    return got
+
+
+def test_distributed_link_releases_its_caches(spark, monkeypatch):
+    """The distributed arm owns what it persists (the representatives and
+    the posting aggregate): after each of three links, with every result
+    dropped, the session is back at its baseline."""
+    from rdf_knowledge_extractor_spark.operators import dispatch
+
+    monkeypatch.setattr(dispatch, "DRIVER_MAX_EDGES", 0)
+    rows = [
+        (BASE + f"{stem}{suffix}", NS + "hasName", "x", 1.0, f"d{i}", {}, i, 0)
+        for i, (stem, suffix) in enumerate(
+            (stem, suffix)
+            for stem in ("Techcorp", "Datasystems", "Datasystem", "Acme", "person1")
+            for suffix in ("", "Inc", "Group", "Labs")
+        )
+    ]
+    triples = _triples(spark, rows)
+    baseline = _settled_cache(spark)
+    for _ in range(3):
+        assert link_entities(triples).count() == len(rows)
+        got = _settled_cache(spark, baseline)
+        assert got[0] <= baseline[0] and got[1] == baseline[1], (got, baseline)

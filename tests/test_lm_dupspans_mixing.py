@@ -9,10 +9,7 @@ import math
 
 import pytest
 
-from rdf_knowledge_extractor_spark.operators.dupspans import (
-    doc_window_grams,
-    duplicate_span_report,
-)
+from rdf_knowledge_extractor_spark.operators.dupspans import duplicate_span_report
 from rdf_knowledge_extractor_spark.operators.lm_score import (
     bigram_lm_scores,
     doc_bigrams,
@@ -78,20 +75,20 @@ def test_doc_bigrams_multiplicity(spark):
 # -- duplicate spans --------------------------------------------------
 
 def test_duplicate_span_report_closed_form(spark):
-    # k=3; doc 1 and 2 share the window "a b c"; doc 3 is disjoint;
-    # doc 4 is too short for any window.
+    # 8-token windows; doc 1 and 2 share the window "a b c d e f g h";
+    # doc 3 is disjoint; doc 4 is too short for any window.
     df = spark.createDataFrame(
         [
-            (1, "a b c d"),    # windows: "a b c", "b c d"
-            (2, "x a b c"),    # windows: "x a b", "a b c"
-            (3, "p q r s"),    # windows: "p q r", "q r s"
-            (4, "a b"),        # too short
+            (1, "a b c d e f g h i"),  # windows: "a … h", "b … i"
+            (2, "x a b c d e f g h"),  # windows: "x … g", "a … h"
+            (3, "p q r s t u v w y"),  # windows: "p … w", "q … y"
+            (4, "a b c d e f g"),      # too short
         ],
         ["doc_id", "text"],
     )
     got = {
         r.doc_id: (r.n_windows, r.n_shared, r.shared_frac)
-        for r in duplicate_span_report(df, k=3).collect()
+        for r in duplicate_span_report(df).collect()
     }
     assert got == {
         1: (2, 1, 0.5),
@@ -104,29 +101,14 @@ def test_duplicate_span_report_closed_form(spark):
 def test_duplicate_span_in_doc_repeat_not_shared(spark):
     # the same gram twice WITHIN one doc is not cross-document
     df = spark.createDataFrame(
-        [(1, "a b c a b c"), (2, "z z z")], ["doc_id", "text"]
+        [(1, "a b c d e f g h a b c d e f g h"), (2, "z z z z z z z z")],
+        ["doc_id", "text"],
     )
     got = {
         r.doc_id: (r.n_windows, r.n_shared)
-        for r in duplicate_span_report(df, k=3).collect()
+        for r in duplicate_span_report(df).collect()
     }
-    assert got == {1: (4, 0), 2: (1, 0)}
-
-
-def test_window_grams_hash_and_exact_agree(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "c d e f")], ["doc_id", "text"]
-    )
-    exact = duplicate_span_report(df, k=3, exact_grams=True).collect()
-    hashed = duplicate_span_report(df, k=3, exact_grams=False).collect()
-    assert sorted(map(tuple, exact)) == sorted(map(tuple, hashed))
-    assert doc_window_grams(df, k=3).schema["gram"].dataType.typeName() == "long"
-
-
-def test_window_grams_rejects_tiny_k(spark):
-    df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        doc_window_grams(df, k=1)
+    assert got == {1: (9, 0), 2: (1, 0)}
 
 
 # -- corpus mixing ----------------------------------------------------

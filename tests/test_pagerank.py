@@ -2,8 +2,7 @@
 
 from __future__ import annotations
 
-import pytest
-
+from rdf_knowledge_extractor_spark.operators import pagerank as pagerank_module
 from rdf_knowledge_extractor_spark.operators.pagerank import pagerank
 
 
@@ -27,9 +26,9 @@ def _py_pagerank(edges, iterations=5, d=0.85):
     return {v: round(x, 6) for v, x in r.items()}
 
 
-def _run(spark, edges, **kw):
+def _run(spark, edges):
     df = spark.createDataFrame(edges, ["src", "dst"])
-    return {r.node: r.rank for r in pagerank(df, **kw).collect()}
+    return {r.node: r.rank for r in pagerank(df).collect()}
 
 
 def test_pagerank_cycle_is_uniform(spark):
@@ -52,10 +51,8 @@ def test_pagerank_chain_and_duplicate_edges(spark):
     assert got == _py_pagerank([("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")])
 
 
-def test_pagerank_iterations_param(spark):
+def test_pagerank_iterations_param(spark, monkeypatch):
+    monkeypatch.setattr(pagerank_module, "ITERATIONS", 2)
     edges = [("a", "b"), ("b", "c")]
-    assert _run(spark, edges, iterations=2) == _py_pagerank(
-        edges, iterations=2
-    )
-    with pytest.raises(ValueError):
-        _run(spark, edges, iterations=0)
+    assert _run(spark, edges) == _py_pagerank(edges, iterations=2)
+    assert _run(spark, edges) != _py_pagerank(edges)

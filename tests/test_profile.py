@@ -52,15 +52,8 @@ def test_robust_outliers_closed_form(spark):
         (10, "b", 5.0), (11, "b", 5.0),
     ]
     df = spark.createDataFrame(rows, ["event_id", "event_type", "value"])
-    got = robust_outliers(
-        df, "value", "event_type", "event_id", z=3.5, exact=True
-    ).collect()
+    got = robust_outliers(df, "value", "event_type", "event_id").collect()
     assert [(r.event_id, r.event_type) for r in got] == [(9, "a")]
-    # approx arm finds the same outlier on this tiny input
-    approx = robust_outliers(
-        df, "value", "event_type", "event_id", z=3.5, exact=False
-    ).collect()
-    assert [(r.event_id) for r in approx] == [9]
 
 
 def test_profile_scans_table_once(spark):

@@ -10,7 +10,10 @@ from hypothesis import strategies as st
 
 from rdf_knowledge_extractor_spark.functions.html_text import extract_text
 from rdf_knowledge_extractor_spark.functions.llm import unfence
-from rdf_knowledge_extractor_spark.functions.prompts import truncate_to_bytes
+from rdf_knowledge_extractor_spark.functions.prompts import (
+    PROMPT_DOC_BYTES,
+    truncate_to_bytes,
+)
 
 # text without control chars that html-escape round-trips cleanly
 _clean_text = st.text(
@@ -53,10 +56,16 @@ def test_multi_paragraph_join(paras):
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.text(max_size=300), st.integers(min_value=0, max_value=100))
-def test_truncate_to_bytes_invariants(text, limit):
-    out = truncate_to_bytes(text, limit)
-    assert len(out.encode("utf-8")) <= limit or len(text.encode("utf-8")) <= limit
+@given(st.text(max_size=300), st.integers(PROMPT_DOC_BYTES - 400, PROMPT_DOC_BYTES))
+def test_truncate_to_bytes_invariants(text, pad):
+    """Text drawn across the fixed byte budget: a pad of ASCII puts the
+    budget's edge anywhere inside the drawn (often multi-byte) tail."""
+    text = "a" * pad + text
+    out = truncate_to_bytes(text)
+    if len(text.encode("utf-8")) <= PROMPT_DOC_BYTES:
+        assert out == text
+    else:  # backs off at most a 4-byte char's 3 trailing bytes
+        assert PROMPT_DOC_BYTES - 3 <= len(out.encode("utf-8")) <= PROMPT_DOC_BYTES
     assert text.startswith(out)
 
 

@@ -9,12 +9,20 @@ dunder method comes with its class.  Matching is by name, so a name two
 defs share reaches both: the walk can miss dead code, never flag live
 code.  A def that only tests reach fails `test_every_package_def_is_reachable`.
 
-The same roots guard the options: a keyword parameter with a default
-that no call in the package or the entry points sets (by keyword, at
-its position, or through `*args`/`**kwargs`) fails
-`test_every_option_has_a_production_setter`.  Calls match by name and
-a constructor by its class's name, so a call sets the option of every
-def that shares its name: the scan can miss an unset option.
+The same roots guard the options, the keyword parameters with a
+default (column names aside).  One that no call in the package or the
+entry points sets (by keyword, at its position, or through
+`*args`/`**kwargs`) fails `test_every_option_has_a_production_setter`.
+One that every such call passes as the same literal fails
+`test_every_option_takes_more_than_one_production_value`; a call that
+passes a non-literal or `*args`/`**kwargs` over it, or a use of the def
+as a value (`SERIALIZERS["turtle"] = serialize_turtle`, a call that sets
+nothing), clears it.  Calls match by name and a constructor by its
+class's name, so a call sets the option of every def that shares its
+name: both scans can miss an option, never flag one that production
+sets to two values.
+`KEPT_OPTIONS` lists the options kept on purpose, with a reason, and
+`test_settable_values_are_pinned` pins how many options there are.
 
 A package module other than `plans/store.py` that calls `os.replace`,
 `os.rename` or `write_json_atomic` fails
@@ -184,49 +192,55 @@ def test_kept_surfaces_exist_and_need_the_list():
     assert KEPT <= flagged, sorted(KEPT - flagged)
 
 
-# Keyword options with a default that no production call sets, kept on
-# purpose.  Column names (`_COLUMN_SUFFIXES`, `_COLUMN_PARAMS`) name the
-# caller's schema, not a behaviour, and are not options.
+# Keyword options with a default that no production call sets, or that
+# every production call sets to one literal, kept on purpose.  Column
+# names (`_COLUMN_SUFFIXES`, `_COLUMN_PARAMS`) name the caller's schema,
+# not a behaviour, and are not options.
 KEPT_OPTIONS = {
     "functions/jpeg.py:encode_jpeg(quality=)": "tests build decoder inputs at other qualities; the decoder reads outside bytes",
     "functions/jpeg.py:encode_jpeg(subsampling=)": "tests build the 4:2:0 decoder inputs",
     "functions/jpeg.py:encode_jpeg(restart_interval=)": "tests build the restart-marker decoder inputs",
+    "functions/wav.py:encode_wav(sample_rate=)": "tests build decoder inputs at other rates; the decoder reads outside bytes",
+    "operators/profile.py:table_profile(columns=)": "it names the caller's schema",
     "plans/pipeline.py:KgPipeline.__init__(partitions=)": "the deployment's shuffle width",
+    "plans/pipeline.py:KgPipeline.__init__(client_kind=)": "the LLM backend is a deployment setting",
     "plans/pipeline.py:KgPipeline.commit_to_store(batch_id=)": "a commit's identity",
+    "plans/store.py:TripleStore.vacuum(min_age_sec=)": "the safety margin for a concurrent writer's file set",
+    "sources/pages.py:pages_dataframe(seed=)": "it selects the input corpus, and bench.py passes it",
     "templates/engine.py:TemplateManager.generate_document(overrides=)": "the template surface's per-query overrides",
 }
 _COLUMN_SUFFIXES = ("_col", "_cols", "_alias")
 _COLUMN_PARAMS = frozenset({"src", "dst", "col", "table"})
 
 
-def _calls() -> dict[str, list[tuple[set, int, int | None, bool]]]:
-    """Every call in the package and the entry points, by called name:
-    (keywords, positional count, index of the first `*args`, has `**kwargs`)."""
+def _calls() -> tuple[dict[str, list[ast.Call]], dict[str, int]]:
+    """Every call in the package and the entry points, by called name,
+    and how often each name is used as a value without being called
+    (`SERIALIZERS["turtle"] = serialize_turtle`)."""
     calls: dict = {}
+    refs: dict = {}
     for f in sorted(PACKAGE.rglob("*.py")) + _entry_files():
-        for n in ast.walk(ast.parse(f.read_text())):
-            if not isinstance(n, ast.Call):
+        tree = ast.parse(f.read_text())
+        called = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                fn = n.func
+                called.add(id(fn))
+                name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                calls.setdefault(name, []).append(n)
+        for n in ast.walk(tree):
+            if id(n) in called or not isinstance(getattr(n, "ctx", None), ast.Load):
                 continue
-            fn = n.func
-            name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
-            star = next((i for i, a in enumerate(n.args) if isinstance(a, ast.Starred)), None)
-            calls.setdefault(name, []).append(
-                (
-                    {k.arg for k in n.keywords},
-                    len(n.args),
-                    star,
-                    any(k.arg is None for k in n.keywords),
-                )
-            )
-    return calls
+            if isinstance(n, (ast.Name, ast.Attribute)):
+                name = n.id if isinstance(n, ast.Name) else n.attr
+                refs[name] = refs.get(name, 0) + 1
+    return calls, refs
 
 
-def _unset_options(kept_options=KEPT_OPTIONS) -> list[str]:
-    """Options with a default that no call in the roots sets: by keyword,
-    at its positional index, or through `*args`/`**kwargs`.  Calls match
-    by name; a constructor matches by its class's name."""
-    calls = _calls()
-    unset = []
+def _options():
+    """(key, called name, positional index or None, name) of every
+    settable value: a keyword parameter with a default, outside `KEPT`
+    and the column-name rule.  A constructor is called by its class's name."""
     for label, cls, name, node in _package_defs()[0]:
         if label in KEPT or isinstance(node, ast.ClassDef):
             continue
@@ -237,17 +251,65 @@ def _unset_options(kept_options=KEPT_OPTIONS) -> list[str]:
         opts += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
         called = cls.split(":")[1] if name == "__init__" else name
         for i, opt in opts:
-            key = f"{label}({opt}=)"
-            if opt.endswith(_COLUMN_SUFFIXES) or opt in _COLUMN_PARAMS or key in kept_options:
-                continue
-            if not any(
-                opt in kws
-                or kwstar
-                or (i is not None and (i < npos or (star is not None and i >= star)))
-                for kws, npos, star, kwstar in calls.get(called, [])
-            ):
-                unset.append(key)
-    return unset
+            if not (opt.endswith(_COLUMN_SUFFIXES) or opt in _COLUMN_PARAMS):
+                yield f"{label}({opt}=)", called, i, opt
+
+
+_STAR = object()
+
+
+def _passed(call: ast.Call, i: int | None, opt: str):
+    """What `call` passes for the option: the argument node, None when
+    it sets nothing, or `_STAR` when `*args`/`**kwargs` may carry it."""
+    for k in call.keywords:
+        if k.arg == opt:
+            return k.value
+    if any(k.arg is None for k in call.keywords):
+        return _STAR
+    star = next((j for j, x in enumerate(call.args) if isinstance(x, ast.Starred)), None)
+    if i is not None and star is not None and i >= star:
+        return _STAR
+    if i is not None and i < len(call.args):
+        return call.args[i]
+    return None
+
+
+def _unset_options(kept_options=KEPT_OPTIONS) -> list[str]:
+    """Options with a default that no call in the roots sets: by keyword,
+    at its positional index, or through `*args`/`**kwargs`.  Calls match
+    by name; a constructor matches by its class's name."""
+    calls, _ = _calls()
+    return [
+        key
+        for key, called, i, opt in _options()
+        if key not in kept_options
+        and all(_passed(c, i, opt) is None for c in calls.get(called, []))
+    ]
+
+
+def _literal(node) -> str | None:
+    """The literal `node` holds; None for anything else (a non-literal,
+    a call that sets nothing, `_STAR`)."""
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return None
+
+
+def _one_literal_options(kept_options=KEPT_OPTIONS) -> list[str]:
+    """Options that every call in the roots passes as one and the same
+    literal.  A def named as a value (and not called) counts as a call
+    that sets nothing; a call that passes `*args`/`**kwargs` over the
+    option, or a non-literal, means the option is not flagged."""
+    calls, refs = _calls()
+    flagged = []
+    for key, called, i, opt in _options():
+        if key in kept_options or refs.get(called) or not calls.get(called):
+            continue
+        values = {_literal(_passed(c, i, opt)) for c in calls[called]}
+        if len(values) == 1 and None not in values:
+            flagged.append(key)
+    return flagged
 
 
 def test_every_option_has_a_production_setter():
@@ -258,12 +320,29 @@ def test_every_option_has_a_production_setter():
     )
 
 
+def test_every_option_takes_more_than_one_production_value():
+    unfixed = _one_literal_options()
+    assert not unfixed, (
+        "keyword options that every production call passes as the same "
+        "literal (make them a fixed value):\n  " + "\n  ".join(unfixed)
+    )
+
+
 def test_kept_options_need_the_list():
-    """Each `KEPT_OPTIONS` entry names an option reported without the
-    list: a stale entry (deleted option, or one production now sets)
-    fails here."""
-    flagged = set(_unset_options(kept_options={}))
+    """Each `KEPT_OPTIONS` entry names an option one of the two option
+    scans reports without the list: a stale entry (deleted option, or
+    one production now sets to two values) fails here."""
+    flagged = set(_unset_options(kept_options={})) | set(_one_literal_options(kept_options={}))
     assert set(KEPT_OPTIONS) <= flagged, sorted(set(KEPT_OPTIONS) - flagged)
+
+
+# The number of settable values (`_options`).  Adding an option raises
+# this pin in the same change; fixing one lowers it.
+SETTABLE_VALUES = 81
+
+
+def test_settable_values_are_pinned():
+    assert len(list(_options())) == SETTABLE_VALUES
 
 
 # Underscore-prefixed names one package module imports from another,

@@ -35,18 +35,14 @@ def test_lm_scores_no_cartesian_and_broadcast_vocab(spark):
 
 def test_dupspans_no_cartesian_hash_keys(spark):
     from rdf_knowledge_extractor_spark.operators.dupspans import (
-        doc_window_grams,
         duplicate_span_report,
     )
 
-    plan = _plan(duplicate_span_report(_docs(spark), k=3))
+    plan = _plan(duplicate_span_report(_docs(spark)))
     assert "CartesianProduct" not in plan
-    # scale path: grams shuffle as xxhash64 longs, not window text
-    assert "xxhash64" in plan
-    assert (
-        doc_window_grams(_docs(spark), k=3)
-        .schema["gram"].dataType.typeName() == "long"
-    )
+    # the gram doc-count aggregate and the join back are keyed on the
+    # hash-partitioned gram
+    assert "hashpartitioning(gram" in plan
 
 
 def test_mixing_rates_broadcast_not_shuffled(spark):
@@ -90,5 +86,5 @@ def test_weighted_sample_window_group_limit(spark):
     from pyspark.sql import functions as F
 
     df = _docs(spark).withColumn("w", F.length("text").cast("double"))
-    plan = _plan(weighted_sample_per_group(df, weight_col="w", k=2))
+    plan = _plan(weighted_sample_per_group(df, weight_col="w"))
     assert "WindowGroupLimit" in plan

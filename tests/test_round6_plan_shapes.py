@@ -288,5 +288,5 @@ def test_prefix_filter_exact_recall_at_threshold_boundary(spark, monkeypatch):
     ents = spark.createDataFrame(
         rows, "uri string, key string, shingles array<string>"
     )
-    pairs = linking.prefix_candidate_pairs(ents)
+    pairs, _ = linking.prefix_candidate_pairs(ents)
     assert [(r.uri_a, r.uri_b) for r in pairs.collect()] == [("A", "B")]

@@ -100,8 +100,9 @@ def test_tokenize_query_twin():
 def test_rrf_fuse_closed_form(spark):
     from rdf_knowledge_extractor_spark.operators.search import rrf_fuse
 
+    # lexical hits 30..39 at ranks 3..12 below docs 10 and 20
     lex = spark.createDataFrame(
-        [("q", 10, 1), ("q", 20, 2), ("q", 30, 3)],
+        [("q", 10, 1), ("q", 20, 2)] + [("q", 27 + r, r) for r in range(3, 13)],
         ["query_id", "doc_id", "rank"],
     )
     vec = spark.createDataFrame(
@@ -109,17 +110,17 @@ def test_rrf_fuse_closed_form(spark):
     )
     got = {
         r.doc_id: (r.rank, r.rrf)
-        for r in rrf_fuse([lex, vec], k=3).collect()
+        for r in rrf_fuse([lex, vec]).collect()
     }
     # doc 20: both systems -> 1/62 + 1/61; docs 10/40 rank-1/2 singles
     assert got[20] == (1, round(1 / 62 + 1 / 61, 6))
     assert got[10] == (2, round(1 / 61, 6))
     assert got[40] == (3, round(1 / 62, 6))
-    assert 30 not in got  # k=3 cuts the weakest
+    assert got[30] == (4, round(1 / 63, 6))
+    # 13 fused docs: the top 10 cut the three weakest
+    assert len(got) == 10 and not {37, 38, 39} & set(got)
     with pytest.raises(ValueError):
-        rrf_fuse([], k=3)
-    with pytest.raises(ValueError):
-        rrf_fuse([lex], k=0)
+        rrf_fuse([])
 
 
 def test_bm25_plan_shape(spark):

@@ -19,7 +19,7 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
     # (few planes) and several of them; the planes/tables knobs trade
     # candidate volume for recall and must be tuned to the similarity
     # regime, exactly as at production scale
-    approx = lsh_cosine_topk(emb, queries, dim=64, k=5, n_planes=4, n_tables=8)
+    approx = lsh_cosine_topk(emb, queries, dim=64, n_planes=4, n_tables=8)
     exact_pairs = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     approx_pairs = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(exact_pairs & approx_pairs) / len(exact_pairs)
@@ -88,30 +88,31 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     import numpy as np
 
     from rdf_knowledge_extractor_spark.operators.similarity import (
+        N_CENTROIDS,
         cosine_topk_bruteforce,
         ivf_cosine_topk,
     )
 
     rng = np.random.RandomState(11)
-    dim, n_clusters, per = 16, 8, 40
+    dim, n_clusters, per = 16, N_CENTROIDS, 20
     centers = rng.normal(size=(n_clusters, dim)) * 3
     rows = []
     for i in range(n_clusters * per):
         v = centers[i % n_clusters] + rng.normal(size=dim)
         rows.append((i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    queries = emb.filter("vec_id < 8")
+    queries = emb.filter(f"vec_id < {n_clusters}")
 
     exact = cosine_topk_bruteforce(emb, queries, k=5)
     truth = {(r.query_id, r.neighbor_id) for r in exact.collect()}
 
-    approx = ivf_cosine_topk(emb, queries, dim=dim, k=5, n_centroids=8, nprobe=3)
+    approx = ivf_cosine_topk(emb, queries, dim=dim, nprobe=3)
     got = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(got & truth) / len(truth)
     assert recall >= 0.9, f"IVF recall {recall}"
 
     # probing every cell makes IVF exhaustive → identical to brute force
-    full = ivf_cosine_topk(emb, queries, dim=dim, k=5, n_centroids=8, nprobe=8)
+    full = ivf_cosine_topk(emb, queries, dim=dim, nprobe=N_CENTROIDS)
     full_rows = {(r.query_id, r.neighbor_id, r.sim) for r in full.collect()}
     exact_rows = {(r.query_id, r.neighbor_id, r.sim) for r in exact.collect()}
     assert full_rows == exact_rows

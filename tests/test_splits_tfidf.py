@@ -71,33 +71,31 @@ def test_tfidf_scores_and_ranks(spark):
             (1, "apple apple banana shared"),
             (2, "banana cherry shared"),
             (3, "cherry cherry cherry shared"),
+            (4, "t1 t2 t3 t4 t5 t6 t7 shared"),
         ],
         ["doc_id", "text"],
     )
-    out = tfidf_top_terms(df, k=2)
+    out = tfidf_top_terms(df)
     rows = {(r.doc_id, r.rank): r for r in out.collect()}
-    # doc 1: apple tf=2 df=1 -> 2*ln(3); banana tf=1 df=2 -> ln(1.5)
+    # doc 1: apple tf=2 df=1 -> 2*ln(4); banana tf=1 df=2 -> ln(2)
     assert rows[(1, 1)].term == "apple"
-    assert rows[(1, 1)].tfidf == round(2 * math.log(3), 4)
+    assert rows[(1, 1)].tfidf == round(2 * math.log(4), 4)
     assert rows[(1, 2)].term == "banana"
-    assert rows[(1, 2)].tfidf == round(math.log(1.5), 4)
+    assert rows[(1, 2)].tfidf == round(math.log(2), 4)
     # 'shared' appears in every doc -> idf = ln(1) = 0, never ranks
     # above a distinctive term
     assert rows[(3, 1)].term == "cherry"
-    # every doc got exactly k=2 rows (4 distinct terms each >= 2)
-    assert len(rows) == 6
+    # docs 1-3 keep all their 3, 3 and 2 terms; doc 4's eight terms
+    # are cut to the top 5 (t1-t7 tie at ln(4), term asc)
+    assert [rows[(4, r)].term for r in range(1, 6)] == ["t1", "t2", "t3", "t4", "t5"]
+    assert len(rows) == 3 + 3 + 2 + 5
 
 
 def test_tfidf_topk_is_window_group_limit(spark):
     df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-    out = tfidf_top_terms(df, k=2)
+    out = tfidf_top_terms(df)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain()
     assert "WindowGroupLimit" in buf.getvalue()
 
-
-def test_tfidf_validation(spark):
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        tfidf_top_terms(df, k=0)

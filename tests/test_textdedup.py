@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from rdf_knowledge_extractor_spark.operators import dispatch
+from rdf_knowledge_extractor_spark.operators import dispatch, textdedup
 from rdf_knowledge_extractor_spark.operators.textdedup import (
     _bucket_candidate_pairs,
     _pair_combos,
@@ -152,7 +152,7 @@ def test_verified_pairs_threshold_applies_to_unrounded_jaccard(spark):
     assert verified(0.7999) == {(1, 2): 0.8, (3, 4): 0.8}
 
 
-def test_dedup_families_threshold_applies_to_unrounded_jaccard(spark):
+def test_dedup_families_threshold_applies_to_unrounded_jaccard(spark, monkeypatch):
     """The same J = 16000/20001 pair as documents: 20,009 distinct
     characters make every 9-gram unique to its position, so doc 1 has
     18,001 grams, doc 2 has 18,000, and they share 16,000."""
@@ -160,9 +160,14 @@ def test_dedup_families_threshold_applies_to_unrounded_jaccard(spark):
     docs = spark.createDataFrame(
         [(1, s[:18_009]), (2, s[2_001:])], "doc_id int, text string"
     )
-    for family in (ngram_jaccard_pairs, minhash_lsh_pairs):
-        assert family(docs, threshold=0.8).count() == 0
-        got = family(docs, threshold=0.7999).collect()
+    assert textdedup.JACCARD_THRESHOLD == 0.8
+    assert ngram_jaccard_pairs(docs).count() == 0
+    assert minhash_lsh_pairs(docs, threshold=0.8).count() == 0
+    monkeypatch.setattr(textdedup, "JACCARD_THRESHOLD", 0.7999)
+    for got in (
+        ngram_jaccard_pairs(docs).collect(),
+        minhash_lsh_pairs(docs, threshold=0.7999).collect(),
+    ):
         assert [(r.id_a, r.id_b, r.jaccard) for r in got] == [(1, 2, 0.8)]
 
 
