@@ -639,7 +639,7 @@ def q_dedup_survivors(spark, sf):
 def q_dedup_minhash_lsh(spark, sf):
     from rdf_knowledge_extractor_spark.operators.textdedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(_docs(spark, sf), k=9, threshold=0.8)
+    return minhash_lsh_pairs(_docs(spark, sf))
 
 
 def q_dedup_simhash(spark, sf):
@@ -1283,7 +1283,7 @@ def q_multimodal_audio(spark, sf):
 
     # spread: python WAV decode from a one-row-group scan is one task
     media = documents_as_audio(spread(_docs(spark, sf)))
-    feats = extract_media_features(media, deterministic_fake=False, feature_dim=8)
+    feats = extract_media_features(media, deterministic_fake=False)
     return feats.select(
         "media_id",
         "byte_len",
@@ -1310,7 +1310,7 @@ def q_multimodal_jpeg(spark, sf):
     # one-row-group scan serializes 5,000 decodes in one task
     # (measured 4.6 s -> 1.2 s at sf0.1); no-op at scale
     media = documents_as_jpeg(spread(_docs(spark, sf)))
-    feats = extract_media_features(media, deterministic_fake=False, feature_dim=8)
+    feats = extract_media_features(media, deterministic_fake=False)
     return feats.select(
         "media_id",
         F.round(F.element_at("feature", 1) * 1e4).cast("long").alias("width"),

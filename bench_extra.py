@@ -89,7 +89,7 @@ def main() -> None:
     spark.catalog.clearCache()
     timed(
         "minhash/end-to-end",
-        lambda: minhash_lsh_pairs(docs, k=9, threshold=0.8).count(),
+        lambda: minhash_lsh_pairs(docs).count(),
         clear=True,
     )
 

@@ -41,8 +41,8 @@ def words(text: Column) -> Column:
     )
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """array<string> of space-joined word n-grams of `text`.
+def word_ngrams(text: Column) -> Column:
+    """array<string> of space-joined word n-grams of `text`, n = `NGRAM_N`.
 
     Texts with fewer than n words produce an EMPTY array — the guard
     matters because `sequence(1, size-n+1)` on a short text would have
@@ -51,10 +51,10 @@ def word_ngrams(text: Column, n: int) -> Column:
     """
     t = words(text)
     grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - F.lit(n - 1)),
-        lambda i: F.array_join(F.slice(t, i, n), " "),
+        F.sequence(F.lit(1), F.size(t) - F.lit(NGRAM_N - 1)),
+        lambda i: F.array_join(F.slice(t, i, NGRAM_N), " "),
     )
-    return F.when(F.size(t) >= n, grams).otherwise(
+    return F.when(F.size(t) >= NGRAM_N, grams).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -71,13 +71,13 @@ def contamination_report(
     benchmark.  Docs sharing nothing with the benchmark are absent."""
     bench_grams = (
         benchmark.select(
-            F.explode(word_ngrams(F.col(bench_text_col), NGRAM_N)).alias("_g")
+            F.explode(word_ngrams(F.col(bench_text_col))).alias("_g")
         )
         .distinct()
     )
     doc_grams = docs.select(
         F.col(id_col),
-        F.explode(word_ngrams(F.col(text_col), NGRAM_N)).alias("_g"),
+        F.explode(word_ngrams(F.col(text_col))).alias("_g"),
     )
     return (
         doc_grams.join(F.broadcast(bench_grams), on="_g", how="inner")

@@ -55,9 +55,9 @@ from rdf_knowledge_extractor_spark.operators.dispatch import spread
 _MERSENNE = (1 << 61) - 1
 # added to 1−t before the prefix-length floor; see _prefix_len
 _PREFIX_SLACK = 1e-12
-# char-shingle width of `ngram_jaccard_pairs` and `simhash_pairs`
+# char-shingle width of `ngram_jaccard_pairs`, `minhash_lsh_pairs`, `simhash_pairs`
 SHINGLE_K = 9
-# `ngram_jaccard_pairs`' Jaccard bound and `simhash_pairs`' hamming radius
+# the Jaccard bound of the first two and `simhash_pairs`' hamming radius
 JACCARD_THRESHOLD = 0.8
 MAX_HAMMING = 3
 
@@ -242,9 +242,10 @@ def _bucket_candidate_pairs(
     return pairs.distinct()
 
 
-def _with_shingles(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+def _with_shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return docs.select(
-        F.col(id_col).alias("id"), char_shingles(F.col(text_col), k).alias("shingles")
+        F.col(id_col).alias("id"),
+        char_shingles(F.col(text_col), SHINGLE_K).alias("shingles"),
     )
 
 
@@ -337,7 +338,7 @@ def ngram_jaccard_pairs(
     the surviving candidates.
     """
     sh = (
-        _with_shingles(spread(docs), id_col, text_col, SHINGLE_K)
+        _with_shingles(spread(docs), id_col, text_col)
         .withColumn("shingles", F.array_sort("shingles"))
         .persist()
     )
@@ -365,10 +366,9 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 9,
-    threshold: float = 0.8,
 ):
-    """MinHash-LSH candidates verified with exact Jaccard ≥ threshold.
+    """MinHash-LSH candidates over `SHINGLE_K`-char shingles, verified
+    with exact Jaccard ≥ `JACCARD_THRESHOLD`.
 
     64 permutations in 16 bands × 4 rows: candidate probability J⁴
     per band — background pairs at J≈0.1 collide with p≈1.6e-3 total
@@ -396,9 +396,9 @@ def minhash_lsh_pairs(
     # materializes the blocks anyway, so an eager checkpoint only adds
     # a separate driver job — interleaved A/B: lazy 3.8-4.0 s vs eager
     # 4.1 s end-to-end warm.
-    sh = _with_hashed_shingles(spread(docs), id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
+    sh = _with_hashed_shingles(
+        spread(docs), id_col, text_col, SHINGLE_K
+    ).localCheckpoint(eager=False)
     bands_of = _minhash_band_udf(num_perm=64, bands=16)
     # candidate generation: ONE shuffle (groupBy band key) + in-array
     # pair combinations, instead of the former window-count + banded
@@ -449,7 +449,7 @@ def minhash_lsh_pairs(
     # pairs × mean-width bytes to fit.  Above the budget the verify
     # falls back to planner-chosen joins (the r5-proven robust shape).
     return _verified_pairs(
-        cands, sh, sh, threshold,
+        cands, sh, sh, JACCARD_THRESHOLD,
         broadcast_candidates=pair_bound * 24.0 < 256 * 1024 * 1024,
         broadcast_halves=est_broadcast_bytes < 256 * 1024 * 1024,
     )

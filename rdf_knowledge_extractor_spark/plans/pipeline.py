@@ -22,10 +22,10 @@ stage resumes when `fp` is committed there and otherwise commits
 `build()` under it; either way its other fingerprint roots are removed
 once it resolves, and a recompute first vacuums the orphans of a
 crashed same-fingerprint run (the pipeline is its checkpoint dir's only
-writer).  The commit records each part file's row count from its
-footer, so the per-partition metric costs no Spark job.  A stage reads
-its own file set by key: a stage that committed no rows still has one
-schema-carrying file, which `TripleStore.read()` would skip.
+writer).  The commit records each part file's row count and the
+stage's schema from the footers, so neither the per-partition metric
+nor the stage's read costs a Spark job.  Every stage, and `lineage()`,
+reads back through `TripleStore.read()`.
 """
 
 from __future__ import annotations
@@ -136,7 +136,7 @@ class KgPipeline:
         self.results.append(
             StageResult(stage, entry["rows"], elapsed, len(entry["files"]), resumed)
         )
-        return self.spark.read.parquet(entry["path"])
+        return store.read()
 
     # -- the pipeline ----------------------------------------------------
     def run(self, pages: DataFrame) -> DataFrame:
@@ -194,7 +194,8 @@ class KgPipeline:
 
     def lineage(self) -> DataFrame:
         (entry,) = (m for m in self.stage_manifests() if m["stage"] == "s3_lineage")
-        return self.spark.read.parquet(entry["path"])
+        root = self.base / "s3_lineage" / entry["fingerprint"]
+        return TripleStore(self.spark, str(root)).read()
 
     def stage_manifests(self) -> list[dict]:
         """Each committed stage's store entry (path, rows, per-file

@@ -23,27 +23,27 @@ semantics hold under failure and retry WITHOUT Iceberg jars:
   aborts if another writer advanced the version (the reference is
   single-writer; we fail loudly instead of corrupting).
 
-`commit(rows, batch_id, version)` is the one commit step: fresh file
-set, footer row counts, manifest swap.  Every writer goes through it:
-`insert_if_absent` commits the rows `dedup.insert_new_triples` (the
-same insert-if-absent the CLI runs: batch first-occurrence dedup, then
-a left ANTI join against the committed graph) computes, the streaming
-near-dup filter (streaming/neardup.py) commits its admitted set the
-same way, and each `KgPipeline` stage (plans/pipeline.py) is a store
-whose one batch is keyed by the stage's fingerprint.  Nothing but
-`insert_if_absent` assumes the triple schema: `read`, `commit`,
-`compact` and `vacuum` serve any table.  Scale: the manifest holds
-file paths and per-file row counts (Iceberg's data-file
-`record_count`), not rows; data stays partitioned parquet exactly as
-an Iceberg table's data layer would.
+`commit(rows, batch_id, version)` is the one commit step, and this is
+the one module that writes, lays out or types a stored table.  Every
+writer goes through it: `insert_if_absent` commits the rows
+`dedup.insert_new_triples` (the CLI's insert-if-absent) computes; the
+near-dup filter (streaming/neardup.py) and the attribution sink
+(streaming/ingest.py) commit per micro-batch under
+`<checkpoint_tag>-<batch_id>`; each `KgPipeline` stage
+(plans/pipeline.py) is a store whose one batch is keyed by the stage's
+fingerprint.  Every reader goes through `read()`.  Nothing but
+`insert_if_absent` assumes the triple schema.  The manifest holds file
+paths, per-file row counts (Iceberg's data-file `record_count`) and the
+table's Spark schema, all read from the part-file footers, not rows.
 
-Reads reuse one relation per manifest version: `read()` re-reads the
-manifest on every call (so another writer's commit is visible on the
-next read) but builds a new `spark.read.parquet` relation — a listing
-of the file sets plus a schema-inference job — only when the version
-or the live paths changed.  That is safe because committed file sets
-are immutable, every commit and compaction bumps the version, and
-`vacuum` deletes only directories that are not live.
+`read()` builds its relation with `spark.read.schema(<recorded>)`, so
+no read runs a schema-inference job, and a table whose batches hold no
+rows reads as an empty frame of that schema.  It re-reads the manifest
+on every call (so another writer's commit is visible on the next read)
+but builds a new relation only when the version or the live paths
+changed.  That is safe because committed file sets are immutable,
+every commit and compaction bumps the version, and `vacuum` deletes
+only directories that are not live.
 """
 
 from __future__ import annotations
@@ -58,10 +58,13 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from rdf_knowledge_extractor_spark.operators.dedup import insert_new_triples
 
 _MANIFEST = "manifest.json"
+# the footer key under which Spark's parquet writer records the schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class CommitConflict(RuntimeError):
@@ -75,7 +78,8 @@ class TripleStore:
         <root>/data/<batch>-<uuid>/…    # immutable parquet file sets
 
     `manifest.json`: {version, batches: {batch_id: {path, rows, added,
-    files: {part file: rows}}}, total_rows, updated}.
+    files: {part file: rows}}}, total_rows, schema}; `schema` is the
+    table's Spark schema as JSON.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -133,18 +137,23 @@ class TripleStore:
         return _live_paths(self._read_manifest())
 
     def read(self) -> DataFrame | None:
-        """Union of all committed file sets (None when empty).  Orphan
-        directories from crashed commits are invisible by design.
+        """Union of all committed file sets, read with the recorded
+        schema: an empty frame of it when no committed batch holds rows,
+        None only before the first commit.  Orphan directories from
+        crashed commits are invisible by design.
 
         Returns the same DataFrame for as long as the manifest's version
         and live paths are unchanged (see the module docstring); the
         paths are part of the key because a wiped and re-committed root
         reaches the same version again with new file sets."""
         m = self._read_manifest()
+        if not m["batches"]:
+            return None
         paths = _live_paths(m)
         key = (m["version"], tuple(paths))
         if self._relation[0] != key:
-            self._relation = (key, self.spark.read.parquet(*paths) if paths else None)
+            schema = StructType.fromJson(m["schema"])
+            self._relation = (key, self.spark.read.schema(schema).parquet(*paths))
         return self._relation[1]
 
     def total_rows(self) -> int:
@@ -169,8 +178,9 @@ class TripleStore:
         """The store's one commit step; returns the committed row count.
 
         Writes `rows` as a fresh file set, counts them from the parquet
-        footers (per file, recorded as the entry's `files`) and swaps in
-        a manifest that adds the set under `batch_id`.  `version` is the
+        footers (per file, recorded as the entry's `files`), records the
+        schema the footers carry as the table's, and swaps in a manifest
+        that adds the set under `batch_id`.  `version` is the
         manifest version the caller read before computing `rows`; if
         another writer committed since, the swap raises `CommitConflict`
         and the batch must be retried.
@@ -182,7 +192,7 @@ class TripleStore:
         manifest = self._read_manifest()
         if batch_id in manifest["batches"]:
             return manifest["batches"][batch_id]["added"]
-        path, files = self._write_file_set(rows, batch_id)
+        path, files, manifest["schema"] = self._write_file_set(rows, batch_id)
         added = sum(files.values())
         manifest["version"] += 1
         manifest["batches"][batch_id] = {
@@ -219,10 +229,9 @@ class TripleStore:
         the new file set is invisible until the swap."""
         manifest = self._read_manifest()
         expected_version = manifest["version"]
-        df = self.read()
-        if df is None:
+        if not _live_paths(manifest):
             return 0
-        path, files = self._write_file_set(df, "compact")
+        path, files, _ = self._write_file_set(self.read(), "compact")
         total = sum(files.values())
         # keep idempotency history: batch_ids stay known with their
         # original added counts but reference no data; the compacted
@@ -246,18 +255,20 @@ class TripleStore:
                 },
             },
             "total_rows": total,
+            "schema": manifest["schema"],
         }
         self._swap_manifest(new_manifest, expected_version)
         return total
 
     def _write_file_set(
         self, rows: DataFrame, name: str
-    ) -> tuple[str, dict[str, int]]:
+    ) -> tuple[str, dict[str, int], dict]:
         """Write `rows` to a fresh, uniquely named directory under
-        `data/`; returns (path, {part file: row count from its footer})."""
+        `data/`; returns (path, {part file: row count}, Spark schema),
+        both read from the footers."""
         out_dir = self.root / "data" / f"{_safe(name)}-{uuid.uuid4().hex[:8]}"
         rows.write.mode("overwrite").parquet(str(out_dir))
-        return str(out_dir), _parquet_file_rows(out_dir)
+        return str(out_dir), *_parquet_footers(out_dir)
 
     def vacuum(self, min_age_sec: float = 3600.0) -> list[str]:
         """Delete data directories not referenced by the manifest —
@@ -316,16 +327,17 @@ def _live_paths(manifest: dict) -> list[str]:
     return [b["path"] for b in manifest["batches"].values() if b["rows"] > 0]
 
 
-def _parquet_file_rows(out_dir: Path) -> dict[str, int]:
-    """Row count of each part file from its parquet FOOTER (driver-side
-    metadata read, like Iceberg's per-data-file `record_count`) — no
-    Spark job re-reads the just-written files."""
+def _parquet_footers(out_dir: Path) -> tuple[dict[str, int], dict]:
+    """({part file: row count}, Spark schema as JSON) from the parquet
+    FOOTERS (driver-side metadata reads, like Iceberg's per-data-file
+    `record_count`) — no Spark job re-reads the just-written files.
+    Spark writes at least one part file, a schema-only one for no rows,
+    and records the schema in each footer."""
     import pyarrow.parquet as pq
 
-    return {
-        f.name: pq.read_metadata(f).num_rows
-        for f in sorted(out_dir.glob("*.parquet"))
-    }
+    footers = {f.name: pq.read_metadata(f) for f in sorted(out_dir.glob("*.parquet"))}
+    schema = next(iter(footers.values())).metadata[_SPARK_SCHEMA_KEY]
+    return {f: m.num_rows for f, m in footers.items()}, json.loads(schema)
 
 
 def _safe(batch_id: str) -> str:

@@ -196,10 +196,10 @@ def start_attribution_sink(
     attributed to the latest prior click per key (operators/asof.py)
     against a static/dimension clicks table.
 
-    Exactly-once via the idempotent-directory pattern: batch N writes
-    `out_path/batch=<N>` with overwrite, so a replayed batch rewrites
-    its own directory instead of appending duplicates.  Read the result
-    with `spark.read.parquet(out_path)` (directory glob).
+    Exactly-once through the `TripleStore` table at `out_path`
+    (plans/store.py): batch N commits under `<checkpoint tag>-<N>`, the
+    graph-merge sink's key, so a replayed batch is a no-op.  Read the
+    result with `TripleStore(spark, out_path).read()`.
 
     Stream≡batch invariant (tested): the union of all batch outputs
     equals `asof_join(all_purchases, clicks_df, …)` — per-batch
@@ -208,12 +208,16 @@ def start_attribution_sink(
     table, never on other left rows.
     """
     from rdf_knowledge_extractor_spark.operators.asof import asof_join
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore, checkpoint_tag
+
+    store = TripleStore(purchases_stream.sparkSession, out_path)
+    ckpt_tag = checkpoint_tag(checkpoint_path)
 
     def attribute(batch_df: DataFrame, batch_id: int) -> None:
         out = asof_join(
             batch_df, clicks_df, on=on, ts_col=ts_col, tolerance_sec=tolerance_sec
         )
-        out.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
+        store.commit(out, f"{ckpt_tag}-{batch_id}", store.version())
 
     writer = (
         purchases_stream.writeStream.foreachBatch(attribute)

@@ -26,27 +26,26 @@ streaming/ingest.py):
    doc is rejected only when a smaller-id near-dup was itself
    admitted — in a chain a~b, b~c with a!~c, doc c is admitted
    because its only near-dup b was rejected (round-4 advice);
-5. admitted rows go to the output, then admitted (id, h, bands) rows
-   are committed to the state.
+5. admitted rows are committed to the output, then admitted
+   (id, h, bands) rows to the state.
 
-State is one `TripleStore` table (plans/store.py) of (id, h, bands),
-one commit per micro-batch under the key `<checkpoint tag>-<batch_id>`
-(the graph-merge sink's key).  The store gives every guarantee the
-filter needs: uncommitted files are invisible, a committed key is a
-no-op, and compaction needs no recovery step.  So a replayed
-micro-batch whose state was committed returns at once; one that
-crashed before its commit sees the same history, rewrites its output
-dir (one overwrite dir per key) and commits once; and a fresh
-checkpoint over the same state gets new keys, reads the whole admitted
-history and adds to it.  State size: O(admitted) rows of shingle
-arrays plus `bands` band values each; the sink bounds the file count
-with `compact()` + `vacuum()` once the live file sets pass
-`compact_every`.
+The output and the state are two `TripleStore` tables (plans/store.py),
+each committed once per micro-batch under the key
+`<checkpoint tag>-<batch_id>` (the graph-merge sink's key); the state
+holds (id, h, bands), the output the admitted rows with all their
+columns.  The store gives every guarantee the filter needs: uncommitted
+files are invisible, a committed key is a no-op, and compaction needs
+no recovery step.  So a replayed micro-batch whose state was committed
+returns at once; one that crashed between its two commits sees the
+same history, finds its output committed and commits the state once;
+and a fresh checkpoint over the same state gets new keys, reads the
+whole admitted history and adds to it.  State size: O(admitted) rows
+of shingle arrays plus `bands` band values each; the sink bounds the
+state's file count with `compact()` + `vacuum()` once the live file
+sets pass `compact_every`.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -138,10 +137,10 @@ def start_neardup_filter_sink(
 ):
     """Start the admission-filter sink; returns the StreamingQuery.
 
-    Admitted rows (all original columns) land in
-    `<out_dir>/batch=<key>/`; the admitted set is the `TripleStore`
-    table at `state_dir`."""
+    Admitted rows (all original columns) are the `TripleStore` table at
+    `out_dir`; the admitted set is the one at `state_dir`."""
     spark = docs_stream.sparkSession
+    out = TripleStore(spark, out_dir)
     state = TripleStore(spark, state_dir)
     ckpt_tag = checkpoint_tag(checkpoint_dir)
     bands_of = _minhash_band_udf(num_perm, bands)
@@ -191,12 +190,12 @@ def start_neardup_filter_sink(
             sketched.select("id").join(rejected.distinct(), on="id", how="left_anti")
         ).persist()
         try:
-            # the output is written before the state commit, into one
-            # overwrite dir per key: a replay after a crash in between
-            # rewrites the same rows and then commits once
-            batch_df.join(
+            # the output commits before the state: a replay after a
+            # crash in between finds the output key committed
+            admitted = batch_df.join(
                 admitted_ids.select(F.col("id").alias(id_col)), on=id_col
-            ).write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={key}"))
+            )
+            out.commit(admitted, key, out.version())
             state.commit(sketched.join(admitted_ids, on="id"), key, version)
         finally:
             for df in (batch_df, sketched, buckets, admitted_ids):

@@ -18,6 +18,7 @@ from rdf_knowledge_extractor_spark.functions.pii import (
     redact_pii,
     scrub_pii,
 )
+from rdf_knowledge_extractor_spark.operators import decontam
 from rdf_knowledge_extractor_spark.operators.decontam import (
     contamination_report,
     decontaminate,
@@ -58,16 +59,18 @@ def bench_set(spark):
     return spark.createDataFrame([(0, BENCH_PASSAGE)], ["qid", "text"])
 
 
-def test_word_ngrams_basic(spark):
+def test_word_ngrams_basic(spark, monkeypatch):
+    monkeypatch.setattr(decontam, "NGRAM_N", 2)
     df = spark.createDataFrame([("The cat, the DOG!",)], ["t"])
-    [row] = df.select(word_ngrams(F.col("t"), 2).alias("g")).collect()
+    [row] = df.select(word_ngrams(F.col("t")).alias("g")).collect()
     assert row.g == ["the cat", "cat the", "the dog"]
 
 
-def test_word_ngrams_short_text_is_empty_not_descending(spark):
+def test_word_ngrams_short_text_is_empty_not_descending(spark, monkeypatch):
     # size-n+1 < 1 must yield [], not a DESCENDING sequence of starts
+    monkeypatch.setattr(decontam, "NGRAM_N", 3)
     df = spark.createDataFrame([("only two",), ("", ), ("one",)], ["t"])
-    rows = df.select(word_ngrams(F.col("t"), 3).alias("g")).collect()
+    rows = df.select(word_ngrams(F.col("t")).alias("g")).collect()
     assert [r.g for r in rows] == [[], [], []]
 
 

@@ -15,6 +15,9 @@ self-loop, a diamond, a broom, NULL endpoints, duplicate edges, a
 literal object and two components; both must equal a brute-force
 closure.  The walk arm's job count is pinned on a multi-chain graph,
 for the full closure and for a seeded path.
+
+Both arms of `closure` (seeded and not) and of `connected_components`
+leave the session's persisted RDDs and CacheManager as they found them.
 """
 
 from __future__ import annotations
@@ -302,3 +305,26 @@ def test_seeded_walk_arm_job_count(spark):
     assert got == {X + f"n0_{i}" for i in range(1, 20)}
     assert eng.last_path_stats == {"mode": "walk", "rounds": 20, "seed": X + "n0_0"}
     assert jobs <= 3, jobs
+
+
+@pytest.mark.parametrize("bound", ["default", 0])
+@pytest.mark.parametrize("op", ["closure", "seeded closure", "components"])
+def test_dispatched_operators_release_their_caches(
+    spark, graph, monkeypatch, assert_releases, op, bound
+):
+    from pyspark.sql import functions as F
+
+    from rdf_knowledge_extractor_spark.operators.components import connected_components
+    from rdf_knowledge_extractor_spark.operators.traversal import closure
+
+    if bound == 0:
+        monkeypatch.setattr(dispatch, "DRIVER_MAX_EDGES", 0)
+    edges = graph.where(F.col("predicate") == P).select(
+        F.col("subject").alias("src"), F.col("object").alias("dst")
+    )
+    run = {
+        "closure": lambda: closure(edges)[0].count(),
+        "seeded closure": lambda: closure(edges, X + "a")[0].count(),
+        "components": lambda: connected_components(edges.dropna()).count(),
+    }[op]
+    assert_releases(run)

@@ -172,7 +172,7 @@ def test_multimodal_real_mode_jpeg(spark):
 
     docs = spark.range(0, 12).select(F.col("id").alias("doc_id"))
     media = documents_as_jpeg(docs)
-    feats = extract_media_features(media, deterministic_fake=False, feature_dim=8)
+    feats = extract_media_features(media, deterministic_fake=False)
     rows = {r["media_id"]: r for r in feats.collect()}
     assert len(rows) == 12
     for i in range(12):

@@ -13,7 +13,8 @@ The same roots guard the options, the keyword parameters with a
 default (column names aside).  One that no call in the package or the
 entry points sets (by keyword, at its position, or through
 `*args`/`**kwargs`) fails `test_every_option_has_a_production_setter`.
-One that every such call passes as the same literal fails
+One that every such call passes as the same literal (a call that
+omits it passes its default) fails
 `test_every_option_takes_more_than_one_production_value`; a call that
 passes a non-literal or `*args`/`**kwargs` over it, or a use of the def
 as a value (`SERIALIZERS["turtle"] = serialize_turtle`, a call that sets
@@ -26,7 +27,9 @@ sets to two values.
 
 A package module other than `plans/store.py` that calls `os.replace`,
 `os.rename` or `write_json_atomic` fails
-`test_only_the_store_swaps_files`.
+`test_only_the_store_swaps_files`, and one that chains a batch
+`DataFrame.write` into a file or table write fails
+`test_only_the_store_writes_tables`.
 
 A package module that imports another package module's
 underscore-prefixed name fails `test_no_private_imports_across_modules`,
@@ -238,21 +241,23 @@ def _calls() -> tuple[dict[str, list[ast.Call]], dict[str, int]]:
 
 
 def _options():
-    """(key, called name, positional index or None, name) of every
-    settable value: a keyword parameter with a default, outside `KEPT`
-    and the column-name rule.  A constructor is called by its class's name."""
+    """(key, called name, positional index or None, name, default node)
+    of every settable value: a keyword parameter with a default, outside
+    `KEPT` and the column-name rule.  A constructor is called by its
+    class's name."""
     for label, cls, name, node in _package_defs()[0]:
         if label in KEPT or isinstance(node, ast.ClassDef):
             continue
         a = node.args
         pos = [*a.posonlyargs, *a.args]
         offset = 1 if cls is not None and pos and pos[0].arg in ("self", "cls") else 0
-        opts = [(i - offset, p.arg) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
-        opts += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        first = len(pos) - len(a.defaults)
+        opts = [(first + j - offset, p.arg, d) for j, (p, d) in enumerate(zip(pos[first:], a.defaults))]
+        opts += [(None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
         called = cls.split(":")[1] if name == "__init__" else name
-        for i, opt in opts:
+        for i, opt, default in opts:
             if not (opt.endswith(_COLUMN_SUFFIXES) or opt in _COLUMN_PARAMS):
-                yield f"{label}({opt}=)", called, i, opt
+                yield f"{label}({opt}=)", called, i, opt, default
 
 
 _STAR = object()
@@ -281,7 +286,7 @@ def _unset_options(kept_options=KEPT_OPTIONS) -> list[str]:
     calls, _ = _calls()
     return [
         key
-        for key, called, i, opt in _options()
+        for key, called, i, opt, _ in _options()
         if key not in kept_options
         and all(_passed(c, i, opt) is None for c in calls.get(called, []))
     ]
@@ -298,15 +303,17 @@ def _literal(node) -> str | None:
 
 def _one_literal_options(kept_options=KEPT_OPTIONS) -> list[str]:
     """Options that every call in the roots passes as one and the same
-    literal.  A def named as a value (and not called) counts as a call
-    that sets nothing; a call that passes `*args`/`**kwargs` over the
-    option, or a non-literal, means the option is not flagged."""
+    literal, where a call that omits the option passes its default.  A
+    def named as a value (and not called) counts as a call that sets
+    nothing; a call that passes `*args`/`**kwargs` over the option, or a
+    non-literal, means the option is not flagged."""
     calls, refs = _calls()
     flagged = []
-    for key, called, i, opt in _options():
+    for key, called, i, opt, default in _options():
         if key in kept_options or refs.get(called) or not calls.get(called):
             continue
-        values = {_literal(_passed(c, i, opt)) for c in calls[called]}
+        passed = (_passed(c, i, opt) for c in calls[called])
+        values = {_literal(default if p is None else p) for p in passed}
         if len(values) == 1 and None not in values:
             flagged.append(key)
     return flagged
@@ -338,7 +345,7 @@ def test_kept_options_need_the_list():
 
 # The number of settable values (`_options`).  Adding an option raises
 # this pin in the same change; fixing one lowers it.
-SETTABLE_VALUES = 81
+SETTABLE_VALUES = 77
 
 
 def test_settable_values_are_pinned():
@@ -429,3 +436,37 @@ def test_only_the_store_swaps_files():
         and _called(n) in ("os.replace", "os.rename", "write_json_atomic")
     ]
     assert not calls, calls
+
+
+_TABLE_WRITES = frozenset({"parquet", "save", "saveAsTable", "insertInto"})
+
+
+def _writes_a_table(call: ast.Call) -> bool:
+    """`call` is `<df>.write[.<option>(…)…].parquet/save/saveAsTable/
+    insertInto(…)`: a batch writer chained into a file or table write
+    (`writeStream` is another attribute, so a streaming sink is not)."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr in _TABLE_WRITES):
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "write":
+                return True
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def test_only_the_store_writes_tables():
+    """Every stored table is written by `TripleStore.commit`: no package
+    module but the store writes a DataFrame's files, so a second layout
+    (and a reader that has to know it) cannot grow back."""
+    writes = [
+        f"{path.relative_to(PACKAGE).as_posix()}:{n.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "plans" / "store.py"
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call) and _writes_a_table(n)
+    ]
+    assert not writes, writes

@@ -32,10 +32,11 @@ def _docs(spark):
     )
 
 
-def test_minhash_sketch_udf_evaluated_once(spark):
-    from rdf_knowledge_extractor_spark.operators.textdedup import minhash_lsh_pairs
+def test_minhash_sketch_udf_evaluated_once(spark, monkeypatch):
+    from rdf_knowledge_extractor_spark.operators import textdedup
 
-    plan = _plan(minhash_lsh_pairs(_docs(spark), k=3, threshold=0.8))
+    monkeypatch.setattr(textdedup, "SHINGLE_K", 3)
+    plan = _plan(textdedup.minhash_lsh_pairs(_docs(spark)))
     # one sketch per row: a second stacked ArrowEvalPython means the
     # optimizer duplicated the UDF below the Generate again
     lines = plan.splitlines()

@@ -289,14 +289,47 @@ def test_read_reuses_relation_until_manifest_changes(store, spark, monkeypatch):
     assert _spo(g5) == [(f"t{i}", "p", "o") for i in range(version)]
 
 
-def test_repeat_read_runs_no_spark_job(store, spark):
-    store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1")
-    store.read()
+def _jobs_of(spark, group, fn):
+    """The Spark job ids `fn()` runs, read by job group."""
     sc = spark.sparkContext
-    sc.setJobGroup("store-repeat-read", "repeat read")
+    sc.setJobGroup(group, group)
     try:
-        assert store.read().columns
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("store-repeat-read")) == []
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_read_runs_no_spark_job(store, spark):
+    """Neither a repeat read nor the first read after a commit, a
+    compaction or another writer's commit runs a Spark job: the relation
+    is built from the recorded schema, with no footer inference."""
+    other = TripleStore(spark, str(store.root))
+    steps = {
+        "commit": lambda: store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1"),
+        "repeat": lambda: None,
+        "second-commit": lambda: store.insert_if_absent(_triples(spark, [("s2", "p", "o2")]), "b2"),
+        "compact": store.compact,
+        "other-writer": lambda: other.insert_if_absent(_triples(spark, [("s3", "p", "o3")]), "b3"),
+    }
+    for name, step in steps.items():
+        step()
+        assert _jobs_of(spark, f"store-read-after-{name}", lambda: store.read().columns) == [], name
+    assert store.read().count() == 3
+
+
+def test_zero_row_commit_reads_back_the_non_empty_schema(store, spark, tmp_path):
+    """A store whose batches hold no rows reads as an empty frame with
+    exactly the schema a non-empty read has (a file scan's, all fields
+    nullable), and None only before the first commit."""
+    assert store.read() is None
+    assert store.commit(_triples(spark, []), "empty", store.version()) == 0
+    empty = store.read()
+    assert empty.count() == 0 and store.committed_paths() == []
+
+    full = TripleStore(spark, str(tmp_path / "full"))
+    full.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1")
+    assert empty.schema == full.read().schema
+    assert all(f.nullable for f in empty.schema.fields)
+    assert store.compact() == 0 and store.read().schema == empty.schema

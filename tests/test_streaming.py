@@ -226,10 +226,11 @@ def test_streaming_curate_redacts_pii(spark, tmp_path):
 def test_streaming_attribution_equals_batch_asof(spark, tmp_path):
     """foreachBatch as-of attribution: union of micro-batch outputs ==
     the one-shot batch asof_join on the same data; replays idempotent
-    (per-batch overwrite directories)."""
+    (one store commit per checkpointed batch)."""
     from datetime import datetime
 
     from rdf_knowledge_extractor_spark.operators.asof import asof_join
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore
     from rdf_knowledge_extractor_spark.streaming.ingest import (
         start_attribution_sink,
     )
@@ -257,9 +258,7 @@ def test_streaming_attribution_equals_batch_asof(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    got = sorted(
-        map(tuple, spark.read.parquet(out_dir).drop("batch").collect())
-    )
+    got = sorted(map(tuple, TripleStore(spark, out_dir).read().collect()))
     want = sorted(map(tuple, asof_join(purchases, clicks, on="user").collect()))
     assert got == want
 
@@ -269,9 +268,7 @@ def test_streaming_attribution_equals_batch_asof(spark, tmp_path):
         clicks, out_dir, str(tmp_path / "ckpt"),
     )
     q2.awaitTermination(120)
-    assert sorted(
-        map(tuple, spark.read.parquet(out_dir).drop("batch").collect())
-    ) == want
+    assert sorted(map(tuple, TripleStore(spark, out_dir).read().collect())) == want
 
 
 _BASE = (
@@ -305,13 +302,17 @@ def _run_neardup(spark, tmp_path, src="in", ckpt="ckpt", **kw):
         str(tmp_path / ckpt), threshold=0.7, **kw,
     )
     q.awaitTermination(180)
-    return {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+    return {r.doc_id for r in _store(spark, tmp_path, "out").read().collect()}
+
+
+def _store(spark, tmp_path, name):
+    from rdf_knowledge_extractor_spark.plans.store import TripleStore
+
+    return TripleStore(spark, str(tmp_path / name))
 
 
 def _state_ids(spark, tmp_path):
-    from rdf_knowledge_extractor_spark.plans.store import TripleStore
-
-    return {r.id for r in TripleStore(spark, str(tmp_path / "state")).read().collect()}
+    return {r.id for r in _store(spark, tmp_path, "state").read().collect()}
 
 
 def test_streaming_neardup_filter_across_batches(spark, tmp_path):
@@ -404,27 +405,31 @@ def test_neardup_fresh_checkpoint_over_same_state(spark, tmp_path):
 
 
 def test_neardup_crash_before_state_swap_replays_once(spark, tmp_path, monkeypatch):
-    """A crash after the output write, before the state commit's
-    manifest swap: the replayed micro-batch sees the same history,
-    rewrites the same output dir and commits once."""
+    """A crash after the output commit, before the state commit's
+    manifest swap: the replayed micro-batch sees the same history, finds
+    its output committed and commits the state once."""
     import pytest
 
     from rdf_knowledge_extractor_spark.plans.store import TripleStore
 
-    def crash(self, manifest, expected_version):
-        raise RuntimeError("simulated crash before the state swap")
+    real_swap = TripleStore._swap_manifest
+
+    def crash_on_state(self, manifest, expected_version):
+        if self.root == tmp_path / "state":
+            raise RuntimeError("simulated crash before the state swap")
+        return real_swap(self, manifest, expected_version)
 
     _append_docs(spark, tmp_path, [(0, _BASE), (1, _NOVEL)])
     with monkeypatch.context() as m:
-        m.setattr(TripleStore, "_swap_manifest", crash)
+        m.setattr(TripleStore, "_swap_manifest", crash_on_state)
         with pytest.raises(Exception, match="simulated crash"):
             _run_neardup(spark, tmp_path)
-    state = TripleStore(spark, str(tmp_path / "state"))
+    state, out = _store(spark, tmp_path, "state"), _store(spark, tmp_path, "out")
     assert state.read() is None  # the written state files are orphans
+    assert len(out.batch_ids()) == 1 and out.total_rows() == 2
 
     assert _run_neardup(spark, tmp_path) == {0, 1}
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
-    assert len(state.batch_ids()) == 1
+    assert out.batch_ids() == state.batch_ids() and out.total_rows() == 2
     assert _state_ids(spark, tmp_path) == {0, 1}
 
     _append_docs(spark, tmp_path, [(10, _BASE + " tail")])

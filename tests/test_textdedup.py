@@ -162,11 +162,11 @@ def test_dedup_families_threshold_applies_to_unrounded_jaccard(spark, monkeypatc
     )
     assert textdedup.JACCARD_THRESHOLD == 0.8
     assert ngram_jaccard_pairs(docs).count() == 0
-    assert minhash_lsh_pairs(docs, threshold=0.8).count() == 0
+    assert minhash_lsh_pairs(docs).count() == 0
     monkeypatch.setattr(textdedup, "JACCARD_THRESHOLD", 0.7999)
     for got in (
         ngram_jaccard_pairs(docs).collect(),
-        minhash_lsh_pairs(docs, threshold=0.7999).collect(),
+        minhash_lsh_pairs(docs).collect(),
     ):
         assert [(r.id_a, r.id_b, r.jaccard) for r in got] == [(1, 2, 0.8)]
 

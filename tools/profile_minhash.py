@@ -73,7 +73,7 @@ def main():
     from rdf_knowledge_extractor_spark.operators.textdedup import minhash_lsh_pairs
     for rep in range(2):
         timed(spark, f"minhash_lsh end-to-end rep{rep}",
-              lambda: minhash_lsh_pairs(docs, k=9, threshold=0.8).count())
+              lambda: minhash_lsh_pairs(docs).count())
         spark.catalog.clearCache()
 
     # ann_cosine_topk stages
